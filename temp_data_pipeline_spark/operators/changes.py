@@ -68,6 +68,7 @@ from temp_data_pipeline_spark.operators.deletion_vectors import (
     read_dv,
 )
 from temp_data_pipeline_spark.operators.versioned import (
+    _REWRITE_KEYS,
     _fs,
     _manifest_dirs,
     _resolve_version,
@@ -93,9 +94,6 @@ class FeedResetRequired(RuntimeError):
             f"({kind}: a full-table rewrite) — resync from the "
             "snapshot, or pass allow_reset=True for the full-pair feed"
         )
-
-
-_REWRITE_KEYS = ("compacted_from", "restored_from", "materialized_from")
 
 
 def _check_window(

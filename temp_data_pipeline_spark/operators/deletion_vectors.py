@@ -67,6 +67,7 @@ from temp_data_pipeline_spark.operators.versioned import (
     CommitConflictError,
     _check_schema_against_manifest,
     _fs,
+    _local_meta_path,
     _manifest_dirs,
     _rel_file,
     _rel_from_any,
@@ -168,28 +169,6 @@ _DV_LOCAL_MAX_BYTES = 64 * 1024 * 1024
 _DV_SCHEMA = "file string, pos long"
 
 
-def _local_fs_dir(path: str) -> str | None:
-    """``path`` as a driver-readable local directory, or None when it
-    lives on a non-local filesystem. ``file://`` URIs resolve only
-    with an empty or localhost authority — ``file://host/path`` names
-    a remote-host location (ADVICE r11); falls back to the distributed
-    read path via None, same as any other non-local scheme."""
-    import os as _os
-
-    if path.startswith("file://"):
-        rest = path[len("file://"):]
-        if rest.startswith("/"):
-            path = rest
-        else:
-            auth, sep, p = rest.partition("/")
-            if auth.lower() != "localhost" or not sep:
-                return None
-            path = "/" + p
-    elif "://" in path:
-        return None
-    return path if _os.path.isdir(path) else None
-
-
 def _read_dv_df(spark: SparkSession, path: str, name: str) -> DataFrame:
     """The raw (file, pos) frame of one DV sidecar: a distributed
     parquet scan with the schema DECLARED, so no footer-inference job
@@ -209,6 +188,7 @@ def dv_file_names(spark: SparkSession, path: str, name: str) -> set[str]:
     count). Driver-side pyarrow read of just the ``file`` column when
     the sidecar is local and small (zero Spark jobs — the distinct
     runs on the driver); distributed distinct+collect otherwise."""
+    import os as _os
     import re as _re
 
     def _norm(f: str) -> str:
@@ -219,11 +199,9 @@ def dv_file_names(spark: SparkSession, path: str, name: str) -> set[str]:
             return m.group(1) if m else ""
         return f
 
-    local = _local_fs_dir(f"{path}/_dv/{name}")
-    if local is not None:
+    local = _local_meta_path(f"{path}/_dv/{name}", spark)
+    if local is not None and _os.path.isdir(local):
         try:
-            import os as _os
-
             total = 0
             for root, _dirs, files in _os.walk(local):
                 total += sum(

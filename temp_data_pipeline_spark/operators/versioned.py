@@ -37,6 +37,30 @@ respects references — a version's data dir survives as long as ANY
 kept manifest lists it, even after its own manifest expires.
 Fully-independent snapshots (no ``carry_from``) still behave as
 before: total isolation, storage traded for simplicity.
+
+Empty versions: a commit whose frame provably has zero rows (rollback,
+schema evolution, table-metadata commits, typed CREATE TABLE) writes
+NO data files — its ``v=<N>`` dir exists but holds no parquet. That is
+a valid metadata-only version, not corruption: readers take the schema
+from the manifest's ``_schema``, and vacuum/verify treat the dir like
+any other. External readers scanning a ``v=<N>`` dir directly must
+expect it to be file-less.
+
+Manifest keys fall into four classes, each declared once below:
+
+  class        tuple              rewrite / restore / clone commits
+  per-commit   _PER_COMMIT_KEYS   never copy them (shape, rewrite
+                                  markers, quarantine/replay promises)
+  sticky       _STICKY_KEYS       copy them; EVERY commit also inherits
+                                  them from the latest manifest until
+                                  its ``meta`` sets them
+  layout       _LAYOUT_KEYS       copy them only with dirs carried
+                                  verbatim; commit_version re-derives
+                                  them for the dirs a rewrite carries
+  undeclared   (anything else)    copy them, so high-water marks read
+                                  from the latest manifest
+                                  (``_stream_batch_id``,
+                                  ``replica_of_version``) survive
 """
 
 from __future__ import annotations
@@ -87,8 +111,9 @@ def _fs(spark: SparkSession, path: str):
 def _local_meta_path(path: str, spark: SparkSession | None = None) -> str | None:
     """``path`` as a driver-readable LOCAL filesystem path for the
     metadata fast paths (manifest listings, small JSON reads), or None
-    when it lives behind a non-local scheme. Mirrors the gate
-    deletion_vectors._local_fs_dir uses for driver-side DV reads.
+    when it lives behind a non-local scheme. The one local gate for
+    driver-side metadata I/O: manifest listings and reads, and
+    deletion-vector sidecar reads.
 
     ``file://`` URIs resolve only with an EMPTY or localhost authority
     — ``file://host/path`` names a remote-host location the driver
@@ -489,18 +514,28 @@ def _evolution_meta(
             ids[c] = nxt
             nxt += 1
     ids = {c: ids[c] for c in df.columns}
+    dir_fields = _changed_dir_fields(base_man, carried_dirs, base_ids, ids)
+    out: dict = {"_field_ids": ids, "_last_field_id": nxt - 1}
+    if dir_fields:
+        out["_dir_fields"] = dir_fields
+    return out
+
+
+def _changed_dir_fields(
+    base_man: dict, dirs: list[str], base_ids: dict, ids: dict
+) -> dict[str, dict]:
+    """``_dir_fields`` for ``dirs`` of ``base_man`` under the new field
+    ids ``ids``: each dir's on-disk-name -> id map, identity mappings
+    elided to keep manifests small."""
     base_names = [f["name"] for f in base_man["_schema"]["fields"]]
-    dir_fields: dict[str, dict] = {}
-    for d in carried_dirs:
+    out: dict[str, dict] = {}
+    for d in dirs:
         m = _dir_mapping(base_man, d)
         if m is None:
             # dir written under the base's current names
             m = {n: base_ids[n] for n in base_names}
         if any(ids.get(disk) != fid for disk, fid in m.items()):
-            dir_fields[d] = m
-    out: dict = {"_field_ids": ids, "_last_field_id": nxt - 1}
-    if dir_fields:
-        out["_dir_fields"] = dir_fields
+            out[d] = m
     return out
 
 
@@ -549,6 +584,86 @@ def _check_schema_against_manifest(
 
 def _manifest_dir(path: str) -> str:
     return f"{path}/_manifest"
+
+
+# --- manifest key policy (see the module docstring's key table) -------
+# The commit's own shape, written by commit_version from its arguments.
+_COMMIT_SHAPE_KEYS = (
+    "version", "data_dir", "data_dirs", "committed_at", "_schema",
+    "_partition_by", "_checks",
+)
+# Rewrite markers: a version recording one of these replaced the
+# table's files wholesale, so change feeds crossing it need a reset.
+_REWRITE_KEYS = ("compacted_from", "restored_from", "materialized_from")
+# Facts about ONE commit: never copied by rewrite/restore/clone commits.
+_PER_COMMIT_KEYS = (
+    *_COMMIT_SHAPE_KEYS, *_REWRITE_KEYS, "compacted_dirs", "cloned_from",
+    "_quarantined", "_quarantine_table", "_quarantine_for_version",
+    "_replayed_from", "_replayed_rows",
+)
+# Table metadata: set once, inherited from the latest manifest by
+# every commit until a commit overrides it via ``meta``.
+_STICKY_KEYS = (
+    "_table_constraints", "_tblproperties", "_column_defaults",
+    "_generated_columns", "_identity_columns",
+)
+# Rename tracking: commit_version recomputes it unless meta sets it.
+_RENAME_KEYS = ("_field_ids", "_dir_fields", "_last_field_id")
+# Layout facts about specific data dirs: they ride only with dirs
+# carried verbatim (commit_version re-derives them for carried dirs).
+_LAYOUT_KEYS = (
+    "_dv", "_dv_rows", "_dir_roots", "_bucket_spec", *_RENAME_KEYS,
+)
+
+
+def _carried_meta(man: dict, *, keep_layout: bool) -> dict:
+    """The keys of ``man`` a rewrite/restore/clone commit copies:
+    everything but the per-commit keys, and — for rewrites
+    (``keep_layout=False``), whose fresh files no longer match them —
+    the layout keys. Undeclared keys ride forward."""
+    drop = _PER_COMMIT_KEYS if keep_layout else _PER_COMMIT_KEYS + _LAYOUT_KEYS
+    return {k: v for k, v in man.items() if k not in drop}
+
+
+def _carry_bound_meta(
+    base_man: dict | None, carried_dirs: list[str], meta: dict,
+    carry_from: int | None,
+) -> dict:
+    """Layout keys a carry commit inherits for the dirs it references,
+    unless ``meta`` sets them. Each rule has its own condition."""
+    out: dict = {}
+    if base_man is None:
+        return out
+    # a deletion vector rides along with the bytes it deletes from: an
+    # append on a DV version must keep subtracting it, or the deleted
+    # rows silently resurrect (its row count travels with it). Only
+    # carry_from appends inherit it; carry_dirs writers own their DV.
+    if carry_from is not None and base_man.get("_dv") and "_dv" not in meta:
+        out["_dv"] = base_man["_dv"]
+        if "_dv_rows" in base_man and "_dv_rows" not in meta:
+            out["_dv_rows"] = base_man["_dv_rows"]
+    # shallow-clone references: each still-carried dir keeps resolving
+    # under its source root (nested COW entries fall back to their
+    # version head)
+    br = base_man.get("_dir_roots")
+    if br and meta.get("_dir_roots") is None:
+        roots = {}
+        for d in carried_dirs:
+            r = br.get(d) or br.get(d.split("/", 1)[0])
+            if r:
+                roots[d] = r
+        if roots:
+            out["_dir_roots"] = roots
+    # the carried bytes ARE bucket files, so the spec rides while any
+    # dir is carried (operators/bucketing.py decides per snapshot
+    # whether co-location still holds); a full rewrite drops it
+    if (
+        carried_dirs
+        and meta.get("_bucket_spec") is None
+        and base_man.get("_bucket_spec")
+    ):
+        out["_bucket_spec"] = base_man["_bucket_spec"]
+    return out
 
 
 def _manifest_dirs(man: dict) -> list[str]:
@@ -628,43 +743,56 @@ def _claim_slot(
         data_slot += 1
 
 
+def _manifest_listing(
+    spark: SparkSession, path: str, *, stamp: bool = False
+) -> tuple[list[int], tuple | None]:
+    """(committed versions ascending, latest manifest's (mtime,
+    length) stamp or None). The one manifest-dir listing: local tables
+    list on the driver (a Hadoop listStatus costs 2 py4j round trips
+    per entry; 76 calls ≈ 1.6 s of one q_replicate profile); non-local
+    schemes — and scheme-less paths under a non-local fs.defaultFS,
+    which the _local_meta_path gate filters out (ADVICE r11) — keep
+    the Hadoop FS listing. The stamp is only taken with
+    ``stamp=True``."""
+    lp = _local_meta_path(path, spark)
+    statuses = None
+    if lp is not None:
+        mdir = os.path.join(lp, "_manifest")
+        try:
+            names = os.listdir(mdir)
+        except (FileNotFoundError, NotADirectoryError):
+            return [], None
+    else:
+        fs, jvm = _fs(spark, path)
+        mdir = jvm.org.apache.hadoop.fs.Path(_manifest_dir(path))
+        if not fs.exists(mdir):
+            return [], None
+        statuses = {st.getPath().getName(): st for st in fs.listStatus(mdir)}
+        names = list(statuses)
+    found: dict[int, str] = {}
+    for name in names:
+        if name.endswith(".json") and not name.startswith("."):
+            try:
+                found[int(name[: -len(".json")])] = name
+            except ValueError:
+                continue
+    out = sorted(found)
+    if not (stamp and out):
+        return out, None
+    name = found[out[-1]]
+    if statuses is not None:
+        st = statuses[name]
+        return out, (st.getModificationTime(), st.getLen())
+    st = os.stat(os.path.join(mdir, name))
+    return out, (st.st_mtime_ns, st.st_size)
+
+
 def versions(spark: SparkSession, path: str) -> list[int]:
     """Committed versions, ascending. Orphan data dirs (crashed or
     in-flight writers) are excluded by construction — only the
-    manifest names count. Local tables list the manifest dir directly
-    on the driver (a Hadoop listStatus costs 2 py4j round trips per
-    entry; 76 calls ≈ 1.6 s of one q_replicate profile); non-local
-    schemes — and scheme-less paths under a non-local fs.defaultFS,
-    which the _local_meta_path gate filters out (ADVICE r11) — keep
-    the Hadoop FS listing. Never cached — the version list is the one
+    manifest names count. Never cached — the version list is the one
     piece of metadata that changes under commits."""
-    lp = _local_meta_path(path, spark)
-    if lp is not None:
-        try:
-            names = os.listdir(os.path.join(lp, "_manifest"))
-        except (FileNotFoundError, NotADirectoryError):
-            return []
-        out = []
-        for name in names:
-            if name.endswith(".json") and not name.startswith("."):
-                try:
-                    out.append(int(name[: -len(".json")]))
-                except ValueError:
-                    continue
-        return sorted(out)
-    fs, jvm = _fs(spark, path)
-    mdir = jvm.org.apache.hadoop.fs.Path(_manifest_dir(path))
-    if not fs.exists(mdir):
-        return []
-    out = []
-    for st in fs.listStatus(mdir):
-        name = st.getPath().getName()
-        if name.endswith(".json"):
-            try:
-                out.append(int(name[: -len(".json")]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return _manifest_listing(spark, path)[0]
 
 
 def commit_version(
@@ -774,24 +902,17 @@ def commit_version(
     fs, jvm = _fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
     fs.mkdirs(Path(_manifest_dir(path)))
+    meta = dict(meta or {})
     carried_dirs: list[str] = list(carry_dirs or [])
     base_man: dict | None = None
     if carry_dirs is not None and expected_base:
         # COW/MOR carry commits plan against the latest version and
         # pin it via expected_base — that manifest is the base whose
-        # rename-tracking fields (if any) must propagate
+        # layout fields (if any) must propagate
         base_man = read_manifest(spark, path, expected_base)
     if carry_from is not None:
         base_man = read_manifest(spark, path, carry_from)
         carried_dirs = _manifest_dirs(base_man)
-        # a deletion vector rides along with the bytes it deletes from:
-        # an append on a DV version must keep subtracting it, or the
-        # deleted rows silently resurrect in the new version (its
-        # recorded row count travels with it — the pair is atomic)
-        if base_man.get("_dv") and "_dv" not in (meta or {}):
-            meta = {**(meta or {}), "_dv": base_man["_dv"]}
-            if "_dv_rows" in base_man:
-                meta.setdefault("_dv_rows", base_man["_dv_rows"])
         _check_schema_against_manifest(
             df,
             base_man,
@@ -806,74 +927,24 @@ def commit_version(
         # the base's rather than silently committing '_partition_by':
         # [] onto a partitioned table
         partition_by = base_man.get("_partition_by") or None
-    if (
-        base_man is not None
-        and base_man.get("_dir_roots")
-        and (meta or {}).get("_dir_roots") is None
-    ):
-        # shallow-clone references ride every carry commit: each
-        # still-carried dir keeps resolving under its source root
-        # (nested COW carve entries fall back to their version head)
-        br = base_man["_dir_roots"]
-        inherited_roots = {}
-        for d in carried_dirs:
-            r = br.get(d) or br.get(d.split("/", 1)[0])
-            if r:
-                inherited_roots[d] = r
-        if inherited_roots:
-            meta = {**(meta or {}), "_dir_roots": inherited_roots}
+    meta.update(_carry_bound_meta(base_man, carried_dirs, meta, carry_from))
     # next slot must clear BOTH committed versions and orphan data
     # dirs (a crashed writer's v=N would otherwise collide with every
     # future slot claim until vacuum — the table would wedge)
     committed = versions(spark, path)
-    # PERSISTED table constraints (add_table_constraint) inherit from
-    # the latest manifest regardless of carry style — every writer
-    # (append, MOR, COW, maintenance rewrite) enforces them on its
-    # newly written rows and carries them forward; the add/drop ops
-    # override via meta
-    inherited_tc: dict = {}
-    inherited_props: dict = {}
-    inherited_defaults: dict = {}
-    inherited_gen: dict = {}
-    inherited_ident: dict = {}
-    if committed and (
-        (meta or {}).get("_table_constraints") is None
-        or (meta or {}).get("_tblproperties") is None
-        or (meta or {}).get("_column_defaults") is None
-        or (meta or {}).get("_generated_columns") is None
-        or (meta or {}).get("_identity_columns") is None
-    ):
+    # sticky table metadata inherits from the latest manifest
+    # regardless of carry style — every writer (append, MOR, COW,
+    # maintenance rewrite) enforces constraints on its newly written
+    # rows and carries the set forward; setters override via meta
+    sticky: dict = {}
+    unset = [k for k in _STICKY_KEYS if meta.get(k) is None]
+    if committed and unset:
         prev_man = (
             base_man
             if carry_from == committed[-1] and base_man is not None
             else read_manifest(spark, path, committed[-1])
         )
-        if (meta or {}).get("_table_constraints") is None:
-            inherited_tc = prev_man.get("_table_constraints") or {}
-        # table properties / column defaults behave like constraints:
-        # set once, ride every commit until an override via meta
-        if (meta or {}).get("_tblproperties") is None:
-            inherited_props = prev_man.get("_tblproperties") or {}
-        if (meta or {}).get("_column_defaults") is None:
-            inherited_defaults = prev_man.get("_column_defaults") or {}
-        if (meta or {}).get("_generated_columns") is None:
-            inherited_gen = prev_man.get("_generated_columns") or {}
-        if (meta or {}).get("_identity_columns") is None:
-            inherited_ident = prev_man.get("_identity_columns") or {}
-    # a carry commit keeps the base's recorded bucket layout: the
-    # carried bytes ARE bucket files, and readers need the spec to
-    # know it (operators/bucketing.py decides per-snapshot whether
-    # co-location still physically holds).  A plain full rewrite
-    # (no carry) intentionally drops the spec — its files aren't
-    # bucket-named, so advertising the layout would be a lie.
-    inherited_bucket: dict = {}
-    if (
-        base_man is not None
-        and carried_dirs
-        and (meta or {}).get("_bucket_spec") is None
-        and base_man.get("_bucket_spec")
-    ):
-        inherited_bucket = base_man["_bucket_spec"]
+        sticky = {k: prev_man[k] for k in unset if prev_man.get(k)}
     if expected_base is not None:
         latest = committed[-1] if committed else 0
         if latest != expected_base:
@@ -910,7 +981,7 @@ def commit_version(
     # drop_column / rollback commits pass them in meta)
     evo = (
         {}
-        if (meta or {}).get("_field_ids") is not None
+        if meta.get("_field_ids") is not None
         else _evolution_meta(df, carried_dirs, base_man)
     )
     # the snapshot is written ONCE into a private staging dir, then
@@ -978,13 +1049,10 @@ def commit_version(
     # Columns absent from this commit's frame (pre-evolution carries)
     # skip — old files read the column as NULL via the manifest schema
     # and were written before the declaration.
-    gen_cols = {
-        **inherited_gen,
-        **((meta or {}).get("_generated_columns") or {}),
-    }
+    table_meta = {**meta, **sticky}  # sticky only fills keys meta left None
+    gen_cols = table_meta.get("_generated_columns") or {}
     enforce = {
-        **inherited_tc,
-        **((meta or {}).get("_table_constraints") or {}),
+        **(table_meta.get("_table_constraints") or {}),
         **(checks or {}),
         **{
             f"__generated_{c}": f"`{c}` <=> ({e})"
@@ -1045,26 +1113,9 @@ def commit_version(
             # table would find no hive subdirs to carry
             "_partition_by": list(partition_by or []),
             **({"_checks": checks} if checks else {}),
-            **({"_table_constraints": inherited_tc} if inherited_tc else {}),
-            **({"_tblproperties": inherited_props} if inherited_props else {}),
-            **(
-                {"_column_defaults": inherited_defaults}
-                if inherited_defaults
-                else {}
-            ),
-            **({"_bucket_spec": inherited_bucket} if inherited_bucket else {}),
-            **(
-                {"_generated_columns": inherited_gen}
-                if inherited_gen
-                else {}
-            ),
-            **(
-                {"_identity_columns": inherited_ident}
-                if inherited_ident
-                else {}
-            ),
+            **sticky,
             **evo,
-            **(meta or {}),
+            **meta,
             **late,
         }
         if _arbiter()(
@@ -1799,31 +1850,19 @@ def compact_snapshot(
     _require_no_dv(man, "compact_snapshot")
     if partition_by is None:
         partition_by = man.get("_partition_by") or None
-    carried = {
-        k: v
-        for k, v in man.items()
-        # committed_at must NOT carry: the compacted version gets its
-        # own commit clock, or read_as_of would resolve timestamps
-        # between the two commits to the wrong snapshot. Rename
-        # tracking doesn't carry either: the rewrite lands every byte
-        # under the CURRENT column names, so the compacted version
-        # reads identity again (stale _dir_fields would point at dirs
-        # this version no longer references)
-        # _bucket_spec must NOT carry: this rewrite lands PLAIN
-        # parquet files — advertising the old bucket layout over them
-        # would make a later catalog-registered co-located join read
-        # wrong buckets silently. Bucketed tables compact with
-        # bucketing.rebucket (the SQL console routes OPTIMIZE there).
-        if k not in ("version", "data_dir", "data_dirs", "_schema",
-                     "_partition_by", "committed_at", "_dir_roots",
-                     "_field_ids", "_dir_fields", "_last_field_id",
-                     "_bucket_spec")
-    }
+    # a rewrite drops the layout keys: every byte lands under the
+    # CURRENT column names in PLAIN parquet files (bucketed tables
+    # compact with bucketing.rebucket — the SQL console routes
+    # OPTIMIZE there)
     return commit_version(
         read_version(spark, path, latest[-1]),
         path,
         partition_by=partition_by or None,
-        meta={**carried, **(meta or {}), "compacted_from": latest[-1]},
+        meta={
+            **_carried_meta(man, keep_layout=False),
+            **(meta or {}),
+            "compacted_from": latest[-1],
+        },
         expected_base=latest[-1],
     )
 
@@ -1953,13 +1992,11 @@ def compact_partitions(
     carried = _cow_carried_dirs(
         spark, path, base_dirs, partition_col, touched, man
     )
-    keep = {
-        k: v
-        for k, v in man.items()
-        if k not in ("version", "data_dir", "data_dirs", "_schema",
-                     "_partition_by", "committed_at",
-                     "_field_ids", "_dir_fields", "_last_field_id")
-    }
+    # untouched partitions ride verbatim, their clone roots and bucket
+    # spec with them; rename tracking is recomputed for the new dir
+    keep = _carried_meta(man, keep_layout=True)
+    for k in _RENAME_KEYS:
+        keep.pop(k, None)
     return commit_version(
         rows,
         path,
@@ -2021,25 +2058,18 @@ def compact_incremental(
     big = [d for d in dirs if d not in set(small)]
     rows = _read_manifest_dirs(spark, path, man, small)
     part = man.get("_partition_by") or None
-    carried_meta = {
-        k: v
-        for k, v in man.items()
-        # _bucket_spec: the rewritten small-dir files are PLAIN — when
-        # big dirs survive, commit_version's carry-inheritance re-adds
-        # the spec (multi-dir snapshots fall back to the plain reader
-        # anyway); when the whole chain collapses to the one fresh
-        # dir, the spec must drop or the catalog-registered join
-        # would read wrong buckets (same rule as compact_snapshot)
-        if k not in ("version", "data_dir", "data_dirs", "committed_at",
-                     "_schema", "_partition_by", "_field_ids",
-                     "_dir_fields", "_last_field_id", "_bucket_spec")
-    }
+    # the rewritten small-dir files are PLAIN: commit_version re-derives
+    # the layout keys for the big dirs it still carries
     return commit_version(
         rows,
         path,
         partition_by=part,
         carry_dirs=big,
-        meta={**carried_meta, **(meta or {}), "compacted_dirs": small},
+        meta={
+            **_carried_meta(man, keep_layout=False),
+            **(meta or {}),
+            "compacted_dirs": small,
+        },
         expected_base=latest,
     )
 
@@ -2090,23 +2120,14 @@ def _commit_evolution(
     names = [f["name"] for f in man["_schema"]["fields"]]
     base_ids = man.get("_field_ids") or {n: i + 1 for i, n in enumerate(names)}
     last_id = int(man.get("_last_field_id", max(base_ids.values(), default=0)))
-    dir_fields = {}
-    for d in _manifest_dirs(man):
-        m = _dir_mapping(man, d)
-        if m is None:
-            m = {n: base_ids[n] for n in names}
-        if any(new_ids.get(disk) != fid for disk, fid in m.items()):
-            dir_fields[d] = m
-    carried_meta = {
-        k: v
-        for k, v in man.items()
-        if k
-        not in (
-            "version", "data_dir", "data_dirs", "committed_at",
-            "_schema", "_partition_by", "_field_ids", "_dir_fields",
-            "_last_field_id",
-        )
-    }
+    dir_fields = _changed_dir_fields(
+        man, _manifest_dirs(man), base_ids, new_ids
+    )
+    # every dir rides verbatim (a DV stays valid); the rename-tracking
+    # keys are recomputed below
+    carried_meta = _carried_meta(man, keep_layout=True)
+    for k in _RENAME_KEYS:
+        carried_meta.pop(k, None)
     empty = empty_df(spark, new_schema)
     return commit_version(
         empty,
@@ -2369,11 +2390,9 @@ def history(spark: SparkSession, path: str) -> DataFrame:
     import json as _json
 
     rows = []
+    # shape and layout plumbing, plus the keys with their own column
     reserved = {
-        "version", "data_dir", "data_dirs", "committed_at",
-        "_schema", "_partition_by", "_dv", "_dv_rows", "_checks",
-        "_field_ids", "_dir_fields", "_last_field_id",
-        "restored_from", "compacted_from",
+        *_COMMIT_SHAPE_KEYS, *_LAYOUT_KEYS, "restored_from", "compacted_from",
     }
     # named refs surface per version (time-travel ergonomics: the
     # reader of DESCRIBE HISTORY sees which versions carry tags
@@ -2592,28 +2611,18 @@ def rollback(
     # the declared schema
     empty = empty_df(spark, StructType.fromJson(man["_schema"]))
     part = man.get("_partition_by") or None
-    # carry the target's commit meta (compact_snapshot's convention):
-    # a restored DV version must keep naming its deletion-vector
-    # sidecar (`_dv`), constraint records stay honest, etc.
-    carried_meta = {
-        k: v
-        for k, v in man.items()
-        if k
-        not in (
-            "version",
-            "data_dir",
-            "data_dirs",
-            "committed_at",
-            "_schema",
-            "_partition_by",
-        )
-    }
+    # the target's dirs ride verbatim, so its layout keys ride too: a
+    # restored DV version must keep naming its deletion-vector sidecar
     return commit_version(
         empty,
         path,
         partition_by=part,
         carry_dirs=_manifest_dirs(man),
-        meta={**carried_meta, **(meta or {}), "restored_from": to_version},
+        meta={
+            **_carried_meta(man, keep_layout=True),
+            **(meta or {}),
+            "restored_from": to_version,
+        },
     )
 
 
@@ -2671,15 +2680,6 @@ def shallow_clone(
         d: (src_roots.get(d) or src_roots.get(d.split("/", 1)[0]) or src_q)
         for d in dirs
     }
-    carried_meta = {
-        k: val
-        for k, val in man.items()
-        if k
-        not in (
-            "version", "data_dir", "data_dirs", "committed_at",
-            "_schema", "_partition_by", "_dir_roots",
-        )
-    }
     if man.get("_dv"):
         # the DV sidecar is delta-sized metadata keyed by relative
         # file paths (root-agnostic) — copy it so the clone's own
@@ -2700,7 +2700,7 @@ def shallow_clone(
         partition_by=man.get("_partition_by") or None,
         carry_dirs=dirs,
         meta={
-            **carried_meta,
+            **_carried_meta(man, keep_layout=True),
             **(meta or {}),
             "_dir_roots": roots,
             "cloned_from": {"path": src_q, "version": v},
@@ -2723,13 +2723,48 @@ def _check_ref_name(name: str) -> None:
         )
 
 
-def table_constraints(spark: SparkSession, path: str) -> dict[str, str]:
-    """The PERSISTED named CHECK constraints of the table's latest
-    version (``{} `` when none)."""
+def _latest_meta(spark: SparkSession, path: str, key: str) -> dict:
+    """Sticky key ``key`` of the table's latest manifest (``{}`` when
+    unset or when the table has no versions)."""
     vs = versions(spark, path)
     if not vs:
         return {}
-    return read_manifest(spark, path, vs[-1]).get("_table_constraints") or {}
+    return dict(read_manifest(spark, path, vs[-1]).get(key) or {})
+
+
+def _commit_sticky(
+    spark: SparkSession, path: str, meta: dict, latest: int | None = None
+) -> int:
+    """One metadata-only commit of sticky table metadata: an empty own
+    dir, every dir of ``latest`` (default: the latest version) carried
+    by reference, and ``meta`` overriding the inherited keys. Pinned
+    to ``latest`` so a racing writer surfaces as a conflict."""
+    from pyspark.sql.types import StructType
+
+    if latest is None:
+        vs = versions(spark, path)
+        if not vs:
+            raise FileNotFoundError(f"no committed versions under {path}")
+        latest = vs[-1]
+    man = read_manifest(spark, path, latest)
+    if "_schema" not in man:
+        raise ValueError(
+            "table metadata commits need the manifest-recorded schema "
+            "(compact_snapshot first)"
+        )
+    return commit_version(
+        empty_df(spark, StructType.fromJson(man["_schema"])),
+        path,
+        carry_from=latest,
+        expected_base=latest,
+        meta=meta,
+    )
+
+
+def table_constraints(spark: SparkSession, path: str) -> dict[str, str]:
+    """The PERSISTED named CHECK constraints of the table's latest
+    version (``{} `` when none)."""
+    return _latest_meta(spark, path, "_table_constraints")
 
 
 def add_table_constraint(
@@ -2744,8 +2779,6 @@ def add_table_constraint(
     rows it writes and carries it forward, so a manifested version
     can never violate its constraints. Returns the committed
     version."""
-    from pyspark.sql.types import StructType
-
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         read_table,
     )
@@ -2766,14 +2799,10 @@ def add_table_constraint(
             f"cannot add constraint {name!r}: {n_bad} existing row(s) "
             "violate it"
         )
-    latest = vs[-1]
-    schema = StructType.fromJson(read_manifest(spark, path, latest)["_schema"])
-    return commit_version(
-        empty_df(spark, schema),
-        path,
-        carry_from=latest,
-        expected_base=latest,
-        meta={"_table_constraints": {**current, name: sql}},
+    # pinned to the validated version: a commit landing during the
+    # scan wrote rows nobody checked, so this commit must conflict
+    return _commit_sticky(
+        spark, path, {"_table_constraints": {**current, name: sql}}, vs[-1]
     )
 
 
@@ -2783,12 +2812,7 @@ def column_defaults(spark: SparkSession, path: str) -> dict[str, str]:
     the column, MERGE INSERT VALUES with the column unlisted, COPY
     INTO files lacking it). Existing rows are untouched — the Delta
     contract: a default applies to rows written AFTER it is set."""
-    vs = versions(spark, path)
-    if not vs:
-        return {}
-    return dict(
-        read_manifest(spark, path, vs[-1]).get("_column_defaults") or {}
-    )
+    return _latest_meta(spark, path, "_column_defaults")
 
 
 def generated_columns(spark: SparkSession, path: str) -> dict[str, str]:
@@ -2802,12 +2826,7 @@ def generated_columns(spark: SparkSession, path: str) -> dict[str, str]:
     the constraint scan (`__generated_<col>` auto-checks in
     commit_version).  Expressions may reference only non-generated
     columns of the same row."""
-    vs = versions(spark, path)
-    if not vs:
-        return {}
-    return dict(
-        read_manifest(spark, path, vs[-1]).get("_generated_columns") or {}
-    )
+    return _latest_meta(spark, path, "_generated_columns")
 
 
 def identity_columns(spark: SparkSession, path: str) -> dict[str, dict]:
@@ -2821,12 +2840,7 @@ def identity_columns(spark: SparkSession, path: str) -> dict[str, dict]:
     partition, and the watermark advances to the max assigned via an
     ``observe`` on the commit's own write pass, never a second job).
     Explicit values are refused — ALWAYS, not BY DEFAULT."""
-    vs = versions(spark, path)
-    if not vs:
-        return {}
-    return dict(
-        read_manifest(spark, path, vs[-1]).get("_identity_columns") or {}
-    )
+    return _latest_meta(spark, path, "_identity_columns")
 
 
 def assign_identity(df: DataFrame, spec: dict):
@@ -2911,56 +2925,13 @@ def set_column_default(
         spark.range(1).select(F_.expr(expr)).collect()
         cur[col] = expr
         marker = {"set_default": {col: expr}}
-    return _commit_properties(
-        spark, path, dict(man.get("_tblproperties") or {}), marker,
-        defaults=cur,
-    )
+    return _commit_sticky(spark, path, {"_column_defaults": cur, **marker})
 
 
 def table_properties(spark: SparkSession, path: str) -> dict[str, str]:
     """The table's persisted key->value properties (latest manifest;
     empty when none were ever set)."""
-    vs = versions(spark, path)
-    if not vs:
-        return {}
-    return dict(read_manifest(spark, path, vs[-1]).get("_tblproperties") or {})
-
-
-def _commit_properties(
-    spark: SparkSession,
-    path: str,
-    props: dict,
-    marker: dict,
-    defaults: dict | None = None,
-) -> int:
-    from pyspark.sql.types import StructType
-
-    vs = versions(spark, path)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions under {path}")
-    latest = vs[-1]
-    man = read_manifest(spark, path, latest)
-    if "_schema" not in man:
-        raise ValueError(
-            "table properties need the manifest-recorded schema "
-            "(compact_snapshot first)"
-        )
-    schema = StructType.fromJson(man["_schema"])
-    return commit_version(
-        empty_df(spark, schema),
-        path,
-        carry_from=latest,
-        expected_base=latest,
-        meta={
-            "_tblproperties": props,
-            **(
-                {"_column_defaults": defaults}
-                if defaults is not None
-                else {}
-            ),
-            **marker,
-        },
-    )
+    return _latest_meta(spark, path, "_tblproperties")
 
 
 def set_table_properties(
@@ -2975,8 +2946,9 @@ def set_table_properties(
     merged = {**table_properties(spark, path), **{
         str(k): str(v) for k, v in props.items()
     }}
-    return _commit_properties(
-        spark, path, merged, {"set_properties": sorted(props)}
+    return _commit_sticky(
+        spark, path,
+        {"_tblproperties": merged, "set_properties": sorted(props)},
     )
 
 
@@ -2990,8 +2962,9 @@ def unset_table_properties(
     if missing:
         raise ValueError(f"no such table propert{'y' if len(missing)==1 else 'ies'}: {missing}")
     remaining = {k: v for k, v in cur.items() if k not in set(keys)}
-    return _commit_properties(
-        spark, path, remaining, {"unset_properties": sorted(keys)}
+    return _commit_sticky(
+        spark, path,
+        {"_tblproperties": remaining, "unset_properties": sorted(keys)},
     )
 
 
@@ -2999,21 +2972,11 @@ def drop_table_constraint(spark: SparkSession, path: str, name: str) -> int:
     """Remove a persisted constraint (one metadata-level carry
     commit); earlier versions keep theirs for time travel. Returns
     the committed version."""
-    from pyspark.sql.types import StructType
-
     current = table_constraints(spark, path)
     if name not in current:
         raise ValueError(f"no constraint {name!r} on {path}")
-    latest = versions(spark, path)[-1]
-    schema = StructType.fromJson(read_manifest(spark, path, latest)["_schema"])
     rest = {k: v for k, v in current.items() if k != name}
-    return commit_version(
-        empty_df(spark, schema),
-        path,
-        carry_from=latest,
-        expected_base=latest,
-        meta={"_table_constraints": rest},
-    )
+    return _commit_sticky(spark, path, {"_table_constraints": rest})
 
 
 def tag_version(

@@ -214,42 +214,23 @@ class SqlEngine:
 
     def _reg_tokens(self) -> dict:
         """Cheap per-table freshness tokens: (path, latest committed
-        version). Fully determines what ``_snapshot`` would return —
-        manifests and DV sidecars are immutable per version — so an
-        unchanged token means the registered temp view is current.
-        One driver-side manifest-dir listing per table, no Spark
+        version, its manifest's (mtime, length)). Fully determines what
+        ``_snapshot`` would return — manifests and DV sidecars are
+        immutable per version — so an unchanged token means the
+        registered temp view is current. The mtime+length guard keeps
+        a table dropped and re-created at the same path with the same
+        version number from reading as current. One manifest-dir
+        listing per table (driver-local for local tables), no Spark
         jobs."""
         from temp_data_pipeline_spark.operators.versioned import (
-            _fs,
-            _manifest_dir,
+            _manifest_listing,
         )
 
         toks = {}
         for name, path in self.catalog.items():
-            tok: tuple = (path, None)
             try:
-                fs, jvm = _fs(self.spark, path)
-                mdir = jvm.org.apache.hadoop.fs.Path(_manifest_dir(path))
-                if fs.exists(mdir):
-                    latest, st_tok = None, None
-                    for st in fs.listStatus(mdir):
-                        n = st.getPath().getName()
-                        if n.endswith(".json"):
-                            try:
-                                v = int(n[: -len(".json")])
-                            except ValueError:
-                                continue
-                            if latest is None or v > latest:
-                                # mtime+len guard: a table dropped and
-                                # re-created at the same path with the
-                                # same version number must not read as
-                                # current
-                                latest = v
-                                st_tok = (
-                                    st.getModificationTime(),
-                                    st.getLen(),
-                                )
-                    tok = (path, latest, st_tok)
+                vs, st_tok = _manifest_listing(self.spark, path, stamp=True)
+                tok: tuple = (path, vs[-1], st_tok) if vs else (path, None)
             except Exception:  # noqa: BLE001 - unreadable: treat as changed
                 import uuid as _uuid
 

@@ -48,9 +48,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-SOURCE_NAME = "versioned_table"
+# a plain tuple: pickled by value with the functions that use it
+from temp_data_pipeline_spark.operators.versioned import _REWRITE_KEYS
 
-_REWRITE_KEYS = ("compacted_from", "restored_from", "materialized_from")
+SOURCE_NAME = "versioned_table"
 
 
 def _pa_fs(path: str):
@@ -764,7 +765,8 @@ def register_versioned_source(spark) -> None:
     import path (it is not, when the driver runs from another cwd), so
     the module registers for pickle-BY-VALUE — possible because
     source.py deliberately imports nothing from the rest of this
-    package (stdlib + pyspark + pyarrow only)."""
+    package but the plain-data ``_REWRITE_KEYS`` tuple, which pickles
+    by value (stdlib + pyspark + pyarrow otherwise)."""
     import sys
 
     from pyspark import cloudpickle

@@ -322,3 +322,50 @@ def test_replay_crash_window_recovers_without_duplicates(
     assert verify_table(spark, path) == []
     q = read_version(spark, qpath).collect()
     assert [(r["k"], r["_violations"]) for r in q] == [(4, "fix")]
+
+
+def test_maintenance_after_quarantine_keeps_fsck_clean(spark, tmp_path):
+    """The quarantine promise is per-commit: a compaction or rollback
+    after a quarantining commit must not copy it, or verify_table
+    reports a crash that never happened for the maintenance
+    version."""
+    from temp_data_pipeline_spark.operators.versioned import (
+        compact_snapshot,
+        read_manifest,
+        rollback,
+        verify_table,
+    )
+
+    path = os.path.join(str(tmp_path), "t")
+    v, n = commit_with_expectations(
+        _df(spark, [(1, 5), (2, -1)]), path, EXPECT
+    )
+    assert n == 1
+    assert verify_table(spark, path) == []
+    cv = compact_snapshot(spark, path)
+    assert "_quarantined" not in read_manifest(spark, path, cv)
+    assert verify_table(spark, path) == []
+    rollback(spark, path, v)
+    assert verify_table(spark, path) == []
+    # the table's expectation set still rides forward
+    assert read_manifest(spark, path)["_expectations"] == EXPECT
+
+
+def test_compaction_after_replay_keeps_fsck_clean(spark, tmp_path):
+    """The replay marker is per-commit too: a compaction after a
+    completed replay is not an unfinished replay."""
+    from temp_data_pipeline_spark.operators.expectations import (
+        replay_quarantine,
+    )
+    from temp_data_pipeline_spark.operators.versioned import (
+        compact_snapshot,
+        verify_table,
+    )
+
+    path = os.path.join(str(tmp_path), "t")
+    commit_with_expectations(_df(spark, [(1, 5), (2, -1)]), path, EXPECT)
+    _, n_pass, n_still = replay_quarantine(spark, path, {"any": "v > -5"})
+    assert (n_pass, n_still) == (1, 0)
+    assert verify_table(spark, path) == []
+    compact_snapshot(spark, path)
+    assert verify_table(spark, path) == []

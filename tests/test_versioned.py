@@ -839,3 +839,105 @@ def test_history_index_idle_noop_and_incremental(spark, tmp_path, monkeypatch):
     idx = _json.loads(V.read_text(spark, idx_file))["clocks"]
     assert set(idx) == {"1", "2", "3", "4", "5"}
     assert idx["5"] == V.read_manifest(spark, path, 5)["committed_at"]
+
+
+def test_compaction_after_rollback_is_not_a_restore(spark, tmp_path):
+    """Rewrite markers are per-commit: a compaction of a restored
+    version must not copy ``restored_from``, or history reports it as
+    a restore and change feeds across it demand a reset."""
+    from temp_data_pipeline_spark.operators.changes import changes_between
+    from temp_data_pipeline_spark.operators.versioned import (
+        compact_incremental,
+        history,
+        read_manifest,
+        rollback,
+    )
+
+    p = str(tmp_path / "tbl")
+    commit_version(_df(spark, [(1, "a", 10)]), p)
+    for v in (1, 2, 3):
+        commit_version(_df(spark, [(v + 1, "b", 20)]), p, carry_from=v)
+    rb = rollback(spark, p, 3)
+    cv = compact_incremental(spark, p)
+    assert cv == rb + 1
+    man = read_manifest(spark, p, cv)
+    assert "restored_from" not in man
+    assert man["compacted_dirs"]
+    h = {r["version"]: r for r in history(spark, p).collect()}
+    assert h[rb]["restored_from"] == 3
+    assert h[cv]["restored_from"] is None
+    # compact_incremental keeps change feeds flowing: no reset needed
+    feed = changes_between(spark, p, rb, cv)
+    n_ins = feed.filter("_change_type = 'insert'").count()
+    assert n_ins == feed.filter("_change_type = 'delete'").count()
+    got = sorted(r["k"] for r in read_version(spark, p, cv).collect())
+    assert got == [1, 2, 3]
+
+
+def test_sticky_keys_survive_every_commit_kind(spark, tmp_path):
+    """Every declared sticky key, once set, rides an append, a MOR
+    delete, its materialization and both compactions unchanged. The
+    expected map must cover the declared tuple exactly, so a new
+    sticky key cannot be left out of this check."""
+    from temp_data_pipeline_spark.operators.deletion_vectors import (
+        commit_delete_mor,
+        materialize_deletes,
+    )
+    from temp_data_pipeline_spark.operators.versioned import (
+        _STICKY_KEYS,
+        add_table_constraint,
+        compact_incremental,
+        compact_snapshot,
+        read_manifest,
+        set_column_default,
+        set_table_properties,
+    )
+
+    schema = "k long, k2 long, id long, val string"
+    p = str(tmp_path / "tbl")
+    expected = {
+        "_generated_columns": {"k2": "k * 2"},
+        "_identity_columns": {"id": {"start": 1, "step": 1, "high": 2}},
+        "_table_constraints": {"k_pos": "k > 0"},
+        "_tblproperties": {"owner": "etl"},
+        "_column_defaults": {"val": "'dflt'"},
+    }
+    assert set(expected) == set(_STICKY_KEYS)
+    commit_version(
+        spark.createDataFrame([(1, 2, 1, "a"), (2, 4, 2, "b")], schema),
+        p,
+        meta={
+            "_generated_columns": expected["_generated_columns"],
+            "_identity_columns": expected["_identity_columns"],
+        },
+    )
+    add_table_constraint(spark, p, "k_pos", "k > 0")
+    set_table_properties(spark, p, {"owner": "etl"})
+    set_column_default(spark, p, "val", "'dflt'")
+
+    def _append(k: int) -> None:
+        commit_version(
+            spark.createDataFrame([(k, 2 * k, k, "c")], schema),
+            p,
+            carry_from=versions(spark, p)[-1],
+        )
+
+    steps = [
+        ("setters", lambda: None),
+        ("append", lambda: _append(3)),
+        ("MOR delete", lambda: commit_delete_mor(spark, p, "k = 1")),
+        ("materialize", lambda: materialize_deletes(spark, p)),
+        ("compact_snapshot", lambda: compact_snapshot(spark, p)),
+        ("append", lambda: _append(4)),
+        ("compact_incremental", lambda: compact_incremental(spark, p)),
+    ]
+    for what, step in steps:
+        before = versions(spark, p)[-1]
+        step()
+        latest = versions(spark, p)[-1]
+        assert what == "setters" or latest > before, what
+        man = read_manifest(spark, p, latest)
+        for key in _STICKY_KEYS:
+            assert man.get(key) == expected[key], (what, key)
+    got = sorted(r["k"] for r in read_version(spark, p).collect())
+    assert got == [2, 3, 4]

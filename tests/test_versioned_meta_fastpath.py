@@ -5,14 +5,16 @@ metadata fast paths introduced in the r11 optimization wave:
   mutating a returned manifest can never poison later reads) and
   invalidates on the file's stat identity;
 - the registry's schema cache regenerates on file replacement;
-- the local-path gates refuse ``file://`` URIs with a foreign
-  authority and non-local default filesystems (ADVICE r11).
+- the local metadata gate refuses ``file://`` URIs with a foreign
+  authority and non-local default filesystems (ADVICE r11), for
+  manifest listings and deletion-vector sidecar reads alike.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -95,17 +97,53 @@ def test_local_meta_path_authority():
     assert _local_meta_path("/plain/path") == "/plain/path"
 
 
-def test_local_fs_dir_authority(tmp_path):
+@contextmanager
+def _nonlocal_defaultfs(spark):
+    """Force the session's defaultFS memo to non-local, restoring it
+    afterwards — deleting it when it was unset, so later tests
+    re-probe the real configuration."""
+    had = hasattr(spark, "_sg_defaultfs_local")
+    saved = getattr(spark, "_sg_defaultfs_local", None)
+    spark._sg_defaultfs_local = False
+    try:
+        yield
+    finally:
+        if had:
+            spark._sg_defaultfs_local = saved
+        else:
+            del spark._sg_defaultfs_local
+
+
+def test_dv_file_names_honours_nonlocal_defaultfs(
+    spark, tmp_path, monkeypatch
+):
+    """Driver-side DV reads share the metadata gate: under a non-local
+    fs.defaultFS a scheme-less path names a remote table, so the
+    sidecar must be read through Spark, never with pyarrow on the
+    driver — and still give the same file set."""
+    import pyarrow.parquet as pq
+
     from temp_data_pipeline_spark.operators.deletion_vectors import (
-        _local_fs_dir,
+        commit_delete_mor,
+        dv_file_names,
     )
 
-    d = str(tmp_path)
-    assert _local_fs_dir(d) == d
-    assert _local_fs_dir(f"file://{d}") == d
-    assert _local_fs_dir(f"file://localhost{d}") == d
-    assert _local_fs_dir(f"file://otherhost{d}") is None
-    assert _local_fs_dir("hdfs://nn/x") is None
+    path = str(tmp_path / "tbl")
+    v = _commit_two_rows(spark, path)
+    commit_delete_mor(spark, path, "k = 1")
+    name = read_manifest(spark, path)["_dv"]
+    want = dv_file_names(spark, path, name)
+    assert len(want) == 1 and next(iter(want)).startswith(f"v={v}/")
+    driver_reads = []
+
+    def _no_driver_read(*args, **kwargs):
+        driver_reads.append(args)
+        raise AssertionError("driver-side DV read under a remote defaultFS")
+
+    monkeypatch.setattr(pq, "read_table", _no_driver_read)
+    with _nonlocal_defaultfs(spark):
+        assert dv_file_names(spark, path, name) == want
+    assert driver_reads == []
 
 
 def test_versions_nonlocal_defaultfs_uses_hadoop_listing(spark, tmp_path):
@@ -115,13 +153,9 @@ def test_versions_nonlocal_defaultfs_uses_hadoop_listing(spark, tmp_path):
     never silently return [] for an existing table."""
     path = str(tmp_path / "tbl")
     v = _commit_two_rows(spark, path)
-    saved = getattr(spark, "_sg_defaultfs_local", None)
-    try:
-        spark._sg_defaultfs_local = False
+    with _nonlocal_defaultfs(spark):
         assert versions(spark, path) == [v]
         assert read_manifest(spark, path, v)["version"] == v
-    finally:
-        spark._sg_defaultfs_local = saved if saved is not None else True
 
 
 def test_empty_commit_records_declared_nullability(spark, tmp_path):
