@@ -10,6 +10,8 @@ rows-only).
 
 from __future__ import annotations
 
+import json
+import re
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -22,188 +24,70 @@ if _REPO not in sys.path:
 
 
 def _all_specs():
+    # Plain imports on purpose: a plan module that fails to import must
+    # fail queries() and oracle_sql(), not silently drop its queries.
     from temp_data_pipeline_spark.plans.declared import DECLARED_QUERIES
+    from temp_data_pipeline_spark.plans.function_queries import FUNCTION_QUERIES
+    from temp_data_pipeline_spark.plans.llm_queries import LLM_QUERIES
+    from temp_data_pipeline_spark.plans.pipeline_queries import PIPELINE_QUERIES
+    from temp_data_pipeline_spark.plans.relational_queries import RELATIONAL_QUERIES
+    from temp_data_pipeline_spark.plans.streaming_queries import STREAMING_QUERIES
+    from temp_data_pipeline_spark.plans.temporal_queries import TEMPORAL_QUERIES
 
-    specs = dict(DECLARED_QUERIES)
-    try:
-        from temp_data_pipeline_spark.plans.llm_queries import LLM_QUERIES
-
-        specs.update(LLM_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from temp_data_pipeline_spark.plans.pipeline_queries import PIPELINE_QUERIES
-
-        specs.update(PIPELINE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from temp_data_pipeline_spark.plans.function_queries import FUNCTION_QUERIES
-
-        specs.update(FUNCTION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from temp_data_pipeline_spark.plans.streaming_queries import STREAMING_QUERIES
-
-        specs.update(STREAMING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from temp_data_pipeline_spark.plans.temporal_queries import TEMPORAL_QUERIES
-
-        specs.update(TEMPORAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from temp_data_pipeline_spark.plans.relational_queries import (
-            RELATIONAL_QUERIES,
-        )
-
-        specs.update(RELATIONAL_QUERIES)
-    except ImportError:
-        pass
-    return specs
+    return {
+        **DECLARED_QUERIES,
+        **LLM_QUERIES,
+        **PIPELINE_QUERIES,
+        **FUNCTION_QUERIES,
+        **STREAMING_QUERIES,
+        **TEMPORAL_QUERIES,
+        **RELATIONAL_QUERIES,
+    }
 
 
 # The driver snapshots the FIRST 50 entries of queries() each round.
 # To keep cumulative coverage fresh, order mechanically by how stale a
 # query's last green driver record is:
-#   priority 0 — never verified, or in _RECHECK (implementation or its
-#                inputs changed this round; regression suspected/fixed);
-#   priority N — last verified green in round N (oldest first).
+#   priority 0 — no green record, or in _RECHECK (implementation or its
+#                inputs changed since its last green record);
+#   priority N — latest green record in CORRECTNESS_r{N}.json (oldest
+#                first).
 # Ties keep registration order.  If priority-0 entries alone overflow
 # the window, loudly warn — silent truncation is how regressions hide.
 _DRIVER_WINDOW = 50
 
-# name -> last round with a green driver record (CORRECTNESS_r{N}.json).
-_LAST_VERIFIED = {
-    # r5 green (CORRECTNESS_r05.json)
-    **{n: 5 for n in (
-        "llm_ann_recall", "llm_centroid", "llm_chunk", "llm_cluster_best",
-        "llm_corpus_report", "llm_curation_funnel", "llm_decontam",
-        "llm_dup_clusters", "llm_hash_embed", "llm_hash_split",
-        "llm_heavy_hitters", "llm_ivf_topk", "llm_keywords",
-        "llm_line_dedup", "llm_lm_score", "llm_minhash_dedup",
-        "llm_multimodal", "llm_pack", "llm_pii", "llm_quantize_int8",
-        "llm_repetition", "llm_stratified", "llm_text_knn",
-        "llm_topk_lang", "llm_vocab_coverage", "q_agg", "q_anti_join",
-        "q_bitor", "q_case", "q_dedup", "q_filter", "q_ghcnh_parse",
-        "q_isd_parse", "q_join", "q_json_extract", "q_lead_hours",
-        "q_multijoin", "q_pipeline_clean", "q_pipeline_daily",
-        "q_project", "q_scan", "q_season", "q_semi_join", "q_skew_agg",
-        "q_stream_dedup", "q_ts_parse", "q_units", "q_window_lag"
-    )},
-    # r6 green
-    **{n: 6 for n in (
-        "llm_text_quality", "llm_token_bpe"
-    )},
-    # r7 green (CORRECTNESS_r07.json)
-    **{n: 7 for n in (
-        "llm_token_count", "q_cardinality", "q_datetime",
-        "q_events_window", "q_harmonic", "q_incr_rollup", "q_metrics",
-        "q_quantile", "q_quantile_group", "q_split", "q_union",
-        "q_window_expand", "q_window_roll"
-    )},
-    # r8 green (CORRECTNESS_r08.json: 50/50 pass)
-    **{n: 8 for n in (
-        "llm_bm25", "llm_budget_select", "llm_corpus_line_dedup",
-        "llm_dedup_index", "llm_dsir", "llm_exact_sample",
-        "llm_ivf_index_topk", "llm_knn_join", "llm_length_buckets",
-        "llm_normalize", "llm_pack_read", "llm_shuffle", "llm_url_cap",
-        "q_analyze", "q_bloom_lookup", "q_cdf_keyed", "q_change_feed",
-        "q_constraints", "q_cube", "q_delete_mor", "q_except",
-        "q_expectations", "q_fk_orphans", "q_funnel",
-        "q_hidden_partition", "q_intersect", "q_jsonl_ingest",
-        "q_lakehouse_scan", "q_matview_mor", "q_matview_refresh",
-        "q_merge_into", "q_meta_agg", "q_part_agg",
-        "q_partition_evolution", "q_pivot", "q_rank_topn",
-        "q_rename_evolution", "q_replicate", "q_retention", "q_rollup",
-        "q_scd2", "q_star_revenue", "q_stream_cdc", "q_stream_matview",
-        "q_stream_replicate", "q_stream_source", "q_stream_upsert",
-        "q_stream_versioned", "q_update_mor", "q_zorder_skip"
-    )},
-    # r9 green (CORRECTNESS_r09.json: 50/50 pass, zero err) — overrides
-    # any earlier round for the same name.
-    **{n: 9 for n in (
-        "llm_ann_lsh_topk", "llm_ann_topk", "llm_bloom_decontam",
-        "llm_bpe_encode", "llm_classifier", "llm_dedup_exact",
-        "llm_dup_ngram_frac", "llm_embed_neardup", "llm_filtered_ann",
-        "llm_fingerprint", "llm_gopher", "llm_intra_dup", "llm_lang_id",
-        "llm_minhash", "llm_mix_temperature", "llm_neardup_window",
-        "llm_pq_topk", "llm_semdedup", "llm_simhash",
-        "llm_simhash_neardup", "llm_span_dedup", "q_asof_forward",
-        "q_asof_join", "q_cdf_keyed", "q_delete_mor", "q_expectations",
-        "q_gap_fill", "q_keep_latest", "q_matview_mor",
-        "q_matview_refresh", "q_merge_into", "q_quarantine_replay",
-        "q_range_join", "q_rename_evolution", "q_replicate", "q_scd2",
-        "q_session_window", "q_sessionize", "q_sql_dml", "q_stream_cdc",
-        "q_stream_events", "q_stream_join", "q_stream_matview",
-        "q_stream_neardup", "q_stream_replicate", "q_stream_sessions",
-        "q_stream_source", "q_stream_upsert", "q_update_mor",
-        "q_window_range"
-    )},
-    # r10 green (CORRECTNESS_r10.json: 50/50 pass, zero err) — overrides
-    # any earlier round for the same name.
-    **{n: 10 for n in (
-        "llm_ann_recall", "llm_centroid", "llm_chunk", "llm_cluster_best",
-        "llm_corpus_report", "llm_curation_funnel", "llm_decontam",
-        "llm_dup_clusters", "llm_hash_embed", "llm_hash_split",
-        "llm_heavy_hitters", "llm_ivf_topk", "llm_keywords",
-        "llm_line_dedup", "llm_lm_score", "llm_minhash_dedup",
-        "llm_multimodal", "llm_pack", "llm_pii", "llm_quantize_int8",
-        "llm_repetition", "llm_stratified", "llm_text_knn",
-        "llm_topk_lang", "llm_vocab_coverage", "q_agg", "q_bitor",
-        "q_case", "q_compact_partitions", "q_dedup", "q_filter",
-        "q_ghcnh_parse", "q_isd_parse", "q_join", "q_multijoin",
-        "q_pipeline_clean", "q_pipeline_daily", "q_project",
-        "q_replace_where", "q_replicate", "q_scan", "q_scd2",
-        "q_skew_agg", "q_sql_ddl", "q_sql_dml", "q_stream_cdc",
-        "q_stream_replicate", "q_stream_source", "q_ts_parse",
-        "q_window_lag"
-    )},
-}
 
-# Implementations or inputs changed in ROUND 11 since their last green
-# driver record (each locally re-verified green against DuckDB before
-# being listed; the driver mints fresh records):
-#   - MERGE gained WHEN NOT MATCHED BY SOURCE and ordered multi-clause
-#     families (operators/merge.py unified classify + sql.py clause
-#     grammar): q_merge_into re-checks; q_sql_dml rides the same code
-#     path; q_sql_merge is new (priority 0 automatically).
-#   - commit_version changed (carry commits inherit the base partition
-#     layout; carried dir names claim slots) — q_replicate and q_scd2
-#     re-check as the heaviest carry-commit lifecycles.
-#   - New this round (priority 0 automatically): q_clone,
-#     q_show_partitions, q_add_column, q_copy_into, q_sql_cdf,
-#     q_sql_console, q_bucket_join, q_sql_generated, q_sql_identity.
-#   - Late-round code changes: the console read path is now
-#     bucket-aware (sql._snapshot) — every q_sql_* statement query
-#     re-checks; MERGE insert branches and COPY INTO gained
-#     generated-column fills (q_merge_cdc, q_merge_into, q_copy_into).
-# The rest of the window is the r5/r6/r7-stale cohort + oldest r8.
-_RECHECK: list[str] = [
-    "q_sql_dml", "q_merge_into", "q_replicate", "q_scd2",
-    "q_sql_merge", "q_sql_cdf", "q_sql_ddl", "q_merge_cdc",
-    # multi-level COW carve landed late in r11: the COW lifecycles
-    # re-check even though the final-tree sweep re-verified them
-    "q_compact_partitions", "q_matview_refresh", "q_matview_mor",
-    # MERGE evolution touched the merge projection: q_merge_cdc and
-    # q_sql_merge already listed above re-cover it
-]
+def _latest_green() -> dict[str, int]:
+    """name -> latest round N whose CORRECTNESS_r{N}.json record matched
+    on rows, schema and hash with no error."""
+    latest: dict[str, int] = {}
+    for path in Path(_REPO).glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        for name, rec in json.loads(path.read_text()).items():
+            green = rec.get("err") is None and all(
+                rec.get(k) is True for k in ("rows_match", "schema_match", "hash_match")
+            )
+            if green:
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    return latest
+
+
+_LATEST_GREEN = _latest_green()
+
+# Queries whose implementation or inputs changed after their latest
+# green record: they re-enter the window until a newer record lands.
+# Drop an entry once CORRECTNESS_r{N}.json shows it green again.
+_RECHECK: list[str] = []
 
 
 def _ordered_specs():
     specs = _all_specs()
     recheck = set(_RECHECK)
-    names = sorted(
-        specs,
-        key=lambda n, _ix={m: i for i, m in enumerate(specs)}: (
-            0 if (n in recheck or n not in _LAST_VERIFIED) else _LAST_VERIFIED[n],
-            _ix[n],
-        ),
-    )
-    urgent = sum(1 for n in names if n in recheck or n not in _LAST_VERIFIED)
+    prio = {n: 0 if n in recheck else _LATEST_GREEN.get(n, 0) for n in specs}
+    names = sorted(specs, key=prio.__getitem__)  # stable: ties keep registration order
+    urgent = sum(1 for n in names if prio[n] == 0)
     if urgent > _DRIVER_WINDOW:
         print(
             f"WARNING: {urgent} unverified/recheck queries exceed the "

@@ -11,11 +11,31 @@ remaining divergence source is aggregation order (mitigated by the
 Scale notes are attached per query: what shuffles, what broadcasts,
 what prunes. These are the plans reviewed with `.explain("formatted")`
 in tests/test_plans.py.
+
+Adding a conformance query: each plan module binds its public
+``*_QUERIES`` dict once with ``_register = registrar(TABLE)`` and
+decorates a ``(spark, sf_dir) -> DataFrame`` builder with
+``@_register(name, families, oracle, note=...)``;
+``__spark_entry__._all_specs`` imports each module's table. A builder that
+needs files on disk (a versioned table, a stream checkpoint) adds
+``@scratch_table(prefix)`` under the registration and takes the
+directory as a third argument: the helper owns the directory, removes
+it on success and on error, and ``localCheckpoint()``s the returned
+frame first, so the builder just returns its lazy result. The oracle
+is DuckDB SQL over the same parquet views; it must alias every column
+exactly as the Spark side does, round computed floats with the shared
+``_rnd``/``_rnd_sql`` formula on both sides, and cast HUGEINT sums to
+BIGINT. The oracle text is what the conformance check runs in DuckDB,
+so a refactor of a builder must leave it (and its families and note)
+byte-identical.
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -36,18 +56,49 @@ class QuerySpec:
     note: str = ""
 
 
-DECLARED_QUERIES: dict[str, QuerySpec] = {}
+def registrar(table: dict[str, QuerySpec]):
+    """Return the ``register(name, families, oracle, note="")``
+    decorator that records builders into ``table`` in definition
+    order (ties in the ``queries()`` order keep it)."""
+
+    def register(name, families, oracle, note=""):
+        def deco(fn):
+            table[name] = QuerySpec(
+                name=name, builder=fn, oracle=oracle, families=tuple(families), note=note
+            )
+            return fn
+
+        return deco
+
+    return register
 
 
-def _register(name, families, oracle, note=""):
+def scratch_table(prefix: str):
+    """Run a ``(spark, sf_dir, scratch)`` builder in a fresh scratch
+    directory and expose it as a ``(spark, sf_dir)`` builder.
+
+    The returned frame is materialized with ``localCheckpoint()`` BEFORE
+    the directory is removed (a lazy frame over deleted files would fail
+    at collect), and the directory is removed whether the builder
+    returns or raises.
+    """
+
     def deco(fn):
-        DECLARED_QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, families=tuple(families), note=note
-        )
-        return fn
+        @functools.wraps(fn)
+        def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+            scratch = tempfile.mkdtemp(prefix=prefix)
+            try:
+                return fn(spark, sf_dir, scratch).localCheckpoint()
+            finally:
+                shutil.rmtree(scratch, ignore_errors=True)
+
+        return builder
 
     return deco
 
+
+DECLARED_QUERIES: dict[str, QuerySpec] = {}
+_register = registrar(DECLARED_QUERIES)
 
 
 # --------------------------------------------------------------------------

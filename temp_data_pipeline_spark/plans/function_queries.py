@@ -19,20 +19,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.functions import scalars as fx
-from temp_data_pipeline_spark.plans.declared import QuerySpec, _rnd, _rnd_sql, presorted
+from temp_data_pipeline_spark.plans.declared import (
+    QuerySpec,
+    _rnd,
+    _rnd_sql,
+    presorted,
+    registrar,
+)
 from temp_data_pipeline_spark.sources.registry import load_table
 
 FUNCTION_QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name, families, oracle, note=""):
-    def deco(fn):
-        FUNCTION_QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, families=tuple(families), note=note
-        )
-        return fn
-
-    return deco
+_register = registrar(FUNCTION_QUERIES)
 
 
 # --------------------------------------------------------------------------

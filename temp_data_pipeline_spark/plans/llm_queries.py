@@ -33,20 +33,16 @@ from temp_data_pipeline_spark.llm.dedup import (
     tokenized,
     simhash_neardup_pairs,
 )
-from temp_data_pipeline_spark.plans.declared import QuerySpec, presorted
+from temp_data_pipeline_spark.plans.declared import (
+    QuerySpec,
+    presorted,
+    registrar,
+    scratch_table,
+)
 from temp_data_pipeline_spark.sources.registry import load_table
 
 LLM_QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name, families, oracle, note=""):
-    def deco(fn):
-        LLM_QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, families=tuple(families), note=note
-        )
-        return fn
-
-    return deco
+_register = registrar(LLM_QUERIES)
 
 
 _INT60_SQL = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
@@ -2421,35 +2417,26 @@ def llm_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "without rescanning it (llm/dedup_index.py)."
     ),
 )
-def llm_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("dedup_index_")
+def llm_dedup_index(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.llm.dedup_index import (
         build_dedup_index,
         probe_neardups,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="dedup_index_")
-    try:
-        build_dedup_index(
-            d.filter(F.col("doc_id") % 2 == 0),
-            path,
-            k=8,
-            bands=4,
-            hash_fn="md5",
-            max_bucket=1000,
-        )
-        return (
-            probe_neardups(
-                spark, path, d.filter(F.col("doc_id") % 2 == 1), threshold=0.5
-            )
-            .orderBy("id_new", "id_indexed")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    build_dedup_index(
+        d.filter(F.col("doc_id") % 2 == 0),
+        path,
+        k=8,
+        bands=4,
+        hash_fn="md5",
+        max_bucket=1000,
+    )
+    return (
+        probe_neardups(spark, path, d.filter(F.col("doc_id") % 2 == 1), threshold=0.5)
+        .orderBy("id_new", "id_indexed")
+    )
 
 
 @_register(
@@ -2911,9 +2898,8 @@ def llm_text_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and shares its oracle."
     ),
 )
-def llm_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
+@scratch_table("ivf_index_")
+def llm_ivf_index_topk(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.llm.vector_index import (
         build_ivf_index,
         ivf_index_topk,
@@ -2928,23 +2914,9 @@ def llm_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     ]
-    import shutil
 
-    path = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
-        build_ivf_index(
-            e.filter(F.col("vec_id") != 0), path, centroids=cents
-        )
-        # materialize the probe before deleting the index files —
-        # repeated harness runs must not accumulate table copies in
-        # the system temp dir
-        return (
-            ivf_index_topk(spark, path, qvec, k=10, nprobe=4)
-            .select("vec_id")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    build_ivf_index(e.filter(F.col("vec_id") != 0), path, centroids=cents)
+    return ivf_index_topk(spark, path, qvec, k=10, nprobe=4).select("vec_id")
 
 
 _ANN_RECALL_ORACLE = f"""

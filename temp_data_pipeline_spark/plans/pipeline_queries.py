@@ -23,20 +23,11 @@ from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.operators.clean_hourly import clean_hourly_obs
 from temp_data_pipeline_spark.operators.daily_tmax import build_daily_tmax
-from temp_data_pipeline_spark.plans.declared import QuerySpec, _rnd, _rnd_sql
+from temp_data_pipeline_spark.plans.declared import QuerySpec, _rnd, _rnd_sql, registrar
 from temp_data_pipeline_spark.sources.registry import load_table
 
 PIPELINE_QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name, families, oracle, note=""):
-    def deco(fn):
-        PIPELINE_QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, families=tuple(families), note=note
-        )
-        return fn
-
-    return deco
+_register = registrar(PIPELINE_QUERIES)
 
 
 def _events_as_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,9 +86,23 @@ def q_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_register(
+    "q_skew_agg",
+    ("A1", "skew"),
+    f"""
+    SELECT event_type, COUNT(*) AS n,
+           {_rnd_sql("SUM(value)")} AS total,
+           {_rnd_sql("MAX(value)")} AS vmax
+    FROM events GROUP BY event_type ORDER BY event_type
+    """,
+    note=(
+        "Salted two-stage aggregation (operators/skew.py): scatter over "
+        "32 buckets, partial agg, merge — result identical to the plain "
+        "GROUP BY the oracle runs; no reducer sees a whole hot key."
+    ),
+)
+def q_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.skew import salted_agg
-    from temp_data_pipeline_spark.sources.registry import load_table
 
     e = load_table(spark, sf_dir, "events")
     out = salted_agg(
@@ -109,24 +114,6 @@ def _q_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_type", "n", _rnd(F.col("total")).alias("total"), _rnd(F.col("vmax")).alias("vmax")
     ).orderBy("event_type")
-
-
-PIPELINE_QUERIES["q_skew_agg"] = QuerySpec(
-    name="q_skew_agg",
-    builder=_q_skew_agg,
-    oracle=f"""
-    SELECT event_type, COUNT(*) AS n,
-           {_rnd_sql("SUM(value)")} AS total,
-           {_rnd_sql("MAX(value)")} AS vmax
-    FROM events GROUP BY event_type ORDER BY event_type
-    """,
-    families=("A1", "skew"),
-    note=(
-        "Salted two-stage aggregation (operators/skew.py): scatter over "
-        "32 buckets, partial agg, merge — result identical to the plain "
-        "GROUP BY the oracle runs; no reducer sees a whole hot key."
-    ),
-)
 
 
 @_register(

@@ -19,20 +19,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from temp_data_pipeline_spark.plans.declared import QuerySpec, _rnd, _rnd_sql
+from temp_data_pipeline_spark.plans.declared import (
+    QuerySpec,
+    _rnd,
+    _rnd_sql,
+    registrar,
+    scratch_table,
+)
 from temp_data_pipeline_spark.sources.registry import load_table
 
 RELATIONAL_QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name, families, oracle, note=""):
-    def deco(fn):
-        RELATIONAL_QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, families=tuple(families), note=note
-        )
-        return fn
-
-    return deco
+_register = registrar(RELATIONAL_QUERIES)
 
 
 @_register(
@@ -491,9 +488,8 @@ def q_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
         "results)."
     ),
 )
-def q_hidden_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@scratch_table("hidden_part_")
+def q_hidden_partition(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from datetime import datetime
 
     from temp_data_pipeline_spark.operators.partitioning import (
@@ -502,32 +498,27 @@ def q_hidden_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="hidden_part_")
-    try:
-        commit_version_transformed(e, path, ["days(ts)"])
-        out = read_version_pruned(
-            spark,
-            path,
-            between={
-                "ts": (
-                    datetime(2024, 1, 8, 0, 0, 0),
-                    datetime(2024, 1, 14, 23, 59, 59),
-                )
-            },
-        )
-        return (
-            out.select(
-                "event_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "user_id",
-                "event_type",
-                "value",
+    commit_version_transformed(e, path, ["days(ts)"])
+    out = read_version_pruned(
+        spark,
+        path,
+        between={
+            "ts": (
+                datetime(2024, 1, 8, 0, 0, 0),
+                datetime(2024, 1, 14, 23, 59, 59),
             )
-            .orderBy("event_id")
-            .localCheckpoint()  # materialize before scratch cleanup
+        },
+    )
+    return (
+        out.select(
+            "event_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "user_id",
+            "event_type",
+            "value",
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        .orderBy("event_id")
+    )
 
 
 @_register(
@@ -592,10 +583,8 @@ def q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "GROUP BY over the final base state."
     ),
 )
-def q_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("matview_")
+def q_matview_refresh(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.matview import (
         build_agg_view,
         refresh_agg_view,
@@ -608,7 +597,6 @@ def q_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    scratch = tempfile.mkdtemp(prefix="matview_")
     bp, vp = f"{scratch}/base", f"{scratch}/view"
 
     def agg(df):
@@ -617,25 +605,21 @@ def q_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("o_orderkey").cast("long").alias("sum_key"),
         )
 
-    try:
-        commit_merge_cow(
-            orders.filter(F.col("o_orderkey") % 4 == 0),
-            bp, ["o_orderkey"], "o_orderkey", "o_orderpriority",
-        )
-        build_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
-        commit_merge_cow(
-            orders.filter(F.col("o_orderkey") % 4 == 1),
-            bp, ["o_orderkey"], "o_orderkey", "o_orderpriority",
-        )
-        refresh_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
-        return (
-            read_version(spark, vp)
-            .select("o_orderpriority", "n", "sum_key")
-            .orderBy("o_orderpriority")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_merge_cow(
+        orders.filter(F.col("o_orderkey") % 4 == 0),
+        bp, ["o_orderkey"], "o_orderkey", "o_orderpriority",
+    )
+    build_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
+    commit_merge_cow(
+        orders.filter(F.col("o_orderkey") % 4 == 1),
+        bp, ["o_orderkey"], "o_orderkey", "o_orderpriority",
+    )
+    refresh_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
+    return (
+        read_version(spark, vp)
+        .select("o_orderpriority", "n", "sum_key")
+        .orderBy("o_orderpriority")
+    )
 
 
 @_register(
@@ -657,10 +641,8 @@ def q_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "forward. Final rows ≡ the constraint-satisfying subset."
     ),
 )
-def q_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("constr_")
+def q_constraints(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import (
         add_table_constraint,
         commit_version,
@@ -672,41 +654,29 @@ def q_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     ok = orders.filter(F.col("o_totalprice") <= 400000.0)
-    scratch = tempfile.mkdtemp(prefix="constr_")
     path = f"{scratch}/t"
+    commit_version(ok.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path)
+    add_table_constraint(spark, path, "price_cap", "o_totalprice <= 400000.0")
+    # a violating batch must abort with nothing visible
+    before = versions(spark, path)[-1]
     try:
         commit_version(
-            ok.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path
-        )
-        add_table_constraint(
-            spark, path, "price_cap", "o_totalprice <= 400000.0"
-        )
-        # a violating batch must abort with nothing visible
-        before = versions(spark, path)[-1]
-        try:
-            commit_version(
-                orders.filter(F.col("o_totalprice") > 400000.0),
-                path,
-                carry_from=before,
-            )
-            raise AssertionError("violating commit must abort")
-        except ValueError:
-            pass
-        if versions(spark, path)[-1] != before:
-            raise AssertionError("aborted commit minted a version")
-        # the clean complement lands and carries the constraint
-        commit_version(
-            ok.filter(F.col("o_orderkey") % 2 == 1).repartition(2),
+            orders.filter(F.col("o_totalprice") > 400000.0),
             path,
             carry_from=before,
         )
-        return (
-            read_version(spark, path)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        raise AssertionError("violating commit must abort")
+    except ValueError:
+        pass
+    if versions(spark, path)[-1] != before:
+        raise AssertionError("aborted commit minted a version")
+    # the clean complement lands and carries the constraint
+    commit_version(
+        ok.filter(F.col("o_orderkey") % 2 == 1).repartition(2),
+        path,
+        carry_from=before,
+    )
+    return read_version(spark, path).orderBy("o_orderkey")
 
 
 @_register(
@@ -740,10 +710,8 @@ def q_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "compare bit-exact."
     ),
 )
-def q_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("minto_")
+def q_merge_into(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         read_table,
     )
@@ -753,45 +721,40 @@ def q_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="minto_")
     path = f"{scratch}/t"
-    try:
-        commit_version(orders.repartition(4), path)
-        source = (
-            orders.filter(F.col("o_orderkey") % 4 == 0)
-            .withColumn(
+    commit_version(orders.repartition(4), path)
+    source = (
+        orders.filter(F.col("o_orderkey") % 4 == 0)
+        .withColumn(
+            "o_totalprice",
+            F.when(
+                F.col("o_orderkey") % 8 == 0,
+                F.col("o_totalprice") + F.lit(50.0),
+            ).otherwise(F.col("o_totalprice") - F.lit(50.0)),
+        )
+        .unionByName(
+            orders.filter(F.col("o_orderkey") % 10 == 1).select(
+                (F.col("o_orderkey") + F.lit(30000000)).alias(
+                    "o_orderkey"
+                ),
+                F.lit(3).cast("long").alias("o_custkey"),
                 "o_totalprice",
-                F.when(
-                    F.col("o_orderkey") % 8 == 0,
-                    F.col("o_totalprice") + F.lit(50.0),
-                ).otherwise(F.col("o_totalprice") - F.lit(50.0)),
-            )
-            .unionByName(
-                orders.filter(F.col("o_orderkey") % 10 == 1).select(
-                    (F.col("o_orderkey") + F.lit(30000000)).alias(
-                        "o_orderkey"
-                    ),
-                    F.lit(3).cast("long").alias("o_custkey"),
-                    "o_totalprice",
-                )
             )
         )
-        commit_merge_into(
-            source,
-            path,
-            ["o_orderkey"],
-            update_when="s.o_totalprice > t.o_totalprice",
-            delete_when="t.o_custkey % 10 = 7",
-            insert_when="o_totalprice > 1000.0",
-        )
-        return (
-            read_table(spark, path)
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    )
+    commit_merge_into(
+        source,
+        path,
+        ["o_orderkey"],
+        update_when="s.o_totalprice > t.o_totalprice",
+        delete_when="t.o_custkey % 10 = 7",
+        insert_when="o_totalprice > 1000.0",
+    )
+    return (
+        read_table(spark, path)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy("o_orderkey")
+    )
 
 
 @_register(
@@ -821,10 +784,8 @@ def q_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         "must reproduce the oracle's per-row violation calculus."
     ),
 )
-def q_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("expect_")
+def q_expectations(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.expectations import (
         commit_with_expectations,
     )
@@ -833,30 +794,22 @@ def q_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="expect_")
     path = f"{scratch}/orders"
-    try:
-        commit_with_expectations(
-            orders.repartition(4),
-            path,
-            {
-                "custkey_not7": "o_custkey % 10 <> 7",
-                "price_cap": "o_totalprice <= 400000.0",
-            },
-        )
-        good = read_version(spark, path).select(
-            "o_orderkey", F.lit("").alias("violations")
-        )
-        bad = read_version(spark, f"{path}_quarantine").select(
-            "o_orderkey", F.col("_violations").alias("violations")
-        )
-        return (
-            good.unionByName(bad)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_with_expectations(
+        orders.repartition(4),
+        path,
+        {
+            "custkey_not7": "o_custkey % 10 <> 7",
+            "price_cap": "o_totalprice <= 400000.0",
+        },
+    )
+    good = read_version(spark, path).select(
+        "o_orderkey", F.lit("").alias("violations")
+    )
+    bad = read_version(spark, f"{path}_quarantine").select(
+        "o_orderkey", F.col("_violations").alias("violations")
+    )
+    return good.unionByName(bad).orderBy("o_orderkey")
 
 
 @_register(
@@ -892,10 +845,8 @@ def q_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "GROUP BY over the final visible state."
     ),
 )
-def q_matview_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("mvmor_")
+def q_matview_mor(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_delete_mor,
         commit_upsert_mor,
@@ -912,7 +863,6 @@ def q_matview_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    scratch = tempfile.mkdtemp(prefix="mvmor_")
     bp, vp = f"{scratch}/base", f"{scratch}/view"
 
     def agg(df):
@@ -921,35 +871,29 @@ def q_matview_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("o_orderkey").cast("long").alias("sum_key"),
         )
 
-    try:
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), bp
-        )
-        build_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
-        commit_delete_mor(spark, bp, "o_orderkey % 8 = 0")
-        commit_upsert_mor(
-            orders.filter(F.col("o_orderkey") % 8 == 4)
-            .withColumn("o_orderpriority", F.lit("9-SPECIAL"))
-            .unionByName(
-                orders.filter(F.col("o_orderkey") % 8 == 3).select(
-                    (F.col("o_orderkey") + F.lit(20000000)).alias(
-                        "o_orderkey"
-                    ),
-                    "o_orderpriority",
-                )
-            ),
-            bp,
-            ["o_orderkey"],
-        )
-        refresh_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
-        return (
-            read_version(spark, vp)
-            .select("o_orderpriority", "n", "sum_key")
-            .orderBy("o_orderpriority")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), bp)
+    build_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
+    commit_delete_mor(spark, bp, "o_orderkey % 8 = 0")
+    commit_upsert_mor(
+        orders.filter(F.col("o_orderkey") % 8 == 4)
+        .withColumn("o_orderpriority", F.lit("9-SPECIAL"))
+        .unionByName(
+            orders.filter(F.col("o_orderkey") % 8 == 3).select(
+                (F.col("o_orderkey") + F.lit(20000000)).alias(
+                    "o_orderkey"
+                ),
+                "o_orderpriority",
+            )
+        ),
+        bp,
+        ["o_orderkey"],
+    )
+    refresh_agg_view(spark, bp, vp, agg, ["o_orderpriority"])
+    return (
+        read_version(spark, vp)
+        .select("o_orderpriority", "n", "sum_key")
+        .orderBy("o_orderpriority")
+    )
 
 
 @_register(
@@ -976,10 +920,8 @@ def q_matview_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "never changes results."
     ),
 )
-def q_zorder_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("zorder_")
+def q_zorder_skip(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import commit_version
     from temp_data_pipeline_spark.operators.zonemap import (
         optimize_zorder,
@@ -989,31 +931,20 @@ def q_zorder_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="zorder_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders, path)
-        v = optimize_zorder(
-            spark, path, ["o_custkey", "o_totalprice"], target_files=16
-        )
-        out = read_version_skipped(
-            spark,
-            path,
-            [
-                ("o_custkey", ">=", 100),
-                ("o_custkey", "<=", 299),
-                ("o_totalprice", ">=", 50000.0),
-                ("o_totalprice", "<=", 150000.0),
-            ],
-            version=v,
-        )
-        return (
-            out.select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders, path)
+    v = optimize_zorder(spark, path, ["o_custkey", "o_totalprice"], target_files=16)
+    out = read_version_skipped(
+        spark,
+        path,
+        [
+            ("o_custkey", ">=", 100),
+            ("o_custkey", "<=", 299),
+            ("o_totalprice", ">=", 50000.0),
+            ("o_totalprice", "<=", 150000.0),
+        ],
+        version=v,
+    )
+    return out.select("o_orderkey", "o_custkey", "o_totalprice").orderBy("o_orderkey")
 
 
 @_register(
@@ -1046,10 +977,8 @@ def q_zorder_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "does not compose and stays with q_analyze's full pass."
     ),
 )
-def q_meta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("metaagg_")
+def q_meta_agg(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import commit_version
     from temp_data_pipeline_spark.operators.zonemap import (
         stats_summary,
@@ -1059,18 +988,9 @@ def q_meta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderstatus"
     )
-    path = tempfile.mkdtemp(prefix="metaagg_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders.repartition(8), path)
-        write_zone_maps(spark, path, ["o_custkey", "o_orderstatus"])
-        return (
-            stats_summary(spark, path)
-            .orderBy("col_name")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders.repartition(8), path)
+    write_zone_maps(spark, path, ["o_custkey", "o_orderstatus"])
+    return stats_summary(spark, path).orderBy("col_name")
 
 
 @_register(
@@ -1095,10 +1015,8 @@ def q_meta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "high-cardinality columns."
     ),
 )
-def q_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("bloom_")
+def q_bloom_lookup(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import commit_version
     from temp_data_pipeline_spark.operators.zonemap import (
         read_version_bloom,
@@ -1108,18 +1026,9 @@ def q_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    path = tempfile.mkdtemp(prefix="bloom_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders.repartition(8, "o_orderkey"), path)
-        write_bloom_index(spark, path, "o_orderkey")
-        return (
-            read_version_bloom(spark, path, "o_orderkey", 577)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders.repartition(8, "o_orderkey"), path)
+    write_bloom_index(spark, path, "o_orderkey")
+    return read_version_bloom(spark, path, "o_orderkey", 577).orderBy("o_orderkey")
 
 
 @_register(
@@ -1142,10 +1051,8 @@ def q_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "like the DV reader's SQL-DELETE null semantics."
     ),
 )
-def q_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("mor_")
+def q_delete_mor(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_delete_mor,
         read_table,
@@ -1155,18 +1062,9 @@ def q_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    path = tempfile.mkdtemp(prefix="mor_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders.repartition(8), path)
-        commit_delete_mor(spark, path, "o_custkey % 10 = 3")
-        return (
-            read_table(spark, path)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders.repartition(8), path)
+    commit_delete_mor(spark, path, "o_custkey % 10 = 3")
+    return read_table(spark, path).orderBy("o_orderkey")
 
 
 @_register(
@@ -1192,10 +1090,8 @@ def q_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(the pytest pins the abort)."
     ),
 )
-def q_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("rw_")
+def q_replace_where(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_replace_where,
         read_table,
@@ -1205,23 +1101,12 @@ def q_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    path = tempfile.mkdtemp(prefix="rw_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders.repartition(8), path)
-        replacement = orders.filter(F.col("o_orderkey") % 7 == 3).withColumn(
-            "o_orderstatus", F.lit("R")
-        )
-        commit_replace_where(
-            spark, replacement, path, "o_orderkey % 7 = 3"
-        )
-        return (
-            read_table(spark, path)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders.repartition(8), path)
+    replacement = orders.filter(F.col("o_orderkey") % 7 == 3).withColumn(
+        "o_orderstatus", F.lit("R")
+    )
+    commit_replace_where(spark, replacement, path, "o_orderkey % 7 = 3")
+    return read_table(spark, path).orderBy("o_orderkey")
 
 
 @_register(
@@ -1249,10 +1134,8 @@ def q_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cost."
     ),
 )
-def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("cdf_")
+def q_change_feed(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.changes import changes_between
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_delete_mor,
@@ -1262,30 +1145,22 @@ def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    path = tempfile.mkdtemp(prefix="cdf_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path
+    commit_version(orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path)
+    commit_version(
+        orders.filter(F.col("o_orderkey") % 2 == 1).repartition(2),
+        path,
+        carry_from=1,
+    )
+    v3 = commit_delete_mor(spark, path, "o_custkey % 10 = 7")
+    return (
+        changes_between(spark, path, 1, v3)
+        .select(
+            "o_orderkey",
+            "o_custkey",
+            F.col("_change_type").alias("change_type"),
         )
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 2 == 1).repartition(2),
-            path,
-            carry_from=1,
-        )
-        v3 = commit_delete_mor(spark, path, "o_custkey % 10 = 7")
-        return (
-            changes_between(spark, path, 1, v3)
-            .select(
-                "o_orderkey",
-                "o_custkey",
-                F.col("_change_type").alias("change_type"),
-            )
-            .orderBy("o_orderkey", "change_type")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        .orderBy("o_orderkey", "change_type")
+    )
 
 
 @_register(
@@ -1308,10 +1183,8 @@ def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "plain CASE projection over the raw table."
     ),
 )
-def q_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("morup_")
+def q_update_mor(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_update_mor,
         read_table,
@@ -1321,23 +1194,14 @@ def q_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="morup_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders.repartition(8), path)
-        commit_update_mor(
-            spark,
-            path,
-            "o_custkey % 10 = 4",
-            {"o_totalprice": "o_totalprice + 1000000.0"},
-        )
-        return (
-            read_table(spark, path)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders.repartition(8), path)
+    commit_update_mor(
+        spark,
+        path,
+        "o_custkey % 10 = 4",
+        {"o_totalprice": "o_totalprice + 1000000.0"},
+    )
+    return read_table(spark, path).orderBy("o_orderkey")
 
 
 @_register(
@@ -1361,10 +1225,8 @@ def q_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the result equals the plain WHERE + NOT over the raw table."
     ),
 )
-def q_lakehouse_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("lake_")
+def q_lakehouse_scan(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_delete_mor,
     )
@@ -1378,31 +1240,21 @@ def q_lakehouse_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="lake_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders.repartition(8, "o_orderkey"), path)
-        write_zone_maps(spark, path, ["o_totalprice"])
-        write_bloom_index(spark, path, "o_orderkey")
-        commit_delete_mor(spark, path, "o_custkey % 10 = 7")
-        # sidecars describe v1; rebuild incrementally for the DV commit
-        write_zone_maps(
-            spark, path, ["o_totalprice"], incremental_from=1
-        )
-        out = scan_version(
-            spark,
-            path,
-            [
-                ("o_totalprice", ">=", 50000.0),
-                ("o_totalprice", "<=", 150000.0),
-            ],
-        )
-        return (
-            out.orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders.repartition(8, "o_orderkey"), path)
+    write_zone_maps(spark, path, ["o_totalprice"])
+    write_bloom_index(spark, path, "o_orderkey")
+    commit_delete_mor(spark, path, "o_custkey % 10 = 7")
+    # sidecars describe v1; rebuild incrementally for the DV commit
+    write_zone_maps(spark, path, ["o_totalprice"], incremental_from=1)
+    out = scan_version(
+        spark,
+        path,
+        [
+            ("o_totalprice", ">=", 50000.0),
+            ("o_totalprice", "<=", 150000.0),
+        ],
+    )
+    return out.orderBy("o_orderkey")
 
 
 @_register(
@@ -1423,41 +1275,29 @@ def q_lakehouse_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(QUERY_ONLY_CORRUPT_RECORD_COLUMN); text+from_json can."
     ),
 )
-def q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("jsonl_")
+def q_jsonl_ingest(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.sources.crawl import read_jsonl_docs
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    scratch = tempfile.mkdtemp(prefix="jsonl_")
     dump = f"{scratch}/dump"
-    try:
-        jsonl = docs.select(
-            F.to_json(F.struct("doc_id", "lang", "text")).alias("value")
-        )
-        from temp_data_pipeline_spark.session import local_df
+    jsonl = docs.select(F.to_json(F.struct("doc_id", "lang", "text")).alias("value"))
+    from temp_data_pipeline_spark.session import local_df
 
-        junk = local_df(
-            spark,
-            [("this line is not json",), ('{"doc_id": -1, "lang": "xx', )],
-            "value string",
-        )
-        jsonl.unionByName(junk).coalesce(4).write.text(dump)
-        good, quarantine = read_jsonl_docs(
-            spark, dump, "doc_id long, lang string, text string"
-        )
-        if quarantine.count() != 2:
-            raise AssertionError("junk lines must quarantine, not vanish")
-        return (
-            good.select("doc_id", "lang", "text")
-            .orderBy("doc_id")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    junk = local_df(
+        spark,
+        [("this line is not json",), ('{"doc_id": -1, "lang": "xx', )],
+        "value string",
+    )
+    jsonl.unionByName(junk).coalesce(4).write.text(dump)
+    good, quarantine = read_jsonl_docs(
+        spark, dump, "doc_id long, lang string, text string"
+    )
+    if quarantine.count() != 2:
+        raise AssertionError("junk lines must quarantine, not vanish")
+    return good.select("doc_id", "lang", "text").orderBy("doc_id")
 
 
 @_register(
@@ -1610,10 +1450,8 @@ def q_part_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the oracle is the equivalent projection over raw orders."
     ),
 )
-def q_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("evo_")
+def q_rename_evolution(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import (
         commit_version,
         drop_column,
@@ -1625,35 +1463,27 @@ def q_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="evo_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path
+    commit_version(orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path)
+    rename_column(spark, path, "o_totalprice", "price")
+    rename_column(spark, path, "o_custkey", "buyer")
+    drop_column(spark, path, "buyer")
+    commit_version(
+        orders.filter(F.col("o_orderkey") % 2 == 1)
+        .select(
+            "o_orderkey",
+            F.col("o_totalprice").alias("price"),
+            F.col("o_custkey").alias("buyer"),
         )
-        rename_column(spark, path, "o_totalprice", "price")
-        rename_column(spark, path, "o_custkey", "buyer")
-        drop_column(spark, path, "buyer")
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 2 == 1)
-            .select(
-                "o_orderkey",
-                F.col("o_totalprice").alias("price"),
-                F.col("o_custkey").alias("buyer"),
-            )
-            .repartition(2),
-            path,
-            carry_from=versions(spark, path)[-1],
-            allow_evolution=True,
-        )
-        return (
-            read_version(spark, path)
-            .select("o_orderkey", "price", "buyer")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        .repartition(2),
+        path,
+        carry_from=versions(spark, path)[-1],
+        allow_evolution=True,
+    )
+    return (
+        read_version(spark, path)
+        .select("o_orderkey", "price", "buyer")
+        .orderBy("o_orderkey")
+    )
 
 
 @_register(
@@ -1695,10 +1525,8 @@ def q_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row. IEEE-exact +1000.0 keeps the compare bit-exact."
     ),
 )
-def q_cdf_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("cdfk_")
+def q_cdf_keyed(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.changes import (
         table_changes_keyed,
     )
@@ -1711,39 +1539,33 @@ def q_cdf_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="cdfk_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(orders.repartition(4), path)
-        updates = (
-            orders.filter(F.col("o_orderkey") % 10 == 3)
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-            .unionByName(orders.filter(F.col("o_orderkey") % 10 == 4))
-            .unionByName(
-                orders.filter(F.col("o_orderkey") % 10 == 5).select(
-                    (F.col("o_orderkey") + F.lit(10000000)).alias(
-                        "o_orderkey"
-                    ),
-                    F.lit(1).cast("long").alias("o_custkey"),
-                    F.col("o_totalprice"),
-                )
+    commit_version(orders.repartition(4), path)
+    updates = (
+        orders.filter(F.col("o_orderkey") % 10 == 3)
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
+        .unionByName(orders.filter(F.col("o_orderkey") % 10 == 4))
+        .unionByName(
+            orders.filter(F.col("o_orderkey") % 10 == 5).select(
+                (F.col("o_orderkey") + F.lit(10000000)).alias(
+                    "o_orderkey"
+                ),
+                F.lit(1).cast("long").alias("o_custkey"),
+                F.col("o_totalprice"),
             )
         )
-        commit_upsert_mor(updates, path, ["o_orderkey"])
-        v3 = commit_delete_mor(spark, path, "o_custkey % 10 = 7")
-        return (
-            table_changes_keyed(spark, path, ["o_orderkey"], 1, v3)
-            .select(
-                "o_orderkey",
-                "o_custkey",
-                "o_totalprice",
-                F.col("_change_type").alias("change_type"),
-            )
-            .orderBy("o_orderkey", "change_type")
-            .localCheckpoint()  # materialize before scratch cleanup
+    )
+    commit_upsert_mor(updates, path, ["o_orderkey"])
+    v3 = commit_delete_mor(spark, path, "o_custkey % 10 = 7")
+    return (
+        table_changes_keyed(spark, path, ["o_orderkey"], 1, v3)
+        .select(
+            "o_orderkey",
+            "o_custkey",
+            "o_totalprice",
+            F.col("_change_type").alias("change_type"),
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        .orderBy("o_orderkey", "change_type")
+    )
 
 
 @_register(
@@ -1777,10 +1599,8 @@ def q_cdf_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "compare bit-exact."
     ),
 )
-def q_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("repl_")
+def q_replicate(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_delete_mor,
         commit_upsert_mor,
@@ -1795,36 +1615,31 @@ def q_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="repl_")
     src, dst = f"{scratch}/src", f"{scratch}/replica"
-    try:
-        commit_version(orders.repartition(4), src)
-        replicate_seed(spark, src, dst, ["o_orderkey"])
-        updates = (
-            orders.filter(F.col("o_orderkey") % 10 == 3)
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-            .unionByName(
-                orders.filter(F.col("o_orderkey") % 10 == 5).select(
-                    (F.col("o_orderkey") + F.lit(10000000)).alias(
-                        "o_orderkey"
-                    ),
-                    F.lit(1).cast("long").alias("o_custkey"),
-                    F.col("o_totalprice"),
-                )
+    commit_version(orders.repartition(4), src)
+    replicate_seed(spark, src, dst, ["o_orderkey"])
+    updates = (
+        orders.filter(F.col("o_orderkey") % 10 == 3)
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
+        .unionByName(
+            orders.filter(F.col("o_orderkey") % 10 == 5).select(
+                (F.col("o_orderkey") + F.lit(10000000)).alias(
+                    "o_orderkey"
+                ),
+                F.lit(1).cast("long").alias("o_custkey"),
+                F.col("o_totalprice"),
             )
         )
-        commit_upsert_mor(updates, src, ["o_orderkey"])
-        replicate_incremental(spark, src, dst, ["o_orderkey"])
-        commit_delete_mor(spark, src, "o_custkey % 10 = 7")
-        replicate_incremental(spark, src, dst, ["o_orderkey"])
-        return (
-            read_table(spark, dst)
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    )
+    commit_upsert_mor(updates, src, ["o_orderkey"])
+    replicate_incremental(spark, src, dst, ["o_orderkey"])
+    commit_delete_mor(spark, src, "o_custkey % 10 = 7")
+    replicate_incremental(spark, src, dst, ["o_orderkey"])
+    return (
+        read_table(spark, dst)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy("o_orderkey")
+    )
 
 
 @_register(
@@ -1868,10 +1683,8 @@ def q_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "algebra; IEEE-exact +1000.0 keeps the compare bit-exact."
     ),
 )
-def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("scd2_")
+def q_scd2(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_delete_mor,
         commit_upsert_mor,
@@ -1886,41 +1699,36 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="scd2_")
     src, dim = f"{scratch}/src", f"{scratch}/dim"
-    try:
-        commit_version(orders.repartition(4), src)
-        scd2_init(spark, src, dim, ["o_orderkey"])
-        updates = (
-            orders.filter(F.col("o_orderkey") % 10 == 3)
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-            .unionByName(
-                orders.filter(F.col("o_orderkey") % 10 == 5).select(
-                    (F.col("o_orderkey") + F.lit(10000000)).alias(
-                        "o_orderkey"
-                    ),
-                    F.lit(1).cast("long").alias("o_custkey"),
-                    F.col("o_totalprice"),
-                )
+    commit_version(orders.repartition(4), src)
+    scd2_init(spark, src, dim, ["o_orderkey"])
+    updates = (
+        orders.filter(F.col("o_orderkey") % 10 == 3)
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
+        .unionByName(
+            orders.filter(F.col("o_orderkey") % 10 == 5).select(
+                (F.col("o_orderkey") + F.lit(10000000)).alias(
+                    "o_orderkey"
+                ),
+                F.lit(1).cast("long").alias("o_custkey"),
+                F.col("o_totalprice"),
             )
         )
-        commit_upsert_mor(updates, src, ["o_orderkey"])
-        commit_delete_mor(spark, src, "o_custkey % 10 = 7")
-        scd2_catchup(spark, src, dim, ["o_orderkey"])
-        return (
-            read_table(spark, dim)
-            .select(
-                "o_orderkey",
-                "o_custkey",
-                "o_totalprice",
-                "_valid_from",
-                "_valid_to",
-            )
-            .orderBy("o_orderkey", "_valid_from")
-            .localCheckpoint()  # materialize before scratch cleanup
+    )
+    commit_upsert_mor(updates, src, ["o_orderkey"])
+    commit_delete_mor(spark, src, "o_custkey % 10 = 7")
+    scd2_catchup(spark, src, dim, ["o_orderkey"])
+    return (
+        read_table(spark, dim)
+        .select(
+            "o_orderkey",
+            "o_custkey",
+            "o_totalprice",
+            "_valid_from",
+            "_valid_to",
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        .orderBy("o_orderkey", "_valid_from")
+    )
 
 
 @_register(
@@ -1942,10 +1750,8 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "compact_snapshot normalizes to the latest layout when wanted."
     ),
 )
-def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("pevo_")
+def q_partition_evolution(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import (
         commit_version,
         read_version,
@@ -1954,27 +1760,19 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = tempfile.mkdtemp(prefix="pevo_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path
-        )
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 2 == 1).repartition(2),
-            path,
-            carry_from=1,
-            partition_by=["o_orderstatus"],
-        )
-        return (
-            read_version(spark, path)
-            .filter(F.col("o_orderstatus") == "F")
-            .select("o_orderkey", "o_orderstatus", "o_totalprice")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    commit_version(orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4), path)
+    commit_version(
+        orders.filter(F.col("o_orderkey") % 2 == 1).repartition(2),
+        path,
+        carry_from=1,
+        partition_by=["o_orderstatus"],
+    )
+    return (
+        read_version(spark, path)
+        .filter(F.col("o_orderstatus") == "F")
+        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+        .orderBy("o_orderkey")
+    )
 
 
 @_register(
@@ -2021,10 +1819,8 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bit-exact."
     ),
 )
-def q_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("sqldml_")
+def q_sql_dml(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         read_table,
     )
@@ -2034,40 +1830,35 @@ def q_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="sqldml_")
     path = f"{scratch}/t"
-    try:
-        commit_version(orders.repartition(4), path)
-        eng = SqlEngine(spark, {"t": path})
-        eng.sql("DELETE FROM t WHERE o_custkey % 10 = 7")
-        eng.sql(
-            "UPDATE t SET o_totalprice = o_totalprice + 100.0 "
-            "WHERE o_orderkey % 10 = 3"
-        )
-        eng.sql(
-            "INSERT INTO t SELECT o_orderkey + 50000000, "
-            "CAST(9 AS BIGINT), o_totalprice FROM t "
-            "WHERE o_orderkey % 100 = 11"
-        )
-        eng.sql(
-            """
-            MERGE INTO t USING (
-              SELECT o_orderkey, o_custkey,
-                     o_totalprice + 10.0 AS o_totalprice
-              FROM t WHERE o_orderkey % 10 = 6
-            ) s ON t.o_orderkey = s.o_orderkey
-            WHEN MATCHED AND s.o_totalprice > 500.0 THEN UPDATE SET *
-            WHEN MATCHED THEN DELETE
-            """
-        )
-        return (
-            read_table(spark, path)
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.repartition(4), path)
+    eng = SqlEngine(spark, {"t": path})
+    eng.sql("DELETE FROM t WHERE o_custkey % 10 = 7")
+    eng.sql(
+        "UPDATE t SET o_totalprice = o_totalprice + 100.0 "
+        "WHERE o_orderkey % 10 = 3"
+    )
+    eng.sql(
+        "INSERT INTO t SELECT o_orderkey + 50000000, "
+        "CAST(9 AS BIGINT), o_totalprice FROM t "
+        "WHERE o_orderkey % 100 = 11"
+    )
+    eng.sql(
+        """
+        MERGE INTO t USING (
+          SELECT o_orderkey, o_custkey,
+                 o_totalprice + 10.0 AS o_totalprice
+          FROM t WHERE o_orderkey % 10 = 6
+        ) s ON t.o_orderkey = s.o_orderkey
+        WHEN MATCHED AND s.o_totalprice > 500.0 THEN UPDATE SET *
+        WHEN MATCHED THEN DELETE
+        """
+    )
+    return (
+        read_table(spark, path)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy("o_orderkey")
+    )
 
 
 @_register(
@@ -2089,10 +1880,8 @@ def q_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "visible multiset must stay exactly the raw table."
     ),
 )
-def q_compact_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("cp_")
+def q_compact_partitions(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import (
         commit_version,
         compact_partitions,
@@ -2102,35 +1891,24 @@ def q_compact_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    path = tempfile.mkdtemp(prefix="cp_")
-    try:
-        shutil.rmtree(path, ignore_errors=True)
-        key = F.col("o_orderkey")
+    key = F.col("o_orderkey")
+    commit_version(
+        orders.filter(key % 3 != 0).repartition(4),
+        path,
+        partition_by=["o_orderstatus"],
+    )
+    for j, pred in enumerate(
+        [(key % 3 == 0) & (key % 2 == 0), (key % 3 == 0) & (key % 2 == 1)]
+    ):
         commit_version(
-            orders.filter(key % 3 != 0).repartition(4),
+            orders.filter(pred),
             path,
+            carry_from=j + 1,
             partition_by=["o_orderstatus"],
         )
-        for j, pred in enumerate(
-            [(key % 3 == 0) & (key % 2 == 0), (key % 3 == 0) & (key % 2 == 1)]
-        ):
-            commit_version(
-                orders.filter(pred),
-                path,
-                carry_from=j + 1,
-                partition_by=["o_orderstatus"],
-            )
-        compact_partitions(spark, path, "o_orderstatus", values=["O"])
-        compact_partitions(
-            spark, path, "o_orderstatus", where="o_orderstatus >= 'P'"
-        )
-        return (
-            read_version(spark, path)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    compact_partitions(spark, path, "o_orderstatus", values=["O"])
+    compact_partitions(spark, path, "o_orderstatus", where="o_orderstatus >= 'P'")
+    return read_version(spark, path).orderBy("o_orderkey")
 
 
 @_register(
@@ -2164,47 +1942,36 @@ def q_compact_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SQL front adds parsing, not semantics."
     ),
 )
-def q_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("sqlddl_")
+def q_sql_ddl(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.sql import SqlEngine
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    scratch = tempfile.mkdtemp(prefix="sqlddl_")
-    try:
-        from temp_data_pipeline_spark.operators.versioned import (
-            commit_version,
-        )
+    from temp_data_pipeline_spark.operators.versioned import (
+        commit_version,
+    )
 
-        commit_version(orders.repartition(4), f"{scratch}/src")
-        eng = SqlEngine(
-            spark, {"src": f"{scratch}/src"}, warehouse=f"{scratch}/wh"
-        )
-        eng.sql(
-            "CREATE TABLE agg AS SELECT o_custkey, "
-            "CAST(count(*) AS BIGINT) AS n, "
-            "CAST(sum(o_orderkey) AS BIGINT) AS keysum "
-            "FROM src GROUP BY o_custkey"
-        )
-        eng.sql(
-            "INSERT INTO agg (o_custkey, n) "
-            "REPLACE WHERE o_custkey % 10 = 4 "
-            "SELECT o_custkey, CAST(count(*) AS BIGINT) FROM src "
-            "WHERE o_custkey % 10 = 4 GROUP BY o_custkey"
-        )
-        eng.sql(
-            "CREATE VIEW big AS SELECT o_custkey, n, keysum "
-            "FROM agg WHERE n > 1"
-        )
-        return (
-            eng.sql("SELECT o_custkey, n, keysum FROM big ORDER BY o_custkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.repartition(4), f"{scratch}/src")
+    eng = SqlEngine(spark, {"src": f"{scratch}/src"}, warehouse=f"{scratch}/wh")
+    eng.sql(
+        "CREATE TABLE agg AS SELECT o_custkey, "
+        "CAST(count(*) AS BIGINT) AS n, "
+        "CAST(sum(o_orderkey) AS BIGINT) AS keysum "
+        "FROM src GROUP BY o_custkey"
+    )
+    eng.sql(
+        "INSERT INTO agg (o_custkey, n) "
+        "REPLACE WHERE o_custkey % 10 = 4 "
+        "SELECT o_custkey, CAST(count(*) AS BIGINT) FROM src "
+        "WHERE o_custkey % 10 = 4 GROUP BY o_custkey"
+    )
+    eng.sql(
+        "CREATE VIEW big AS SELECT o_custkey, n, keysum "
+        "FROM agg WHERE n > 1"
+    )
+    return eng.sql("SELECT o_custkey, n, keysum FROM big ORDER BY o_custkey")
 
 
 @_register(
@@ -2264,10 +2031,8 @@ def q_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "delta-sized append. +10.0/+1.0 keep the compare IEEE-exact."
     ),
 )
-def q_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("sqlmerge_")
+def q_sql_merge(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         read_table,
     )
@@ -2277,38 +2042,33 @@ def q_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="sqlmerge_")
     path = f"{scratch}/t"
-    try:
-        commit_version(orders.repartition(4), path)
-        eng = SqlEngine(spark, {"t": path})
-        eng.sql(
-            """
-            MERGE INTO t USING (
-              SELECT o_orderkey, o_custkey,
-                     o_totalprice + 10.0 AS o_totalprice
-              FROM t WHERE o_orderkey % 3 = 0
-              UNION ALL
-              SELECT o_orderkey + 60000000, o_custkey, o_totalprice
-              FROM t WHERE o_orderkey % 100 = 17
-            ) s ON t.o_orderkey = s.o_orderkey
-            WHEN MATCHED AND s.o_totalprice > 150000.0 THEN UPDATE SET *
-            WHEN MATCHED THEN DELETE
-            WHEN NOT MATCHED BY TARGET THEN INSERT *
-            WHEN NOT MATCHED BY SOURCE AND t.o_custkey % 5 = 0
-              THEN UPDATE SET o_totalprice = t.o_totalprice + 1.0
-            WHEN NOT MATCHED BY SOURCE AND t.o_custkey % 5 = 1
-              THEN DELETE
-            """
-        )
-        return (
-            read_table(spark, path)
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.repartition(4), path)
+    eng = SqlEngine(spark, {"t": path})
+    eng.sql(
+        """
+        MERGE INTO t USING (
+          SELECT o_orderkey, o_custkey,
+                 o_totalprice + 10.0 AS o_totalprice
+          FROM t WHERE o_orderkey % 3 = 0
+          UNION ALL
+          SELECT o_orderkey + 60000000, o_custkey, o_totalprice
+          FROM t WHERE o_orderkey % 100 = 17
+        ) s ON t.o_orderkey = s.o_orderkey
+        WHEN MATCHED AND s.o_totalprice > 150000.0 THEN UPDATE SET *
+        WHEN MATCHED THEN DELETE
+        WHEN NOT MATCHED BY TARGET THEN INSERT *
+        WHEN NOT MATCHED BY SOURCE AND t.o_custkey % 5 = 0
+          THEN UPDATE SET o_totalprice = t.o_totalprice + 1.0
+        WHEN NOT MATCHED BY SOURCE AND t.o_custkey % 5 = 1
+          THEN DELETE
+        """
+    )
+    return (
+        read_table(spark, path)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy("o_orderkey")
+    )
 
 
 @_register(
@@ -2334,10 +2094,8 @@ def q_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "classification."
     ),
 )
-def q_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("qrep_")
+def q_quarantine_replay(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.expectations import (
         commit_with_expectations,
         replay_quarantine,
@@ -2350,38 +2108,26 @@ def q_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="qrep_")
     path = f"{scratch}/t"
-    try:
-        commit_with_expectations(
-            orders.repartition(4),
-            path,
-            {"tenant_ok": "o_custkey % 10 <> 7"},
-        )
-        replay_quarantine(
-            spark, path, {"fixed_gate": "o_orderkey % 3 <> 0"}
-        )
-        # idempotence: the second replay must append nothing
-        n_before = len(versions(spark, path))
-        _, n_pass, _ = replay_quarantine(
-            spark, path, {"fixed_gate": "o_orderkey % 3 <> 0"}
-        )
-        assert n_pass == 0 and len(versions(spark, path)) == n_before
-        live = read_version(spark, path).withColumn(
-            "state", F.lit("live")
-        )
-        quarantined = (
-            read_version(spark, f"{path}_quarantine")
-            .drop("_violations")
-            .withColumn("state", F.lit("quarantined"))
-        )
-        return (
-            live.unionByName(quarantined)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_with_expectations(
+        orders.repartition(4),
+        path,
+        {"tenant_ok": "o_custkey % 10 <> 7"},
+    )
+    replay_quarantine(spark, path, {"fixed_gate": "o_orderkey % 3 <> 0"})
+    # idempotence: the second replay must append nothing
+    n_before = len(versions(spark, path))
+    _, n_pass, _ = replay_quarantine(spark, path, {"fixed_gate": "o_orderkey % 3 <> 0"})
+    assert n_pass == 0 and len(versions(spark, path)) == n_before
+    live = read_version(spark, path).withColumn(
+        "state", F.lit("live")
+    )
+    quarantined = (
+        read_version(spark, f"{path}_quarantine")
+        .drop("_violations")
+        .withColumn("state", F.lit("quarantined"))
+    )
+    return live.unionByName(quarantined).orderBy("o_orderkey")
 
 
 @_register(
@@ -2408,10 +2154,8 @@ def q_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "IEEE-exact."
     ),
 )
-def q_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("clone_")
+def q_clone(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         commit_delete_mor,
         commit_upsert_mor,
@@ -2425,33 +2169,25 @@ def q_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="clone_")
     src, dst = f"{scratch}/src", f"{scratch}/dst"
-    try:
-        commit_version(orders.repartition(4), src)
-        shallow_clone(spark, src, dst)
-        commit_delete_mor(spark, dst, "o_orderkey % 7 = 0")
-        ups = read_table(spark, dst).filter("o_custkey % 10 = 3").select(
-            "o_orderkey",
-            "o_custkey",
-            (F.col("o_totalprice") + F.lit(5.0)).alias("o_totalprice"),
-        )
-        commit_upsert_mor(ups, dst, ["o_orderkey"])
-        # source moves on — the clone pinned version 1 and must not see
-        commit_version(
-            orders.limit(10).withColumn(
-                "o_orderkey", F.col("o_orderkey") + F.lit(90000000)
-            ),
-            src,
-            carry_from=1,
-        )
-        return (
-            read_table(spark, dst)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.repartition(4), src)
+    shallow_clone(spark, src, dst)
+    commit_delete_mor(spark, dst, "o_orderkey % 7 = 0")
+    ups = read_table(spark, dst).filter("o_custkey % 10 = 3").select(
+        "o_orderkey",
+        "o_custkey",
+        (F.col("o_totalprice") + F.lit(5.0)).alias("o_totalprice"),
+    )
+    commit_upsert_mor(ups, dst, ["o_orderkey"])
+    # source moves on — the clone pinned version 1 and must not see
+    commit_version(
+        orders.limit(10).withColumn(
+            "o_orderkey", F.col("o_orderkey") + F.lit(90000000)
+        ),
+        src,
+        carry_from=1,
+    )
+    return read_table(spark, dst).orderBy("o_orderkey")
 
 
 @_register(
@@ -2471,10 +2207,8 @@ def q_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the latest write."
     ),
 )
-def q_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("showparts_")
+def q_show_partitions(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import (
         commit_version,
         snapshot_partitions,
@@ -2483,22 +2217,12 @@ def q_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    scratch = tempfile.mkdtemp(prefix="showparts_")
     path = f"{scratch}/t"
-    try:
-        first = orders.filter("o_orderkey % 2 = 0")
-        rest = orders.filter("o_orderkey % 2 <> 0")
-        commit_version(
-            first.repartition(4), path, partition_by=["o_orderpriority"]
-        )
-        commit_version(rest.repartition(4), path, carry_from=1)
-        return (
-            snapshot_partitions(spark, path)
-            .orderBy("o_orderpriority")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    first = orders.filter("o_orderkey % 2 = 0")
+    rest = orders.filter("o_orderkey % 2 <> 0")
+    commit_version(first.repartition(4), path, partition_by=["o_orderpriority"])
+    commit_version(rest.repartition(4), path, carry_from=1)
+    return snapshot_partitions(spark, path).orderBy("o_orderpriority")
 
 
 @_register(
@@ -2521,35 +2245,26 @@ def q_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "schema. The oracle is the NULL-fill contract itself."
     ),
 )
-def q_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("addcol_")
+def q_add_column(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import commit_version
     from temp_data_pipeline_spark.sql import SqlEngine
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="addcol_")
     path = f"{scratch}/t"
-    try:
-        commit_version(orders.repartition(4), path)
-        eng = SqlEngine(spark, {"t": path})
-        eng.sql("ALTER TABLE t ADD COLUMNS (bonus double, note string)")
-        eng.sql(
-            "UPDATE t SET bonus = o_totalprice, note = 'credited' "
-            "WHERE o_orderkey % 10 = 0"
-        )
-        return (
-            eng.sql(
-                "SELECT o_orderkey, o_totalprice, bonus, note FROM t "
-                "ORDER BY o_orderkey"
-            )
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.repartition(4), path)
+    eng = SqlEngine(spark, {"t": path})
+    eng.sql("ALTER TABLE t ADD COLUMNS (bonus double, note string)")
+    eng.sql(
+        "UPDATE t SET bonus = o_totalprice, note = 'credited' "
+        "WHERE o_orderkey % 10 = 0"
+    )
+    return eng.sql(
+        "SELECT o_orderkey, o_totalprice, bonus, note FROM t "
+        "ORDER BY o_orderkey"
+    )
 
 
 @_register(
@@ -2573,38 +2288,24 @@ def q_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the glob listing and ledger walk are metadata-plane."
     ),
 )
-def q_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("copyinto_")
+def q_copy_into(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.copy_into import copy_into
     from temp_data_pipeline_spark.operators.versioned import read_version
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="copyinto_")
     land, path = f"{scratch}/landing", f"{scratch}/t"
-    try:
-        orders.filter("o_orderkey % 2 = 0").repartition(3).write.parquet(
-            f"{land}/wave1"
-        )
-        v, n1 = copy_into(spark, path, land, pattern="*/part-*.parquet")
-        assert v == 1 and n1 >= 1
-        orders.filter("o_orderkey % 2 <> 0").repartition(3).write.parquet(
-            f"{land}/wave2"
-        )
-        v, n2 = copy_into(spark, path, land, pattern="*/part-*.parquet")
-        assert v == 2 and n2 >= 1
-        v, n3 = copy_into(spark, path, land, pattern="*/part-*.parquet")
-        assert (v, n3) == (2, 0), "COPY INTO re-run must load nothing"
-        return (
-            read_version(spark, path)
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    orders.filter("o_orderkey % 2 = 0").repartition(3).write.parquet(f"{land}/wave1")
+    v, n1 = copy_into(spark, path, land, pattern="*/part-*.parquet")
+    assert v == 1 and n1 >= 1
+    orders.filter("o_orderkey % 2 <> 0").repartition(3).write.parquet(f"{land}/wave2")
+    v, n2 = copy_into(spark, path, land, pattern="*/part-*.parquet")
+    assert v == 2 and n2 >= 1
+    v, n3 = copy_into(spark, path, land, pattern="*/part-*.parquet")
+    assert (v, n3) == (2, 0), "COPY INTO re-run must load nothing"
+    return read_version(spark, path).orderBy("o_orderkey")
 
 
 @_register(
@@ -2635,36 +2336,27 @@ def q_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reaches Spark SQL untouched."
     ),
 )
-def q_sql_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("sqlcdf_")
+def q_sql_cdf(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import commit_version
     from temp_data_pipeline_spark.sql import SqlEngine
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="sqlcdf_")
     path = f"{scratch}/t"
-    try:
-        commit_version(orders.repartition(4), path)
-        eng = SqlEngine(spark, {"t": path})
-        eng.sql("DELETE FROM t WHERE o_custkey % 10 = 7")
-        eng.sql(
-            "INSERT INTO t SELECT o_orderkey + 60000000, o_custkey, "
-            "o_totalprice FROM t WHERE o_orderkey % 100 = 42"
-        )
-        return (
-            eng.sql(
-                "SELECT o_orderkey, o_custkey, o_totalprice, "
-                "_change_type FROM table_changes('t', 1) "
-                "ORDER BY o_orderkey, _change_type"
-            )
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.repartition(4), path)
+    eng = SqlEngine(spark, {"t": path})
+    eng.sql("DELETE FROM t WHERE o_custkey % 10 = 7")
+    eng.sql(
+        "INSERT INTO t SELECT o_orderkey + 60000000, o_custkey, "
+        "o_totalprice FROM t WHERE o_orderkey % 100 = 42"
+    )
+    return eng.sql(
+        "SELECT o_orderkey, o_custkey, o_totalprice, "
+        "_change_type FROM table_changes('t', 1) "
+        "ORDER BY o_orderkey, _change_type"
+    )
 
 
 @_register(
@@ -2719,10 +2411,8 @@ def q_sql_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "keep the compare IEEE-exact."
     ),
 )
-def q_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("mergecdc_")
+def q_merge_cdc(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.deletion_vectors import (
         read_table,
     )
@@ -2732,51 +2422,46 @@ def q_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="mergecdc_")
     path = f"{scratch}/t"
-    try:
-        commit_version(orders.repartition(4), path)
-        feed = spark.sql(
-            """
-            SELECT o_orderkey,
-                   CASE WHEN o_orderkey % 11 = 0 THEN 'D'
-                        WHEN o_orderkey % 2 = 0 THEN 'U'
-                        ELSE 'I' END AS op,
-                   o_custkey, o_totalprice
-            FROM {o} WHERE o_orderkey % 3 = 0
-            UNION ALL
-            SELECT o_orderkey + 60000000,
-                   CASE WHEN o_custkey % 13 = 0 THEN 'D'
-                        ELSE 'I' END AS op,
-                   o_custkey, o_totalprice
-            FROM {o} WHERE o_orderkey % 100 = 17
-            """,
-            o=orders,
-        )
-        feed.createOrReplaceTempView("cdc_feed")
-        eng = SqlEngine(spark, {"t": path})
-        eng.sql(
-            """
-            MERGE INTO t USING (
-              SELECT o_orderkey, o_custkey, o_totalprice, op
-              FROM cdc_feed
-            ) s ON t.o_orderkey = s.o_orderkey
-            WHEN MATCHED AND s.op = 'D' THEN DELETE
-            WHEN MATCHED AND s.op = 'U'
-              THEN UPDATE SET o_totalprice = t.o_totalprice * 2.0
-            WHEN MATCHED
-              THEN UPDATE SET o_totalprice = t.o_totalprice + 1.0
-            WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT *
-            """
-        )
-        return (
-            read_table(spark, path)
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy("o_orderkey")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    commit_version(orders.repartition(4), path)
+    feed = spark.sql(
+        """
+        SELECT o_orderkey,
+               CASE WHEN o_orderkey % 11 = 0 THEN 'D'
+                    WHEN o_orderkey % 2 = 0 THEN 'U'
+                    ELSE 'I' END AS op,
+               o_custkey, o_totalprice
+        FROM {o} WHERE o_orderkey % 3 = 0
+        UNION ALL
+        SELECT o_orderkey + 60000000,
+               CASE WHEN o_custkey % 13 = 0 THEN 'D'
+                    ELSE 'I' END AS op,
+               o_custkey, o_totalprice
+        FROM {o} WHERE o_orderkey % 100 = 17
+        """,
+        o=orders,
+    )
+    feed.createOrReplaceTempView("cdc_feed")
+    eng = SqlEngine(spark, {"t": path})
+    eng.sql(
+        """
+        MERGE INTO t USING (
+          SELECT o_orderkey, o_custkey, o_totalprice, op
+          FROM cdc_feed
+        ) s ON t.o_orderkey = s.o_orderkey
+        WHEN MATCHED AND s.op = 'D' THEN DELETE
+        WHEN MATCHED AND s.op = 'U'
+          THEN UPDATE SET o_totalprice = t.o_totalprice * 2.0
+        WHEN MATCHED
+          THEN UPDATE SET o_totalprice = t.o_totalprice + 1.0
+        WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT *
+        """
+    )
+    return (
+        read_table(spark, path)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy("o_orderkey")
+    )
 
 
 @_register(
@@ -2798,54 +2483,45 @@ def q_merge_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "table must equal orders + the write-time grade assignment."
     ),
 )
-def q_sql_console(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("sqlconsole_")
+def q_sql_console(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.sql import SqlEngine
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     orders.createOrReplaceTempView("q_console_orders")
-    scratch = tempfile.mkdtemp(prefix="sqlconsole_")
-    try:
-        eng = SqlEngine(spark, {}, warehouse=scratch)
-        eng.sql(
-            "CREATE TABLE con (o_orderkey BIGINT, o_totalprice DOUBLE, "
-            "grade STRING)"
-        )
-        eng.sql("ALTER TABLE con ALTER COLUMN grade SET DEFAULT 'std'")
-        eng.sql(
-            "ALTER TABLE con SET TBLPROPERTIES ('source' = 'orders')"
-        )
-        eng.sql(
-            "INSERT INTO con (o_orderkey, o_totalprice) "
-            "SELECT o_orderkey, o_totalprice FROM q_console_orders "
-            "WHERE o_orderkey % 2 = 0"
-        )
-        eng.sql("ALTER TABLE con ALTER COLUMN grade SET DEFAULT 'alt'")
-        eng.sql(
-            "INSERT INTO con (o_orderkey, o_totalprice) "
-            "SELECT o_orderkey, o_totalprice FROM q_console_orders "
-            "WHERE o_orderkey % 2 <> 0"
-        )
-        props = {
-            r["key"]: r["value"]
-            for r in eng.sql("SHOW TBLPROPERTIES con").collect()
-        }
-        assert props == {"source": "orders"}, props
-        dry = eng.sql("VACUUM con RETAIN 1 VERSIONS DRY RUN").count()
-        assert dry >= 1  # expirable history reported, nothing deleted
-        return (
-            eng.sql(
-                "SELECT o_orderkey, o_totalprice, grade FROM con "
-                "ORDER BY o_orderkey"
-            )
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    eng = SqlEngine(spark, {}, warehouse=scratch)
+    eng.sql(
+        "CREATE TABLE con (o_orderkey BIGINT, o_totalprice DOUBLE, "
+        "grade STRING)"
+    )
+    eng.sql("ALTER TABLE con ALTER COLUMN grade SET DEFAULT 'std'")
+    eng.sql(
+        "ALTER TABLE con SET TBLPROPERTIES ('source' = 'orders')"
+    )
+    eng.sql(
+        "INSERT INTO con (o_orderkey, o_totalprice) "
+        "SELECT o_orderkey, o_totalprice FROM q_console_orders "
+        "WHERE o_orderkey % 2 = 0"
+    )
+    eng.sql("ALTER TABLE con ALTER COLUMN grade SET DEFAULT 'alt'")
+    eng.sql(
+        "INSERT INTO con (o_orderkey, o_totalprice) "
+        "SELECT o_orderkey, o_totalprice FROM q_console_orders "
+        "WHERE o_orderkey % 2 <> 0"
+    )
+    props = {
+        r["key"]: r["value"]
+        for r in eng.sql("SHOW TBLPROPERTIES con").collect()
+    }
+    assert props == {"source": "orders"}, props
+    dry = eng.sql("VACUUM con RETAIN 1 VERSIONS DRY RUN").count()
+    assert dry >= 1  # expirable history reported, nothing deleted
+    return eng.sql(
+        "SELECT o_orderkey, o_totalprice, grade FROM con "
+        "ORDER BY o_orderkey"
+    )
 
 
 @_register(
@@ -2873,10 +2549,8 @@ def q_sql_console(spark: SparkSession, sf_dir: str) -> DataFrame:
         "equal the plain shuffling join over the raw parquet."
     ),
 )
-def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("bkt_")
+def q_bucket_join(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.bucketing import (
         bucketed_join,
         commit_bucketed,
@@ -2890,37 +2564,29 @@ def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    o_path = tempfile.mkdtemp(prefix="bkt_o_")
-    c_path = tempfile.mkdtemp(prefix="bkt_c_")
-    try:
-        shutil.rmtree(o_path, ignore_errors=True)
-        shutil.rmtree(c_path, ignore_errors=True)
-        # bucket count is a LAKE constant: both sides must agree for
-        # the co-located plan (8 here; ~1024 at 100 TB)
-        commit_bucketed(customer, c_path, bucket_by=["custkey"], n_buckets=8)
-        key = F.col("o_orderkey")
-        commit_bucketed(
-            orders.filter(key % 3 != 0),
-            o_path,
-            bucket_by=["custkey"],
-            n_buckets=8,
+    o_path, c_path = f"{scratch}/o", f"{scratch}/c"
+    # bucket count is a LAKE constant: both sides must agree for
+    # the co-located plan (8 here; ~1024 at 100 TB)
+    commit_bucketed(customer, c_path, bucket_by=["custkey"], n_buckets=8)
+    key = F.col("o_orderkey")
+    commit_bucketed(
+        orders.filter(key % 3 != 0),
+        o_path,
+        bucket_by=["custkey"],
+        n_buckets=8,
+    )
+    # plain append: correct rows immediately, locality deferred
+    commit_version(orders.filter(key % 3 == 0), o_path, carry_from=1)
+    rebucket(spark, o_path)  # one rewrite, co-location back
+    joined = bucketed_join(spark, o_path, c_path, ["custkey"])
+    return (
+        joined.groupBy("c_mktsegment")
+        .agg(
+            F.count("*").alias("n_orders"),
+            _rnd(F.sum("o_totalprice")).alias("revenue"),
         )
-        # plain append: correct rows immediately, locality deferred
-        commit_version(orders.filter(key % 3 == 0), o_path, carry_from=1)
-        rebucket(spark, o_path)  # one rewrite, co-location back
-        joined = bucketed_join(spark, o_path, c_path, ["custkey"])
-        return (
-            joined.groupBy("c_mktsegment")
-            .agg(
-                F.count("*").alias("n_orders"),
-                _rnd(F.sum("o_totalprice")).alias("revenue"),
-            )
-            .orderBy("c_mktsegment")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(o_path, ignore_errors=True)
-        shutil.rmtree(c_path, ignore_errors=True)
+        .orderBy("c_mktsegment")
+    )
 
 
 @_register(
@@ -2945,44 +2611,33 @@ def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "same expressions directly."
     ),
 )
-def q_sql_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("gen_")
+def q_sql_generated(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.sql import SqlEngine
 
-    scratch = tempfile.mkdtemp(prefix="gen_")
-    try:
-        orders = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_totalprice").alias("price"),
-        )
-        orders.createOrReplaceTempView("q_gen_orders")
-        eng = SqlEngine(spark, {}, warehouse=scratch)
-        eng.sql(
-            "CREATE TABLE gt (k BIGINT, price DOUBLE, "
-            "price_floor BIGINT GENERATED ALWAYS AS "
-            "(CAST(FLOOR(price) AS BIGINT)), "
-            "k_mod BIGINT GENERATED ALWAYS AS (k % 7))"
-        )
-        eng.sql(
-            "INSERT INTO gt (k, price) "
-            "SELECT k, price FROM q_gen_orders WHERE k % 3 <> 0"
-        )
-        eng.sql(
-            "MERGE INTO gt USING "
-            "(SELECT k, price FROM q_gen_orders WHERE k % 3 = 0) s "
-            "ON gt.k = s.k "
-            "WHEN NOT MATCHED THEN INSERT (k, price) VALUES (s.k, s.price)"
-        )
-        return (
-            eng.sql(
-                "SELECT k, price, price_floor, k_mod FROM gt ORDER BY k"
-            )
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    orders = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_totalprice").alias("price"),
+    )
+    orders.createOrReplaceTempView("q_gen_orders")
+    eng = SqlEngine(spark, {}, warehouse=scratch)
+    eng.sql(
+        "CREATE TABLE gt (k BIGINT, price DOUBLE, "
+        "price_floor BIGINT GENERATED ALWAYS AS "
+        "(CAST(FLOOR(price) AS BIGINT)), "
+        "k_mod BIGINT GENERATED ALWAYS AS (k % 7))"
+    )
+    eng.sql(
+        "INSERT INTO gt (k, price) "
+        "SELECT k, price FROM q_gen_orders WHERE k % 3 <> 0"
+    )
+    eng.sql(
+        "MERGE INTO gt USING "
+        "(SELECT k, price FROM q_gen_orders WHERE k % 3 = 0) s "
+        "ON gt.k = s.k "
+        "WHEN NOT MATCHED THEN INSERT (k, price) VALUES (s.k, s.price)"
+    )
+    return eng.sql("SELECT k, price, price_floor, k_mod FROM gt ORDER BY k")
 
 
 
@@ -3010,70 +2665,61 @@ def q_sql_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch's watermark, and updates preserved existing ids."
     ),
 )
-def q_sql_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("ident_")
+def q_sql_identity(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.operators.versioned import (
         identity_columns,
     )
     from temp_data_pipeline_spark.sql import SqlEngine
 
-    scratch = tempfile.mkdtemp(prefix="ident_")
-    try:
-        orders = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_totalprice").alias("price"),
-        )
-        orders.createOrReplaceTempView("q_ident_orders")
-        eng = SqlEngine(spark, {}, warehouse=scratch)
-        eng.sql(
-            "CREATE TABLE it (id BIGINT GENERATED ALWAYS AS IDENTITY, "
-            "k BIGINT, price DOUBLE)"
-        )
-        v_ins = eng.sql(
-            "INSERT INTO it (k, price) "
-            "SELECT k, price FROM q_ident_orders WHERE k % 3 <> 0"
-        )
-        high_insert = identity_columns(spark, f"{scratch}/it")["id"]["high"]
-        eng.sql(
-            "MERGE INTO it USING "
-            "(SELECT k, price FROM q_ident_orders) s ON it.k = s.k "
-            "WHEN MATCHED THEN UPDATE SET price = s.price + 1 "
-            "WHEN NOT MATCHED THEN INSERT (k, price) VALUES (s.k, s.price)"
-        )
-        from temp_data_pipeline_spark.operators.deletion_vectors import (
-            read_table,
-        )
+    orders = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_totalprice").alias("price"),
+    )
+    orders.createOrReplaceTempView("q_ident_orders")
+    eng = SqlEngine(spark, {}, warehouse=scratch)
+    eng.sql(
+        "CREATE TABLE it (id BIGINT GENERATED ALWAYS AS IDENTITY, "
+        "k BIGINT, price DOUBLE)"
+    )
+    v_ins = eng.sql(
+        "INSERT INTO it (k, price) "
+        "SELECT k, price FROM q_ident_orders WHERE k % 3 <> 0"
+    )
+    high_insert = identity_columns(spark, f"{scratch}/it")["id"]["high"]
+    eng.sql(
+        "MERGE INTO it USING "
+        "(SELECT k, price FROM q_ident_orders) s ON it.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET price = s.price + 1 "
+        "WHEN NOT MATCHED THEN INSERT (k, price) VALUES (s.k, s.price)"
+    )
+    from temp_data_pipeline_spark.operators.deletion_vectors import (
+        read_table,
+    )
 
-        final = eng.sql("SELECT k, id FROM it")
-        # id stability under UPDATE: join the final snapshot to the
-        # pre-merge version (time travel) on the key — distributed,
-        # no driver materialization of the data
-        before = read_table(spark, f"{scratch}/it", v_ins).select(
-            "k", F.col("id").alias("id0")
+    final = eng.sql("SELECT k, id FROM it")
+    # id stability under UPDATE: join the final snapshot to the
+    # pre-merge version (time travel) on the key — distributed,
+    # no driver materialization of the data
+    before = read_table(spark, f"{scratch}/it", v_ins).select(
+        "k", F.col("id").alias("id0")
+    )
+    kept_flag = (
+        final.join(before, "k")
+        .agg(F.every(F.col("id") == F.col("id0")).alias("update_kept_ids"))
+    )
+    return (
+        final.groupBy()
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.countDistinct("id").alias("n_distinct_ids"),
+            (
+                F.min(F.when(F.col("k") % 3 == 0, F.col("id")))
+                > F.lit(int(high_insert))
+            ).alias("merge_batch_above_insert"),
         )
-        kept_flag = (
-            final.join(before, "k")
-            .agg(F.every(F.col("id") == F.col("id0")).alias("update_kept_ids"))
-        )
-        return (
-            final.groupBy()
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.countDistinct("id").alias("n_distinct_ids"),
-                (
-                    F.min(
-                        F.when(F.col("k") % 3 == 0, F.col("id"))
-                    )
-                    > F.lit(int(high_insert))
-                ).alias("merge_batch_above_insert"),
-            )
-            .crossJoin(kept_flag)  # two single-row aggregates
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        .crossJoin(kept_flag)  # two single-row aggregates
+    )
 
 
 @_register(
@@ -3105,42 +2751,32 @@ def q_sql_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "equal the oracle's full-outer reconstruction."
     ),
 )
-def q_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@scratch_table("mevo_")
+def q_merge_evolve(spark: SparkSession, sf_dir: str, scratch: str) -> DataFrame:
     from temp_data_pipeline_spark.sql import SqlEngine
 
-    scratch = tempfile.mkdtemp(prefix="mevo_")
-    try:
-        shutil.rmtree(scratch, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        from temp_data_pipeline_spark.operators.versioned import (
-            commit_version,
-        )
+    orders = load_table(spark, sf_dir, "orders")
+    from temp_data_pipeline_spark.operators.versioned import (
+        commit_version,
+    )
 
-        commit_version(
-            orders.filter(F.col("o_orderkey") % 3 != 0).select(
-                F.col("o_orderkey").alias("k"),
-                F.col("o_totalprice").alias("price"),
-            ),
-            f"{scratch}/t",
-        )
-        orders.filter(F.col("o_orderkey") % 2 == 0).select(
+    commit_version(
+        orders.filter(F.col("o_orderkey") % 3 != 0).select(
             F.col("o_orderkey").alias("k"),
-            (F.col("o_totalprice") + 5).alias("price"),
-            F.col("o_orderpriority").alias("priority"),
-        ).createOrReplaceTempView("q_mevo_src")
-        eng = SqlEngine(spark, {"t": f"{scratch}/t"})
-        eng.sql(
-            "MERGE WITH SCHEMA EVOLUTION INTO t USING "
-            "(SELECT k, price, priority FROM q_mevo_src) s ON t.k = s.k "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-        return (
-            eng.sql("SELECT k, price, priority FROM t ORDER BY k")
-            .localCheckpoint()  # materialize before scratch cleanup
-        )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+            F.col("o_totalprice").alias("price"),
+        ),
+        f"{scratch}/t",
+    )
+    orders.filter(F.col("o_orderkey") % 2 == 0).select(
+        F.col("o_orderkey").alias("k"),
+        (F.col("o_totalprice") + 5).alias("price"),
+        F.col("o_orderpriority").alias("priority"),
+    ).createOrReplaceTempView("q_mevo_src")
+    eng = SqlEngine(spark, {"t": f"{scratch}/t"})
+    eng.sql(
+        "MERGE WITH SCHEMA EVOLUTION INTO t USING "
+        "(SELECT k, price, priority FROM q_mevo_src) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    return eng.sql("SELECT k, price, priority FROM t ORDER BY k")

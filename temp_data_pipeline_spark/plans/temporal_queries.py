@@ -26,20 +26,11 @@ from temp_data_pipeline_spark.operators.temporal import (
     range_join,
     sessionize,
 )
-from temp_data_pipeline_spark.plans.declared import QuerySpec
+from temp_data_pipeline_spark.plans.declared import QuerySpec, registrar
 from temp_data_pipeline_spark.sources.registry import load_table
 
 TEMPORAL_QUERIES: dict[str, QuerySpec] = {}
-
-
-def _register(name, families, oracle, note=""):
-    def deco(fn):
-        TEMPORAL_QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, families=tuple(families), note=note
-        )
-        return fn
-
-    return deco
+_register = registrar(TEMPORAL_QUERIES)
 
 
 @_register(
