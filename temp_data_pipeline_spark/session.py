@@ -129,7 +129,13 @@ def local_df(spark: SparkSession, rows, schema):
     StructType. Values must be JSON-representable (str/int/float/bool/
     None, nested arrays) — exactly the metadata frames this replaces;
     floats round-trip exactly (shortest-repr JSON), integral JSON
-    tokens parse as longs. Not for timestamp/binary payloads."""
+    tokens parse as longs. Not for timestamp/binary payloads.
+
+    Strict, never silently null: a row whose arity differs from the
+    schema and a value JSON cannot encode raise here; a value that
+    does not fit its field (an int beyond int64, a string in a numeric
+    column) fails the decode (FAILFAST) when the frame is evaluated.
+    The frame is one split, so every evaluation is one task."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -141,14 +147,21 @@ def local_df(spark: SparkSession, rows, schema):
         else StructType.fromDDL(schema)
     )
     names = [f.name for f in st.fields]
-    payload = _json.dumps(
-        [dict(zip(names, tuple(r))) for r in rows], default=str
-    )
+    rows = [tuple(r) for r in rows]
+    for r in rows:
+        if len(r) != len(names):
+            raise ValueError(
+                f"local_df: row {r!r} has {len(r)} values, the schema "
+                f"has {len(names)} fields {names}"
+            )
+    payload = _json.dumps([dict(zip(names, r)) for r in rows])
     return (
-        spark.range(1)
+        spark.range(0, 1, 1, 1)
         .select(
             F.explode(
-                F.from_json(F.lit(payload), ArrayType(st))
+                F.from_json(
+                    F.lit(payload), ArrayType(st), {"mode": "FAILFAST"}
+                )
             ).alias("_r")
         )
         .select("_r.*")

@@ -3,8 +3,7 @@
 Plain-parquet Spark has no MERGE/DELETE/UPDATE statements; this
 engine's mutation family exists as Python APIs (operators/merge.py,
 operators/deletion_vectors.py) with full oracle parity. This module
-is the thin statement front the round-8 verdict listed as the one
-missing piece of the ``sql()`` story: parse the statement, resolve
+is the thin statement front over them: parse the statement, resolve
 table names through a caller-supplied catalog (``name -> versioned
 table root``), and delegate —
 
@@ -13,29 +12,68 @@ table root``), and delegate —
                                   (returns a DataFrame)
   DELETE FROM t WHERE p        -> commit_delete_mor      (returns int)
   UPDATE t SET a=e, .. WHERE p -> commit_update_mor      (returns int)
-  INSERT INTO t <query>        -> carry-commit append    (returns int)
-  MERGE INTO t [AS] a USING (src|name) [AS] b ON t.k = s.k [AND ..]
-    WHEN MATCHED [AND c] THEN UPDATE SET x = e, .. | SET *
-    WHEN MATCHED [AND c] THEN DELETE
+  INSERT INTO t [(cols)] <query>
+  INSERT OVERWRITE [TABLE] t <query>
+  INSERT INTO t [(cols)] REPLACE WHERE p <query>
+                               -> carry-commit append / rewrite /
+                                  commit_replace_where   (returns int)
+  MERGE [WITH SCHEMA EVOLUTION] INTO t [AS] a USING (src|name) [AS] b
+    ON a.k = b.k [AND ..]
+    WHEN MATCHED [AND c] THEN UPDATE SET x = e, .. | SET * | DELETE
     WHEN NOT MATCHED [BY TARGET] [AND c]
       THEN INSERT * | INSERT (cols) VALUES (exprs)
-    WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET x = e, ..
-    WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE
+    WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET x = e, .. | DELETE
                                -> commit_merge_into      (returns int)
+  CREATE TABLE (cols) / CREATE TABLE .. AS / CREATE [OR REPLACE] VIEW,
+  DROP TABLE / VIEW, ALTER TABLE (columns, defaults, CHECK constraints),
+  DESCRIBE [EXTENDED], SHOW TABLES / CREATE TABLE / TBLPROPERTIES /
+  PARTITIONS               -> the versioned.py metadata operations
 
-Grammar restrictions (documented, checked loudly): the MERGE ON
-clause is a conjunction of same-named equality pairs (``a.k = b.k``
-or null-safe ``<=>``) — exactly ``commit_merge_into``'s key contract.
-Clauses of a family may repeat and evaluate IN ORDER (first satisfied
-condition wins); an unconditional clause that is not last in its
-family rejects loudly (the dead-clause rule). BY SOURCE conditions
-and SET expressions may reference only the target alias (there is no
-source row on that branch); SET * is likewise unavailable there.
-Predicates and SET expressions are passed through verbatim to the
-underlying operators, so everything Spark SQL can express inside a
-predicate works unchanged. Mutations inherit the operators' MOR cost
-model: one pruned position scan + delta-sized append, zero partition
-rewrites, optimistic-concurrency commits.
+Parsing is Spark's own: ``sessionState().sqlParser().parsePlan`` turns
+the statement into a logical plan, and the statement kind is the plan's
+class. Every predicate, SET value, generation expression and query
+reaches the operators as the exact text the user wrote, sliced from the
+statement by the AST nodes' source positions — backticks, comments,
+double-quoted strings, ``''`` escapes and CASE inside a WHEN condition
+all work as Spark SQL defines them. Time travel (``t VERSION AS OF n``,
+``t VERSION AS OF 'tag'``, ``t TIMESTAMP AS OF ts``) and Delta's
+``table_changes('t', since[, until])`` are found in the AST as well, so
+text inside a string literal or a comment is never rewritten.
+
+Verbs Spark's grammar lacks keep a small grammar of their own, matched
+before the parser runs: VACUUM, OPTIMIZE, RESTORE, COPY INTO, CREATE
+TABLE .. SHALLOW CLONE, DESCRIBE HISTORY | DETAIL (Spark reads these as
+a column DESCRIBE), SHOW REFS, SHOW PARTITIONS .. VERSION AS OF,
+ALTER TABLE .. CREATE | DROP TAG, and ALTER TABLE .. SET | UNSET
+TBLPROPERTIES (Spark reserves keys such as ``owner``; the engine's
+properties are free-form). ``INSERT INTO t (cols) REPLACE WHERE``, which
+Spark's grammar refuses, is parsed with the column list blanked out.
+
+Rules (checked loudly):
+  - MERGE ON is a conjunction of same-named equality pairs (``a.k =
+    b.k`` or null-safe ``<=>``) — exactly ``commit_merge_into``'s key
+    contract.
+  - MERGE clause families come in the order WHEN MATCHED, WHEN NOT
+    MATCHED [BY TARGET], WHEN NOT MATCHED BY SOURCE (Spark's grammar
+    and Delta's rule). Clauses of a family may repeat and evaluate IN
+    ORDER (first satisfied condition wins); an unconditional clause
+    that is not last in its family is rejected (the dead-clause rule).
+  - BY SOURCE conditions and SET expressions may reference only the
+    target alias (there is no source row on that branch); SET * is
+    likewise unavailable there.
+  - A time-travel relation names a catalog table as the catalog spells
+    it; any other relation (a quoted name, a view) is left to Spark,
+    which refuses time travel on it.
+
+Catalog tables and CREATE VIEW views are temp views of the SparkSession
+under their bare names. Temp views are session-wide, so what is
+registered under each name is tracked once per session (name ->
+freshness token) and shared by every engine on it: an engine
+re-registers a name that another engine overwrote, and a token-keyed
+skip is only taken when the session still holds what the token says.
+Mutations inherit the operators' MOR cost model: one pruned position
+scan + delta-sized append, zero partition rewrites,
+optimistic-concurrency commits.
 
 No reference counterpart (the reference has no SQL mutation surface);
 statement semantics follow Delta's SQL DML as published.
@@ -43,109 +81,189 @@ statement semantics follow Delta's SQL DML as published.
 
 from __future__ import annotations
 
+import json
 import re
+import sys
+import uuid
+from datetime import datetime, timezone
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    StructField,
+    StructType,
+    _parse_datatype_json_string,
+)
 
-from temp_data_pipeline_spark.operators.versioned import empty_df as _empty_df
+from temp_data_pipeline_spark.operators import versioned as vt
+from temp_data_pipeline_spark.operators.bucketing import (
+    _colocated_dir,
+    bucket_spec,
+    commit_bucketed,
+    read_bucketed,
+    rebucket,
+)
+from temp_data_pipeline_spark.operators.changes import changes_between
+from temp_data_pipeline_spark.operators.copy_into import copy_into
+from temp_data_pipeline_spark.operators.deletion_vectors import (
+    commit_delete_mor,
+    commit_replace_where,
+    commit_update_mor,
+    read_table,
+)
+from temp_data_pipeline_spark.operators.merge import commit_merge_into
+from temp_data_pipeline_spark.operators.zonemap import optimize_zorder
 from temp_data_pipeline_spark.session import local_df as _local_df
 
 __all__ = ["SqlEngine", "sql"]
 
-_WS = r"\s+"
+# sessionUUID -> {temp view name: token of what an engine registered
+# there}. Temp views live in the JVM session, which outlives every
+# engine and may be reached through more than one Python wrapper, so
+# the registry is keyed by the session's id and shared by its engines.
+_REGISTRIES: dict[str, dict[str, tuple]] = {}
 
+# a cheap pre-check: a query without these words has no time travel
+# and no table_changes, so its AST is not walked
+_TRAVEL_HINT = re.compile(r"\bAS\s+OF\b|\btable_changes\s*\(", re.I)
 
-class _Stmt:
-    """Case-insensitive cursor over one statement."""
-
-    def __init__(self, text: str):
-        self.text = text.strip().rstrip(";").strip()
-
-    def match(self, pattern: str) -> re.Match | None:
-        return re.match(pattern, self.text, re.IGNORECASE | re.DOTALL)
-
-
-def _split_top_level(text: str, sep_pattern: str) -> list[str]:
-    """Split on a regex separator at paren-depth 0 (SET lists and
-    AND conjunctions may nest parens/functions/string literals).
-
-    A separator that starts with a word character (``AND``, ``THEN``)
-    only matches at a token boundary: the preceding character must not
-    be part of an identifier, or a key named ``operand`` / a column
-    named ``x_then`` would split mid-token.
-    """
-    parts, depth, last = [], 0, 0
-    sep = re.compile(sep_pattern, re.IGNORECASE)
-    word_sep = bool(re.match(r"\w", sep_pattern))
-    i = 0
-    while i < len(text):
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "'":
-            # skip string literal
-            j = text.find("'", i + 1)
-            i = len(text) if j < 0 else j
-        if depth == 0 and not (
-            word_sep and i > 0 and (text[i - 1].isalnum() or text[i - 1] in "_.$")
-        ):
-            m = sep.match(text, i)
-            if m and i > last:
-                parts.append(text[last:i])
-                last = m.end()
-                i = m.end()
-                continue
-        i += 1
-    parts.append(text[last:])
-    return [p for p in (q.strip() for q in parts) if p]
-
-
-_WHEN_BOUNDARY = re.compile(
-    r"WHEN\s+(?:NOT\s+)?MATCHED\b", re.IGNORECASE
+# a predicate (IN, LIKE, BETWEEN, IS ..., NOT IN) is positioned from
+# its keyword; its operand lies further left, in its first child
+_PREDICATE_HEAD = re.compile(
+    r"(NOT|IN|LIKE|ILIKE|RLIKE|REGEXP|BETWEEN|IS)\b", re.I
 )
 
+# Spark's REPLACE WHERE takes no column list: the engine's does
+_INSERT_COLS_REPLACE = re.compile(
+    r"INSERT\s+INTO\s+(?:TABLE\s+)?[\w`.]+\s*(\([^()]*\))\s*REPLACE\s+WHERE\b",
+    re.I,
+)
 
-def _top_level_when_bounds(text: str) -> list[int]:
-    """Start offsets of every top-level ``WHEN [NOT] MATCHED`` — the
-    MATCHED anchor keeps a predicate's CASE WHEN from splitting."""
-    bounds, depth, i = [], 0, 0
-    while i < len(text):
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "'":
-            j = text.find("'", i + 1)
-            i = len(text) if j < 0 else j
-        if depth == 0:
-            m = _WHEN_BOUNDARY.match(text, i)
-            if m:
-                bounds.append(i)
-                i = m.end()
-                continue
-        i += 1
-    return bounds
+# Spark parse errors the engine explains in its own terms
+_PARSE_ERRORS = {
+    "NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION":
+        "only the last matched clause may omit its condition",
+    "NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION":
+        "only the last insert clause may omit its condition",
+    "NON_LAST_NOT_MATCHED_BY_SOURCE_CLAUSE_OMIT_CONDITION":
+        "only the last by-source clause may omit its condition",
+    "MERGE_WITHOUT_WHEN": "MERGE needs at least one WHEN clause",
+}
+_PARSE_HINTS = [
+    (re.compile(p, re.I | re.S), hint)
+    for p, hint in (
+        (r"\bWHEN\s+MATCHED\s+BY\b", "WHEN MATCHED takes no BY qualifier"),
+        (
+            r"\bBY\s+SOURCE\b(?:(?!\bWHEN\b).)*\bTHEN\s+UPDATE\s+SET\s+\*",
+            "BY SOURCE UPDATE has no SET * (no source row)",
+        ),
+        (
+            r"\bBY\s+SOURCE\b(?:(?!\bWHEN\b).)*\bTHEN\s+INSERT\b",
+            "WHEN NOT MATCHED BY SOURCE supports THEN DELETE | UPDATE SET ..",
+        ),
+        (
+            r"\bNOT\s+MATCHED\b.*\bWHEN\s+MATCHED\b"
+            r"|\bBY\s+SOURCE\b.*\bWHEN\s+NOT\s+MATCHED\b(?!\s+BY\s+SOURCE)",
+            "MERGE clause families go in the order WHEN MATCHED, WHEN NOT "
+            "MATCHED [BY TARGET], WHEN NOT MATCHED BY SOURCE",
+        ),
+        (
+            r"^INSERT\s+OVERWRITE\b.*\bREPLACE\s+WHERE\b",
+            "INSERT OVERWRITE replaces the WHOLE table — use INSERT INTO "
+            "... REPLACE WHERE for a predicate window",
+        ),
+        (
+            r"number of inserted values",
+            "INSERT (cols) VALUES (..): VALUES has a different number of "
+            "expressions than the column list",
+        ),
+    )
+]
 
 
-def _balanced_paren(text: str, start: int) -> int:
-    """Index just past the ``)`` closing the ``(`` at ``start``."""
-    depth, i = 0, start
-    while i < len(text):
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        elif c == "'":
-            j = text.find("'", i + 1)
-            i = len(text) if j < 0 else j
-        i += 1
-    raise ValueError(f"unbalanced parentheses in: {text[start:start+80]!r}")
+def _seq(s) -> list:
+    """A Scala Seq as a Python list."""
+    return [s.apply(i) for i in range(s.length())]
+
+
+def _opt(o):
+    """A Scala Option's value, or None."""
+    return None if o.isEmpty() else o.get()
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _span(node) -> tuple[int, int] | None:
+    """[start, end) of the statement text the parser built ``node``
+    from, or None for a node the parser did not position."""
+    ctx = node.origin().context()
+    a = ctx.startIndex()
+    return None if a < 0 else (a, ctx.stopIndex() + 1)
+
+
+def _parts(names) -> list[str]:
+    """A Scala Seq of name parts as a Python list (one round trip)."""
+    return names.mkString("\x1f").split("\x1f")
+
+
+def _ident(names) -> str:
+    """A catalog name: one part."""
+    parts = _parts(names)
+    if len(parts) != 1:
+        raise ValueError(
+            f"catalog names have one part, got {'.'.join(parts)!r}"
+        )
+    return parts[0]
+
+
+def _table(node) -> tuple[str, str | None]:
+    """(name, alias) of a DML target or a MERGE source relation."""
+    alias = None
+    if _kind(node) == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    return _ident(node.multipartIdentifier()), alias
+
+
+def _dtype(jtype):
+    return _parse_datatype_json_string(jtype.json())
+
+
+def _quote(part: str) -> str:
+    if re.fullmatch(r"[A-Za-z_]\w*", part):
+        return part
+    return "`" + part.replace("`", "``") + "`"
+
+
+def _walk(node):
+    """Every expression node under ``node`` (itself included)."""
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        yield n, _kind(n)
+        todo.extend(_seq(n.children()))
+
+
+def _epoch(lit: str) -> float:
+    """A TIMESTAMP AS OF operand: a quoted ISO-8601 literal (naive =
+    UTC, the zone of the manifest clock) or epoch seconds."""
+    if lit[:1] in "'\"":
+        t = datetime.fromisoformat(lit[1:-1].replace(" ", "T"))
+        return (t if t.tzinfo else t.replace(tzinfo=timezone.utc)).timestamp()
+    return float(lit)
+
+
+def _parse_error(text: str, e: ParseException) -> str:
+    msg = str(e).strip().splitlines()[0]
+    if e.getCondition() in _PARSE_ERRORS:
+        return _PARSE_ERRORS[e.getCondition()]
+    for rx, hint in _PARSE_HINTS:
+        if rx.search(text) or rx.search(msg):
+            return f"{hint} ({msg})"
+    return f"cannot parse statement: {msg}"
 
 
 class SqlEngine:
@@ -171,6 +289,15 @@ class SqlEngine:
         # every statement (insertion order = dependency order for
         # views over views, since Spark analyzes view SQL eagerly)
         self.views: dict[str, str] = {}
+        jss = spark._jsparkSession
+        self._parser = jss.sessionState().sqlParser()
+        self._registered = _REGISTRIES.setdefault(jss.sessionUUID(), {})
+        cls = spark._jvm.java.lang.Class
+        # a parsed plan of these kinds is a statement, not a query
+        self._statement_kinds = [
+            cls.forName(f"org.apache.spark.sql.catalyst.plans.logical.{n}")
+            for n in ("Command", "ParsedStatement")
+        ]
 
     # -- helpers -----------------------------------------------------
     def _path(self, name: str) -> str:
@@ -181,26 +308,20 @@ class SqlEngine:
             )
         return self.catalog[name]
 
-    def _snapshot(self, name: str) -> DataFrame:
-        from temp_data_pipeline_spark.operators.deletion_vectors import (
-            read_table,
-        )
+    def _parse(self, text: str):
+        try:
+            return self._parser.parsePlan(text)
+        except ParseException as e:
+            raise ValueError(_parse_error(text, e)) from e
 
+    def _snapshot(self, name: str) -> DataFrame:
         path = self._path(name)
         try:
             # bucketed tables read through the catalog registration
             # while physically co-located, so console joins between
             # co-bucketed tables plan with zero Exchange; any drifted
             # or never-bucketed snapshot takes the canonical reader
-            from temp_data_pipeline_spark.operators.bucketing import (
-                _colocated_dir,
-                read_bucketed,
-            )
-            from temp_data_pipeline_spark.operators.versioned import (
-                _resolve_version,
-            )
-
-            v = _resolve_version(self.spark, path, None)
+            v = vt._resolve_version(self.spark, path, None)
             abs_dir, rel, spec, man = _colocated_dir(self.spark, path, v)
             if abs_dir is not None and spec is not None:
                 return read_bucketed(
@@ -222,1296 +343,270 @@ class SqlEngine:
         version number from reading as current. One manifest-dir
         listing per table (driver-local for local tables), no Spark
         jobs."""
-        from temp_data_pipeline_spark.operators.versioned import (
-            _manifest_listing,
-        )
-
         toks = {}
         for name, path in self.catalog.items():
             try:
-                vs, st_tok = _manifest_listing(self.spark, path, stamp=True)
-                tok: tuple = (path, vs[-1], st_tok) if vs else (path, None)
-            except Exception:  # noqa: BLE001 - unreadable: treat as changed
-                import uuid as _uuid
-
-                tok = (path, _uuid.uuid4().hex)
-            toks[name] = tok
+                vs, st_tok = vt._manifest_listing(self.spark, path, stamp=True)
+                toks[name] = (path, vs[-1], st_tok) if vs else (path, None)
+            except (OSError, Py4JJavaError):  # unreadable: treat as changed
+                toks[name] = (path, uuid.uuid4().hex)
         return toks
 
-    def _register_views(self) -> None:
+    def _register_views(self, cascade: str | None = None) -> None:
         """(Re-)register catalog snapshots + view texts as temp views,
-        skipping whatever is provably current: re-analyzing every
-        view over rebuilt snapshot plans on EVERY statement was the
-        dominant driver-side cost of multi-statement console sessions
-        (profiled at ~0.5-1 s per statement) for zero semantic gain —
-        a table's snapshot can only change when its version does."""
+        skipping whatever the session provably holds already:
+        re-analyzing every view over rebuilt snapshot plans on EVERY
+        statement was the dominant driver-side cost of multi-statement
+        console sessions (profiled at ~0.5-1 s per statement) for zero
+        semantic gain — a table's snapshot can only change when its
+        version does. Any table or view change re-analyzes every view
+        (a view's plan captures its bases), in insertion order.
+
+        With ``cascade`` (the statement that removed a base), a view
+        that no longer ANALYZES is dropped loudly instead of raising —
+        analysis-based, not textual, so a view mentioning the name in
+        a string literal survives — and the rest keep working."""
+        reg = self._registered
         toks = self._reg_tokens()
-        cached = getattr(self, "_registered_tokens", {})
-        stale = [n for n, t in toks.items() if cached.get(n) != t]
-        for name in stale:
-            self._snapshot(name).createOrReplaceTempView(name)
-        views_now = dict(self.views)
-        cached_views = getattr(self, "_registered_views", None)
-        if stale or cached_views != views_now:
-            # any base-table movement can change what a view resolves
-            # to (including time-travel pins) — re-analyze them all,
-            # in insertion order (views over views)
-            for vname, vtext in self.views.items():
-                self.spark.sql(
-                    self._rewrite_time_travel(vtext)
-                ).createOrReplaceTempView(vname)
-        self._registered_tokens = toks
-        self._registered_views = views_now
-
-    def _describe_table(self, name: str, extended: bool) -> DataFrame:
-        """DESCRIBE [EXTENDED] t — Spark's three-column layout
-        (col_name, data_type, comment): one row per column (partition
-        columns annotated), and with EXTENDED a detail section from
-        the manifest — location, version + clock, partition columns /
-        transform specs, CHECK constraints, named refs, history-index
-        freshness. Metadata-only: manifest + sidecar JSON reads, no
-        Spark job beyond the local DataFrame."""
-        import json as _json
-
-        from pyspark.sql.types import StructType as _St
-
-        from temp_data_pipeline_spark.operators.versioned import (
-            _history_index_path,
-            list_refs,
-            read_manifest,
-            read_text,
-            versions,
-        )
-
-        path = self._path(name)
-        vs = versions(self.spark, path)
-        if not vs:
-            raise ValueError(f"table {name!r} has no committed versions")
-        man = read_manifest(self.spark, path, vs[-1])
-        pcols = man.get("_partition_by") or []
-        rows = [
-            (
-                f.name,
-                f.dataType.simpleString(),
-                "partition column" if f.name in pcols else "",
-            )
-            for f in _St.fromJson(man["_schema"]).fields
-        ]
-        if extended:
-            rows.append(("", "", ""))
-            rows.append(("# Detailed Table Information", "", ""))
-            rows.append(("Name", name, ""))
-            rows.append(("Location", path, ""))
-            rows.append(("Version", str(vs[-1]), ""))
-            rows.append(
-                ("Committed At", str(man.get("committed_at", "")), "")
-            )
-            if pcols:
-                rows.append(("Partition Columns", ", ".join(pcols), ""))
-            if man.get("transforms"):
-                rows.append(
-                    (
-                        "Partition Transforms",
-                        ", ".join(man["transforms"]),
-                        "hidden partitioning (partitioning.py)",
-                    )
-                )
-            for cname, cpred in sorted(
-                (man.get("_table_constraints") or {}).items()
-            ):
-                rows.append((f"Check: {cname}", cpred, ""))
-            refs = list_refs(self.spark, path)
-            for rname, rver in sorted(refs.items()):
-                rows.append((f"Ref: {rname}", str(rver), ""))
+        for name, tok in toks.items():
+            if reg.get(name) != tok:
+                self._snapshot(name).createOrReplaceTempView(name)
+                reg[name] = tok
+        base = (tuple(toks.items()), tuple(self.views.items()))
+        for vname, vtext in list(self.views.items()):
+            if reg.get(vname) == (vtext, base):
+                continue
             try:
-                clocks = _json.loads(
-                    read_text(self.spark, _history_index_path(path))
-                ).get("clocks", {})
-                fresh = set(clocks) == {str(v) for v in vs}
-                rows.append(
-                    (
-                        "History Index",
-                        "fresh" if fresh else "stale",
-                        f"{len(clocks)} clocks / {len(vs)} versions",
-                    )
+                self.spark.sql(self._resolve(vtext)[0])\
+                    .createOrReplaceTempView(vname)
+            except AnalysisException as e:
+                if cascade is None:
+                    raise
+                del self.views[vname]
+                self.spark.catalog.dropTempView(vname)
+                reg.pop(vname, None)
+                print(
+                    f"WARNING: {cascade} invalidated view {vname!r}; "
+                    f"dropped ({type(e).__name__})",
+                    file=sys.stderr,
                 )
-            except Exception:  # noqa: BLE001 - index not built yet
-                rows.append(("History Index", "absent", ""))
-        return _local_df(
-            self.spark,
-            rows, "col_name string, data_type string, comment string"
+                return self._register_views(cascade)
+            reg[vname] = (vtext, base)
+
+    def _resolve(self, text: str, plan=None) -> tuple[str, object]:
+        """``text`` with each catalog time-travel relation and
+        table_changes() call replaced by a uniquely-named temp view of
+        that snapshot (DV-resolved for versions; manifest-clock for
+        timestamps; operators/changes.changes_between for the change
+        feed), and its parsed plan — None once the text has changed."""
+        if not _TRAVEL_HINT.search(text):
+            return text, plan
+        plan = plan if plan is not None else self._parse(text)
+        reps, todo = [], [plan]
+        while todo:
+            n = todo.pop()
+            kind = _kind(n)
+            if kind == "RelationTimeTravel":
+                (s, e), end = _span(n.relation()), _span(n)[1]
+                if text[s:e] in self.catalog:
+                    reps.append((s, end, self._travel_view(text, n, text[s:e])))
+            elif kind == "UnresolvedTableValuedFunction" and (
+                n.name().mkString(".").lower() == "table_changes"
+            ):
+                args = [_span(x) for x in _seq(n.functionArgs())]
+                view = self._changes_view([text[slice(*x)] for x in args])
+                reps.append((_span(n)[0], text.index(")", args[-1][1]) + 1, view))
+            todo += _seq(n.children()) + _seq(n.innerChildren())
+        if not reps:
+            return text, plan
+        for s, e, view in sorted(reps, reverse=True):
+            text = text[:s] + view + text[e:]
+        return text, None
+
+    def _frame(self, plan) -> DataFrame:
+        """The query ``plan`` (a node of a parsed statement) as a
+        DataFrame, exactly as ``spark.sql`` would run it."""
+        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            self.spark._jsparkSession, plan
         )
+        return DataFrame(jdf, self.spark)
 
-    def _show_create(self, name: str) -> DataFrame:
-        """SHOW CREATE TABLE t — one createtab_stmt row (Spark's
-        layout) reconstructed from the manifest: columns, partition
-        spec (explicit columns or transform specs), location, and one
-        ALTER TABLE ... ADD CONSTRAINT line per recorded check."""
-        from pyspark.sql.types import StructType as _St
+    def _travel_view(self, text: str, node, name: str) -> str:
+        path = self.catalog[name]
+        ts = _opt(node.timestamp())
+        if ts is not None:
+            lit = text[slice(*_span(ts))]
+            view = f"{name}__ts{abs(hash(lit)) % 10**8}"
+            vt.read_as_of(self.spark, path, _epoch(lit))\
+                .createOrReplaceTempView(view)
+            return view
+        ref = _opt(node.version())
+        # a quoted ref is a tag: VERSION AS OF 'q3-train'
+        quoted = text[_span(node)[1] - 1] in "'\""
+        v = vt.resolve_ref(self.spark, path, ref) if quoted else int(ref)
+        view = f"{name}__v{v}"
+        read_table(self.spark, path, v).createOrReplaceTempView(view)
+        return view
 
-        from temp_data_pipeline_spark.operators.versioned import (
-            read_manifest,
-            versions,
-        )
+    def _changes_view(self, args: list[str]) -> str:
+        """Delta's CDF table function: table_changes('t', since
+        [, until]) — the row-level change feed (the table's columns +
+        _change_type) as a temp view."""
+        name, since = args[0].strip("'\""), int(args[1])
+        until = int(args[2]) if len(args) > 2 else None
+        if name not in self.catalog:
+            raise ValueError(f"table_changes: unknown table {name!r}")
+        view = f"{name}__cdf{since}_{until or 'latest'}"
+        changes_between(
+            self.spark, self.catalog[name], since, until
+        ).createOrReplaceTempView(view)
+        return view
 
-        path = self._path(name)
-        vs = versions(self.spark, path)
-        if not vs:
-            raise ValueError(f"table {name!r} has no committed versions")
-        man = read_manifest(self.spark, path, vs[-1])
-        gen = man.get("_generated_columns") or {}
-        ident = man.get("_identity_columns") or {}
-        cols = ",\n".join(
-            f"  {f.name} {f.dataType.simpleString().upper()}"
-            + (
-                f" GENERATED ALWAYS AS ({gen[f.name]})"
-                if f.name in gen
-                else (
-                    " GENERATED ALWAYS AS IDENTITY (START WITH "
-                    f"{ident[f.name]['start']} INCREMENT BY "
-                    f"{ident[f.name]['step']})"
-                )
-                if f.name in ident
-                else ""
-            )
-            for f in _St.fromJson(man["_schema"]).fields
-        )
-        stmt = f"CREATE TABLE {name} (\n{cols}\n)"
-        if man.get("transforms"):
-            stmt += (
-                "\nPARTITIONED BY TRANSFORMS ("
-                + ", ".join(man["transforms"]) + ")"
-            )
-        elif man.get("_partition_by"):
-            stmt += (
-                "\nPARTITIONED BY ("
-                + ", ".join(man["_partition_by"]) + ")"
-            )
-        if man.get("_bucket_spec"):
-            bs = man["_bucket_spec"]
-            stmt += (
-                "\nCLUSTERED BY (" + ", ".join(bs["bucket_by"]) + ")"
-                f" INTO {bs['n']} BUCKETS"
-            )
-        stmt += f"\nLOCATION '{path}'"
-        for cname, cpred in sorted(
-            (man.get("_table_constraints") or {}).items()
-        ):
-            stmt += (
-                f"\n-- ALTER TABLE {name} ADD CONSTRAINT {cname} "
-                f"CHECK ({cpred})"
-            )
-        return _local_df(
-            self.spark,
-            [(stmt,)], "createtab_stmt string"
-        )
-
-    def _drop_invalid_views(self, cause: str) -> None:
-        """Cascade-drop every view that no longer ANALYZES (its base
-        table or parent view just went away). Analysis-based, not
-        textual — a view mentioning the name in a string literal
-        survives. Dropping is loud (stderr) so the cascade is never
-        silent; remaining views keep working and the session stays
-        usable."""
-        import sys as _sys
-
-        for name in self.catalog:
-            self._snapshot(name).createOrReplaceTempView(name)
-        changed = True
-        while changed:
-            changed = False
-            for vname, vtext in list(self.views.items()):
-                try:
-                    self.spark.sql(
-                        self._rewrite_time_travel(vtext)
-                    ).createOrReplaceTempView(vname)
-                except Exception as e:  # noqa: BLE001 - analysis failure
-                    del self.views[vname]
-                    try:
-                        self.spark.catalog.dropTempView(vname)
-                    except Exception:  # noqa: BLE001
-                        pass
-                    print(
-                        f"WARNING: {cause} invalidated view {vname!r}; "
-                        f"dropped ({type(e).__name__})",
-                        file=_sys.stderr,
+    def _expr(self, text: str, node, qualifiers: dict | None = None) -> str:
+        """Expression ``node`` as written in ``text``. ``qualifiers``
+        maps a lower-case alias to the prefix that replaces it in
+        every column reference (``'t.'``, ``'s.'``, or ``''`` to drop
+        it); string literals and comments are left alone."""
+        if _kind(node) == "Literal" and node.dataType().typeName() == "boolean":
+            # the parser shares one TRUE / FALSE literal object between
+            # statements, so its position belongs to some other text
+            return node.sql().lower()
+        a, b = _span(node)
+        n, start = node, a
+        while _PREDICATE_HEAD.match(text, start) and not n.children().isEmpty():
+            n = n.children().head()
+            start = _span(n)[0]
+            a = min(a, start)
+        if not qualifiers or "." not in text[a:b]:
+            return text[a:b]
+        reps = []
+        for n, kind in _walk(node):
+            if kind == "UnresolvedAttribute":
+                parts = _parts(n.nameParts())
+                if len(parts) > 1 and parts[0].lower() in qualifiers:
+                    new = qualifiers[parts[0].lower()] + ".".join(
+                        _quote(p) for p in parts[1:]
                     )
-                    changed = True
-                    break
+                    reps.append((*_span(n), new))
+        out = text[a:b]
+        for s, e, new in sorted(reps, reverse=True):
+            out = out[: s - a] + new + out[e - a :]
+        return out
 
-    def _frame(self, source_sql_or_name: str) -> DataFrame:
-        """A MERGE source / INSERT query: a catalog table name, an
-        existing temp view, or a parenthesized subquery."""
-        s = source_sql_or_name.strip()
-        if s.startswith("("):
-            self._register_views()
-            return self.spark.sql(s[1:-1] if s.endswith(")") else s)
-        if s in self.catalog:
-            return self._snapshot(s)
-        self._register_views()
-        return self.spark.table(s)
+    def _assignments(self, text: str, action, qualifiers) -> dict:
+        keys = [_parts(x.key().nameParts())[-1] for x in _seq(action.assignments())]
+        if len(set(keys)) != len(keys):
+            raise ValueError(f"duplicate column in SET/INSERT list {keys}")
+        return {
+            k: self._expr(text, x.value(), qualifiers)
+            for k, x in zip(keys, _seq(action.assignments()))
+        }
+
+    def _location(self, name: str, location: str | None) -> str:
+        """Root of a NEW table: the statement's LOCATION, else
+        ``<warehouse>/<name>``."""
+        if name in self.catalog:
+            raise ValueError(f"table {name!r} already in the catalog")
+        if name in self.views:
+            # views register after tables, so an existing view would
+            # silently SHADOW the new table in every later SELECT while
+            # DML writes the table
+            raise ValueError(f"{name!r} is a view (DROP VIEW {name} first)")
+        if location is not None:
+            return location
+        if self.warehouse is None:
+            raise ValueError(
+                f"CREATE TABLE {name}: no LOCATION given and the engine "
+                "has no warehouse root — construct SqlEngine(..., "
+                "warehouse='<dir>') or add LOCATION '<path>'"
+            )
+        return f"{self.warehouse}/{name}"
 
     # -- statements --------------------------------------------------
     def sql(self, statement: str):
         """Execute one statement. Returns a DataFrame for queries,
         the committed version (int) for mutations."""
-        st = _Stmt(statement)
-        if st.match(r"(SELECT|WITH)\b"):
+        text = statement.strip().rstrip(";").strip()
+        for rx, handler in self._OWN_GRAMMAR:
+            m = rx.fullmatch(text)
+            if m:
+                return handler(self, *m.groups())
+        m = _INSERT_COLS_REPLACE.match(text)
+        cols = None
+        if m:
+            # parse the column list on its own, the statement without it
+            cols = _seq(
+                self._parse(f"INSERT INTO x {m.group(1)} SELECT 1")
+                .userSpecifiedCols()
+            )
+            s, e = m.span(1)
+            text = text[:s] + " " * (e - s) + text[e:]
+        plan = self._parse(text)
+        kind = _kind(plan)
+        handler = self._PLANS.get(kind)
+        if handler is None and any(
+            k.isInstance(plan) for k in self._statement_kinds
+        ):
+            raise ValueError(
+                "unsupported statement (SELECT/WITH, DELETE, UPDATE, "
+                "INSERT, MERGE INTO, COPY INTO, ALTER TABLE, CREATE "
+                "TABLE/VIEW, DROP TABLE/VIEW, VACUUM, OPTIMIZE, SHOW, "
+                f"DESCRIBE, RESTORE): {text[:80]!r}"
+            )
+        if kind != "CreateView":  # a view's text resolves at each registration
+            text, plan = self._resolve(text, plan)
+        if handler is None:  # a query
             self._register_views()
-            return self.spark.sql(self._rewrite_time_travel(st.text))
-        if st.match(r"DELETE\b"):
-            return self._delete(st)
-        if st.match(r"UPDATE\b"):
-            return self._update(st)
-        if st.match(r"INSERT\b"):
-            return self._insert(st)
-        if st.match(r"MERGE\b"):
-            return self._merge(st)
-        if st.match(r"COPY\b"):
-            return self._copy(st)
-        if st.match(r"(VACUUM|OPTIMIZE|DESCRIBE|RESTORE|SHOW)\b"):
-            return self._utility(st)
-        if st.match(r"ALTER\b"):
-            return self._alter(st)
-        if st.match(r"CREATE\b"):
-            return self._create(st)
-        if st.match(r"DROP\b"):
-            return self._drop(st)
-        raise ValueError(
-            "unsupported statement (SELECT/WITH, DELETE, UPDATE, "
-            "INSERT INTO, MERGE INTO, COPY INTO, ALTER TABLE, CREATE "
-            "TABLE/VIEW, DROP TABLE/VIEW, VACUUM, OPTIMIZE, SHOW "
-            f"TABLES, DESCRIBE HISTORY/DETAIL, RESTORE): {st.text[:80]!r}"
-        )
+            return self.spark.sql(text) if plan is None else self._frame(plan)
+        if plan is None:
+            plan = self._parse(text)
+        if cols is not None:
+            return self._insert(plan, text, cols)
+        return handler(self, plan, text)
 
-    def _describe_detail(self, name: str) -> DataFrame:
-        """DESCRIBE DETAIL t — ONE metadata-only row (the Delta
-        utility): location, latest version + commit clock, data-dir
-        chain length, deletion-vector presence + row count, partition
-        columns, column count, recorded CHECK constraints.  Pure
-        driver-side manifest read, no Spark job beyond the local
-        DataFrame."""
-        import json as _json
-
-        from temp_data_pipeline_spark.operators.versioned import (
-            _manifest_dirs,
-            read_manifest,
-            versions,
-        )
-
+    def _delete(self, p, text: str) -> int:
+        name, alias = _table(p.table())
         path = self._path(name)
-        vs = versions(self.spark, path)
-        if not vs:
-            raise ValueError(f"table {name!r} has no committed versions")
-        man = read_manifest(self.spark, path, vs[-1])
-        fields = (man.get("_schema") or {}).get("fields", [])
-        return _local_df(
-            self.spark,
-            [
-                (
-                    name,
-                    path,
-                    int(vs[-1]),
-                    float(man.get("committed_at", 0.0)),
-                    len(_manifest_dirs(man)),
-                    bool(man.get("_dv")),
-                    int(man.get("_dv_rows") or 0),
-                    ",".join(man.get("_partition_by") or []),
-                    len(fields),
-                    _json.dumps(man.get("_checks") or {}, sort_keys=True),
-                    ",".join(
-                        (man.get("_bucket_spec") or {}).get("bucket_by", [])
-                    ),
-                    int((man.get("_bucket_spec") or {}).get("n") or 0),
-                )
-            ],
-            "name string, location string, version long, "
-            "committed_at double, num_data_dirs long, "
-            "has_deletion_vector boolean, dv_rows long, "
-            "partition_columns string, num_columns long, checks string, "
-            "bucket_columns string, num_buckets long",
-        )
-
-    def _drop(self, st: _Stmt):
-        """DROP TABLE [IF EXISTS] t / DROP VIEW v.
-
-        DROP TABLE removes the name from the catalog; storage is
-        deleted ONLY for managed tables (roots at
-        ``<warehouse>/<name>``) — external LOCATION tables keep their
-        files, the Hive external-table contract."""
-        m = st.match(
-            r"DROP" + _WS + r"TABLE"
-            r"(?:" + _WS + r"IF" + _WS + r"EXISTS)?" + _WS + r"(\w+)$"
-        )
-        if m:
-            name = m.group(1)
-            if_exists = bool(
-                st.match(r"DROP" + _WS + r"TABLE" + _WS + r"IF\b")
-            )
-            if name not in self.catalog:
-                if if_exists:
-                    return None
-                raise ValueError(
-                    f"unknown table {name!r} (catalog has "
-                    f"{sorted(self.catalog)})"
-                )
-            path = self.catalog.pop(name)
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:  # noqa: BLE001 - view may never have registered
-                pass
-            # views referencing the dropped table would otherwise be
-            # re-analyzed EAGERLY by _register_views on every later
-            # statement, wedging the whole session (ADVICE r10 #1) —
-            # cascade-drop whatever no longer analyzes, loudly
-            self._drop_invalid_views(f"DROP TABLE {name}")
-            if self.warehouse and path == f"{self.warehouse}/{name}":
-                from temp_data_pipeline_spark.operators.versioned import (
-                    _fs,
-                )
-
-                fs, jvm = _fs(self.spark, path)
-                fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
-            return None
-        m = st.match(r"DROP" + _WS + r"VIEW" + _WS + r"(\w+)$")
-        if m:
-            name = m.group(1)
-            if name not in self.views:
-                raise ValueError(
-                    f"unknown view {name!r} (views: {sorted(self.views)})"
-                )
-            del self.views[name]
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:  # noqa: BLE001
-                pass
-            return None
-        raise ValueError(f"cannot parse DROP: {st.text[:80]!r}")
-
-    def _create(self, st: _Stmt) -> int:
-        """CTAS / CLONE into a NEW versioned table:
-
-          CREATE TABLE name [LOCATION '<path>'] AS <query>
-              [PARTITIONED BY (col, ...)]  — before AS
-              [CLUSTERED BY (col, ...) INTO n BUCKETS]  — before AS;
-                  bucketed snapshot layout (operators/bucketing.py):
-                  console joins between co-bucketed tables plan with
-                  zero Exchange, OPTIMIZE becomes rebucket()
-          CREATE TABLE name SHALLOW CLONE src [VERSION AS OF n]
-              [LOCATION '<path>']          — zero-copy reference
-
-        Without LOCATION the table lands at ``<warehouse>/<name>``
-        (the engine's ``warehouse`` root — required in that form).
-        The query runs over the catalog views; the result commits as
-        version 1 of a fresh table at the given root, and the engine's
-        catalog gains the name for subsequent statements."""
-        from temp_data_pipeline_spark.operators.versioned import (
-            commit_version,
-        )
-
-        m = st.match(
-            r"CREATE(?:" + _WS + r"OR" + _WS + r"REPLACE)?" + _WS
-            + r"VIEW" + _WS + r"(\w+)" + _WS + r"AS" + _WS + r"(.+)$"
-        )
-        if m:
-            name, vtext = m.groups()
-            replace = bool(st.match(r"CREATE" + _WS + r"OR\b"))
-            if name in self.catalog:
-                raise ValueError(f"{name!r} is a table in the catalog")
-            if name in self.views and not replace:
-                raise ValueError(
-                    f"view {name!r} exists (CREATE OR REPLACE VIEW)"
-                )
-            prior = self.views.get(name)
-            self.views[name] = vtext
-            try:
-                # registering eagerly analyzes the view SQL — a bad
-                # definition fails HERE, not at first use
-                self._register_views()
-            except Exception:
-                if prior is None:
-                    del self.views[name]
-                else:
-                    self.views[name] = prior
-                raise
-            return None
-        m = st.match(
-            r"CREATE" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"SHALLOW" + _WS + r"CLONE" + _WS + r"(\w+)"
-            r"(?:" + _WS + r"VERSION" + _WS + r"AS" + _WS + r"OF"
-            + _WS + r"(\d+))?"
-            r"(?:" + _WS + r"LOCATION" + _WS + r"'([^']+)')?$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                shallow_clone,
-            )
-
-            name, src, ver, location = m.groups()
-            if name in self.catalog:
-                raise ValueError(f"table {name!r} already in the catalog")
-            if name in self.views:
-                raise ValueError(
-                    f"{name!r} is a view (DROP VIEW {name} first)"
-                )
-            if location is None:
-                if self.warehouse is None:
-                    raise ValueError(
-                        f"CREATE TABLE {name}: no LOCATION given and "
-                        "the engine has no warehouse root"
-                    )
-                location = f"{self.warehouse}/{name}"
-            v = shallow_clone(
-                self.spark,
-                self._path(src),
-                location,
-                int(ver) if ver else None,
-            )
-            self.catalog[name] = location
-            return v
-        m = st.match(r"CREATE" + _WS + r"TABLE" + _WS + r"(\w+)\s*\(")
-        if m:
-            # explicit-schema EMPTY table:
-            #   CREATE TABLE t (a BIGINT, b DECIMAL(12,2), ...)
-            #       [PARTITIONED BY (col, ...)] [LOCATION '<path>']
-            from pyspark.sql.types import StructType
-
-            name = m.group(1)
-            i = m.end() - 1
-            j = _balanced_paren(st.text, i)
-            cols_ddl = st.text[i + 1 : j - 1].strip()
-            rest = st.text[j:].strip()
-            rm = re.match(
-                r"(?:PARTITIONED" + _WS + r"BY\s*\(([^)]+)\))?"
-                r"(?:" + r"\s*LOCATION" + _WS + r"'([^']+)')?$",
-                rest,
-                re.IGNORECASE,
-            )
-            if not rm:
-                raise ValueError(
-                    f"cannot parse CREATE TABLE tail: {rest[:80]!r}"
-                )
-            pcols, location = rm.groups()
-            if name in self.catalog:
-                raise ValueError(f"table {name!r} already in the catalog")
-            if name in self.views:
-                raise ValueError(
-                    f"{name!r} is a view (DROP VIEW {name} first)"
-                )
-            if location is None:
-                if self.warehouse is None:
-                    raise ValueError(
-                        f"CREATE TABLE {name}: no LOCATION given and "
-                        "the engine has no warehouse root"
-                    )
-                location = f"{self.warehouse}/{name}"
-            # inline GENERATED ALWAYS AS (expr) clauses: extracted
-            # before fromDDL (which doesn't know them), recorded in
-            # the manifest — the Delta rule: generation expressions
-            # are declared at CREATION, computed by surface writers
-            # when omitted, validated on every commit when provided
-            gen: dict[str, str] = {}
-            ident: dict[str, dict] = {}
-            plain_items = []
-            for item in _split_top_level(cols_ddl, r","):
-                im = re.match(
-                    r"^\s*(\w+)\s+(.+?)\s+GENERATED" + _WS + r"ALWAYS"
-                    + _WS + r"AS" + _WS + r"IDENTITY"
-                    r"(?:\s*\(\s*START" + _WS + r"WITH" + _WS
-                    + r"(-?\d+)" + _WS + r"INCREMENT" + _WS + r"BY"
-                    + _WS + r"(-?\d+)\s*\))?\s*$",
-                    item,
-                    re.IGNORECASE,
-                )
-                if im:
-                    step = int(im.group(4) or 1)
-                    if step == 0:
-                        raise ValueError(
-                            f"IDENTITY column {im.group(1)!r}: "
-                            "INCREMENT BY 0 would never advance"
-                        )
-                    ident[im.group(1)] = {
-                        "start": int(im.group(3) or 1),
-                        "step": step,
-                        "high": None,
-                    }
-                    plain_items.append(f"{im.group(1)} {im.group(2)}")
-                    continue
-                gm = re.match(
-                    r"^\s*(\w+)\s+(.+?)\s+GENERATED" + _WS + r"ALWAYS"
-                    + _WS + r"AS\s*\((.+)\)\s*$",
-                    item,
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if gm:
-                    gen[gm.group(1)] = gm.group(3).strip()
-                    plain_items.append(f"{gm.group(1)} {gm.group(2)}")
-                else:
-                    plain_items.append(item)
-            try:
-                schema = StructType.fromDDL(", ".join(plain_items))
-            except Exception as e:
-                raise ValueError(
-                    f"cannot parse column list {cols_ddl!r}: {e}"
-                )
-            gen_refs: set[str] = set()
-            for gexpr in gen.values():
-                # string literals out first: a literal word that
-                # happens to equal another generated column's name is
-                # not a reference ('total' in concat('total', a))
-                gen_refs.update(
-                    t.lower()
-                    for t in re.findall(
-                        r"\b\w+\b", re.sub(r"'[^']*'", " ", gexpr)
-                    )
-                )
-            gen_bad = {c for c in gen if c.lower() in gen_refs}
-            if gen_bad:
-                raise ValueError(
-                    f"generated column(s) {sorted(gen_bad)} reference "
-                    "generated columns — expressions may use only "
-                    "non-generated columns of the row"
-                )
-            cmeta: dict = {}
-            if gen:
-                cmeta["_generated_columns"] = gen
-            if ident:
-                cmeta["_identity_columns"] = ident
-            v = commit_version(
-                _empty_df(self.spark, schema),
-                location,
-                partition_by=(
-                    [c.strip() for c in pcols.split(",") if c.strip()]
-                    if pcols
-                    else None
-                ),
-                expected_base=0,
-                meta=cmeta or None,
-            )
-            self.catalog[name] = location
-            return v
-        m = st.match(
-            r"CREATE" + _WS + r"TABLE" + _WS + r"(\w+)"
-            r"(?:" + _WS + r"LOCATION" + _WS + r"'([^']+)')?"
-            r"(?:" + _WS + r"PARTITIONED" + _WS + r"BY"
-            + r"\s*\(([^)]+)\))?"
-            r"(?:" + _WS + r"CLUSTERED" + _WS + r"BY"
-            + r"\s*\(([^)]+)\)" + _WS + r"INTO" + _WS + r"(\d+)"
-            + _WS + r"BUCKETS)?" + _WS + r"AS" + _WS + r"(.+)$"
-        )
-        if not m:
-            raise ValueError(
-                "CREATE supports: CREATE TABLE <name> [LOCATION '<path>'] "
-                "[PARTITIONED BY (cols)] [CLUSTERED BY (cols) INTO n "
-                f"BUCKETS] AS <query> — got {st.text[:80]!r}"
-            )
-        name, location, pcols, bcols, nbuckets, query = m.groups()
-        if pcols and bcols:
-            # the bucketed layout layer refuses hive partition_by too —
-            # one loud contract, not two half-supported ones
-            raise ValueError(
-                "CREATE TABLE: PARTITIONED BY and CLUSTERED BY are "
-                "mutually exclusive in this engine"
-            )
-        if location is None:
-            if self.warehouse is None:
-                raise ValueError(
-                    f"CREATE TABLE {name}: no LOCATION given and the "
-                    "engine has no warehouse root — construct "
-                    "SqlEngine(..., warehouse='<dir>') or add "
-                    "LOCATION '<path>'"
-                )
-            location = f"{self.warehouse}/{name}"
-        if name in self.catalog:
-            raise ValueError(f"table {name!r} already in the catalog")
-        if name in self.views:
-            # _register_views registers views AFTER tables, so an
-            # existing view would silently SHADOW the new table in
-            # every later SELECT while DML writes the table — loud
-            # beats silent read/write divergence (ADVICE r10 #2)
-            raise ValueError(
-                f"{name!r} is a view (DROP VIEW {name} first)"
-            )
-        self._register_views()
-        rows = self.spark.sql(self._rewrite_time_travel(query))
-        if bcols:
-            from temp_data_pipeline_spark.operators.bucketing import (
-                commit_bucketed,
-            )
-
-            v = commit_bucketed(
-                rows,
-                location,
-                bucket_by=[c.strip() for c in bcols.split(",") if c.strip()],
-                n_buckets=int(nbuckets),
-                expected_base=0,
-            )
-        else:
-            v = commit_version(
-                rows,
-                location,
-                partition_by=(
-                    [c.strip() for c in pcols.split(",") if c.strip()]
-                    if pcols
-                    else None
-                ),
-                expected_base=0,
-            )
-        self.catalog[name] = location
-        return v
-
-    def _alter(self, st: _Stmt) -> int:
-        """ALTER TABLE DDL, each one metadata-level commit:
-
-          ALTER TABLE t ADD COLUMN a <type> [DEFAULT <expr>]
-          ALTER TABLE t ADD COLUMNS (a <type> [DEFAULT e], ...)
-              (old files read NULL; DEFAULT applies to future writes)
-          ALTER TABLE t ALTER COLUMN a SET DEFAULT <expr> | DROP DEFAULT
-          ALTER TABLE t RENAME COLUMN a TO b    (stable-field-id rename)
-          ALTER TABLE t DROP COLUMN a
-          ALTER TABLE t ADD CONSTRAINT n CHECK (<predicate>)
-          ALTER TABLE t DROP CONSTRAINT n
-        """
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"ADD" + _WS + r"COLUMNS?" + _WS
-            + r"(?:\((.+)\)|(\w+)" + _WS + r"(.+))$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                add_column,
-            )
-
-            path = self._path(m.group(1))
-            if m.group(2) is not None:  # ADD COLUMNS (a t1, b t2, ...)
-                items = _split_top_level(m.group(2), r",")
-            else:  # ADD COLUMN a t1 [DEFAULT expr]
-                items = [f"{m.group(3)} {m.group(4).strip()}"]
-            v = None
-            for item in items:
-                cm = re.match(
-                    r"(\w+)\s+(.+?)(?:\s+DEFAULT\s+(.+))?$",
-                    item.strip(),
-                    re.DOTALL | re.IGNORECASE,
-                )
-                if not cm:
-                    raise ValueError(f"cannot parse column spec: {item!r}")
-                v = add_column(
-                    self.spark,
-                    path,
-                    cm.group(1),
-                    cm.group(2).strip(),
-                    default=(
-                        cm.group(3).strip() if cm.group(3) else None
-                    ),
-                )
-            return v
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"ALTER" + _WS + r"COLUMN" + _WS + r"(\w+)" + _WS
-            + r"(?:SET" + _WS + r"DEFAULT" + _WS + r"(.+)"
-            r"|DROP" + _WS + r"DEFAULT)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                set_column_default,
-            )
-
-            return set_column_default(
-                self.spark,
-                self._path(m.group(1)),
-                m.group(2),
-                m.group(3).strip() if m.group(3) else None,
-            )
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"RENAME" + _WS + r"COLUMN" + _WS + r"(\w+)" + _WS
-            + r"TO" + _WS + r"(\w+)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                rename_column,
-            )
-
-            return rename_column(
-                self.spark, self._path(m.group(1)), m.group(2), m.group(3)
-            )
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"DROP" + _WS + r"COLUMN" + _WS + r"(\w+)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                drop_column,
-            )
-
-            return drop_column(
-                self.spark, self._path(m.group(1)), m.group(2)
-            )
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"ADD" + _WS + r"CONSTRAINT" + _WS + r"(\w+)" + _WS
-            + r"CHECK" + r"\s*\((.+)\)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                add_table_constraint,
-            )
-
-            return add_table_constraint(
-                self.spark, self._path(m.group(1)), m.group(2), m.group(3)
-            )
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"DROP" + _WS + r"CONSTRAINT" + _WS + r"(\w+)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                drop_table_constraint,
-            )
-
-            return drop_table_constraint(
-                self.spark, self._path(m.group(1)), m.group(2)
-            )
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"CREATE" + _WS + r"TAG" + _WS + r"([\w.\-]+)"
-            r"(?:" + _WS + r"AS" + _WS + r"OF" + _WS + r"VERSION"
-            + _WS + r"(\d+))?$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                tag_version,
-            )
-
-            return tag_version(
-                self.spark,
-                self._path(m.group(1)),
-                m.group(2),
-                int(m.group(3)) if m.group(3) else None,
-            )
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"DROP" + _WS + r"TAG" + _WS + r"([\w.\-]+)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                delete_ref,
-            )
-
-            if not delete_ref(self.spark, self._path(m.group(1)), m.group(2)):
-                raise ValueError(f"no tag {m.group(2)!r} on {m.group(1)}")
-            return None
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"SET" + _WS + r"TBLPROPERTIES" + r"\s*\((.+)\)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                set_table_properties,
-            )
-
-            props = {}
-            for item in _split_top_level(m.group(2), r","):
-                pm = re.match(
-                    r"\s*'([^']+)'\s*=\s*'([^']*)'\s*$", item
-                )
-                if not pm:
-                    raise ValueError(
-                        f"cannot parse TBLPROPERTIES pair: {item!r} "
-                        "(expected 'key' = 'value')"
-                    )
-                props[pm.group(1)] = pm.group(2)
-            return set_table_properties(
-                self.spark, self._path(m.group(1)), props
-            )
-        m = st.match(
-            r"ALTER" + _WS + r"TABLE" + _WS + r"(\w+)" + _WS
-            + r"UNSET" + _WS + r"TBLPROPERTIES" + r"\s*\((.+)\)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                unset_table_properties,
-            )
-
-            keys = []
-            for item in _split_top_level(m.group(2), r","):
-                pm = re.match(r"\s*'([^']+)'\s*$", item)
-                if not pm:
-                    raise ValueError(
-                        f"cannot parse TBLPROPERTIES key: {item!r}"
-                    )
-                keys.append(pm.group(1))
-            return unset_table_properties(
-                self.spark, self._path(m.group(1)), keys
-            )
-        raise ValueError(f"cannot parse ALTER TABLE: {st.text[:80]!r}")
-
-    def _rewrite_time_travel(self, text: str) -> str:
-        """Delta-style time travel inside queries: ``FROM t VERSION AS
-        OF 3`` / ``FROM t TIMESTAMP AS OF '...'`` — each occurrence is
-        rewritten to a uniquely-named temp view of the historical
-        (DV-resolved for versions; manifest-clock for timestamps)
-        snapshot. ``table_changes('t', since[, until])`` rewrites the
-        same way to the row-level change feed (columns +
-        ``_change_type``, operators/changes.changes_between). Catalog
-        tables only; pure rewrite, the query text otherwise reaches
-        Spark SQL untouched."""
-        from temp_data_pipeline_spark.operators.deletion_vectors import (
-            read_table,
-        )
-        from temp_data_pipeline_spark.operators.versioned import (
-            read_as_of,
-        )
-
-        def _version(m: re.Match) -> str:
-            name, ref = m.group(1), m.group(2)
-            if name not in self.catalog:
-                return m.group(0)
-            if ref.startswith("'"):
-                # named ref (tag): VERSION AS OF 'q3-train'
-                from temp_data_pipeline_spark.operators.versioned import (
-                    resolve_ref,
-                )
-
-                v = resolve_ref(self.spark, self.catalog[name], ref.strip("'"))
-            else:
-                v = int(ref)
-            view = f"{name}__v{v}"
-            read_table(self.spark, self.catalog[name], v)\
-                .createOrReplaceTempView(view)
-            return view
-
-        def _timestamp(m: re.Match) -> str:
-            name, ts = m.group(1), m.group(2)
-            if name not in self.catalog:
-                return m.group(0)
-            if ts.startswith("'"):
-                # quoted ISO-8601 literal; naive datetimes are UTC
-                # (the manifest clock is epoch seconds = UTC)
-                from datetime import datetime, timezone
-
-                parsed = datetime.fromisoformat(ts.strip("'").replace(" ", "T"))
-                if parsed.tzinfo is None:
-                    parsed = parsed.replace(tzinfo=timezone.utc)
-                epoch = parsed.timestamp()
-            else:
-                epoch = float(ts)
-            view = f"{name}__ts{abs(hash(ts)) % 10**8}"
-            read_as_of(self.spark, self.catalog[name], epoch)\
-                .createOrReplaceTempView(view)
-            return view
-
-        def _changes(m: re.Match) -> str:
-            # Delta's CDF table function: table_changes('t', since
-            # [, until]) — the file-level change feed (the table's
-            # columns + _change_type) as a temp view
-            name, since, until = m.group(1), m.group(2), m.group(3)
-            if name not in self.catalog:
-                raise ValueError(
-                    f"table_changes: unknown table {name!r}"
-                )
-            from temp_data_pipeline_spark.operators.changes import (
-                changes_between,
-            )
-
-            view = f"{name}__cdf{since}_{until or 'latest'}"
-            changes_between(
-                self.spark,
-                self.catalog[name],
-                int(since),
-                int(until) if until else None,
-            ).createOrReplaceTempView(view)
-            return view
-
-        text = re.sub(
-            r"\btable_changes\s*\(\s*'(\w+)'\s*,\s*(\d+)"
-            r"(?:\s*,\s*(\d+))?\s*\)",
-            _changes,
-            text,
-            flags=re.IGNORECASE,
-        )
-        text = re.sub(
-            r"\b(\w+)\s+VERSION\s+AS\s+OF\s+(\d+\b|'[\w.\-]+')",
-            _version,
-            text,
-            flags=re.IGNORECASE,
-        )
-        return re.sub(
-            r"\b(\w+)\s+TIMESTAMP\s+AS\s+OF\s+('[^']+'|[0-9.]+)",
-            _timestamp,
-            text,
-            flags=re.IGNORECASE,
-        )
-
-    def _utility(self, st: _Stmt):
-        """The Delta-style table-utility statements, mapped onto the
-        maintenance operators:
-
-          VACUUM t [RETAIN <n> VERSIONS]   -> versioned.vacuum
-          OPTIMIZE t [ZORDER BY (a, b)]    -> compact_snapshot /
-                                              optimize_zorder; on a
-                                              bucketed table, rebucket
-          DESCRIBE HISTORY t               -> versioned.history (DF)
-          DESCRIBE [EXTENDED] [TABLE] t    -> column section (+ manifest
-                                              detail under EXTENDED)
-          SHOW CREATE TABLE t              -> createtab_stmt row
-          SHOW PARTITIONS t [VERSION AS OF n] -> metadata dir walk
-          RESTORE t TO VERSION AS OF <n>   -> versioned.rollback
-        """
-        m = st.match(
-            r"VACUUM" + _WS + r"(\w+)"
-            r"(?:" + _WS + r"RETAIN" + _WS + r"(\d+)" + _WS
-            + r"(VERSIONS|HOURS|DAYS))?"
-            r"(?:" + _WS + r"(DRY" + _WS + r"RUN))?$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                vacuum,
-            )
-
-            name, n, unit, dry = (
-                m.group(1), m.group(2), (m.group(3) or ""), m.group(4)
-            )
-            kw: dict = {"dry_run": bool(dry)}
-            if unit.upper() in ("HOURS", "DAYS"):
-                # time-based retention (the Delta VACUUM contract):
-                # keep the current version + everything inside the
-                # horizon
-                secs = int(n) * (3600 if unit.upper() == "HOURS" else 86400)
-                kw.update(keep_last=1, older_than=secs)
-            else:
-                kw.update(keep_last=int(n or 3))
-            dropped = vacuum(self.spark, self._path(name), **kw)
-            if dry:
-                # DRY RUN reports the expirable versions, touches
-                # nothing
-                return _local_df(
-            self.spark,
-                    [(int(v),) for v in dropped], "version long"
-                )
-            return None
-        m = st.match(
-            r"OPTIMIZE" + _WS + r"(\w+)"
-            r"(?:" + _WS + r"WHERE" + _WS + r"(.+?))?"
-            r"(?:" + _WS + r"ZORDER" + _WS + r"BY" + _WS
-            + r"\(([^)]+)\))?$"
-        )
-        if m:
-            name, pred, zcols = m.group(1), m.group(2), m.group(3)
-            if pred:
-                # partition-scoped OPTIMIZE: rewrite only the selected
-                # partitions, carry the rest by reference
-                from temp_data_pipeline_spark.operators.versioned import (
-                    compact_partitions,
-                    read_manifest,
-                    versions,
-                )
-
-                path = self._path(name)
-                man = read_manifest(
-                    self.spark, path, versions(self.spark, path)[-1]
-                )
-                pcols = man.get("_partition_by") or []
-                if not pcols:
-                    raise ValueError(
-                        "OPTIMIZE ... WHERE needs a partitioned table "
-                        "(the predicate selects first-level partitions)"
-                    )
-                return compact_partitions(
-                    self.spark,
-                    path,
-                    pcols[0],
-                    where=pred,
-                    cluster_by=(
-                        [c.strip() for c in zcols.split(",") if c.strip()]
-                        if zcols
-                        else None
-                    ),
-                )
-            if zcols:
-                from temp_data_pipeline_spark.operators.zonemap import (
-                    optimize_zorder,
-                )
-
-                cols = [c.strip() for c in zcols.split(",") if c.strip()]
-                return optimize_zorder(self.spark, self._path(name), cols)
-            from temp_data_pipeline_spark.operators.bucketing import (
-                bucket_spec,
-                rebucket,
-            )
-            from temp_data_pipeline_spark.operators.versioned import (
-                compact_snapshot,
-            )
-
-            path = self._path(name)
-            if bucket_spec(self.spark, path):
-                # a bucketed table's OPTIMIZE is the clustering-
-                # maintenance pass: restore one-file-per-bucket
-                # co-location (no-op when already co-located) —
-                # compact_snapshot would rewrite the layout AWAY
-                return rebucket(self.spark, path)
-            return compact_snapshot(self.spark, path)
-        m = st.match(r"DESCRIBE" + _WS + r"HISTORY" + _WS + r"(\w+)$")
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                history,
-            )
-
-            return history(self.spark, self._path(m.group(1)))
-        m = st.match(r"DESCRIBE" + _WS + r"DETAIL" + _WS + r"(\w+)$")
-        if m:
-            return self._describe_detail(m.group(1))
-        m = st.match(
-            r"DESCRIBE" + _WS + r"(?:(EXTENDED)" + _WS + r")?"
-            r"(?:TABLE" + _WS + r")?(\w+)$"
-        )
-        if m:
-            return self._describe_table(m.group(2), bool(m.group(1)))
-        m = st.match(
-            r"SHOW" + _WS + r"CREATE" + _WS + r"TABLE" + _WS + r"(\w+)$"
-        )
-        if m:
-            return self._show_create(m.group(1))
-        m = st.match(
-            r"SHOW" + _WS + r"PARTITIONS" + _WS + r"(\w+)"
-            r"(?:" + _WS + r"VERSION" + _WS + r"AS" + _WS + r"OF"
-            + _WS + r"(\d+))?$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                snapshot_partitions,
-            )
-
-            return snapshot_partitions(
-                self.spark,
-                self._path(m.group(1)),
-                int(m.group(2)) if m.group(2) else None,
-            )
-        m = st.match(r"SHOW" + _WS + r"REFS" + _WS + r"(\w+)$")
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                list_refs,
-            )
-
-            from pyspark.sql.types import (
-                LongType,
-                StringType,
-                StructField,
-                StructType,
-            )
-
-            refs = list_refs(self.spark, self._path(m.group(1)))
-            return _local_df(
-            self.spark,
-                sorted(refs.items()),
-                StructType(
-                    [
-                        StructField("name", StringType()),
-                        StructField("version", LongType()),
-                    ]
-                ),
-            )
-        if st.match(r"SHOW" + _WS + r"TABLES$"):
-            from pyspark.sql.types import (
-                StringType,
-                StructField,
-                StructType,
-            )
-
-            return _local_df(
-            self.spark,
-                sorted(self.catalog.items()),
-                StructType(
-                    [
-                        StructField("name", StringType()),
-                        StructField("location", StringType()),
-                    ]
-                ),
-            )
-        m = st.match(
-            r"RESTORE" + _WS + r"(\w+)" + _WS + r"TO" + _WS + r"VERSION"
-            + _WS + r"AS" + _WS + r"OF" + _WS + r"(\d+)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                rollback,
-            )
-
-            return rollback(
-                self.spark, self._path(m.group(1)), int(m.group(2))
-            )
-        m = st.match(
-            r"RESTORE" + _WS + r"(\w+)" + _WS + r"TO" + _WS
-            + r"TIMESTAMP" + _WS + r"AS" + _WS + r"OF" + _WS
-            + r"('[^']+'|[0-9.]+)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                rollback,
-                version_as_of,
-            )
-
-            name, ts = m.group(1), m.group(2)
-            if ts.startswith("'"):
-                from datetime import datetime, timezone
-
-                parsed = datetime.fromisoformat(
-                    ts.strip("'").replace(" ", "T")
-                )
-                if parsed.tzinfo is None:
-                    parsed = parsed.replace(tzinfo=timezone.utc)
-                epoch = parsed.timestamp()
-            else:
-                epoch = float(ts)
-            path = self._path(name)
-            return rollback(
-                self.spark, path, version_as_of(self.spark, path, epoch)
-            )
-        m = st.match(
-            r"SHOW" + _WS + r"TBLPROPERTIES" + _WS + r"(\w+)$"
-        )
-        if m:
-            from temp_data_pipeline_spark.operators.versioned import (
-                table_properties,
-            )
-
-            from pyspark.sql.types import (
-                StringType,
-                StructField,
-                StructType,
-            )
-
-            props = table_properties(self.spark, self._path(m.group(1)))
-            return _local_df(
-            self.spark,
-                sorted(props.items()),
-                StructType(
-                    [
-                        StructField("key", StringType()),
-                        StructField("value", StringType()),
-                    ]
-                ),
-            )
-        raise ValueError(f"cannot parse utility statement: {st.text[:80]!r}")
-
-    def _delete(self, st: _Stmt) -> int:
-        from temp_data_pipeline_spark.operators.deletion_vectors import (
-            commit_delete_mor,
-        )
-
-        m = st.match(
-            r"DELETE" + _WS + r"FROM" + _WS + r"(\w+)"
-            r"(?:" + _WS + r"WHERE" + _WS + r"(.+))?$"
-        )
-        if not m:
-            raise ValueError(f"cannot parse DELETE: {st.text!r}")
-        name, pred = m.group(1), m.group(2)
         # subquery predicates (k IN (SELECT ...)) resolve against the
         # catalog's snapshot views
         self._register_views()
         return commit_delete_mor(
-            self.spark, self._path(name), pred if pred else "true"
+            self.spark,
+            path,
+            self._expr(text, p.condition(), {alias.lower(): ""} if alias else None),
         )
 
-    def _update(self, st: _Stmt) -> int:
-        from pyspark.sql import functions as F
-
-        from temp_data_pipeline_spark.operators.deletion_vectors import (
-            commit_update_mor,
-        )
-
-        m = st.match(
-            r"UPDATE" + _WS + r"(\w+)" + _WS + r"SET" + _WS
-            + r"(.+?)(?:" + _WS + r"WHERE" + _WS + r"(.+))?$"
-        )
-        if not m:
-            raise ValueError(f"cannot parse UPDATE: {st.text!r}")
-        name, set_list, pred = m.group(1), m.group(2), m.group(3)
-        set_exprs: dict[str, str] = {}
-        for item in _split_top_level(set_list, r","):
-            em = re.match(r"(\w+)\s*=\s*(.+)$", item, re.DOTALL)
-            if not em:
-                raise ValueError(f"cannot parse SET item: {item!r}")
-            set_exprs[em.group(1)] = em.group(2).strip()
+    def _update(self, p, text: str) -> int:
+        name, alias = _table(p.table())
+        path = self._path(name)
+        strip = {alias.lower(): ""} if alias else None
+        sets = self._assignments(text, p, strip)
+        cond = _opt(p.condition())
         # subquery predicates / SET scalars resolve against the
         # catalog's snapshot views
         self._register_views()
         return commit_update_mor(
             self.spark,
-            self._path(name),
-            F.expr(pred) if pred else F.lit(True),
-            set_exprs,
+            path,
+            F.expr(self._expr(text, cond, strip)) if cond is not None else F.lit(True),
+            sets,
         )
 
-    def _copy(self, st: _Stmt) -> int:
-        """COPY INTO t FROM '<dir>' [FILEFORMAT = PARQUET|JSON|CSV]
-        [PATTERN = '<glob>'] — idempotent incremental file loading
-        (operators/copy_into.py); returns the committed version (the
-        current one when every file was already loaded)."""
-        m = st.match(
-            r"COPY" + _WS + r"INTO" + _WS + r"(\w+)" + _WS
-            + r"FROM" + _WS + r"'([^']+)'"
-            r"(?:" + _WS + r"FILEFORMAT" + r"\s*=\s*(\w+))?"
-            r"(?:" + _WS + r"PATTERN" + r"\s*=\s*'([^']+)')?$"
-        )
-        if not m:
-            raise ValueError(f"cannot parse COPY INTO: {st.text[:80]!r}")
-        name, source, fmt, pattern = m.groups()
-        from temp_data_pipeline_spark.operators.copy_into import copy_into
-
-        v, _n = copy_into(
-            self.spark,
-            self._path(name),
-            source,
-            file_format=(fmt or "parquet"),
-            pattern=(pattern or "*"),
-        )
-        return v
-
-    def _insert(self, st: _Stmt) -> int:
-        from temp_data_pipeline_spark.operators.versioned import (
-            commit_version,
-            commit_with_retries,
-            versions,
-        )
-
-        m = st.match(
-            r"INSERT" + _WS + r"(INTO|OVERWRITE)"
-            r"(?:" + _WS + r"TABLE)?" + _WS + r"(\w+)"
-            r"(?:\s*\(([\w\s,]+)\))?"
-            r"(?:" + _WS + r"REPLACE" + _WS + r"WHERE" + _WS + r"(.+?))?"
-            + _WS + r"((?:SELECT|WITH|VALUES|TABLE)\b.+)$"
-        )
-        if not m:
-            raise ValueError(f"cannot parse INSERT: {st.text!r}")
-        verb, name, col_list, replace_pred, query = m.groups()
-        overwrite = verb.upper() == "OVERWRITE"
-        if overwrite and replace_pred is not None:
-            raise ValueError(
-                "INSERT OVERWRITE replaces the WHOLE table — use "
-                "INSERT INTO ... REPLACE WHERE for a predicate window"
-            )
-        if replace_pred is not None and (
-            replace_pred.count("(") != replace_pred.count(")")
-        ):
-            # the non-greedy predicate capture stops at the first
-            # query keyword — a subquery inside REPLACE WHERE would
-            # misparse silently, so refuse it loudly
-            raise ValueError(
-                "REPLACE WHERE predicate may not contain a subquery "
-                f"(unbalanced parens in {replace_pred!r})"
-            )
+    def _insert(self, p, text: str, cols: list[str] | None = None) -> int:
+        name = _ident(p.table().multipartIdentifier())
+        replace_pred, overwrite = None, False
+        if _kind(p) == "OverwriteByExpression":
+            # INSERT INTO t REPLACE WHERE <pred> <query>
+            replace_pred = self._expr(text, p.deleteExpr())
+        else:
+            if not p.partitionSpec().isEmpty() or p.byName():
+                raise ValueError("INSERT takes no PARTITION or BY NAME clause")
+            cols = _seq(p.userSpecifiedCols()) or None
+            overwrite = p.overwrite()
         path = self._path(name)
         self._register_views()
-        rows = self.spark.sql(query)
-        from pyspark.sql import functions as F
-
-        from temp_data_pipeline_spark.operators.versioned import (
-            identity_columns,
-        )
-
-        idents = identity_columns(self.spark, path)
+        rows = self._frame(p.query())
+        idents = vt.identity_columns(self.spark, path)
         if idents and replace_pred is not None:
             raise ValueError(
                 "REPLACE WHERE on a table with IDENTITY columns is "
@@ -1519,47 +614,36 @@ class SqlEngine:
                 "identity watermark atomically) — DELETE + INSERT"
             )
         target = self._snapshot(name).schema
-        if col_list is not None:
+        if cols is not None:
             # named-column INSERT: values map positionally onto the
             # NAMED columns; every unnamed table column gets NULL
-            named = [c.strip() for c in col_list.split(",") if c.strip()]
             field_names = {f.name for f in target.fields}
-            unknown = [c for c in named if c not in field_names]
+            unknown = [c for c in cols if c not in field_names]
             if unknown:
                 raise ValueError(
-                    f"INSERT INTO {name} ({col_list}): unknown "
+                    f"INSERT INTO {name} {cols}: unknown "
                     f"column(s) {unknown}; table has {sorted(field_names)}"
                 )
-            if len(set(named)) != len(named):
-                raise ValueError(
-                    f"INSERT INTO {name} ({col_list}): duplicate column"
-                )
-            if len(rows.columns) != len(named):
+            if len(set(cols)) != len(cols):
+                raise ValueError(f"INSERT INTO {name} {cols}: duplicate column")
+            if len(rows.columns) != len(cols):
                 raise ValueError(
                     f"INSERT INTO {name}: query yields "
                     f"{len(rows.columns)} columns, column list names "
-                    f"{len(named)}"
+                    f"{len(cols)}"
                 )
-            from temp_data_pipeline_spark.operators.versioned import (
-                column_defaults,
-            )
-
             # unnamed columns take their recorded DEFAULT (NULL when
             # none) — the SQL column-default contract
-            from temp_data_pipeline_spark.operators.versioned import (
-                generated_columns,
-            )
-
-            dflt = column_defaults(self.spark, path)
-            gcols = generated_columns(self.spark, path)
-            listed_ident = [c for c in named if c in idents]
+            dflt = vt.column_defaults(self.spark, path)
+            gcols = vt.generated_columns(self.spark, path)
+            listed_ident = [c for c in cols if c in idents]
             if listed_ident:
                 raise ValueError(
                     f"INSERT INTO {name}: column(s) {listed_ident} are "
                     "GENERATED ALWAYS AS IDENTITY — omit them from the "
                     "column list; the engine assigns the values"
                 )
-            pos = {c: i for i, c in enumerate(named)}
+            pos = {c: i for i, c in enumerate(cols)}
             rows = rows.select(
                 *[
                     (
@@ -1615,34 +699,25 @@ class SqlEngine:
             )
 
         if replace_pred is not None:
-            # INSERT INTO t REPLACE WHERE <pred> <query> — the Delta
-            # partition-overwrite statement: one MOR commit swaps the
-            # predicate window for the incoming rows (validated
-            # against the window inside commit_replace_where)
-            from temp_data_pipeline_spark.operators.deletion_vectors import (
-                commit_replace_where,
-            )
-
-            return commit_with_retries(
+            # the Delta partition-overwrite statement: one MOR commit
+            # swaps the predicate window for the incoming rows
+            # (validated against the window inside commit_replace_where)
+            return vt.commit_with_retries(
                 lambda: commit_replace_where(
                     self.spark, rows, path, replace_pred
                 )
             )
 
         def _commit() -> int:
-            vs = versions(self.spark, path)
+            vs = vt.versions(self.spark, path)
             base = vs[-1] if vs else 0
             batch, meta_late = rows, None
             if idents:
                 # allocate INSIDE the retried closure: each attempt
                 # re-reads the watermark, and expected_base makes a
                 # racing allocator conflict instead of double-assign
-                from temp_data_pipeline_spark.operators.versioned import (
-                    assign_identity,
-                )
-
-                batch, meta_late = assign_identity(
-                    rows, identity_columns(self.spark, path)
+                batch, meta_late = vt.assign_identity(
+                    rows, vt.identity_columns(self.spark, path)
                 )
             if overwrite:
                 # a truncating rewrite on a BUCKETED table keeps the
@@ -1650,11 +725,6 @@ class SqlEngine:
                 # under the same spec (plain commit_version would
                 # land plain files and the spec would rightly drop —
                 # silently un-bucketing the table)
-                from temp_data_pipeline_spark.operators.bucketing import (
-                    bucket_spec,
-                    commit_bucketed,
-                )
-
                 bspec = bucket_spec(self.spark, path)
                 if bspec:
                     return commit_bucketed(
@@ -1666,7 +736,7 @@ class SqlEngine:
                         expected_base=base,
                         meta_late=meta_late,
                     )
-            return commit_version(
+            return vt.commit_version(
                 batch,
                 path,
                 # OVERWRITE starts a rewrite lineage (no carry): the
@@ -1677,294 +747,725 @@ class SqlEngine:
                 meta_late=meta_late,
             )
 
-        return commit_with_retries(_commit)
+        return vt.commit_with_retries(_commit)
 
-    def _merge(self, st: _Stmt) -> int:
-        from temp_data_pipeline_spark.operators.merge import (
-            commit_merge_into,
-        )
-
-        text = st.text
-        # Databricks' MERGE WITH SCHEMA EVOLUTION INTO: assigned new
-        # source columns widen the target (operators/merge.py)
-        evolve = False
-        em = re.match(
-            r"MERGE" + _WS + r"WITH" + _WS + r"SCHEMA" + _WS
-            + r"EVOLUTION" + _WS,
-            text,
-            re.IGNORECASE,
-        )
-        if em:
-            evolve = True
-            text = "MERGE " + text[em.end():]
-        m = re.match(
-            r"MERGE" + _WS + r"INTO" + _WS + r"(\w+)"
-            r"(?:" + _WS + r"(?:AS" + _WS + r")?(\w+))?" + _WS
-            + r"USING\s+",
-            text,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse MERGE INTO: {text[:80]!r}")
-        target, t_alias = m.group(1), m.group(2) or m.group(1)
-        i = m.end()
-        if text[i] == "(":
-            j = _balanced_paren(text, i)
-            source, rest = text[i:j], text[j:]
-        else:
-            sm = re.match(r"\w+", text[i:])
-            if not sm:
-                raise ValueError(f"cannot parse MERGE source: {text[i:i+40]!r}")
-            source, rest = sm.group(0), text[i + sm.end():]
-        am = re.match(
-            r"\s+(?:AS\s+)?(\w+)\s+ON\s+", rest, re.IGNORECASE | re.DOTALL
-        )
-        if am:
-            s_alias, rest = am.group(1), rest[am.end():]
-        else:
-            om = re.match(r"\s+ON\s+", rest, re.IGNORECASE)
-            if not om:
-                raise ValueError(f"MERGE needs ON: {rest[:60]!r}")
-            s_alias, rest = (
-                source if re.match(r"\w+$", source) else "s"
-            ), rest[om.end():]
-        bounds = _top_level_when_bounds(rest)
-        if not bounds:
-            raise ValueError("MERGE needs at least one WHEN clause")
-        on = rest[: bounds[0]].strip()
-        clause_texts = [
-            rest[a:b].strip()
-            for a, b in zip(bounds, bounds[1:] + [len(rest)])
-        ]
-        keys = self._merge_keys(on, t_alias, s_alias)
-        src = self._frame(source)
-
-        matched_clauses: list = []
-        insert_clauses: list = []
-        by_source_clauses: list = []
-
-        def _parse_set(set_text: str) -> dict:
-            out: dict[str, str] = {}
-            for item in _split_top_level(set_text, r","):
-                em = re.match(
-                    r"(?:\w+\.)?(\w+)\s*=\s*(.+)$", item, re.DOTALL
-                )
-                if not em:
-                    raise ValueError(f"cannot parse SET item: {item!r}")
-                out[em.group(1)] = self._rewrite_aliases(
-                    em.group(2).strip(), t_alias, s_alias
-                )
-            return out
-
-        for clause in clause_texts:
-            hm = re.match(
-                r"WHEN" + _WS + r"(NOT" + _WS + r")?MATCHED\b"
-                r"(?:" + _WS + r"BY" + _WS + r"(SOURCE|TARGET)\b)?\s*",
-                clause,
-                re.IGNORECASE,
-            )
-            if not hm:
-                raise ValueError(f"cannot parse WHEN clause: {clause!r}")
-            is_not, by = hm.group(1), (hm.group(2) or "").upper()
-            if by and not is_not:
-                raise ValueError(
-                    f"WHEN MATCHED takes no BY qualifier: {clause!r}"
-                )
-            # BY TARGET is the standard's explicit spelling of the
-            # plain NOT MATCHED (insert) branch
-            by_source = by == "SOURCE"
-            body = clause[hm.end():]
-            # the THEN keyword is found at paren-depth 0, so an AND
-            # condition containing a (parenthesized) CASE WHEN .. THEN
-            # never splits early
-            bare = re.match(
-                r"THEN\s+(.+)$", body, re.IGNORECASE | re.DOTALL
-            )
-            if bare:  # unconditional clause
-                cond_part, action = "", bare.group(1)
+    def _merge(self, p, text: str) -> int:
+        target, t_alias = _table(p.targetTable())
+        t_alias = t_alias or target
+        src, s_alias = p.sourceTable(), None
+        if _kind(src) == "SubqueryAlias":
+            s_alias, src = src.alias(), src.child()
+        if _kind(src) == "UnresolvedRelation":
+            sname = _ident(src.multipartIdentifier())
+            s_alias = s_alias or sname
+            if sname in self.catalog:
+                frame = self._snapshot(sname)
             else:
-                pieces = _split_top_level(body, r"THEN\s")
-                if len(pieces) != 2:
-                    raise ValueError(
-                        f"cannot find the THEN of WHEN clause: {clause!r} "
-                        "(parenthesize conditions containing CASE)"
-                    )
-                cond_part, action = pieces[0].strip(), pieces[1]
-            cond = None
-            if cond_part:
-                am2 = re.match(
-                    r"AND\s+(.+)$", cond_part, re.IGNORECASE | re.DOTALL
-                )
-                if not am2:
-                    raise ValueError(
-                        f"cannot parse WHEN condition: {cond_part!r}"
-                    )
-                cond = am2.group(1)
-            cond_sql = (
-                self._rewrite_aliases(cond, t_alias, s_alias)
-                if cond
-                else None
-            )
-            action = action.strip()
-            if by_source:
-                if re.match(r"DELETE$", action, re.IGNORECASE):
-                    by_source_clauses.append(
-                        ("delete", cond_sql if cond_sql else True, None)
-                    )
-                    continue
-                um = re.match(
-                    r"UPDATE" + _WS + r"SET" + _WS + r"(.+)$",
-                    action,
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if not um:
-                    raise ValueError(
-                        "WHEN NOT MATCHED BY SOURCE supports THEN "
-                        f"DELETE | UPDATE SET .. (got {action!r})"
-                    )
-                set_text = um.group(1).strip()
-                if set_text == "*":
-                    raise ValueError(
-                        "BY SOURCE UPDATE has no SET * (no source row)"
-                    )
-                by_source_clauses.append(
-                    (
-                        "update",
-                        cond_sql if cond_sql else True,
-                        _parse_set(set_text),
-                    )
-                )
-                continue
-            if is_not:
-                # insert conditions and VALUES expressions are over
-                # PLAIN source column names (there is no target row)
-                def _plain(txt: str) -> str:
-                    return re.sub(
-                        rf"\b{re.escape(s_alias)}\.", "", txt
-                    )
+                self._register_views()
+                frame = self.spark.table(sname)
+        else:
+            self._register_views()
+            frame = self._frame(src)
+            s_alias = s_alias or "s"
+        keys = self._merge_keys(text, p.mergeCondition(), t_alias, s_alias)
+        # clause text names the pair commit_merge_into's way: t. / s.
+        pair = {
+            a.lower(): prefix
+            for a, prefix in ((t_alias, "t."), (s_alias, "s."))
+            if a.lower() + "." != prefix
+        }
+        # insert conditions and VALUES expressions are over PLAIN
+        # source column names (there is no target row)
+        plain = {s_alias.lower(): ""}
 
-                icond = _plain(cond_sql) if cond_sql else True
-                if re.match(r"INSERT\s*\*$", action, re.IGNORECASE):
-                    insert_clauses.append((icond, None))
-                    continue
-                im = re.match(
-                    r"INSERT\s*\(([\w\s,]+)\)" + _WS + r"VALUES\s*\(",
-                    action,
-                    re.IGNORECASE,
-                )
-                if not im:
-                    raise ValueError(
-                        "WHEN NOT MATCHED supports THEN INSERT * | "
-                        f"INSERT (cols) VALUES (exprs) (got {action!r})"
-                    )
-                cols = [
-                    c.strip()
-                    for c in im.group(1).split(",")
-                    if c.strip()
-                ]
-                vstart = im.end() - 1
-                vend = _balanced_paren(action, vstart)
-                if action[vend:].strip():
-                    raise ValueError(
-                        f"trailing text after VALUES: {action[vend:]!r}"
-                    )
-                vals = [
-                    _plain(x.strip())
-                    for x in _split_top_level(
-                        action[vstart + 1 : vend - 1], r","
-                    )
-                ]
-                if len(cols) != len(vals):
-                    raise ValueError(
-                        f"INSERT names {len(cols)} column(s) but VALUES "
-                        f"has {len(vals)} expression(s)"
-                    )
-                if len(set(cols)) != len(cols):
-                    raise ValueError("duplicate column in INSERT list")
-                insert_clauses.append((icond, dict(zip(cols, vals))))
-                continue
-            if re.match(r"DELETE$", action, re.IGNORECASE):
-                matched_clauses.append(
-                    ("delete", cond_sql if cond_sql else True, None)
-                )
-                continue
-            um = re.match(
-                r"UPDATE" + _WS + r"SET" + _WS + r"(.+)$",
-                action,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not um:
-                raise ValueError(
-                    f"cannot parse MATCHED action: {action!r}"
-                )
-            set_text = um.group(1).strip()
-            matched_clauses.append(
-                (
+        def cond(action, qualifiers):
+            c = _opt(action.condition())
+            return True if c is None else self._expr(text, c, qualifiers)
+
+        def clauses(actions):
+            return [
+                ("delete", cond(a, pair), None)
+                if _kind(a) == "DeleteAction"
+                else (
                     "update",
-                    cond_sql if cond_sql else True,
-                    None if set_text == "*" else _parse_set(set_text),
+                    cond(a, pair),
+                    None if _kind(a) == "UpdateStarAction"
+                    else self._assignments(text, a, pair),
                 )
-            )
+                for a in _seq(actions)
+            ]
+
         # Delta's multi-clause rule — an unconditional clause that is
         # not LAST in its family makes later clauses dead — is checked
-        # by commit_merge_into for every family (inserts too, now that
-        # explicit VALUES give clauses distinct projections)
+        # by the parser and again by commit_merge_into
         return commit_merge_into(
-            src,
+            frame,
             self._path(target),
             keys,
-            matched_clauses=matched_clauses,
-            insert_clauses=insert_clauses,
-            by_source_clauses=by_source_clauses,
-            allow_evolution=evolve,
+            matched_clauses=clauses(p.matchedActions()),
+            insert_clauses=[
+                (
+                    cond(a, plain),
+                    None if _kind(a) == "InsertStarAction"
+                    else self._assignments(text, a, plain),
+                )
+                for a in _seq(p.notMatchedActions())
+            ],
+            by_source_clauses=clauses(p.notMatchedBySourceActions()),
+            allow_evolution=p.withSchemaEvolution(),
         )
 
-    def _merge_keys(
-        self, on: str, t_alias: str, s_alias: str
-    ) -> list[str]:
+    def _merge_keys(self, text: str, on, t_alias: str, s_alias: str) -> list[str]:
         """The ON clause restricted to commit_merge_into's contract:
         a conjunction of same-named equality pairs across the two
         aliases (``=`` or null-safe ``<=>``)."""
-        keys = []
-        for term in _split_top_level(on, r"AND\s"):
-            tm = re.match(
-                r"(\w+)\.(\w+)\s*(?:<=>|=)\s*(\w+)\.(\w+)$",
-                term.strip(),
-                re.IGNORECASE,
-            )
-            if not tm:
+        keys, todo = [], [on]
+        while todo:
+            n = todo.pop(0)
+            kind = _kind(n)
+            kids = _seq(n.children())
+            if kind == "And":
+                todo[:0] = kids
+                continue
+            names = [
+                _parts(k.nameParts())
+                for k in kids
+                if kind in ("EqualTo", "EqualNullSafe")
+                and _kind(k) == "UnresolvedAttribute"
+            ]
+            if len(names) != 2 or any(len(x) != 2 for x in names):
                 raise ValueError(
                     "MERGE ON must be a conjunction of "
                     "alias.col = alias.col equality terms "
-                    f"(got {term.strip()!r})"
+                    f"(got {self._expr(text, n)!r})"
                 )
-            a1, c1, a2, c2 = tm.groups()
-            pair = {a1.lower(): c1, a2.lower(): c2}
+            pair = {a.lower(): c for a, c in names}
             if set(pair) != {t_alias.lower(), s_alias.lower()}:
                 raise ValueError(
-                    f"ON term {term.strip()!r} must join "
+                    f"ON term {self._expr(text, n)!r} must join "
                     f"{t_alias}.<col> to {s_alias}.<col>"
                 )
             if pair[t_alias.lower()] != pair[s_alias.lower()]:
                 raise ValueError(
                     "MERGE keys must be same-named on both sides "
-                    f"(got {term.strip()!r}) — rename the source "
+                    f"(got {self._expr(text, n)!r}) — rename the source "
                     "column upstream"
                 )
             keys.append(pair[t_alias.lower()])
         return keys
 
-    def _rewrite_aliases(
-        self, expr: str, t_alias: str, s_alias: str
-    ) -> str:
-        """Map the statement's aliases to commit_merge_into's fixed
-        ``t`` (target) / ``s`` (source) prefixes."""
-        out = re.sub(
-            rf"\b{re.escape(t_alias)}\.", "t.", expr, flags=re.IGNORECASE
+    def _create_table(self, p, text: str) -> int:
+        """CREATE TABLE t (a BIGINT, b DECIMAL(12,2), ...)
+        [PARTITIONED BY (col, ...)] [LOCATION '<path>'] — an EMPTY
+        table. Inline ``GENERATED ALWAYS AS (expr)`` and ``GENERATED
+        ALWAYS AS IDENTITY [(START WITH n INCREMENT BY m)]`` clauses
+        are recorded in the manifest — the Delta rule: generation
+        expressions are declared at CREATION, computed by surface
+        writers when omitted, validated on every commit when provided.
+        A column DEFAULT is set with ALTER TABLE .. ALTER COLUMN."""
+        name = _ident(p.name().nameParts())
+        location = self._location(name, _opt(p.tableSpec().location()))
+        pcols, bucket = self._layout(p)
+        if bucket:
+            raise ValueError(
+                "CLUSTERED BY needs the CREATE TABLE .. AS <query> form"
+            )
+        fields, gen, ident = [], {}, {}
+        for c in _seq(p.columns()):
+            cname, comment = c.name(), _opt(c.comment())
+            fields.append(
+                StructField(
+                    cname,
+                    _dtype(c.dataType()),
+                    c.nullable(),
+                    {"comment": comment} if comment is not None else None,
+                )
+            )
+            if not c.defaultValue().isEmpty():
+                raise ValueError(
+                    f"column {cname!r}: set a DEFAULT with ALTER TABLE "
+                    f"{name} ALTER COLUMN {cname} SET DEFAULT <expr>"
+                )
+            g, i = _opt(c.generationExpression()), _opt(c.identityColumnSpec())
+            if g is not None:
+                gen[cname] = g
+            if i is not None:
+                if i.isAllowExplicitInsert() or i.getStep() == 0:
+                    raise ValueError(
+                        f"IDENTITY column {cname!r}: GENERATED ALWAYS AS "
+                        "IDENTITY with a nonzero INCREMENT BY only"
+                    )
+                ident[cname] = {
+                    "start": i.getStart(), "step": i.getStep(), "high": None
+                }
+        refs = {
+            _parts(n.nameParts())[0].lower()
+            for expr in gen.values()
+            for n, kind in _walk(self._parser.parseExpression(expr))
+            if kind == "UnresolvedAttribute"
+        }
+        gen_bad = {c for c in gen if c.lower() in refs}
+        if gen_bad:
+            raise ValueError(
+                f"generated column(s) {sorted(gen_bad)} reference "
+                "generated columns — expressions may use only "
+                "non-generated columns of the row"
+            )
+        cmeta = {
+            k: v
+            for k, v in (
+                ("_generated_columns", gen),
+                ("_identity_columns", ident),
+            )
+            if v
+        }
+        v = vt.commit_version(
+            vt.empty_df(self.spark, StructType(fields)),
+            location,
+            partition_by=pcols or None,
+            expected_base=0,
+            meta=cmeta or None,
         )
-        return re.sub(
-            rf"\b{re.escape(s_alias)}\.", "s.", out, flags=re.IGNORECASE
+        self.catalog[name] = location
+        return v
+
+    def _ctas(self, p, text: str) -> int:
+        """CREATE TABLE name [LOCATION '<path>'] [PARTITIONED BY (col,
+        ...)] [CLUSTERED BY (col, ...) INTO n BUCKETS] AS <query>.
+        CLUSTERED BY gives the bucketed snapshot layout
+        (operators/bucketing.py): console joins between co-bucketed
+        tables plan with zero Exchange, OPTIMIZE becomes rebucket().
+        The query runs over the catalog views; the result commits as
+        version 1 of a fresh table, and the catalog gains the name."""
+        name = _ident(p.name().nameParts())
+        location = self._location(name, _opt(p.tableSpec().location()))
+        pcols, bucket = self._layout(p)
+        if pcols and bucket:
+            # the bucketed layout layer refuses hive partition_by too —
+            # one loud contract, not two half-supported ones
+            raise ValueError(
+                "CREATE TABLE: PARTITIONED BY and CLUSTERED BY are "
+                "mutually exclusive in this engine"
+            )
+        self._register_views()
+        rows = self._frame(p.query())
+        if bucket:
+            v = commit_bucketed(
+                rows, location, bucket_by=bucket[1], n_buckets=bucket[0],
+                expected_base=0,
+            )
+        else:
+            v = vt.commit_version(
+                rows, location, partition_by=pcols or None, expected_base=0
+            )
+        self.catalog[name] = location
+        return v
+
+    @staticmethod
+    def _layout(p) -> tuple[list[str], tuple[int, list[str]] | None]:
+        """(partition columns, (bucket count, bucket columns) or None)
+        of a CREATE TABLE; any other table clause is refused."""
+        spec = p.tableSpec()
+        if not (spec.provider().isEmpty() and spec.properties().isEmpty()
+                and spec.comment().isEmpty()):
+            raise ValueError(
+                "CREATE TABLE takes LOCATION, PARTITIONED BY and "
+                "CLUSTERED BY .. INTO n BUCKETS only"
+            )
+        pcols, bucket = [], None
+        for t in _seq(p.partitioning()):
+            # Spark's canonical transform rendering:
+            # identity(col) / bucket(n, col, ...)
+            kind, args = re.fullmatch(r"(\w+)\((.*)\)", t.toString()).groups()
+            cols = [c.strip().strip("`") for c in args.split(",")]
+            if kind == "identity":
+                pcols += cols
+            elif kind == "bucket":
+                bucket = (int(cols[0]), cols[1:])
+            else:
+                raise ValueError(f"unsupported table layout {t.toString()}")
+        return pcols, bucket
+
+    def _create_view(self, p, text: str) -> None:
+        name = _ident(p.child().nameParts())
+        if name in self.catalog:
+            raise ValueError(f"{name!r} is a table in the catalog")
+        if name in self.views and not p.replace():
+            raise ValueError(f"view {name!r} exists (CREATE OR REPLACE VIEW)")
+        prior = self.views.get(name)
+        self.views[name] = _opt(p.originalText())
+        try:
+            # registering eagerly analyzes the view SQL — a bad
+            # definition fails HERE, not at first use
+            self._register_views()
+        except Exception:  # parse, analysis or I/O: restore, then re-raise it
+            if prior is None:
+                del self.views[name]
+            else:
+                self.views[name] = prior
+            raise
+        return None
+
+    def _drop_table(self, p, text: str) -> None:
+        """DROP TABLE [IF EXISTS] t. Removes the name from the catalog;
+        storage is deleted ONLY for managed tables (roots at
+        ``<warehouse>/<name>``) — external LOCATION tables keep their
+        files, the Hive external-table contract."""
+        name = _ident(p.child().nameParts())
+        if name not in self.catalog and p.ifExists():
+            return None
+        path = self._path(name)
+        del self.catalog[name]
+        self.spark.catalog.dropTempView(name)
+        self._registered.pop(name, None)
+        # views over the dropped table would otherwise fail every
+        # later statement's registration
+        self._register_views(cascade=f"DROP TABLE {name}")
+        if self.warehouse and path == f"{self.warehouse}/{name}":
+            fs, jvm = vt._fs(self.spark, path)
+            fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
+        return None
+
+    def _drop_view(self, p, text: str) -> None:
+        name = _ident(p.child().nameParts())
+        if name not in self.views:
+            if p.ifExists():
+                return None
+            raise ValueError(
+                f"unknown view {name!r} (views: {sorted(self.views)})"
+            )
+        del self.views[name]
+        self.spark.catalog.dropTempView(name)
+        self._registered.pop(name, None)
+        return None
+
+    # -- ALTER TABLE: each one metadata-level commit -----------------
+    def _add_columns(self, p, text: str) -> int:
+        """ADD COLUMN a <type> [DEFAULT e] / ADD COLUMNS (a <type>, ..):
+        old files read NULL; DEFAULT applies to future writes."""
+        path = self._path(_ident(p.table().multipartIdentifier()))
+        v = None
+        for c in _seq(p.columnsToAdd()):
+            d = _opt(c.default())
+            v = vt.add_column(
+                self.spark, path, c.colName(), _dtype(c.dataType()),
+                default=None if d is None else d.originalSQL(),
+            )
+        return v
+
+    def _alter_columns(self, p, text: str) -> int:
+        """ALTER COLUMN a SET DEFAULT <expr> | DROP DEFAULT."""
+        path = self._path(_ident(p.table().multipartIdentifier()))
+        v = None
+        for spec in _seq(p.specs()):
+            d = _opt(spec.newDefaultExpression())
+            if d is None and not spec.dropDefault():
+                raise ValueError(
+                    "ALTER COLUMN supports SET DEFAULT <expr> | DROP DEFAULT"
+                )
+            v = vt.set_column_default(
+                self.spark, path, _ident(spec.column().name()),
+                None if d is None else d.originalSQL(),
+            )
+        return v
+
+    def _rename_column(self, p, text: str) -> int:
+        return vt.rename_column(
+            self.spark,
+            self._path(_ident(p.table().multipartIdentifier())),
+            _ident(p.column().name()),
+            p.newName(),
         )
+
+    def _drop_columns(self, p, text: str) -> int:
+        path = self._path(_ident(p.table().multipartIdentifier()))
+        v = None
+        for c in _seq(p.columnsToDrop()):
+            v = vt.drop_column(self.spark, path, _ident(c.name()))
+        return v
+
+    def _add_constraint(self, p, text: str) -> int:
+        cc = p.checkConstraint()
+        return vt.add_table_constraint(
+            self.spark, self._path(cc.tableName()),
+            cc.userProvidedName(), cc.condition(),
+        )
+
+    def _drop_constraint(self, p, text: str) -> int:
+        return vt.drop_table_constraint(
+            self.spark,
+            self._path(_ident(p.table().multipartIdentifier())),
+            p.name(),
+        )
+
+    # -- introspection -----------------------------------------------
+    def _latest(self, name: str) -> tuple[str, list[int], dict]:
+        path = self._path(name)
+        vs = vt.versions(self.spark, path)
+        if not vs:
+            raise ValueError(f"table {name!r} has no committed versions")
+        return path, vs, vt.read_manifest(self.spark, path, vs[-1])
+
+    def _describe(self, p, text: str) -> DataFrame:
+        """DESCRIBE [EXTENDED] [TABLE] t — Spark's three-column layout
+        (col_name, data_type, comment): one row per column (partition
+        columns annotated), and with EXTENDED a detail section from
+        the manifest — location, version + clock, partition columns /
+        transform specs, CHECK constraints, named refs, history-index
+        freshness. Metadata-only: manifest + sidecar JSON reads, no
+        Spark job beyond the local DataFrame."""
+        name = _ident(p.relation().multipartIdentifier())
+        path, vs, man = self._latest(name)
+        pcols = man.get("_partition_by") or []
+        rows = [
+            (
+                f.name,
+                f.dataType.simpleString(),
+                "partition column" if f.name in pcols else "",
+            )
+            for f in StructType.fromJson(man["_schema"]).fields
+        ]
+        if p.isExtended():
+            rows += [
+                ("", "", ""),
+                ("# Detailed Table Information", "", ""),
+                ("Name", name, ""),
+                ("Location", path, ""),
+                ("Version", str(vs[-1]), ""),
+                ("Committed At", str(man.get("committed_at", "")), ""),
+            ]
+            if pcols:
+                rows.append(("Partition Columns", ", ".join(pcols), ""))
+            if man.get("transforms"):
+                rows.append(
+                    (
+                        "Partition Transforms",
+                        ", ".join(man["transforms"]),
+                        "hidden partitioning (partitioning.py)",
+                    )
+                )
+            for cname, cpred in sorted(
+                (man.get("_table_constraints") or {}).items()
+            ):
+                rows.append((f"Check: {cname}", cpred, ""))
+            for rname, rver in sorted(vt.list_refs(self.spark, path).items()):
+                rows.append((f"Ref: {rname}", str(rver), ""))
+            try:
+                clocks = json.loads(
+                    vt.read_text(self.spark, vt._history_index_path(path))
+                ).get("clocks", {})
+                fresh = set(clocks) == {str(v) for v in vs}
+                rows.append(
+                    (
+                        "History Index",
+                        "fresh" if fresh else "stale",
+                        f"{len(clocks)} clocks / {len(vs)} versions",
+                    )
+                )
+            except (OSError, ValueError, Py4JJavaError):  # not built yet
+                rows.append(("History Index", "absent", ""))
+        return _local_df(
+            self.spark, rows, "col_name string, data_type string, comment string"
+        )
+
+    def _show_create(self, p, text: str) -> DataFrame:
+        """SHOW CREATE TABLE t — one createtab_stmt row (Spark's
+        layout) reconstructed from the manifest: columns, partition
+        spec (explicit columns or transform specs), location, and one
+        ALTER TABLE ... ADD CONSTRAINT line per recorded check."""
+        name = _ident(p.child().multipartIdentifier())
+        path, _vs, man = self._latest(name)
+        gen = man.get("_generated_columns") or {}
+        ident = man.get("_identity_columns") or {}
+        cols = ",\n".join(
+            f"  {f.name} {f.dataType.simpleString().upper()}"
+            + (
+                f" GENERATED ALWAYS AS ({gen[f.name]})"
+                if f.name in gen
+                else (
+                    " GENERATED ALWAYS AS IDENTITY (START WITH "
+                    f"{ident[f.name]['start']} INCREMENT BY "
+                    f"{ident[f.name]['step']})"
+                )
+                if f.name in ident
+                else ""
+            )
+            for f in StructType.fromJson(man["_schema"]).fields
+        )
+        stmt = f"CREATE TABLE {name} (\n{cols}\n)"
+        if man.get("transforms"):
+            stmt += (
+                "\nPARTITIONED BY TRANSFORMS ("
+                + ", ".join(man["transforms"]) + ")"
+            )
+        elif man.get("_partition_by"):
+            stmt += (
+                "\nPARTITIONED BY ("
+                + ", ".join(man["_partition_by"]) + ")"
+            )
+        if man.get("_bucket_spec"):
+            bs = man["_bucket_spec"]
+            stmt += (
+                "\nCLUSTERED BY (" + ", ".join(bs["bucket_by"]) + ")"
+                f" INTO {bs['n']} BUCKETS"
+            )
+        stmt += f"\nLOCATION '{path}'"
+        for cname, cpred in sorted(
+            (man.get("_table_constraints") or {}).items()
+        ):
+            stmt += (
+                f"\n-- ALTER TABLE {name} ADD CONSTRAINT {cname} "
+                f"CHECK ({cpred})"
+            )
+        return _local_df(self.spark, [(stmt,)], "createtab_stmt string")
+
+    def _show_tables(self, p, text: str) -> DataFrame:
+        if not p.pattern().isEmpty():
+            raise ValueError("SHOW TABLES takes no pattern")
+        return _local_df(
+            self.spark, sorted(self.catalog.items()),
+            "name string, location string",
+        )
+
+    def _show_properties(self, p, text: str) -> DataFrame:
+        path = self._path(_ident(p.table().multipartIdentifier()))
+        return _local_df(
+            self.spark,
+            sorted(vt.table_properties(self.spark, path).items()),
+            "key string, value string",
+        )
+
+    def _show_partitions(self, p, text: str) -> DataFrame:
+        return self._partitions(_ident(p.table().multipartIdentifier()), None)
+
+    _PLANS = {
+        "MergeIntoTable": _merge,
+        "UpdateTable": _update,
+        "DeleteFromTable": _delete,
+        "InsertIntoStatement": _insert,
+        "OverwriteByExpression": _insert,
+        "CreateTable": _create_table,
+        "CreateTableAsSelect": _ctas,
+        "CreateView": _create_view,
+        "DropTable": _drop_table,
+        "DropView": _drop_view,
+        "AddColumns": _add_columns,
+        "AlterColumns": _alter_columns,
+        "RenameColumn": _rename_column,
+        "DropColumns": _drop_columns,
+        "AddCheckConstraint": _add_constraint,
+        "DropConstraint": _drop_constraint,
+        "DescribeRelation": _describe,
+        "ShowCreateTable": _show_create,
+        "ShowTables": _show_tables,
+        "ShowTableProperties": _show_properties,
+        "ShowPartitions": _show_partitions,
+    }
+
+    # -- the verbs Spark's grammar lacks ------------------------------
+    def _vacuum(self, name, n, unit, dry):
+        """VACUUM t [RETAIN n VERSIONS|HOURS|DAYS] [DRY RUN]."""
+        unit = (unit or "").upper()
+        if unit in ("HOURS", "DAYS"):
+            # time-based retention (the Delta VACUUM contract): keep
+            # the current version + everything inside the horizon
+            kw: dict = {
+                "keep_last": 1,
+                "older_than": int(n) * (3600 if unit == "HOURS" else 86400),
+            }
+        else:
+            kw = {"keep_last": int(n or 3)}
+        dropped = vt.vacuum(
+            self.spark, self._path(name), dry_run=bool(dry), **kw
+        )
+        if dry:
+            # DRY RUN reports the expirable versions, touches nothing
+            return _local_df(
+                self.spark, [(int(v),) for v in dropped], "version long"
+            )
+        return None
+
+    def _optimize(self, name, pred, zcols):
+        """OPTIMIZE t [WHERE p] [ZORDER BY (a, b)] -> compact_snapshot
+        / optimize_zorder / compact_partitions; on a bucketed table,
+        rebucket."""
+        path = self._path(name)
+        cols = [c.strip() for c in zcols.split(",")] if zcols else None
+        if pred:
+            # partition-scoped OPTIMIZE: rewrite only the selected
+            # partitions, carry the rest by reference
+            pcols = self._latest(name)[2].get("_partition_by") or []
+            if not pcols:
+                raise ValueError(
+                    "OPTIMIZE ... WHERE needs a partitioned table "
+                    "(the predicate selects first-level partitions)"
+                )
+            return vt.compact_partitions(
+                self.spark, path, pcols[0], where=pred, cluster_by=cols
+            )
+        if cols:
+            return optimize_zorder(self.spark, path, cols)
+        if bucket_spec(self.spark, path):
+            # a bucketed table's OPTIMIZE is the clustering-
+            # maintenance pass: restore one-file-per-bucket
+            # co-location (no-op when already co-located) —
+            # compact_snapshot would rewrite the layout AWAY
+            return rebucket(self.spark, path)
+        return vt.compact_snapshot(self.spark, path)
+
+    def _restore(self, name, kind, ref):
+        """RESTORE t TO VERSION|TIMESTAMP AS OF ref -> versioned.rollback."""
+        path = self._path(name)
+        if kind.upper() == "TIMESTAMP":
+            ref = vt.version_as_of(self.spark, path, _epoch(ref))
+        return vt.rollback(self.spark, path, int(ref))
+
+    def _copy(self, name, source, fmt, pattern):
+        """COPY INTO t FROM '<dir>' [FILEFORMAT = PARQUET|JSON|CSV]
+        [PATTERN = '<glob>'] — idempotent incremental file loading
+        (operators/copy_into.py); returns the committed version (the
+        current one when every file was already loaded)."""
+        return copy_into(
+            self.spark, self._path(name), source,
+            file_format=fmt or "parquet", pattern=pattern or "*",
+        )[0]
+
+    def _clone(self, name, src, ver, location):
+        """CREATE TABLE name SHALLOW CLONE src [VERSION AS OF n]
+        [LOCATION '<path>'] — a zero-copy reference."""
+        location = self._location(name, location)
+        v = vt.shallow_clone(
+            self.spark, self._path(src), location, int(ver) if ver else None
+        )
+        self.catalog[name] = location
+        return v
+
+    def _history(self, name):
+        return vt.history(self.spark, self._path(name))
+
+    def _describe_detail(self, name):
+        """DESCRIBE DETAIL t — ONE metadata-only row (the Delta
+        utility): location, latest version + commit clock, data-dir
+        chain length, deletion-vector presence + row count, partition
+        columns, column count, recorded CHECK constraints.  Pure
+        driver-side manifest read, no Spark job beyond the local
+        DataFrame."""
+        path, vs, man = self._latest(name)
+        bs = man.get("_bucket_spec") or {}
+        return _local_df(
+            self.spark,
+            [
+                (
+                    name,
+                    path,
+                    int(vs[-1]),
+                    float(man.get("committed_at", 0.0)),
+                    len(vt._manifest_dirs(man)),
+                    bool(man.get("_dv")),
+                    int(man.get("_dv_rows") or 0),
+                    ",".join(man.get("_partition_by") or []),
+                    len((man.get("_schema") or {}).get("fields", [])),
+                    json.dumps(man.get("_checks") or {}, sort_keys=True),
+                    ",".join(bs.get("bucket_by", [])),
+                    int(bs.get("n") or 0),
+                )
+            ],
+            "name string, location string, version long, "
+            "committed_at double, num_data_dirs long, "
+            "has_deletion_vector boolean, dv_rows long, "
+            "partition_columns string, num_columns long, checks string, "
+            "bucket_columns string, num_buckets long",
+        )
+
+    def _show_refs(self, name):
+        return _local_df(
+            self.spark,
+            sorted(vt.list_refs(self.spark, self._path(name)).items()),
+            "name string, version long",
+        )
+
+    def _partitions(self, name, ver):
+        """SHOW PARTITIONS t [VERSION AS OF n] — metadata dir walk."""
+        return vt.snapshot_partitions(
+            self.spark, self._path(name), int(ver) if ver else None
+        )
+
+    def _create_tag(self, name, tag, ver):
+        return vt.tag_version(
+            self.spark, self._path(name), tag, int(ver) if ver else None
+        )
+
+    def _drop_tag(self, name, tag):
+        if not vt.delete_ref(self.spark, self._path(name), tag):
+            raise ValueError(f"no tag {tag!r} on {name}")
+        return None
+
+    def _tblproperties(self, name, verb, body):
+        """ALTER TABLE t SET TBLPROPERTIES ('k' = 'v', ..) / UNSET
+        TBLPROPERTIES ('k', ..)."""
+        unset = verb.upper() == "UNSET"
+        item = r"\s*'([^']+)'\s*" if unset else r"\s*'([^']+)'\s*=\s*'([^']*)'\s*"
+        if not re.fullmatch(f"{item}(?:,{item})*", body):
+            raise ValueError(
+                f"cannot parse TBLPROPERTIES list {body!r} (expected "
+                + ("'key', .." if unset else "'key' = 'value', ..") + ")"
+            )
+        found = re.findall(item, body)
+        path = self._path(name)
+        if unset:
+            return vt.unset_table_properties(self.spark, path, found)
+        return vt.set_table_properties(self.spark, path, dict(found))
+
+    _OWN_GRAMMAR = [
+        (re.compile(p, re.I | re.S), handler)
+        for p, handler in (
+            (
+                r"VACUUM\s+(\w+)(?:\s+RETAIN\s+(\d+)\s+"
+                r"(VERSIONS|HOURS|DAYS))?(\s+DRY\s+RUN)?",
+                _vacuum,
+            ),
+            (
+                r"OPTIMIZE\s+(\w+)(?:\s+WHERE\s+(.+?))?"
+                r"(?:\s+ZORDER\s+BY\s*\(([^)]+)\))?",
+                _optimize,
+            ),
+            (
+                r"RESTORE\s+(\w+)\s+TO\s+(VERSION|TIMESTAMP)\s+AS\s+OF\s+"
+                r"('[^']+'|[0-9.]+)",
+                _restore,
+            ),
+            (
+                r"COPY\s+INTO\s+(\w+)\s+FROM\s+'([^']+)'"
+                r"(?:\s+FILEFORMAT\s*=\s*(\w+))?"
+                r"(?:\s+PATTERN\s*=\s*'([^']+)')?",
+                _copy,
+            ),
+            (
+                r"CREATE\s+TABLE\s+(\w+)\s+SHALLOW\s+CLONE\s+(\w+)"
+                r"(?:\s+VERSION\s+AS\s+OF\s+(\d+))?"
+                r"(?:\s+LOCATION\s+'([^']+)')?",
+                _clone,
+            ),
+            (r"DESCRIBE\s+HISTORY\s+(\w+)", _history),
+            (r"DESCRIBE\s+DETAIL\s+(\w+)", _describe_detail),
+            (r"SHOW\s+REFS\s+(\w+)", _show_refs),
+            (
+                r"SHOW\s+PARTITIONS\s+(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)",
+                _partitions,
+            ),
+            (
+                r"ALTER\s+TABLE\s+(\w+)\s+CREATE\s+TAG\s+([\w.\-]+)"
+                r"(?:\s+AS\s+OF\s+VERSION\s+(\d+))?",
+                _create_tag,
+            ),
+            (r"ALTER\s+TABLE\s+(\w+)\s+DROP\s+TAG\s+([\w.\-]+)", _drop_tag),
+            (
+                r"ALTER\s+TABLE\s+(\w+)\s+(SET|UNSET)\s+TBLPROPERTIES"
+                r"\s*\((.+)\)",
+                _tblproperties,
+            ),
+        )
+    ]
 
 
 def sql(spark: SparkSession, statement: str, catalog: dict[str, str]):

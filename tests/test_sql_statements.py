@@ -1083,3 +1083,94 @@ def test_bucketed_ctas_rejects_partitioned_combo(spark, tmp_path):
             "CREATE TABLE t2 PARTITIONED BY (status) "
             "CLUSTERED BY (k) INTO 4 BUCKETS AS SELECT * FROM src"
         )
+
+
+def test_engines_sharing_a_table_name_read_their_own(spark, tmp_path):
+    """Temp views are session-wide: two engines on one session that
+    both name a table ``daily`` (and a view ``hot``) each read their
+    own, however their statements interleave."""
+    pa = os.path.join(str(tmp_path), "a")
+    pb = os.path.join(str(tmp_path), "b")
+    commit_version(spark.createDataFrame([(1, "A")], "k long, s string"), pa)
+    commit_version(spark.createDataFrame([(2, "B")], "k long, s string"), pb)
+    ea = SqlEngine(spark, {"daily": pa})
+    eb = SqlEngine(spark, {"daily": pb})
+
+    def read(e, name):
+        return [tuple(r) for r in e.sql(f"SELECT * FROM {name}").collect()]
+
+    assert read(ea, "daily") == [(1, "A")]
+    assert read(eb, "daily") == [(2, "B")]
+    assert read(ea, "daily") == [(1, "A")]
+    ea.sql("CREATE VIEW hot AS SELECT s FROM daily")
+    eb.sql("CREATE VIEW hot AS SELECT s FROM daily")
+    assert read(ea, "hot") == [("A",)]
+    assert read(eb, "hot") == [("B",)]
+    assert read(ea, "hot") == [("A",)]
+    assert read(eb, "daily") == [(2, "B")]
+
+
+def test_time_travel_text_inside_a_literal_is_data(spark, eng):
+    e, p = eng
+    got = e.sql(
+        "SELECT 't VERSION AS OF 1' AS s, k FROM t -- t VERSION AS OF 1\n"
+        "WHERE k = 1"
+    ).collect()
+    assert [(r["s"], r["k"]) for r in got] == [("t VERSION AS OF 1", 1)]
+
+
+def test_backtick_targets(spark, eng):
+    e, p = eng
+    e.sql("UPDATE `t` SET v = v + 1 WHERE k = 1")
+    e.sql("DELETE FROM `t` WHERE k = 2")
+    spark.createDataFrame([(3, 33, "m")], SCHEMA).createOrReplaceTempView("btsrc")
+    e.sql(
+        "MERGE INTO `t` USING btsrc AS `s` ON `t`.`k` = s.k "
+        "WHEN MATCHED THEN UPDATE SET `v` = `s`.v"
+    )
+    assert _rows(spark, p) == {1: (11, "live"), 3: (33, "expired")}
+
+
+def test_comments_escapes_and_double_quotes(spark, eng):
+    """A ``--`` comment holding ``(`` and WHEN, a ``''`` escape in a
+    literal that looks like an aliased column, and a double-quoted
+    string with a comma in a SET list all reach the operators as
+    written."""
+    e, p = eng
+    e.sql(
+        "MERGE INTO t AS a USING t AS b ON a.k = b.k -- ( WHEN MATCHED THEN DELETE\n"
+        "WHEN MATCHED AND b.k = 1 THEN UPDATE SET status = 'b.v''s'"
+    )
+    e.sql('UPDATE t SET status = "a,b", v = v + 1 WHERE k = 2')
+    assert _rows(spark, p) == {
+        1: (10, "b.v's"),
+        2: (21, "a,b"),
+        3: (30, "expired"),
+    }
+
+
+def test_merge_case_in_when_condition_unparenthesized(spark, eng):
+    e, p = eng
+    e.sql(
+        "MERGE INTO t USING (SELECT k, v * 2 AS v, status FROM t) s "
+        "ON t.k = s.k "
+        "WHEN MATCHED AND CASE WHEN s.v > 25 THEN true ELSE false END "
+        "THEN UPDATE SET v = s.v"
+    )
+    assert _rows(spark, p) == {
+        1: (10, "live"),
+        2: (40, "live"),
+        3: (60, "expired"),
+    }
+
+
+def test_merge_clause_family_order(spark, eng):
+    """MATCHED, then NOT MATCHED [BY TARGET], then NOT MATCHED BY
+    SOURCE — Spark's grammar and Delta's rule, named in the error."""
+    e, p = eng
+    with pytest.raises(ValueError, match="clause families go in the order"):
+        e.sql(
+            "MERGE INTO t USING t AS s ON t.k = s.k "
+            "WHEN NOT MATCHED THEN INSERT * "
+            "WHEN MATCHED THEN DELETE"
+        )

@@ -61,6 +61,12 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", args.cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
+        # the same cached-plan setting bench.py measures with, so an
+        # A/B run here judges the configuration the bench reported
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+            "true",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
