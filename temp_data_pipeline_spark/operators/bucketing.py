@@ -333,7 +333,7 @@ def read_bucketed(
         # longer co-located) — rebucket()/materialize_deletes is the
         # maintenance answer at that point.
         from temp_data_pipeline_spark.operators.deletion_vectors import (
-            _subtract_dv,
+            _anti_dv,
             read_dv,
         )
         from temp_data_pipeline_spark.operators.versioned import _rel_file
@@ -345,9 +345,9 @@ def read_bucketed(
             F.col("_metadata.row_index").alias("_dv_pos"),
             *scan.columns,
         )
-        return _subtract_dv(
+        return _anti_dv(
             tagged, read_dv(spark, path, version), man.get("_dv_rows")
-        )
+        ).drop("_dv_file", "_dv_pos")
     return scan
 
 

@@ -32,13 +32,17 @@ scales with MATCHES, not with partitions touched and not with the
 corpus.
 
 Read path (``read_table``): plain ``read_version`` for DV-free
-versions; for DV versions, each dir scans WITH its row positions and
-anti-joins the (broadcast) DV — deletes are usually a vanishing
-fraction of the table, so the subtraction is a map-side broadcast
-anti-join, no extra shuffle of the data. Callers using the
-lower-level readers (read_version, read_version_skipped) on a DV
-version see the PRE-delete rows — read through ``read_table`` or
-materialize first; ``has_deletes`` tells which.
+versions; a DV version is the same single file scan
+(``versioned._scan``) WITH row positions, minus the DV
+(``_minus_dv``). A DV of at most ``_DV_LITERAL_MAX`` positions — the
+trickle-delete case — is read on the driver and applied as a literal
+(file, pos) filter inside that scan: zero extra jobs, so a point read
+costs the same as on a DV-free version. A larger one is one anti-join
+over the scan, broadcast while driver-sized (no shuffle of the data),
+shuffled past ``_DV_BROADCAST_MAX``. Callers using the lower-level
+readers (read_version, read_version_skipped) on a DV version see the
+PRE-delete rows — read through ``read_table`` or materialize first;
+``has_deletes`` tells which.
 
 Maintenance (``materialize_deletes``): one distributed rewrite of the
 surviving rows into a fresh self-contained version (the COW
@@ -69,9 +73,10 @@ from temp_data_pipeline_spark.operators.versioned import (
     _fs,
     _local_meta_path,
     _manifest_dirs,
-    _rel_file,
     _rel_from_any,
+    _rel_path,
     _resolve_version,
+    _scan,
     commit_version,
     read_manifest,
     read_version,
@@ -83,85 +88,18 @@ def _dv_name(spark: SparkSession, path: str, version: int) -> str | None:
     return name or None
 
 
-def _scan_with_positions(
-    spark: SparkSession, path: str, version: int
-) -> DataFrame:
-    """All rows of a version tagged (file, pos) from the parquet
-    reader's metadata columns — the positional identity DVs are
-    defined over. Files are tagged by their TABLE-RELATIVE path
-    (``versioned._rel_file``) so a copied/relocated table keeps
-    resolving its deletion vectors, matching the relative
-    ``data_dirs`` manifest convention."""
-    from functools import reduce
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from temp_data_pipeline_spark.operators.versioned import (
-        _dir_root,
-        _disk_schema_and_rename,
-    )
-
-    man = read_manifest(spark, path, version)
-
-    def _scan(d: str) -> DataFrame:
-        # per-dir read schema: dirs written before a column rename
-        # scan under their ON-DISK names and align to the current
-        # names by stable field id (versioned._disk_schema_and_rename)
-        read_schema, align = _disk_schema_and_rename(man, d)
-        r = (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read
-        )
-        root = _dir_root(path, man, d)
-        if "/" in d:
-            r = r.option("basePath", f"{root}/{d.split('/', 1)[0]}")
-        branch = r.parquet(f"{root}/{d}")
-        tagged = branch.select(
-            _rel_file(d).alias("_dv_file"),
-            F.col("_metadata.row_index").alias("_dv_pos"),
-            *branch.columns,
-        )
-        if align is not None:
-            tagged = align(tagged, keep=("_dv_file", "_dv_pos"))
-        return tagged
-
-    frames = []
-    for d in _manifest_dirs(man):
-        try:
-            frames.append(_scan(d))
-        except AnalysisException as exc:
-            # only a genuinely EMPTY dir (zero-row legacy commit with
-            # no recorded schema) is skippable; an unreadable or
-            # mis-vacuumed carried dir must propagate, or a MOR
-            # delete silently misses its rows (ADVICE r6)
-            if "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                continue
-            raise
-    if not frames:
-        raise FileNotFoundError(
-            f"version {version} under {path} has no data files"
-        )
-    from temp_data_pipeline_spark.operators.versioned import (
-        _align_partition_types,
-    )
-
-    # partition columns inferred from dir names must come back with
-    # the manifest schema's types (booleans/narrow ints drift under
-    # inference) — otherwise a MOR writer's re-appended rows fail the
-    # commit schema check on a boolean-partitioned table
-    return _align_partition_types(
-        reduce(lambda a, b: a.unionByName(b), frames), man
-    )
-
-
-# Driver-side sidecar read gate for dv_file_names: below this many
-# bytes the ``file`` column is read with pyarrow on the driver (zero
-# Spark jobs — the distinct runs on the driver). 64 MB ≈ tens of
-# millions of (file, pos) pairs — far past any trickle-delete DV;
-# bigger sidecars (or any non-local filesystem) keep the distributed
-# distinct+collect.
+# Driver-side sidecar read gate (_read_dv_local): below this many
+# bytes a local sidecar is read with pyarrow on the driver (zero Spark
+# jobs). 64 MB ≈ tens of millions of (file, pos) pairs — far past any
+# trickle-delete DV; bigger sidecars (or any non-local filesystem)
+# are read by Spark.
 _DV_LOCAL_MAX_BYTES = 64 * 1024 * 1024
+
+# Up to this many positions (the manifest's ``_dv_rows``) a reader
+# applies the DV as a literal filter inside its scan (_minus_dv): the
+# literal list is planned once per read, so it stays small enough to
+# parse in milliseconds; past it one anti-join subtracts the DV.
+_DV_LITERAL_MAX = 1000
 
 # DV sidecars always carry exactly these two columns; declaring the
 # schema at the read site skips parquet footer inference (one fewer
@@ -182,43 +120,48 @@ def _read_dv_df(spark: SparkSession, path: str, name: str) -> DataFrame:
     return spark.read.schema(_DV_SCHEMA).parquet(f"{path}/_dv/{name}")
 
 
+def _read_dv_local(
+    spark: SparkSession, path: str, name: str, columns: list[str]
+):
+    """The ``columns`` of DV sidecar ``name`` as a pyarrow Table, read
+    on the driver — zero Spark jobs — or None when the sidecar is not
+    local, is past ``_DV_LOCAL_MAX_BYTES`` or cannot be read there
+    (callers then read it with Spark). File entries are as stored:
+    normalize with ``versioned._rel_path``."""
+    import os as _os
+
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
+
+    local = _local_meta_path(f"{path}/_dv/{name}", spark)
+    if local is None or not _os.path.isdir(local):
+        return None
+    try:
+        total = sum(
+            _os.path.getsize(_os.path.join(root, f))
+            for root, _dirs, files in _os.walk(local)
+            for f in files
+            if f.endswith(".parquet")
+        )
+        if total > _DV_LOCAL_MAX_BYTES:
+            return None
+        return _pq.read_table(local, columns=columns)
+    except (OSError, _pa.ArrowException):
+        return None
+
+
 def dv_file_names(spark: SparkSession, path: str, name: str) -> set[str]:
     """The DISTINCT table-relative file paths a DV sidecar names —
     metadata-sized by construction (bounded by the table's file
     count). Driver-side pyarrow read of just the ``file`` column when
-    the sidecar is local and small (zero Spark jobs — the distinct
-    runs on the driver); distributed distinct+collect otherwise."""
-    import os as _os
-    import re as _re
-
-    def _norm(f: str) -> str:
-        # python twin of _rel_from_any: legacy absolute entries cut at
-        # the last real v=<N>/ directory boundary
-        if f.startswith("/") or "://" in f:
-            m = _re.search(r"(?:^|/)(v=\d+/.*)$", f)
-            return m.group(1) if m else ""
-        return f
-
-    local = _local_meta_path(f"{path}/_dv/{name}", spark)
-    if local is not None and _os.path.isdir(local):
-        try:
-            total = 0
-            for root, _dirs, files in _os.walk(local):
-                total += sum(
-                    _os.path.getsize(_os.path.join(root, f))
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-            if total <= _DV_LOCAL_MAX_BYTES:
-                import pyarrow.parquet as _pq
-
-                col = _pq.read_table(local, columns=["file"])["file"]
-                return {_norm(str(v)) for v in col.unique().to_pylist()}
-        except Exception:  # noqa: BLE001 - any hiccup: distributed fallback
-            pass
-    dv = spark.read.schema(_DV_SCHEMA).parquet(
-        f"{path}/_dv/{name}"
-    ).withColumn("file", _rel_from_any(F.col("file")))
+    the sidecar is local and small (``_read_dv_local``); distributed
+    distinct+collect otherwise."""
+    t = _read_dv_local(spark, path, name, ["file"])
+    if t is not None:
+        return {_rel_path(str(v)) for v in t["file"].unique().to_pylist()}
+    dv = _read_dv_df(spark, path, name).withColumn(
+        "file", _rel_from_any(F.col("file"))
+    )
     return {r["file"] for r in dv.select("file").distinct().collect()}
 
 
@@ -392,13 +335,37 @@ def _anti_dv(
     return tagged.join(dv2, ["_dv_file", "_dv_pos"], "left_anti")
 
 
-def _subtract_dv(
-    tagged: DataFrame, dv: DataFrame, n: int | None = None
+def _minus_dv(
+    spark: SparkSession, path: str, man: dict, tagged: DataFrame
 ) -> DataFrame:
-    """``_anti_dv`` with the position columns dropped — the reader-side
-    form."""
-    out_cols = [c for c in tagged.columns if c not in ("_dv_file", "_dv_pos")]
-    return _anti_dv(tagged, dv, n).select(*out_cols)
+    """(file,pos)-tagged rows of manifest ``man``'s snapshot minus its
+    deletion vector, position columns kept. A DV of at most
+    ``_DV_LITERAL_MAX`` recorded rows whose sidecar reads on the
+    driver becomes a literal ``(file, pos) NOT IN (...)`` filter — no
+    join, no broadcast job; any other DV is ``_anti_dv``."""
+    name, n = man.get("_dv"), man.get("_dv_rows")
+    if not name:
+        return tagged
+    t = (
+        _read_dv_local(spark, path, name, ["file", "pos"])
+        if n is not None and n <= _DV_LITERAL_MAX
+        else None
+    )
+    if t is None:
+        dv = _read_dv_df(spark, path, name)
+        dv = dv.withColumn("file", _rel_from_any(F.col("file")))
+        return _anti_dv(tagged, dv, n)
+    if t.num_rows == 0:
+        return tagged
+
+    def q(f: str) -> str:
+        return "'" + f.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    pairs = ", ".join(
+        f"({q(_rel_path(f))}, {int(p)}L)"
+        for f, p in zip(t["file"].to_pylist(), t["pos"].to_pylist())
+    )
+    return tagged.filter(F.expr(f"(_dv_file, _dv_pos) NOT IN ({pairs})"))
 
 
 def _visible_tagged(
@@ -407,12 +374,8 @@ def _visible_tagged(
     """The position-tagged VISIBLE rows of ``base`` — the frame every
     MOR writer starts from (already-deleted rows must neither match
     again nor re-enter a DV)."""
-    tagged = _scan_with_positions(spark, path, base)
-    if man.get("_dv"):
-        tagged = _anti_dv(
-            tagged, read_dv(spark, path, base), man.get("_dv_rows")
-        )
-    return tagged
+    tagged = _scan(spark, path, man, _manifest_dirs(man), positions=True)
+    return _minus_dv(spark, path, man, tagged)
 
 
 def _observed_count(obs) -> int | None:
@@ -520,31 +483,23 @@ def _visible_tagged_for_keys(
         tagged = _semi_join_scan(
             spark, path, base, survivors, with_positions=True
         )
-    if man.get("_dv"):
-        tagged = _anti_dv(
-            tagged, read_dv(spark, path, base), man.get("_dv_rows")
-        )
-    return tagged
+    return _minus_dv(spark, path, man, tagged)
 
 
 def read_table(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """The DV-aware read: visible rows of ``version`` — plain
-    ``read_version`` when it carries no deletes, otherwise the
-    position-tagged scan minus the deletion vector. The subtraction
-    is a map-side broadcast anti-join on (file, pos) while the DV is
-    driver-sized (no shuffle of the data, cost ≈ the plain scan plus a
-    hash probe per row); a pathological DV past ``_DV_BROADCAST_MAX``
-    positions degrades to a shuffled anti-join instead of straining
-    the driver."""
+    ``read_version`` when it carries no deletes, otherwise the same
+    one-scan read with row positions minus the deletion vector
+    (``_minus_dv``: a literal filter inside the scan for a
+    trickle-delete DV, one anti-join past that)."""
     version = _resolve_version(spark, path, version)
     man = read_manifest(spark, path, version)
     if not man.get("_dv"):
         return read_version(spark, path, version)
-    dv = read_dv(spark, path, version)
-    tagged = _scan_with_positions(spark, path, version)
-    return _subtract_dv(tagged, dv, man.get("_dv_rows"))
+    tagged = _scan(spark, path, man, _manifest_dirs(man), positions=True)
+    return _minus_dv(spark, path, man, tagged).drop("_dv_file", "_dv_pos")
 
 
 def export_snapshot(

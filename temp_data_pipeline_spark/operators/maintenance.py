@@ -244,7 +244,7 @@ def maintain_table(
                 read_text(spark, _history_index_path(path))
             ).get("clocks", {})
         )
-    except Exception:  # noqa: BLE001 - missing/unreadable: rebuild
+    except (FileNotFoundError, ValueError):  # missing/corrupt: rebuild
         have = set()
     if have != current:
         write_history_index(spark, path)

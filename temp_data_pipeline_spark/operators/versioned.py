@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F_sql
@@ -379,15 +380,23 @@ def read_text(spark: SparkSession, path: str) -> str:
     44 manifest reads ≈ 1.9 s of one q_replicate run); non-local
     schemes go through the Hadoop FS (py4j COPIES byte[] args, so a
     fill-this-buffer loop reads nothing — drain the stream JVM-side
-    instead). Missing local files raise FileNotFoundError; every
-    error-path caller catches broad Exception, so the shape change
-    from Py4JJavaError is safe."""
+    instead). A missing file raises FileNotFoundError on either path
+    — a local miss without touching the JVM."""
     lp = _local_meta_path(path, spark)
-    if lp is not None and os.path.isfile(lp):
+    if lp is not None:
         with open(lp, "rb") as fh:
             return fh.read().decode("utf-8")
+    from py4j.protocol import Py4JJavaError
+
     fs, jvm = _fs(spark, path)
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
+    try:
+        stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() == (
+            "java.io.FileNotFoundException"
+        ):
+            raise FileNotFoundError(path) from exc
+        raise
     try:
         return bytes(
             jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
@@ -396,22 +405,33 @@ def read_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
-def _rel_file(d: str):
+def _rel_file(d: str | None = None):
     """``_metadata.file_path`` of a scan rooted at table-relative dir
     ``d``, re-expressed RELATIVE to the table root — e.g.
     ``v=3/date=2026-01-01/part-0.parquet``. Sidecars (deletion
     vectors, zone maps, Bloom indexes) key files by this form so a
     copied/relocated table keeps resolving them — the same reason
     manifests store relative ``data_dirs`` (ADVICE r6). The extractor
-    splits on the LAST occurrence of ``/<d>/`` in the absolute URI,
-    matching ``_read_files``'s ``rfind`` grouping; a hive partition
-    column literally named ``v`` with integer values could alias the
-    boundary, but every tag site uses this one extractor, so even
-    then the forms agree with each other."""
+    splits on the LAST occurrence of ``/<d>/`` in the absolute URI; a
+    hive partition column literally named ``v`` with integer values
+    could alias the boundary, so scans of such tables tag per dir.
+
+    With no ``d`` it anchors at the last ``/v=`` segment instead — the
+    one-scan form for files of many dirs. That equals ``_rel_file(<the
+    file's own dir>)`` whenever no segment below the version dir
+    starts with ``v=``, i.e. unless a partition column is named
+    ``v``."""
     fp = F_sql.col("_metadata.file_path")
-    return F_sql.concat(
-        F_sql.lit(d + "/"), F_sql.substring_index(fp, "/" + d + "/", -1)
-    )
+    sep = "/v=" if d is None else "/" + d + "/"
+    return F_sql.concat(F_sql.lit(sep[1:]), F_sql.substring_index(fp, sep, -1))
+
+
+def _rel_path(f: str) -> str:
+    """Python twin of ``_rel_from_any`` for one stored file entry."""
+    if f.startswith("/") or "://" in f:
+        m = re.search(r"(?:^|/)(v=\d+/.*)$", f)
+        return m.group(1) if m else ""
+    return f
 
 
 def _rel_from_any(col):
@@ -1161,9 +1181,8 @@ def read_version(
     """Time-travel read: the snapshot at ``version``, or the latest
     committed one. Plain parquet scan of the manifest's ``data_dirs``
     (one dir for independent snapshots, several for metadata-level
-    appends) — pruning/pushdown unchanged; partition columns are
-    discovered per listed root, so carried and new dirs form one
-    consistent partitioned table.
+    appends) — one file scan however many dirs (``_scan``),
+    pruning/pushdown unchanged.
 
     An EMPTY partitioned snapshot has no part files to infer a schema
     from (the dir holds only _SUCCESS); the manifest records the
@@ -1173,42 +1192,7 @@ def read_version(
     commit don't wedge the table."""
     version = _resolve_version(spark, path, version)
     man = read_manifest(spark, path, version)
-    dirs = _manifest_dirs(man)
-    if (
-        len(dirs) == 1
-        and "/" not in dirs[0]
-        and _dir_mapping(man, dirs[0]) is None
-    ):
-        # DECLARE the manifest schema instead of inferring: inference
-        # launches a footer-read job per call (one lifecycle query
-        # re-opens its tables dozens of times), and the multi-dir
-        # branch below always declared anyway — the two paths now
-        # agree. Declared partition columns also come back with the
-        # writer's types directly, so _align_partition_types is a
-        # no-op instead of a cast layer over inference drift.
-        if "_schema" in man:
-            from pyspark.sql.types import StructType
-
-            return spark.read.schema(
-                StructType.fromJson(man["_schema"])
-            ).parquet(_dir_abs(path, man, dirs[0]))
-        # legacy manifest without a recorded schema: infer
-        return _align_partition_types(
-            spark.read.parquet(_dir_abs(path, man, dirs[0])), man
-        )
-    # multi-dir (carry_from / COW-merge) snapshot: each dir is its own
-    # partitioned root — one multi-path read would misparse the sibling
-    # v=<N> dirs as partition keys of the table parent. Per-dir scans
-    # unioned by name keep partition discovery per root (pruning
-    # intact: a filter on the partition column pushes into every
-    # branch), and the manifest schema makes empty dirs readable
-    # without inference. A NESTED entry (``v=<N>/date=x``, one carried
-    # partition of a COW merge) reads with basePath at its version
-    # root, so the partition column survives the subdir scan. Dirs
-    # written before a column rename/drop read under their ON-DISK
-    # schema and align to the current names by stable field id
-    # (_disk_schema_and_rename) — the Iceberg name-mapping read.
-    return _read_manifest_dirs(spark, path, man, dirs)
+    return _scan(spark, path, man, _manifest_dirs(man))
 
 
 def _align_partition_types(df: DataFrame, man: dict) -> DataFrame:
@@ -1239,30 +1223,145 @@ def _align_partition_types(df: DataFrame, man: dict) -> DataFrame:
     return df
 
 
-def _read_manifest_dirs(
-    spark: SparkSession, path: str, man: dict, dirs: list[str]
+# what Spark raises when the dirs of one multi-path read have different
+# partition layouts (``_scan`` then reads them per dir)
+_LAYOUT_CONFLICTS = (
+    "CONFLICTING_PARTITION_COLUMN_NAMES",
+    "CONFLICTING_DIRECTORY_STRUCTURES",
+)
+
+
+def _scan(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    entries: list[str],
+    positions: bool = False,
 ) -> DataFrame:
-    """Per-dir scans of a manifest's dirs unioned by name — the
-    multi-dir body of ``read_version``, reusable over a SUBSET of the
-    dirs (incremental compaction reads only the small ones)."""
+    """The one scan builder behind every snapshot reader: ``entries``
+    — table-relative data dirs of manifest ``man`` (``v=3``, or a
+    nested COW entry ``v=3/date=x``) or part files of them — read as
+    one frame under the manifest schema (declared: inferring it would
+    run a footer-read job per read). ``positions`` prepends the
+    (``_dv_file``, ``_dv_pos``) tags deletion vectors are defined
+    over, the file in ``_rel_file``'s table-relative form.
+
+    Entries read as ONE file scan (one file index, whatever the
+    history). An unpartitioned snapshot needs no ``basePath``: each
+    listed dir is its own root, so no ``v`` column appears. A
+    partitioned one needs it — without it, sibling ``v=<N>`` dirs are
+    CONFLICTING_DIRECTORY_STRUCTURES — and with it at the table root
+    Spark adds an int partition column ``v``, dropped here.
+
+    The rest read per dir, each branch tagged at its own dir:
+    - a partitioned table with a column named ``v`` (any case): the
+      synthetic column would silently REPLACE that column's values;
+    - a partitioned snapshot whose shallow-clone roots (``_dir_roots``)
+      differ: one ``basePath`` cannot cover them;
+    - the dirs of a table whose partition layout evolved (a carry
+      commit with a new ``partition_by``): Spark refuses to list them
+      as one table (``_LAYOUT_CONFLICTS``);
+    - dirs written before a column rename/drop (``_dir_fields``): they
+      scan under their ON-DISK schema, aligned to the current names by
+      stable field id (``_disk_schema_and_rename``);
+    - a legacy manifest without a recorded schema: inferred per dir;
+      a dir with nothing to infer from is skipped."""
     from functools import reduce
 
-    def _read_dir(d: str) -> DataFrame:
-        read_schema, align = _disk_schema_and_rename(man, d)
-        r = (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read
-        )
-        root = _dir_root(path, man, d)
-        if "/" in d:
-            r = r.option("basePath", f"{root}/{d.split('/', 1)[0]}")
-        branch = r.parquet(f"{root}/{d}")
-        return align(branch) if align is not None else branch
+    from pyspark.errors.exceptions.captured import (
+        AnalysisException,
+        SparkRuntimeException,
+    )
+    from pyspark.sql.types import StructType
 
+    schema = StructType.fromJson(man["_schema"]) if "_schema" in man else None
+    tags = ("_dv_file", "_dv_pos") if positions else ()
+
+    def tagged(df: DataFrame, rel) -> DataFrame:
+        if not positions:
+            return df
+        pos = F_sql.col("_metadata.row_index")
+        return df.select(rel.alias(tags[0]), pos.alias(tags[1]), *df.columns)
+
+    if not entries:
+        if schema is None:
+            schema = read_version(spark, path, man["version"]).schema
+        empty = empty_df(spark, schema)
+        if not positions:
+            return empty
+        return empty.select(
+            F_sql.lit(None).cast("string").alias(tags[0]),
+            F_sql.lit(None).cast("long").alias(tags[1]),
+            *empty.columns,
+        )
+
+    def head(e: str) -> str:
+        return e.split("/", 1)[0]
+
+    pb = man.get("_partition_by") or []
+    roots = {_dir_root(path, man, e) for e in entries}
+    one = schema is not None and (
+        not pb
+        or (len(roots) == 1 and all(f.name.lower() != "v" for f in schema))
+    )
+    plain = [e for e in entries if one and _dir_mapping(man, e) is None]
+    frames = []
+    if plain:
+        heads = sorted({head(e) for e in plain})
+        r = spark.read.schema(schema)
+        if pb:
+            (root,) = roots
+            r = r.option(
+                "basePath", root if len(heads) > 1 else f"{root}/{heads[0]}"
+            )
+        paths = [f"{_dir_root(path, man, e)}/{e}" for e in plain]
+        try:
+            df = r.parquet(*paths)
+        except SparkRuntimeException as exc:
+            # a carry commit may change partition_by while old dirs keep
+            # their layout; dirs of two layouts cannot share one file
+            # index, and Spark says so here — they read per dir below
+            if exc.getCondition() not in _LAYOUT_CONFLICTS:
+                raise
+            plain = []
+        else:
+            if pb and len(heads) > 1:
+                df = df.drop("v")
+            frames.append(tagged(df, _rel_file()))
+    # per-dir branches: one per dir entry, and one per version dir for
+    # part-file entries (a part file's name holds no "="), each tagged
+    # at that dir exactly as the sidecars written per dir were
+    groups: dict[str, list[str]] = {}
+    unified = set(plain)
+    for e in entries:
+        if e not in unified:
+            anchor = e if "=" in e.rsplit("/", 1)[-1] else head(e)
+            groups.setdefault(anchor, []).append(e)
+    for anchor, group in sorted(groups.items()):
+        read_schema, align = _disk_schema_and_rename(man, anchor)
+        r = spark.read
+        if read_schema is not None:
+            r = r.schema(read_schema)
+        root = _dir_root(path, man, anchor)
+        if group != [head(anchor)]:
+            r = r.option("basePath", f"{root}/{head(anchor)}")
+        try:
+            branch = r.parquet(*[f"{root}/{e}" for e in group])
+        except AnalysisException as exc:
+            # only a genuinely EMPTY dir of a legacy commit (no recorded
+            # schema to scan under) is skippable; an unreadable or
+            # mis-vacuumed carried dir must propagate (ADVICE r6)
+            if "UNABLE_TO_INFER_SCHEMA" in str(exc):
+                continue
+            raise
+        branch = tagged(branch, _rel_file(anchor))
+        frames.append(branch if align is None else align(branch, keep=tags))
+    if not frames:
+        raise FileNotFoundError(
+            f"version {man.get('version')} under {path} has no data files"
+        )
     return _align_partition_types(
-        reduce(lambda a, b: a.unionByName(b), [_read_dir(d) for d in dirs]),
-        man,
+        reduce(lambda a, b: a.unionByName(b), frames), man
     )
 
 
@@ -1333,7 +1432,7 @@ def write_history_index(spark: SparkSession, path: str) -> int:
         prior = json.loads(
             read_text(spark, _history_index_path(path))
         ).get("clocks", {})
-    except Exception:  # noqa: BLE001 - missing/unreadable: full rebuild
+    except (FileNotFoundError, ValueError):  # missing/corrupt: full rebuild
         prior = {}
     clocks = {
         str(v): (
@@ -1376,7 +1475,7 @@ def version_as_of(spark: SparkSession, path: str, ts) -> int:
         clocks = json.loads(
             read_text(spark, _history_index_path(path))
         ).get("clocks", {})
-    except Exception:  # noqa: BLE001 - no/unreadable index: plain scan
+    except (FileNotFoundError, ValueError):  # no/corrupt index: plain scan
         clocks = {}
 
     def _clock(v: int) -> float:
@@ -2056,7 +2155,7 @@ def compact_incremental(
     if len(small) < min_dirs:
         return latest
     big = [d for d in dirs if d not in set(small)]
-    rows = _read_manifest_dirs(spark, path, man, small)
+    rows = _scan(spark, path, man, small)
     part = man.get("_partition_by") or None
     # the rewritten small-dir files are PLAIN: commit_version re-derives
     # the layout keys for the big dirs it still carries

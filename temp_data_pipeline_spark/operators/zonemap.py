@@ -53,12 +53,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.operators.versioned import (
-    _dir_root,
     _fs,
     _manifest_dirs,
-    _rel_file,
     _rel_from_any,
+    _rel_path,
     _resolve_version,
+    _scan,
     commit_version,
     read_manifest,
     read_version,
@@ -374,19 +374,14 @@ def _semi_join_scan(
     construction; used when the survivor count exceeds the driver
     cap, where pruning is weak and the scan approaches full cost
     anyway."""
-    if with_positions:
-        from temp_data_pipeline_spark.operators.deletion_vectors import (
-            _scan_with_positions,
-        )
-
-        tagged = _scan_with_positions(spark, path, version)
-        return tagged.join(
-            survivors.withColumnRenamed("file", "_dv_file"),
-            "_dv_file",
-            "left_semi",
-        )
-    tagged = _scan_files_with_rows(spark, path, version)
-    return tagged.join(survivors, "file", "left_semi").drop("file")
+    man = read_manifest(spark, path, version)
+    tagged = _scan(
+        spark, path, man, _manifest_dirs(man), positions=True
+    ).join(
+        survivors.withColumnRenamed("file", "_dv_file"), "_dv_file",
+        "left_semi",
+    )
+    return tagged if with_positions else tagged.drop("_dv_file", "_dv_pos")
 
 
 def read_version_skipped(
@@ -435,90 +430,19 @@ def _read_files(
     *,
     with_positions: bool = False,
 ) -> DataFrame:
-    """Scan an explicit file list of a version: files group by their
-    ``v=<N>`` root and each group scans with ``basePath`` at that
-    root, so hive partition columns survive explicit-file reads
-    across carried directories. Entries are TABLE-RELATIVE
-    (``v=3/date=x/f.parquet``, the sidecar convention) — legacy
-    absolute paths still resolve. An empty list returns an empty
-    frame with the manifest schema. ``with_positions`` prepends the
-    (_dv_file, _dv_pos) columns deletion vectors subtract on, tagged
-    with the same relative form the DV sidecars store."""
-    from functools import reduce
-
-    from pyspark.sql.types import StructType
-
-    from temp_data_pipeline_spark.operators.versioned import (
-        _disk_schema_and_rename,
-    )
-
+    """Scan an explicit file list of a version — one file scan
+    (``versioned._scan``), hive partition columns kept. Entries are
+    TABLE-RELATIVE (``v=3/date=x/f.parquet``, the sidecar convention);
+    legacy absolute paths resolve by their ``v=<N>/...`` tail. An
+    empty list returns an empty frame with the manifest schema.
+    ``with_positions`` prepends the (_dv_file, _dv_pos) columns
+    deletion vectors subtract on, tagged with the same relative form
+    the DV sidecars store."""
+    rel = [_rel_path(f) for f in files]
+    if "" in rel:
+        raise ValueError(f"data file path without a v= segment in {files}")
     man = read_manifest(spark, path, version)
-    schema = (
-        StructType.fromJson(man["_schema"]) if "_schema" in man else None
-    )
-    if not files:
-        if schema is None:
-            # legacy manifest without a recorded schema: infer from data
-            schema = read_version(spark, path, version).schema
-        from temp_data_pipeline_spark.operators.versioned import empty_df
-
-        empty = empty_df(spark, schema)
-        if with_positions:
-            empty = empty.select(
-                F.lit(None).cast("string").alias("_dv_file"),
-                F.lit(None).cast("long").alias("_dv_pos"),
-                *empty.columns,
-            )
-        return empty
-    # group by version-root head: (absolute basePath, relative head)
-    by_root: dict[tuple[str, str], list[str]] = {}
-    for f in files:
-        if f.startswith("/") or "://" in f:
-            # legacy absolute entry: .../<table>/v=3/[part=x/]f.parquet
-            i = f.rfind("/v=")
-            if i < 0:
-                raise ValueError(
-                    f"unexpected data file path (no v= segment): {f}"
-                )
-            j = f.find("/", i + 1)
-            head = f[i + 1 : j] if j > 0 else f[i + 1 :]
-            root = f[:j] if j > 0 else f
-            absolute = f
-        else:
-            head = f.split("/", 1)[0]
-            # clone-aware: a shallow-clone reference resolves under
-            # its source root (versioned._dir_root)
-            troot = _dir_root(path, man, head)
-            root = f"{troot}/{head}"
-            absolute = f"{troot}/{f}"
-        by_root.setdefault((root, head), []).append(absolute)
-
-    def _scan(root: str, head: str, fl: list[str]) -> DataFrame:
-        # dirs written before a column rename scan under their ON-DISK
-        # names and align to the current names by stable field id
-        read_schema, align = _disk_schema_and_rename(man, head)
-        r = (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read
-        )
-        branch = r.option("basePath", root).parquet(*sorted(fl))
-        if with_positions:
-            branch = branch.select(
-                _rel_file(head).alias("_dv_file"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
-                *branch.columns,
-            )
-        if align is not None:
-            branch = align(
-                branch, keep=("_dv_file", "_dv_pos") if with_positions else ()
-            )
-        return branch
-
-    return reduce(
-        lambda a, b: a.unionByName(b),
-        [_scan(root, head, fl) for (root, head), fl in sorted(by_root.items())],
-    )
+    return _scan(spark, path, man, rel, positions=with_positions)
 
 
 def zorder_key(
@@ -934,46 +858,15 @@ def _scan_files_with_rows(
     dirs: list[str] | None = None,
 ) -> DataFrame:
     """All rows of a version (or of the subset ``dirs`` of its data
-    dirs) tagged with their producing file — the shared multi-dir
-    `_metadata.file_path` scan (see write_zone_maps for why the
-    projection must happen inside each branch). Files are tagged by
-    their TABLE-RELATIVE path (``versioned._rel_file``) so sidecars
-    survive a table relocation like the manifests they describe."""
-    from functools import reduce
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-    from pyspark.sql.types import StructType
-
+    dirs) tagged with their producing file in the TABLE-RELATIVE form
+    (``versioned._rel_file``), so sidecars survive a table relocation
+    like the manifests they describe."""
     man = read_manifest(spark, path, version)
-    schema = (
-        StructType.fromJson(man["_schema"]) if "_schema" in man else None
+    tagged = _scan(
+        spark, path, man, _manifest_dirs(man) if dirs is None else dirs,
+        positions=True,
     )
-
-    def _scan(d: str) -> DataFrame:
-        r = spark.read.schema(schema) if schema is not None else spark.read
-        root = _dir_root(path, man, d)
-        if "/" in d:
-            r = r.option("basePath", f"{root}/{d.split('/', 1)[0]}")
-        branch = r.parquet(f"{root}/{d}")
-        return branch.select(_rel_file(d).alias("file"), *branch.columns)
-
-    frames = []
-    for d in dirs if dirs is not None else _manifest_dirs(man):
-        try:
-            frames.append(_scan(d))
-        except AnalysisException as exc:
-            # only a genuinely EMPTY dir (zero-row legacy commit, no
-            # recorded schema to scan under) is skippable; a missing
-            # or unreadable carried dir must propagate or the sidecar
-            # silently under-covers the version (ADVICE r6)
-            if "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                continue
-            raise
-    if not frames:
-        raise FileNotFoundError(
-            f"version {version} under {path} has no data files"
-        )
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    return tagged.drop("_dv_pos").withColumnRenamed("_dv_file", "file")
 
 
 def _bloom_survivors(
@@ -1098,9 +991,8 @@ def scan_version(
     # a DV version must subtract its deletion vector or the "one entry
     # point" would resurrect deleted rows that low-level readers hide
     from temp_data_pipeline_spark.operators.deletion_vectors import (
-        _subtract_dv,
+        _minus_dv,
         has_deletes,
-        read_dv,
         read_table,
     )
 
@@ -1129,9 +1021,7 @@ def scan_version(
             spark, path, version, survivors, with_positions=dv_aware
         )
     if dv_aware:
-        out = _subtract_dv(
-            out,
-            read_dv(spark, path, version),
-            read_manifest(spark, path, version).get("_dv_rows"),
-        )
+        out = _minus_dv(
+            spark, path, read_manifest(spark, path, version), out
+        ).drop("_dv_file", "_dv_pos")
     return out.filter(_row_condition(predicates))

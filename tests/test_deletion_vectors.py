@@ -494,3 +494,277 @@ def test_observed_count_fast_path(spark, tmp_path):
         spark, path2, 1, read_manifest(spark, path2, 1), ["k"], keyed2
     )
     assert _observed_count(obs2) is None
+
+
+# --- one-scan reads: parity with the per-dir union ---------------------
+
+
+def _per_dir_union(spark, path, version):
+    """Reference reader: one scan per manifest dir, each tagged with
+    ``_rel_file(<that dir>)``, unioned by name — the read path before
+    snapshots became one file scan."""
+    from functools import reduce
+
+    from temp_data_pipeline_spark.operators.versioned import (
+        _align_partition_types,
+        _dir_root,
+        _disk_schema_and_rename,
+        _manifest_dirs,
+        _rel_file,
+        read_manifest,
+    )
+
+    man = read_manifest(spark, path, version)
+    frames = []
+    for d in _manifest_dirs(man):
+        read_schema, align = _disk_schema_and_rename(man, d)
+        r = spark.read.schema(read_schema)
+        root = _dir_root(path, man, d)
+        if "/" in d:
+            r = r.option("basePath", f"{root}/{d.split('/', 1)[0]}")
+        b = r.parquet(f"{root}/{d}")
+        b = b.select(
+            _rel_file(d).alias("_dv_file"),
+            F.col("_metadata.row_index").alias("_dv_pos"),
+            *b.columns,
+        )
+        frames.append(align(b, keep=("_dv_file", "_dv_pos")) if align else b)
+    tagged = _align_partition_types(
+        reduce(lambda a, b: a.unionByName(b), frames), man
+    )
+    if man.get("_dv"):
+        dv = read_dv(spark, path, version).select(
+            F.col("file").alias("_dv_file"), F.col("pos").alias("_dv_pos")
+        )
+        tagged = tagged.join(dv, ["_dv_file", "_dv_pos"], "left_anti")
+    return tagged
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_parity(spark, path, version):
+    """``read_table`` and the MOR writers' tagged scan equal the per-dir
+    union row for row, tags included."""
+    from temp_data_pipeline_spark.operators.deletion_vectors import (
+        _visible_tagged,
+    )
+    from temp_data_pipeline_spark.operators.versioned import read_manifest
+
+    ref = _per_dir_union(spark, path, version)
+    got = read_table(spark, path, version)
+    data = [c for c in ref.columns if c not in ("_dv_file", "_dv_pos")]
+    assert got.columns == data
+    assert _rows(got) == _rows(ref.select(*data))
+    tagged = _visible_tagged(
+        spark, path, version, read_manifest(spark, path, version)
+    )
+    assert tagged.columns == ref.columns
+    assert _rows(tagged) == _rows(ref)
+
+
+def _clone_table(spark, tmp_path):
+    from temp_data_pipeline_spark.operators.versioned import shallow_clone
+
+    src = os.path.join(str(tmp_path), "src")
+    dst = os.path.join(str(tmp_path), "dst")
+    s = "k long, part string, ts long"
+    v = commit_version(
+        spark.createDataFrame([(i, f"p{i % 3}", i) for i in range(30)], s),
+        src, partition_by=["part"],
+    )
+    commit_version(
+        spark.createDataFrame([(i, f"p{i % 3}", i) for i in range(30, 40)], s),
+        src, carry_from=v,
+    )
+    shallow_clone(spark, src, dst)
+    commit_version(
+        spark.createDataFrame([(i, "p9", i) for i in range(40, 45)], s),
+        dst, carry_from=versions(spark, dst)[-1],
+    )
+    return dst
+
+
+def _renamed_table(spark, tmp_path):
+    from temp_data_pipeline_spark.operators.versioned import rename_column
+
+    path = os.path.join(str(tmp_path), "ren")
+    s = "k long, val string"
+    v = commit_version(
+        spark.createDataFrame([(i, f"a{i}") for i in range(20)], s), path
+    )
+    v = commit_version(
+        spark.createDataFrame([(i, f"b{i}") for i in range(20, 30)], s),
+        path, carry_from=v,
+    )
+    v = rename_column(spark, path, "val", "label")
+    commit_version(
+        spark.createDataFrame([(i, f"c{i}") for i in range(30, 35)],
+                              "k long, label string"),
+        path, carry_from=v,
+    )
+    return path
+
+
+def _nested_cow_table(spark, tmp_path):
+    from temp_data_pipeline_spark.operators.versioned import commit_merge_cow
+
+    path = os.path.join(str(tmp_path), "cow")
+    s = "k long, part string, ts long"
+    commit_merge_cow(
+        spark.createDataFrame(
+            [(i, "a" if i < 20 else "b", i) for i in range(40)], s
+        ),
+        path, ["k"], "ts", "part",
+    )
+    commit_merge_cow(
+        spark.createDataFrame([(1, "a", 1000)], s), path, ["k"], "ts", "part"
+    )
+    return path
+
+
+def _bool_partitioned_table(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "bool")
+    s = "k long, flag boolean"
+    v = commit_version(
+        spark.createDataFrame([(i, i % 2 == 0) for i in range(20)], s),
+        path, partition_by=["flag"],
+    )
+    commit_version(
+        spark.createDataFrame([(i, i % 2 == 0) for i in range(20, 26)], s),
+        path, carry_from=v,
+    )
+    return path
+
+
+def _empty_commit_table(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "empty")
+    s = "k long, part string"
+    v = commit_version(
+        spark.createDataFrame([(i, f"p{i % 2}") for i in range(20)], s),
+        path, partition_by=["part"],
+    )
+    v = commit_version(spark.createDataFrame([], s), path, carry_from=v)
+    commit_version(
+        spark.createDataFrame([(i, "p0") for i in range(20, 24)], s),
+        path, carry_from=v,
+    )
+    return path
+
+
+def _evolved_layout_table(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "evo")
+    s = "k long, part string"
+    rows = [(i, f"p{i % 2}") for i in range(30)]
+    v = commit_version(
+        spark.createDataFrame(rows[:10], s), path, partition_by=["part"]
+    )
+    v = commit_version(
+        spark.createDataFrame(rows[10:20], s), path, carry_from=v,
+        partition_by=[],
+    )
+    commit_version(
+        spark.createDataFrame(rows[20:], s), path, carry_from=v,
+        partition_by=["part"],
+    )
+    return path
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _clone_table,
+        _renamed_table,
+        _nested_cow_table,
+        _bool_partitioned_table,
+        _empty_commit_table,
+        _evolved_layout_table,
+    ],
+)
+@pytest.mark.parametrize("literal_max", [None, 0])
+def test_one_scan_read_matches_per_dir_union(
+    spark, tmp_path, monkeypatch, build, literal_max
+):
+    """Every layout the one-scan builder handles — or hands to its
+    per-dir fallback, as for a partition layout that evolved across
+    carry commits — reads the same rows, and tags every row with
+    the same (file, pos), as one scan per dir: before any delete and
+    after one, with the DV applied as a literal filter (the default
+    for a small DV) and as an anti-join (``literal_max=0``)."""
+    from temp_data_pipeline_spark.operators import deletion_vectors as DV
+
+    if literal_max is not None:
+        monkeypatch.setattr(DV, "_DV_LITERAL_MAX", literal_max)
+    path = build(spark, tmp_path)
+    _assert_parity(spark, path, versions(spark, path)[-1])
+    v = commit_delete_mor(spark, path, "k % 5 = 0")
+    assert has_deletes(spark, path, v)
+    _assert_parity(spark, path, v)
+
+
+@pytest.mark.parametrize("name", ["v", "V"])
+def test_partitioned_table_with_a_v_column_reads_its_own_values(
+    spark, tmp_path, name
+):
+    """A table column named ``v`` (any case) must not be replaced by
+    the version number Spark parses from the ``v=<N>`` dirs when a
+    multi-dir partitioned snapshot scans from the table root."""
+    path = os.path.join(str(tmp_path), "vcol")
+    s = f"{name} long, k long, part string"
+    rows = [(0, 0, "a"), (7, 1, "b")]
+    v = commit_version(
+        spark.createDataFrame(rows[:1], s), path, partition_by=["part"]
+    )
+    commit_version(spark.createDataFrame(rows[1:], s), path, carry_from=v)
+    got = read_version(spark, path)
+    assert got.columns == [name, "k", "part"]
+    assert _rows(got) == sorted(rows, key=repr)
+    v = commit_delete_mor(spark, path, "k = 1")
+    assert _rows(read_table(spark, path, v)) == [rows[0]]
+
+
+def _data_file_scans(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FileScan parquet")
+
+
+def test_many_carried_dirs_plan_one_file_scan(spark, tmp_path):
+    """A snapshot of 25 carried dirs is ONE data FileScan, with and
+    without a deletion vector — not one scan (and one DV broadcast)
+    per dir."""
+    path = os.path.join(str(tmp_path), "dirs25")
+    s = "k long, val double"
+    v = None
+    for i in range(25):
+        v = commit_version(
+            spark.createDataFrame([(i, i * 1.0)], s), path, carry_from=v
+        )
+    assert _data_file_scans(read_version(spark, path).filter("k = 3")) == 1
+    v = commit_delete_mor(spark, path, "k = 4")
+    df = read_table(spark, path, v).filter("k < 6")
+    assert _data_file_scans(df) == 1
+    assert sorted(r["k"] for r in df.collect()) == [0, 1, 2, 3, 5]
+
+
+def test_point_read_on_dv_snapshot_runs_no_extra_jobs(spark, table):
+    """A trickle-delete DV is applied inside the scan: the point read
+    of a DV'd snapshot runs exactly as many Spark jobs as the same
+    read of the DV-free version before it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(version):
+        group = f"dvjobs-{version}"
+        sc.setJobGroup(group, "point read")
+        try:
+            rows = read_table(spark, table, version).filter("k = 7").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return rows, len(tracker.getJobIdsForGroup(group))
+
+    v = commit_delete_mor(spark, table, "k = 8")
+    plain_rows, plain_jobs = jobs(v - 1)
+    dv_rows, dv_jobs = jobs(v)
+    assert dv_rows == plain_rows and len(dv_rows) == 1
+    assert dv_jobs == plain_jobs

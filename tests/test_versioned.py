@@ -771,6 +771,27 @@ def test_history_clock_index(spark, tmp_path):
     assert V.version_as_of(spark, path, c5 + 1e-4) == 5
 
 
+def test_missing_local_metadata_file_raises_without_the_jvm(
+    spark, tmp_path, monkeypatch
+):
+    """A missing LOCAL metadata file raises FileNotFoundError straight
+    from the driver's open — never a Hadoop ``fs.open`` round trip —
+    so the clock-index probes that expect it stay cheap and can catch
+    exactly that."""
+    from temp_data_pipeline_spark.operators import versioned as V
+
+    path = str(tmp_path / "t")
+    V.commit_version(spark.createDataFrame([(1,)], "k long"), path)
+
+    def no_jvm(*_a, **_k):
+        raise AssertionError("Hadoop FS consulted for a local file")
+
+    monkeypatch.setattr(V, "_fs", no_jvm)
+    with pytest.raises(FileNotFoundError):
+        V.read_text(spark, V._history_index_path(path))
+    assert V.version_as_of(spark, path, 4e9) == 1
+
+
 def test_history_surfaces_tags(spark, tmp_path):
     """DESCRIBE HISTORY shows named refs per version — no second
     SHOW REFS round trip (r11 time-travel ergonomics)."""

@@ -6,7 +6,8 @@ Usage:
       [--sf-dir /root/testdata/sf0.01] [--cpus 32] \
       [--entry /root/repo/__spark_entry__.py]
 
-Builds each declared query's DataFrame (running whatever lifecycle
+Runs on the engine's session (``session.get_spark``, ``--cpus``
+cores). Builds each declared query's DataFrame (running whatever lifecycle
 commits the builder performs) and writes the FORMATTED physical plan
 of the returned frame to <out>/<name>_<suffix>.txt — the evidence
 files the optimization rounds commit alongside plan claims.
@@ -39,22 +40,13 @@ def main() -> None:
     if entry_dir not in sys.path:
         sys.path.insert(0, entry_dir)
 
-    from pyspark.sql import SparkSession
+    # the engine's own session (Arrow, broadcast threshold, cached-plan
+    # setting), so the dumped plans are the plans the engine runs; the
+    # core count is read when the session module is imported
+    os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
+    from temp_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("explain-query")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("explain-query")
     spark.sparkContext.setLogLevel("ERROR")
 
     spec = importlib.util.spec_from_file_location(
