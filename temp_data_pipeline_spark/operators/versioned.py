@@ -118,7 +118,9 @@ def _local_meta_path(path: str, spark: SparkSession | None = None) -> str | None
 
     ``file://`` URIs resolve only with an EMPTY or localhost authority
     — ``file://host/path`` names a remote-host location the driver
-    cannot see, so it keeps the Hadoop FS path (ADVICE r11). When
+    cannot see, so it keeps the Hadoop FS path (ADVICE r11). Hadoop's
+    qualified form ``file:/abs/path`` (``makeQualified``, as shallow
+    clones record their roots) is the local ``/abs/path``. When
     ``spark`` is passed, scheme-less paths additionally require
     ``fs.defaultFS`` to be local: under an hdfs/s3a default FS a bare
     path names a REMOTE table, and consulting a same-named local dir
@@ -131,6 +133,9 @@ def _local_meta_path(path: str, spark: SparkSession | None = None) -> str | None
         if auth.lower() == "localhost" and sep:
             return "/" + p
         return None
+    if path.startswith("file:"):
+        rest = path[len("file:"):]
+        return rest if rest.startswith("/") else None
     if "://" in path:
         return None
     if spark is not None and not _defaultfs_local(spark):
@@ -1247,13 +1252,17 @@ def _scan(
     over, the file in ``_rel_file``'s table-relative form.
 
     Entries read as ONE file scan (one file index, whatever the
-    history). An unpartitioned snapshot needs no ``basePath``: each
+    history). Entries of one version dir scan with ``basePath`` at
+    that dir. An unpartitioned snapshot of several needs none: each
     listed dir is its own root, so no ``v`` column appears. A
     partitioned one needs it — without it, sibling ``v=<N>`` dirs are
     CONFLICTING_DIRECTORY_STRUCTURES — and with it at the table root
     Spark adds an int partition column ``v``, dropped here.
 
     The rest read per dir, each branch tagged at its own dir:
+    - in an unpartitioned snapshot of several dirs, a nested entry or
+      a file below a ``k=v`` subdir (carried from a partitioned
+      layout): as its own root it would lose the ``k`` column;
     - a partitioned table with a column named ``v`` (any case): the
       synthetic column would silently REPLACE that column's values;
     - a partitioned snapshot whose shallow-clone roots (``_dir_roots``)
@@ -1305,15 +1314,19 @@ def _scan(
         or (len(roots) == 1 and all(f.name.lower() != "v" for f in schema))
     )
     plain = [e for e in entries if one and _dir_mapping(man, e) is None]
+    if not pb and len({head(e) for e in plain}) > 1:
+        # with no basePath each listed path is its own base, so a path
+        # below a k=v subdir of its version dir would lose that column
+        plain = [e for e in plain if "=" not in e.partition("/")[2]]
     frames = []
     if plain:
         heads = sorted({head(e) for e in plain})
         r = spark.read.schema(schema)
-        if pb:
-            (root,) = roots
-            r = r.option(
-                "basePath", root if len(heads) > 1 else f"{root}/{heads[0]}"
-            )
+        root = _dir_root(path, man, heads[0])
+        if len(heads) == 1:
+            r = r.option("basePath", f"{root}/{heads[0]}")
+        elif pb:
+            r = r.option("basePath", root)
         paths = [f"{_dir_root(path, man, e)}/{e}" for e in plain]
         try:
             df = r.parquet(*paths)

@@ -703,6 +703,55 @@ def test_one_scan_read_matches_per_dir_union(
     _assert_parity(spark, path, v)
 
 
+def test_unpartitioned_carry_over_hive_dirs_keeps_partition_values(
+    spark, tmp_path
+):
+    """A carry commit with ``partition_by=[]`` over dirs written
+    ``part=x``-partitioned: every reader of that version — the snapshot,
+    the MOR position scan, explicit-file scans of all its files and of
+    one file below a ``part=x`` subdir — keeps ``part`` from the dir
+    names, as one scan per dir does."""
+    from temp_data_pipeline_spark.operators.deletion_vectors import (
+        _visible_tagged_for_keys,
+    )
+    from temp_data_pipeline_spark.operators.versioned import (
+        _manifest_dirs,
+        read_manifest,
+    )
+    from temp_data_pipeline_spark.operators.zonemap import (
+        _read_files,
+        write_zone_maps,
+    )
+
+    path = _evolved_layout_table(spark, tmp_path)
+    for v in versions(spark, path):
+        _assert_parity(spark, path, v)
+    v = versions(spark, path)[1]
+    man = read_manifest(spark, path, v)
+    assert man["_partition_by"] == []
+    ref = _per_dir_union(spark, path, v)
+    assert ref.filter("part IS NULL").count() == 0
+    files = sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for e in _manifest_dirs(man)
+        for d, _, names in os.walk(os.path.join(path, e))
+        for f in names
+        if f.endswith(".parquet")
+    )
+    got = _read_files(spark, path, v, files, with_positions=True)
+    assert _rows(got.select(*ref.columns)) == _rows(ref)
+    nested = next(f for f in files if "/part=" in f)
+    got = _read_files(spark, path, v, [nested], with_positions=True)
+    assert _rows(got.select(*ref.columns)) == _rows(
+        ref.filter(F.col("_dv_file") == nested)
+    )
+    write_zone_maps(spark, path, ["k"], v)
+    got = _visible_tagged_for_keys(
+        spark, path, v, man, ["k"], spark.createDataFrame([(3,)], "k long")
+    )
+    assert _rows(got.select(*ref.columns)) == _rows(ref.filter("k = 3"))
+
+
 @pytest.mark.parametrize("name", ["v", "V"])
 def test_partitioned_table_with_a_v_column_reads_its_own_values(
     spark, tmp_path, name

@@ -792,6 +792,29 @@ def test_missing_local_metadata_file_raises_without_the_jvm(
     assert V.version_as_of(spark, path, 4e9) == 1
 
 
+def test_hadoop_qualified_local_path_reads_metadata_on_the_driver(
+    spark, tmp_path, monkeypatch
+):
+    """A table named by Hadoop's qualified ``file:/abs/path`` form (the
+    form shallow clones record their roots in) is a local table: its
+    manifests list and read on the driver, with no Hadoop FS call."""
+    from temp_data_pipeline_spark.operators import versioned as V
+
+    path = str(tmp_path / "t")
+    V.commit_version(spark.createDataFrame([(1,)], "k long"), path)
+    qualified = f"file:{path}"
+    assert V._local_meta_path(qualified, spark) == path
+
+    def no_jvm(*_a, **_k):
+        raise AssertionError("Hadoop FS consulted for a local file")
+
+    monkeypatch.setattr(V, "_fs", no_jvm)
+    assert V.versions(spark, qualified) == [1]
+    assert V.read_manifest(spark, qualified, 1)["version"] == 1
+    with pytest.raises(FileNotFoundError):
+        V.read_text(spark, V._history_index_path(qualified))
+
+
 def test_history_surfaces_tags(spark, tmp_path):
     """DESCRIBE HISTORY shows named refs per version — no second
     SHOW REFS round trip (r11 time-travel ergonomics)."""
