@@ -24,12 +24,22 @@ vacuum). Naming the DV in the manifest (not by version number) makes
 restores free: ``rollback`` carries the commit meta, so a rolled-back
 DV version keeps subtracting the same immutable sidecar.
 
-Write path (``commit_delete_mor``): ONE metadata-cheap scan finds the
-matching positions (only the predicate columns are read — column
-pruning applies), the new DV = base DV ∪ matches, and the commit is
-metadata-level (carries every base dir, writes zero data rows) — cost
-scales with MATCHES, not with partitions touched and not with the
-corpus.
+Write path: every row-level change — ``commit_delete_mor``,
+``commit_update_mor``, ``commit_replace_where``, ``commit_upsert_mor``
+and ``merge.commit_merge_into`` — is a list of clauses handed to ONE
+executor, ``_row_change``. It classifies the position-tagged visible
+rows once (joined to the source on the keys when there is one), DVs
+the positions a clause deletes or rewrites, builds the appended rows
+in one projection, and commits both through ``_commit_with_dv``: the
+new DV = base DV ∪ new positions, written as a sidecar whose observed
+row count also tells a DELETE or UPDATE that matched nothing to
+commit nothing. The classified rows persist only when both the
+sidecar write and the append read them (UPDATE, MERGE); a
+nondeterministic WHERE or clause condition is refused. A DELETE
+reads only the predicate columns (column pruning applies) and its
+commit is metadata-level (carries every base dir, writes zero data
+rows) — cost scales with MATCHES, not with partitions touched and not
+with the corpus.
 
 Read path (``read_table``): plain ``read_version`` for DV-free
 versions; a DV version is the same single file scan
@@ -63,12 +73,15 @@ winner's deletions) cannot commit.
 from __future__ import annotations
 
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from temp_data_pipeline_spark.operators.versioned import (
     CommitConflictError,
+    _POSITIONS,
     _check_schema_against_manifest,
     _fs,
     _local_meta_path,
@@ -77,9 +90,13 @@ from temp_data_pipeline_spark.operators.versioned import (
     _rel_path,
     _resolve_version,
     _scan,
+    assign_identity,
     commit_version,
+    empty_df,
+    job_desc,
     read_manifest,
     read_version,
+    versions,
 )
 
 
@@ -209,28 +226,12 @@ def commit_delete_mor(
     metadata. Returns the new version (the current one unchanged when
     nothing matches). SQL DELETE semantics: rows where the predicate
     is NULL are kept."""
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
     base = _resolve_version(spark, path, None)
     man = read_manifest(spark, path, base)
-    visible = _visible_tagged(spark, path, base, man)
-    dv_new = visible.filter(F.coalesce(predicate, F.lit(False))).select(
-        F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
+    return _row_change(
+        spark, path, base, man, _visible_tagged(spark, path, base, man),
+        matched=[("delete", predicate, None)], meta=meta,
     )
-    if man.get("_dv") and "_dv_rows" not in man:
-        # legacy base without a recorded DV row count: the observed-
-        # count arithmetic below can't isolate dv_new's contribution
-        if dv_new.isEmpty():
-            return base
-        return _commit_with_dv(spark, path, base, man, dv_new, None, meta)
-    # nothing-matched is decided from the sidecar write's own observed
-    # count (one evaluation of the position scan, not two — the old
-    # up-front isEmpty probe re-ran the whole scan before the write)
-    committed = _commit_with_dv(
-        spark, path, base, man, dv_new, None, meta, abort_if_no_new=True
-    )
-    return base if committed is None else committed
-
 
 
 def commit_replace_where(
@@ -261,12 +262,8 @@ def commit_replace_where(
     reference's batch overwrite is a whole-file rewrite of the output
     parquet (/root/reference/src/tempdata/clean/clean_hourly.py:310-313);
     this is its partition-scoped lakehouse generalization."""
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
     if validate:
-        sample = df.filter(
-            ~F.coalesce(predicate, F.lit(False))
-        ).limit(5).collect()
+        sample = df.filter(~_cond(predicate)).limit(5).collect()
         if sample:
             raise ValueError(
                 f"replace_where on {path}: incoming rows fall outside "
@@ -275,11 +272,10 @@ def commit_replace_where(
             )
     base = _resolve_version(spark, path, None)
     man = read_manifest(spark, path, base)
-    visible = _visible_tagged(spark, path, base, man)
-    dv_new = visible.filter(F.coalesce(predicate, F.lit(False))).select(
-        F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
+    return _row_change(
+        spark, path, base, man, _visible_tagged(spark, path, base, man),
+        matched=[("delete", predicate, None)], rows=df, meta=meta,
     )
-    return _commit_with_dv(spark, path, base, man, dv_new, df, meta)
 
 
 # above this many deleted positions the forced broadcast would strain
@@ -336,7 +332,7 @@ def _anti_dv(
     )
     if (n if n is not None else dv.count()) <= _DV_BROADCAST_MAX:
         dv2 = F.broadcast(dv2)
-    return tagged.join(dv2, ["_dv_file", "_dv_pos"], "left_anti")
+    return tagged.join(dv2, list(_POSITIONS), "left_anti")
 
 
 def _minus_dv(
@@ -393,19 +389,15 @@ def _observed_count(obs) -> int | None:
 
     ``_jo.getRowOrEmpty`` is a Spark-internal (qualified-private)
     Scala API, present in Spark 4.x (pinned here against pyspark
-    4.1); a rename/reshape lands in the broad except below and
-    silently re-enables the extra isEmpty probe — correct but slower.
+    4.1); a rename/reshape raises here rather than silently
+    re-enabling the extra isEmpty probe.
     ``tests/test_deletion_vectors.py::test_observed_count_fast_path``
     pins that the fast path actually populates on a zone-mapped
-    table, so API drift surfaces as a test failure, not a silent
-    de-optimization (ADVICE r10 #4)."""
-    try:
-        row = obs._jo.getRowOrEmpty()
-        if row.isEmpty():
-            return None
-        return int(row.get().getLong(0))
-    except Exception:  # noqa: BLE001 - py4j interop guard: fall back to a probe
+    table (ADVICE r10 #4)."""
+    row = obs._jo.getRowOrEmpty()
+    if row.isEmpty():
         return None
+    return int(row.get().getLong(0))
 
 
 def _visible_tagged_for_keys(
@@ -503,7 +495,7 @@ def read_table(
     if not man.get("_dv"):
         return read_version(spark, path, version)
     tagged = _scan(spark, path, man, _manifest_dirs(man), positions=True)
-    return _minus_dv(spark, path, man, tagged).drop("_dv_file", "_dv_pos")
+    return _minus_dv(spark, path, man, tagged).drop(*_POSITIONS)
 
 
 def export_snapshot(
@@ -552,6 +544,254 @@ def materialize_deletes(
     )
 
 
+def _cond(c) -> Column:
+    """A clause condition or WHERE predicate as a boolean Column in
+    which NULL counts as False (SQL semantics: a row whose predicate
+    is NULL is neither deleted nor changed): SQL text, a Column, True
+    (always) or None (never)."""
+    if c is None or c is True:
+        return F.lit(c is True)
+    if isinstance(c, str):
+        c = F.expr(c)
+    return F.coalesce(c, F.lit(False))
+
+
+def _positions(tagged: DataFrame) -> DataFrame:
+    """The (file, pos) DV rows of a position-tagged frame."""
+    return tagged.selectExpr("_dv_file AS file", "_dv_pos AS pos")
+
+
+def _fill_generated(
+    frame: DataFrame, gcols: dict, keep, types: dict
+) -> DataFrame:
+    """``frame`` with each GENERATED column it carries that is not in
+    ``keep`` recomputed from the row's other columns (cast to its
+    ``types`` entry, when there is one) — a change to a referenced
+    column must not carry the stale derived value into the commit's
+    __generated_ check. Kept values are validated by that check."""
+    fill = {
+        c: F.expr(e).cast(types[c]) if c in types else F.expr(e)
+        for c, e in gcols.items()
+        if c in frame.columns and c not in keep
+    }
+    return frame.withColumns(fill) if fill else frame
+
+
+def _up_cast(frame: DataFrame, types: dict) -> DataFrame:
+    """``frame`` with each column whose type differs from its
+    ``types`` entry cast to it, where Spark's store assignment calls
+    the cast a safe widening (``Cast.canUpCast``: INT -> BIGINT, not
+    BIGINT -> INT or STRING -> BIGINT). Any other mismatch is left
+    for the commit's schema check to refuse: the session runs with
+    ANSI off, so a narrowing cast would write NULL."""
+    differ = [
+        f for f in frame.schema.fields
+        if f.name in types and f.dataType != types[f.name]
+    ]
+    if not differ:
+        return frame
+    spark = frame.sparkSession
+    can_up = spark._jvm.org.apache.spark.sql.catalyst.expressions.Cast.canUpCast
+    parse = spark._jsparkSession.parseDataType
+    return frame.withColumns({
+        f.name: F.col(f.name).cast(types[f.name])
+        for f in differ
+        if can_up(parse(f.dataType.json()), parse(types[f.name].json()))
+    })
+
+
+def _row_change(
+    spark: SparkSession,
+    path: str,
+    base: int,
+    man: dict,
+    target: DataFrame,
+    *,
+    source: DataFrame | None = None,
+    keys: list[str] = (),
+    matched: list = (),
+    inserts: list = (),
+    by_source: list = (),
+    rows: DataFrame | None = None,
+    new_cols: list[str] = (),
+    meta: dict | None = None,
+    meta_late=None,
+) -> int:
+    """The one merge-on-read row-change executor behind DELETE,
+    UPDATE, REPLACE WHERE, upsert and MERGE: classify every row of the
+    position-tagged ``target`` (version ``base``, manifest ``man``)
+    once, DV the positions a clause deletes or rewrites, append the
+    rows the clauses build plus ``rows``, and commit both through
+    ``_commit_with_dv``. Returns the new version.
+
+    Without a ``source`` every target row is "matched" and the
+    ``matched`` clauses see it alone, by its bare column names.
+    With one, ``source`` joins the target on ``keys`` (null-safe),
+    keeping the unmatched source rows only for ``inserts`` and the
+    unmatched target rows only for ``by_source`` clauses: an inner
+    join (an upsert's position scan) lets Spark broadcast the source.
+    Clause conditions must be deterministic, as in Spark and Delta:
+    the DV write and the append each evaluate them. Clause lists are
+    ``operators/merge.py``'s: ``matched`` and ``by_source`` hold
+    ``(kind, condition, set)`` with kind update|delete and set None
+    for SET * (the source row); ``inserts`` hold ``(condition,
+    values)`` over the source's plain column names, values None for
+    INSERT *. Within a family the first satisfied condition wins.
+
+    Output rows take the target's columns plus ``new_cols`` (schema
+    evolution). A SET or INSERT * value is cast to its column's type
+    only when the cast widens (``_up_cast``; explicit INSERT VALUES
+    keep their plain casts); GENERATED columns not explicitly
+    assigned are recomputed (``_fill_generated``); IDENTITY columns
+    are assigned over the explicit-VALUES inserts.
+
+    The rows some clause fires on persist when both the DV write and
+    the append read them. A DELETE or UPDATE (no ``source``, no
+    ``rows``) whose sidecar write observes no new position commits
+    nothing and returns ``base``."""
+    t_types = {
+        f.name: f.dataType for f in StructType.fromJson(man["_schema"]).fields
+    }
+    cols = [*t_types, *new_cols]
+    s_types = {} if source is None else {
+        f.name: f.dataType for f in source.schema.fields
+    }
+    gcols = man.get("_generated_columns") or {}
+    # a branch of None is every row: a target-only change needs no
+    # join, no alias and no always-true predicate terms
+    if source is None:
+        j, t_ref, is_matched, only_t, only_s = target, "", None, None, None
+    else:
+        # a literal presence marker: source keys may legally be NULL
+        # (the join is eqNullSafe), so "source side present" cannot be
+        # read off a key column after an outer join
+        s = source.withColumn("_s_present", F.lit(True)).alias("s")
+        on = reduce(
+            Column.__and__,
+            [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
+        )
+        t_ref = "t."
+        how = ["inner", "right_outer", "left_outer", "full_outer"]
+        j = target.alias("t").join(
+            s, on, how[bool(inserts) + 2 * bool(by_source)]
+        )
+        t_in = F.col("t._dv_file").isNotNull()
+        s_in = F.col("s._s_present").isNotNull()
+        is_matched, only_t, only_s = t_in & s_in, t_in & ~s_in, ~t_in
+
+    def fires(clauses, branch):
+        # first satisfied condition wins within a family
+        out, prior = [], branch
+        for kind, cond, aset in clauses:
+            c = _cond(cond)
+            out.append((kind, c if prior is None else prior & c, aset))
+            prior = ~c if prior is None else prior & ~c
+        return out
+
+    def any_of(conds):
+        return reduce(Column.__or__, conds) if conds else F.lit(False)
+
+    def typed_null(c):
+        # a NEW column absent from one branch unions by name with the
+        # branches that carry it — never a bare NullType
+        return F.lit(None).cast(s_types[c]) if c in s_types else F.lit(None)
+
+    def project(frame, fire, aset, star, unset):
+        """One clause's output rows: SET * / INSERT * (``aset`` None)
+        takes the ``star`` row; an assignment dict takes its
+        expressions and ``unset(c)`` for every unlisted column."""
+        have = t_types if star == "t." else s_types
+
+        def value(c):
+            if aset is None:
+                return F.col(star + c) if c in have else typed_null(c)
+            e = aset.get(c)
+            if e is None:
+                return unset(c)
+            return F.expr(e) if isinstance(e, str) else e
+
+        return frame.filter(fire).select(*[value(c).alias(c) for c in cols])
+
+    changes = [(*f, "s.") for f in fires(matched, is_matched)] + [
+        (*f, "t.") for f in fires(by_source, only_t)
+    ]
+    fire_any = [fire for _k, fire, _a, _s in changes]
+    updates = [change[1:] for change in changes if change[0] == "update"]
+    # the DV write and the append each evaluate the conditions, so a
+    # nondeterministic one (rand()) would DV and re-append different rows
+    hit = j.filter(any_of(fire_any))._jdf.queryExecution().analyzed()
+    if not hit.expressions().head().deterministic():
+        raise ValueError(f"nondeterministic row-change condition on {path}")
+    # the rows some clause fires on persist when both the DV write and
+    # the append read them
+    persisted = bool(updates or (changes and inserts))
+    if persisted:
+        j = j.filter(any_of(fire_any + ([only_s] if inserts else []))).persist()
+    try:
+        dv_new = _positions(j.filter(any_of(fire_any)))
+
+        def keep_target(c):
+            # a partial SET keeps every UNLISTED column from the TARGET
+            # (UPDATE SET x = 1 must not copy the source's other columns)
+            return F.col(t_ref + c) if c in t_types else typed_null(c)
+
+        frames = [
+            _fill_generated(
+                _up_cast(project(j, fire, aset, star, keep_target), t_types),
+                gcols, aset or (), t_types,
+            )
+            for fire, aset, star in updates
+        ]
+        ins = []
+        if inserts:
+            # plain SOURCE columns first, so insert conditions' and
+            # VALUES' unprefixed names resolve unambiguously
+            unmatched = j.filter(only_s).select(
+                *[F.col(f"s.{c}").alias(c) for c in source.columns]
+            )
+            dflt = man.get("_column_defaults") or {}
+            idents = man.get("_identity_columns") or {}
+
+            def unset(c):
+                # the recorded column DEFAULT, else typed NULL
+                # (GENERATED columns fill from the row below)
+                if c in dflt and c not in gcols and c not in idents:
+                    return F.expr(dflt[c])
+                return typed_null(c)
+
+            for _k, fire, vals in fires(
+                [("insert", c, v) for c, v in inserts], None
+            ):
+                frame = project(unmatched, fire, vals, "", unset)
+                if vals is None:
+                    ins.append(_up_cast(frame, t_types))
+                    continue
+                frame = frame.withColumns(
+                    {c: F.col(c).cast(t) for c, t in t_types.items()}
+                )
+                ins.append(_fill_generated(frame, gcols, vals, t_types))
+            if idents:
+                # IDENTITY values assign over the UNION of the inserts
+                # (one id space; rewritten rows keep their ids), the
+                # watermark advancing with the commit's own write pass;
+                # expected_base makes a racing allocator conflict
+                union, meta_late = assign_identity(
+                    reduce(DataFrame.unionByName, ins), idents
+                )
+                ins = [union]
+        appends = frames + ins + ([rows] if rows is not None else [])
+        appended = reduce(DataFrame.unionByName, appends) if appends else None
+        committed = _commit_with_dv(
+            spark, path, base, man, dv_new, appended, meta,
+            meta_late=meta_late, allow_evolution=bool(new_cols),
+            abort_if_no_new=source is None and rows is None,
+        )
+        return base if committed is None else committed
+    finally:
+        if persisted:
+            j.unpersist()
+
+
 def _commit_with_dv(
     spark: SparkSession,
     path: str,
@@ -569,7 +809,8 @@ def _commit_with_dv(
     sidecar written first under a fresh name, then ONE metadata-level
     commit appending ``rows_new`` (may be None/empty) that names it.
 
-    Appended rows must match the base schema exactly — the commit
+    Appended rows must match the base schema exactly (checked after
+    the sidecar write, which a refused commit reclaims) — the commit
     carries the base dirs, and the manifest records ``rows_new``'s
     schema, so a batch missing or retyping a column would make every
     carried dir read back wrong (ADVICE r6). The commit passes
@@ -577,38 +818,31 @@ def _commit_with_dv(
     ``CommitConflictError`` instead of silently dropping this
     commit's deletions (the lost-update anomaly).
 
-    ``abort_if_no_new=True`` (commit_delete_mor's delete-matched-
-    nothing case): when the sidecar write's observed count shows
+    ``abort_if_no_new=True`` (a DELETE or UPDATE that matched
+    nothing): when the sidecar write's observed count shows
     dv_new contributed ZERO positions beyond the carried base DV
     (``n_total - base _dv_rows == 0`` — the union's branches are
     disjoint by construction), the sidecar is reclaimed and None is
     returned instead of committing. This folds the old up-front
     ``dv_new.isEmpty()`` probe — a FULL extra evaluation of the
     position-finding scan on every delete — into the write action the
-    commit runs anyway; requires the base to record ``_dv_rows``
-    whenever it has a DV (every modern writer does; a legacy manifest
-    without it keeps the caller's explicit probe)."""
-    from pyspark.sql.types import StructType
-
-    if rows_new is not None:
-        _check_schema_against_manifest(
-            rows_new, man, what="MOR commit",
-            allow_evolution=allow_evolution,
-        )
+    commit runs anyway. A legacy base DV without a recorded
+    ``_dv_rows`` cannot isolate dv_new's share, so there an explicit
+    emptiness probe decides."""
     if man.get("_dv"):
+        if abort_if_no_new and "_dv_rows" not in man and dv_new.isEmpty():
+            return None
         # writers pass dv_new computed over VISIBLE rows, so it is
         # already disjoint from the base DV — a plain union dedupes
         # correctly without another join
         dv_new = dv_new.unionByName(read_dv(spark, path, base))
     name = f"dv-{uuid.uuid4().hex[:12]}.parquet"
-    # sorted by (file, pos): a per-file probe (the streaming source's
-    # fallback read, any pyarrow filtered scan) then prunes by
-    # row-group stats instead of scanning the whole sidecar
-    from pyspark.sql import Observation
+
+    def drop_sidecar() -> None:
+        fs, jvm = _fs(spark, path)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_dv/{name}"), True)
 
     obs = Observation()
-    from temp_data_pipeline_spark.operators.versioned import job_desc
-
     with job_desc(spark, f"MOR: dv sidecar write {path}"):
         (
             # repartition(1), NOT coalesce(1): the position-finding
@@ -621,7 +855,10 @@ def _commit_with_dv(
             # ABOVE the repartition: when the DV frame is empty, AQE
             # replaces the shuffle with an empty relation and a
             # CollectMetrics BELOW it is pruned away, leaving obs.get
-            # with a schemaless row (toPyRow assertion).
+            # with a schemaless row (toPyRow assertion). Sorted by
+            # (file, pos): a per-file probe (the streaming source's
+            # fallback read, any pyarrow filtered scan) then prunes by
+            # row-group stats instead of scanning the whole sidecar.
             dv_new.repartition(1)
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .sortWithinPartitions("file", "pos")
@@ -633,22 +870,20 @@ def _commit_with_dv(
     # observed metric — zero extra jobs at commit too (the r9
     # observe-gating pattern)
     n_dv = int(obs.get["n"] or 0)
-    if abort_if_no_new:
-        n_base = int(man.get("_dv_rows") or 0) if man.get("_dv") else 0
-        if n_dv - n_base == 0:
-            from temp_data_pipeline_spark.operators.versioned import _fs
-
-            fs, jvm = _fs(spark, path)
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{path}/_dv/{name}"), True
-            )
-            return None
-    schema = StructType.fromJson(man["_schema"])
-    if rows_new is None:
-        from temp_data_pipeline_spark.operators.versioned import empty_df
-
-        rows_new = empty_df(spark, schema)
+    n_base = int(man.get("_dv_rows") or 0) if man.get("_dv") else 0
+    if abort_if_no_new and n_dv == n_base:
+        drop_sidecar()
+        return None
     try:
+        if rows_new is None:
+            rows_new = empty_df(spark, StructType.fromJson(man["_schema"]))
+        else:
+            # checked after the abort above: an UPDATE that matches
+            # nothing commits nothing whatever its SET values' types
+            _check_schema_against_manifest(
+                rows_new, man, what="MOR commit",
+                allow_evolution=allow_evolution,
+            )
         return commit_version(
             rows_new,
             path,
@@ -659,13 +894,12 @@ def _commit_with_dv(
             allow_evolution=allow_evolution,
             meta_late=meta_late,
         )
-    except CommitConflictError:
-        # the losing writer's sidecar would otherwise linger as an
-        # unreferenced orphan until vacuum — reclaim it eagerly
-        from temp_data_pipeline_spark.operators.versioned import _fs
-
-        fs, jvm = _fs(spark, path)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_dv/{name}"), True)
+    except (CommitConflictError, ValueError):
+        # a refused commit (schema or CHECK mismatch, a lost race)
+        # would otherwise leave its sidecar as an unreferenced orphan
+        # until vacuum — reclaim it eagerly; both are raised before
+        # the manifest publishes
+        drop_sidecar()
         raise
 
 
@@ -679,52 +913,22 @@ def commit_update_mor(
 ) -> int:
     """Merge-on-read UPDATE: rows matching ``predicate`` are DV'd out
     of their files and re-appended with ``set_exprs`` applied
-    (``{"col": Column-or-SQL}``) — the Delta DV-based UPDATE. One
-    position-finding scan + one write of ONLY the updated rows; no
-    partition is rewritten, cost scales with matches. NULL predicate
-    rows are untouched (SQL semantics). Returns the new version, or
-    the current one when nothing matches."""
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
+    (``{"col": Column-or-SQL}``, each evaluated over the OLD row) —
+    the Delta DV-based UPDATE. One position-finding scan + one write
+    of ONLY the updated rows; no partition is rewritten, cost scales
+    with matches. NULL predicate rows are untouched (SQL semantics).
+    Returns the new version, or the current one when nothing
+    matches."""
     base = _resolve_version(spark, path, None)
     man = read_manifest(spark, path, base)
-    # persist the delta-sized matched frame: the update runs THREE
-    # actions over it (emptiness probe, DV sidecar write, updated-rows
-    # append) and each would otherwise re-run the full position scan —
-    # the probe materializes the cache, the two writes hit it
-    matched = (
-        _visible_tagged(spark, path, base, man)
-        .filter(F.coalesce(predicate, F.lit(False)))
-        .persist()
+    names = {f["name"] for f in man["_schema"]["fields"]}
+    for col in set_exprs:
+        if col not in names:
+            raise ValueError(f"SET targets unknown column {col!r}")
+    return _row_change(
+        spark, path, base, man, _visible_tagged(spark, path, base, man),
+        matched=[("update", predicate, set_exprs)], meta=meta,
     )
-    try:
-        if matched.isEmpty():
-            return base
-        dv_new = matched.select(
-            F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
-        )
-        data_cols = [
-            c for c in matched.columns if c not in ("_dv_file", "_dv_pos")
-        ]
-        updated = matched.select(*data_cols)
-        for col, expr in set_exprs.items():
-            if col not in data_cols:
-                raise ValueError(f"SET targets unknown column {col!r}")
-            updated = updated.withColumn(
-                col, F.expr(expr) if isinstance(expr, str) else expr
-            )
-        # GENERATED columns not explicitly SET recompute from the
-        # updated row — an UPDATE changing a referenced base column
-        # must not carry the stale derived value into the __generated_
-        # commit check (explicit SETs keep their value and validate
-        # there instead)
-        _types = {f.name: f.dataType for f in updated.schema.fields}
-        for gc, ge in (man.get("_generated_columns") or {}).items():
-            if gc in data_cols and gc not in set_exprs:
-                updated = updated.withColumn(gc, F.expr(ge).cast(_types[gc]))
-        return _commit_with_dv(spark, path, base, man, dv_new, updated, meta)
-    finally:
-        matched.unpersist()
 
 
 def commit_upsert_mor(
@@ -737,14 +941,13 @@ def commit_upsert_mor(
 ) -> int:
     """Merge-on-read MERGE (upsert): base rows whose key appears in
     ``updates`` are DV'd out, and the update batch is appended as one
-    new data dir — WHEN MATCHED UPDATE + WHEN NOT MATCHED INSERT at
-    O(matches + batch) cost, no partition rewrites, no partition-
-    stability contract (keys MAY move partitions, unlike the COW
-    merge). The update batch must be key-unique (resolve
-    last-writer-wins upstream via operators/upsert.keep_latest).
-    First commit on an empty table = the updates themselves."""
-    from temp_data_pipeline_spark.operators.versioned import versions
-
+    new data dir — WHEN MATCHED UPDATE SET * + WHEN NOT MATCHED
+    INSERT * at O(matches + batch) cost, no partition rewrites, no
+    partition-stability contract (keys MAY move partitions, unlike
+    the COW merge). The update batch must be key-unique (resolve
+    last-writer-wins upstream via operators/upsert.keep_latest) and
+    carry exactly the table's columns and types. First commit on an
+    empty table = the updates themselves."""
     spark = updates.sparkSession
     vs = versions(spark, path)
     if not vs:
@@ -755,15 +958,14 @@ def commit_upsert_mor(
     man = read_manifest(spark, path, base)
     # position-finding scan pruned by the update batch's key bounding
     # box when the table keeps zone maps on the keys (full scan
-    # otherwise); keys-only semi join finds the displaced positions —
-    # nothing but keys and positions shuffle
+    # otherwise). As clauses, the upsert is "delete every matched row"
+    # plus the batch appended whole: with a key-unique target that is
+    # SET * / INSERT *, and target rows sharing a key still collapse
+    # to the one batch row
     update_keys = updates.select(*keys).distinct()
-    tagged = _visible_tagged_for_keys(
-        spark, path, base, man, keys, update_keys
-    )
-    dv_new = semi_on_keys(tagged, update_keys, keys).select(
-        F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
-    )
-    return _commit_with_dv(
-        spark, path, base, man, dv_new, updates, meta, meta_late=meta_late
+    target = _visible_tagged_for_keys(spark, path, base, man, keys, update_keys)
+    return _row_change(
+        spark, path, base, man, target, source=update_keys, keys=keys,
+        matched=[("delete", True, None)], rows=updates, meta=meta,
+        meta_late=meta_late,
     )

@@ -53,24 +53,33 @@ target; ``True`` = unconditional. A condition-less clause must be
 LAST in its family (everything after it would be dead — checked
 loudly, the Delta rule). No clauses at all = validation error.
 
-Plan shape: the target's position-finding scan is pruned to the files
-whose zone-map key ranges can contain the source's keys
+Plan shape: this module only normalizes and checks the clause lists
+and picks the target scan; the rows are classified and committed by
+the one merge-on-read row-change executor that DELETE, UPDATE,
+REPLACE WHERE and upsert also run (deletion_vectors._row_change). The
+target's position-finding scan is pruned to the files whose zone-map
+key ranges can contain the source's keys
 (deletion_vectors._visible_tagged_for_keys — O(candidate files) on
-key-clustered tables), then ONE right-outer join against the source
-classifies every pair; the classified frame is delta-sized (matched
-target rows of source keys + unmatched source rows) and persists for
-the DV write + append actions. Cost: one pruned scan + one keyed
-shuffle of the delta + one delta-sized append; zero partition
-rewrites. Clause count only widens the projection/filter expressions
-on that one frame — never adds a job.
+key-clustered tables), then ONE join against the source classifies
+every pair: inner when there is no NOT MATCHED clause, so Spark can
+broadcast the source, right-outer with one. Only the rows some clause
+fires on are kept, and they persist only when both the DV write and
+the append read them; clause conditions must therefore be
+deterministic (Spark and Delta refuse ``rand()`` there too). Cost: one pruned scan + one keyed shuffle of the delta + one
+delta-sized append; zero partition rewrites. Clause count only widens
+the projection/filter expressions on that one frame — never adds a
+job. SET * / INSERT * values are cast to the target column's type
+where the cast widens (INT -> BIGINT); any other mismatch is refused
+at commit.
 
 With a by-source clause the pruned scan is impossible BY SEMANTICS —
 every target row whose key is absent from the source is a candidate,
 so the position scan is the full visible table and the classifying
-join becomes full-outer (exactly what Delta does: NOT MATCHED BY
-SOURCE reads the whole target). The join still shuffles only once and
-only changed positions join the DV; at 100 TB the full-scan cost is
-the clause's inherent price, paid only when the clause is present.
+join keeps the unmatched target rows (left- or full-outer: exactly what Delta does: NOT MATCHED BY
+SOURCE reads the whole target). The join still shuffles only once,
+only the rows a clause fires on persist, and only changed positions
+join the DV; at 100 TB the full-scan cost is the clause's inherent
+price, paid only when the clause is present.
 
 CONTRACTS: ``keys`` must uniquely identify SOURCE rows (resolve
 last-writer-wins upstream via operators/upsert.keep_latest); target
@@ -90,11 +99,14 @@ as published.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.operators.deletion_vectors import (
-    _commit_with_dv,
+    _cond,
+    _row_change,
     _visible_tagged,
     _visible_tagged_for_keys,
 )
@@ -107,49 +119,67 @@ from temp_data_pipeline_spark.operators.versioned import (
 __all__ = ["commit_merge_into"]
 
 
-def _cond(c, default: bool) -> Column:
-    """Normalize a clause condition: SQL string, Column, True, or
-    None (clause absent -> never fires unless ``default``)."""
-    if c is None:
-        return F.lit(default)
-    if c is True:
-        return F.lit(True)
-    if isinstance(c, str):
-        c = F.expr(c)
-    return F.coalesce(c.cast("boolean"), F.lit(False))
-
-
-def _check_family(
-    clauses: list, family: str, need_set: bool, check_order: bool
-) -> None:
-    """Shared clause-list validation: kinds, set dicts, and — for the
-    explicit ordered form only — the Delta rule that only the LAST
-    clause of a family may be unconditional (everything after an
-    always-true clause is dead). The legacy kwargs form keeps its
-    documented update-wins-over-delete precedence even when both are
-    unconditional, so order is not checked there."""
-    for i, (kind, cond, aset) in enumerate(clauses):
-        if kind not in ("update", "delete"):
-            raise ValueError(
-                f"{family} clause kind must be update|delete, got {kind!r}"
-            )
-        if kind == "delete" and aset:
-            raise ValueError(f"{family} delete clause takes no set dict")
-        if kind == "update" and need_set and not aset:
-            raise ValueError(
-                f"{family} update clause requires a set dict "
-                "(there is no source row to SET * from)"
-            )
-        if (
-            check_order
-            and (cond is None or cond is True)
-            and i + 1 < len(clauses)
-        ):
+def _check_order(conds: list, family: str) -> None:
+    """The Delta rule: only the LAST clause of a family may be
+    unconditional (everything after an always-true clause is dead)."""
+    for i, c in enumerate(conds[:-1]):
+        if c is None or c is True:
             raise ValueError(
                 f"only the last {family} clause may omit its condition "
-                f"(clause {i + 1} of {len(clauses)} is unconditional — "
+                f"(clause {i + 1} of {len(conds)} is unconditional — "
                 "later clauses would be dead)"
             )
+
+
+def _clause_family(
+    clauses: list | None, update_when, update_set, delete_when, family: str
+) -> list:
+    """One family's ordered ``(kind, condition, set)`` list: the
+    explicit ``clauses`` (validated: kinds, set dicts, and
+    ``_check_order``), or else the one-per-kind kwargs as update, then
+    delete. The kwargs form keeps its documented update-wins-over-
+    delete precedence even when both are unconditional, so order is
+    not checked there. A by-source update needs a set dict: there is
+    no source row to SET * from."""
+    by_source = family == "by-source"
+    sfx = "_by_source" if by_source else ""
+    if clauses is not None:
+        if update_when is not None or delete_when is not None or update_set:
+            raise ValueError(
+                f"pass {family.replace('-', '_')}_clauses OR update{sfx}_"
+                f"when/update{sfx}_set/delete{sfx}_when, not both"
+            )
+        for kind, _cond_, aset in clauses:
+            if kind not in ("update", "delete"):
+                raise ValueError(
+                    f"{family} clause kind must be update|delete, got {kind!r}"
+                )
+            if kind == "delete" and aset:
+                raise ValueError(f"{family} delete clause takes no set dict")
+            if kind == "update" and by_source and not aset:
+                raise ValueError(
+                    f"{family} update clause requires a set dict "
+                    "(there is no source row to SET * from)"
+                )
+        _check_order([c for _k, c, _a in clauses], family)
+        return clauses
+    if update_set and update_when is None:
+        raise ValueError(
+            f"update{sfx}_set without update{sfx}_when does nothing"
+        )
+    if by_source and update_when is not None and not update_set:
+        raise ValueError(
+            "update_by_source_when requires update_by_source_set "
+            "(there is no source row to SET * from)"
+        )
+    return [
+        (kind, cond, aset)
+        for kind, cond, aset in (
+            ("update", update_when, update_set),
+            ("delete", delete_when, None),
+        )
+        if cond is not None
+    ]
 
 
 def commit_merge_into(
@@ -175,103 +205,39 @@ def commit_merge_into(
     table at ``path``; returns the committed version. See module
     docstring for clause semantics and the two parameter forms."""
     # -- normalize the legacy one-per-kind kwargs to ordered lists ----
-    explicit_matched = matched_clauses is not None
-    explicit_by_source = by_source_clauses is not None
-    if matched_clauses is not None:
-        if update_when is not None or delete_when is not None or update_set:
-            raise ValueError(
-                "pass matched_clauses OR update_when/update_set/"
-                "delete_when, not both"
-            )
-    else:
-        if update_set and update_when is None:
-            raise ValueError("update_set without update_when does nothing")
-        matched_clauses = []
-        if update_when is not None:
-            matched_clauses.append(("update", update_when, update_set))
-        if delete_when is not None:
-            matched_clauses.append(("delete", delete_when, None))
-    explicit_insert = insert_clauses is not None
+    matched_clauses = _clause_family(
+        matched_clauses, update_when, update_set, delete_when, "matched"
+    )
+    by_source_clauses = _clause_family(
+        by_source_clauses, update_by_source_when, update_by_source_set,
+        delete_by_source_when, "by-source",
+    )
     if insert_clauses is not None:
         if insert_when is not None or insert_whens is not None:
-            raise ValueError(
-                "pass insert_clauses OR insert_when(s), not both"
-            )
+            raise ValueError("pass insert_clauses OR insert_when(s), not both")
+        _check_order([c for c, _v in insert_clauses], "insert")
     elif insert_whens is not None:
         if insert_when is not None:
             raise ValueError("pass insert_whens OR insert_when, not both")
         insert_clauses = [(c, None) for c in insert_whens]
     else:
-        insert_clauses = (
-            [(insert_when, None)] if insert_when is not None else []
+        insert_clauses = [(insert_when, None)] if insert_when is not None else []
+    if any(v is not None and not isinstance(v, dict) for _c, v in insert_clauses):
+        raise ValueError(
+            "insert clause values must be a col->expr dict or None "
+            "(INSERT *)"
         )
-    for _c, vals in insert_clauses:
-        if vals is not None and not isinstance(vals, dict):
-            raise ValueError(
-                "insert clause values must be a col->expr dict or None "
-                "(INSERT *)"
-            )
-    if explicit_insert:
-        for i, (c, _v) in enumerate(insert_clauses):
-            if (c is None or c is True) and i + 1 < len(insert_clauses):
-                raise ValueError(
-                    "only the last insert clause may omit its condition "
-                    f"(clause {i + 1} of {len(insert_clauses)} is "
-                    "unconditional — later clauses would be dead)"
-                )
-    if by_source_clauses is not None:
-        if (
-            update_by_source_when is not None
-            or delete_by_source_when is not None
-            or update_by_source_set
-        ):
-            raise ValueError(
-                "pass by_source_clauses OR *_by_source_* kwargs, not both"
-            )
-    else:
-        if update_by_source_when is not None and not update_by_source_set:
-            raise ValueError(
-                "update_by_source_when requires update_by_source_set "
-                "(there is no source row to SET * from)"
-            )
-        if update_by_source_set and update_by_source_when is None:
-            raise ValueError(
-                "update_by_source_set without update_by_source_when "
-                "does nothing"
-            )
-        by_source_clauses = []
-        if update_by_source_when is not None:
-            by_source_clauses.append(
-                ("update", update_by_source_when, update_by_source_set)
-            )
-        if delete_by_source_when is not None:
-            by_source_clauses.append(
-                ("delete", delete_by_source_when, None)
-            )
     if not matched_clauses and not insert_clauses and not by_source_clauses:
         raise ValueError(
             "MERGE needs at least one clause (update_when / "
             "delete_when / insert_when / *_by_source_when)"
         )
-    _check_family(
-        matched_clauses, "matched", need_set=False,
-        check_order=explicit_matched,
-    )
-    _check_family(
-        by_source_clauses, "by-source", need_set=True,
-        check_order=explicit_by_source,
-    )
 
     spark = source.sparkSession
-    data_cols = list(source.columns)
-    missing = [k for k in keys if k not in data_cols]
+    missing = [k for k in keys if k not in source.columns]
     if missing:
         raise ValueError(f"key columns absent from the source: {missing}")
 
-    ins_any = None
-    for c, _v in insert_clauses:
-        cc = _cond(c, False)
-        ins_any = cc if ins_any is None else (ins_any | cc)
     vs = versions(spark, path)
     if not vs:
         # empty target: only insert clauses can fire (none -> empty v1)
@@ -281,9 +247,9 @@ def commit_merge_into(
                 "target (an empty target takes the source schema via "
                 "INSERT *)"
             )
+        ins_any = [_cond(c) for c, _v in insert_clauses]
         return commit_version(
-            source.filter(ins_any) if ins_any is not None
-            else source.limit(0),
+            source.filter(reduce(Column.__or__, ins_any, F.lit(False))),
             path,
             meta=meta,
             expected_base=0,
@@ -291,342 +257,83 @@ def commit_merge_into(
     base = vs[-1]
     man = read_manifest(spark, path, base)
     _idents = man.get("_identity_columns") or {}
+    needs_star = any(
+        k == "update" and aset is None for k, _c, aset in matched_clauses
+    ) or any(v is None for _c, v in insert_clauses)
     if _idents:
         # GENERATED ALWAYS AS IDENTITY: no clause may write the column
-        bad_set = [
-            c
-            for _k, _c, aset in (matched_clauses + by_source_clauses)
-            if aset
-            for c in aset
-            if c in _idents
-        ]
-        bad_ins = [
-            c
-            for _c, vals in insert_clauses
-            if vals
-            for c in vals
-            if c in _idents
-        ]
-        if bad_set or bad_ins:
+        written = {
+            c for _k, _c, aset in matched_clauses + by_source_clauses
+            for c in aset or ()
+        } | {c for _c, vals in insert_clauses for c in vals or ()}
+        if written & set(_idents):
             raise ValueError(
                 f"MERGE writes IDENTITY column(s) "
-                f"{sorted(set(bad_set + bad_ins))} — GENERATED ALWAYS "
+                f"{sorted(written & set(_idents))} — GENERATED ALWAYS "
                 "AS IDENTITY values are engine-assigned"
             )
-        if any(vals is None for _c, vals in insert_clauses):
+        if needs_star:
             raise ValueError(
-                "MERGE INSERT * into a table with IDENTITY columns "
-                "would take the source's values — use INSERT (cols) "
-                "VALUES (..) omitting the identity column"
+                "MERGE SET * / INSERT * into a table with IDENTITY "
+                "columns would take the source's values — use an "
+                "explicit SET list / INSERT (cols) VALUES (..) omitting "
+                "the identity column"
             )
-        if any(
-            k == "update" and aset is None
-            for k, _c, aset in matched_clauses
-        ):
-            raise ValueError(
-                "MERGE SET * into a table with IDENTITY columns "
-                "would overwrite engine-assigned values — use an "
-                "explicit SET list"
+    # the Delta contract: appends project onto the TARGET's columns —
+    # the source may carry EXTRA columns (CDC op codes, sequence
+    # numbers) that clauses reference via s.<col> but that never land
+    # in the table. A target column ABSENT from the source only errors
+    # when a star action needs it (SET * / INSERT *); explicit SET /
+    # VALUES lists build their own rows.
+    t_cols = [f["name"] for f in man["_schema"]["fields"]]
+    missing_t = [c for c in t_cols if c not in source.columns]
+    if missing_t and needs_star:
+        raise ValueError(
+            f"source lacks target column(s) {missing_t} — SET * "
+            "/ INSERT * need every target column"
+        )
+    # schema evolution (Delta autoMerge / MERGE WITH SCHEMA EVOLUTION):
+    # columns the merge ASSIGNS that the target lacks widen the table —
+    # source extras under SET * / INSERT *, plus any explicitly
+    # SET/VALUES-named new columns. Source columns merely REFERENCED
+    # (CDC op codes, sequence numbers) still never land.
+    new_cols: list[str] = []
+    if allow_evolution:
+        assigned = set(source.columns) if needs_star else set()
+        for _k, _c, aset in matched_clauses + by_source_clauses:
+            assigned.update(aset or ())
+        for _c, vals in insert_clauses:
+            assigned.update(vals or ())
+        assigned -= set(t_cols)
+        new_cols = [c for c in source.columns if c in assigned] + sorted(
+            c for c in assigned if c not in source.columns
+        )
+    bad_vals = [
+        c for _c, vals in insert_clauses for c in vals or ()
+        if c not in t_cols and c not in new_cols
+    ]
+    if bad_vals:
+        raise ValueError(
+            f"INSERT VALUES names unknown target column(s) {bad_vals}"
+            + (
+                ""
+                if allow_evolution
+                else " (pass allow_evolution=True / MERGE WITH "
+                "SCHEMA EVOLUTION to add them)"
             )
-    t_types: dict = {}
-    if "_schema" in man:
-        # the Delta contract: appends project onto the TARGET's
-        # columns — the source may carry EXTRA columns (CDC op codes,
-        # sequence numbers) that clauses reference via s.<col> but
-        # that never land in the table. A target column ABSENT from
-        # the source only errors when a star action needs it (SET * /
-        # INSERT *); explicit SET / VALUES lists build their own rows.
-        from pyspark.sql.types import StructType
-
-        t_struct = StructType.fromJson(man["_schema"])
-        t_types = {f.name: f.dataType for f in t_struct.fields}
-        t_cols = [f.name for f in t_struct.fields]
-        needs_star = any(
-            k == "update" and aset is None for k, _c, aset in matched_clauses
-        ) or any(v is None for _c, v in insert_clauses)
-        missing_t = [c for c in t_cols if c not in data_cols]
-        if missing_t and needs_star:
-            raise ValueError(
-                f"source lacks target column(s) {missing_t} — SET * "
-                "/ INSERT * need every target column"
-            )
-        # schema evolution (Delta autoMerge / MERGE WITH SCHEMA
-        # EVOLUTION): columns the merge ASSIGNS that the target lacks
-        # widen the table — source extras under SET * / INSERT *,
-        # plus any explicitly SET/VALUES-named new columns. Source
-        # columns merely REFERENCED (CDC op codes, sequence numbers)
-        # still never land.
-        new_cols: list[str] = []
-        if allow_evolution:
-            assigned = set()
-            if needs_star:
-                assigned.update(
-                    c for c in source.columns if c not in t_types
-                )
-            for _k, _c, aset in matched_clauses + by_source_clauses:
-                if aset:
-                    assigned.update(c for c in aset if c not in t_types)
-            for _c, vals in insert_clauses:
-                if vals:
-                    assigned.update(c for c in vals if c not in t_types)
-            new_cols = [c for c in source.columns if c in assigned] + sorted(
-                c for c in assigned if c not in source.columns
-            )
-        data_cols = t_cols + new_cols
-        bad_vals = [
-            c
-            for _cond_, vals in insert_clauses
-            if vals
-            for c in vals
-            if c not in t_types and c not in new_cols
-        ]
-        if bad_vals:
-            raise ValueError(
-                f"INSERT VALUES names unknown target column(s) {bad_vals}"
-                + (
-                    ""
-                    if allow_evolution
-                    else " (pass allow_evolution=True / MERGE WITH "
-                    "SCHEMA EVOLUTION to add them)"
-                )
-            )
+        )
 
     if by_source_clauses:
         # NOT MATCHED BY SOURCE must see EVERY visible target row —
         # zone-map pruning to the source's keys would hide exactly the
-        # rows the clause targets, so the scan is the full table and
-        # the classifying join keeps both unmatched sides.
-        tagged = _visible_tagged(spark, path, base, man)
-        join_type = "full_outer"
+        # rows the clause targets
+        target = _visible_tagged(spark, path, base, man)
     else:
-        tagged = _visible_tagged_for_keys(
+        target = _visible_tagged_for_keys(
             spark, path, base, man, keys, source.select(*keys).distinct()
         )
-        join_type = "right_outer"
-    # a literal presence marker: source keys may legally be NULL (the
-    # join is eqNullSafe), so "source side present" cannot be read off
-    # a key column after an outer join
-    t = tagged.alias("t")
-    s = source.withColumn("_s_present", F.lit(True)).alias("s")
-    on = None
-    for k in keys:
-        c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        on = c if on is None else (on & c)
-    # ONE classifying join: matched pairs carry the target position,
-    # unmatched source rows carry a NULL one (and, under full-outer,
-    # by-source target rows carry a NULL source marker). The frame is
-    # delta-sized on the right-outer path — persist it across the
-    # DV-write and append actions.
-    j = t.join(s, on, join_type).persist()
-    try:
-        t_present = F.col("t._dv_file").isNotNull()
-        s_present = F.col("s._s_present").isNotNull()
-        matched = t_present & s_present
-        only_t = t_present & ~s_present
-
-        def _fires(clauses: list, branch: Column) -> list:
-            """(kind, fire_predicate, set) per clause — first
-            satisfied condition wins within the family."""
-            out, no_prior = [], F.lit(True)
-            for kind, cond, aset in clauses:
-                c = _cond(cond, False)
-                out.append((kind, branch & no_prior & c, aset))
-                no_prior = no_prior & ~c
-            return out
-
-        s_types = {f.name: f.dataType for f in source.schema.fields}
-
-        def _typed_null(c):
-            # a NEW column absent from one branch unions by name with
-            # the branches that carry it — type the NULL from the
-            # source schema so unionByName never sees bare NullType
-            return (
-                F.lit(None).cast(s_types[c]) if c in s_types else F.lit(None)
-            )
-
-        def _proj(aset: dict | None, star_side: str) -> list:
-            """Replacement-row projection for an update clause: SET *
-            (aset None) takes the whole ``star_side`` row; a partial
-            SET applies its expressions and keeps every UNLISTED
-            column from the TARGET — the published MERGE contract
-            (UPDATE SET x = 1 must not silently copy the source's
-            other columns over the target's)."""
-            exprs = []
-            s_cols = set(source.columns)
-            for c in data_cols:
-                if aset is None:
-                    have = s_cols if star_side == "s" else t_types
-                    e = (
-                        F.col(f"{star_side}.{c}")
-                        if c in have
-                        else _typed_null(c)
-                    )
-                else:
-                    e = aset.get(c)
-                    if e is None:
-                        e = (
-                            F.col(f"t.{c}")
-                            if c in t_types
-                            else _typed_null(c)
-                        )
-                if isinstance(e, str):
-                    e = F.expr(e)
-                exprs.append(e.alias(c))
-            return exprs
-
-        m_fires = _fires(matched_clauses, matched)
-        b_fires = _fires(by_source_clauses, only_t)
-
-        dv_pred = F.lit(False)
-        for _, fire, _a in m_fires + b_fires:
-            dv_pred = dv_pred | fire
-        dv_new = j.filter(dv_pred).select(
-            F.col("t._dv_file").alias("file"),
-            F.col("t._dv_pos").alias("pos"),
-        )
-
-        _gcols_m = man.get("_generated_columns") or {}
-
-        def _update_frame(aset: dict | None, star_side: str, fire):
-            """One update clause's replacement rows.  GENERATED
-            columns the clause does not explicitly SET are RECOMPUTED
-            from the replacement row's base columns (the Delta
-            semantics — an UPDATE changing a referenced column must
-            not carry the stale derived value; the commit-time
-            __generated_ check would rightly reject it).  Explicitly
-            SET values are kept and validated at commit."""
-            fr = j.filter(fire).select(*_proj(aset, star_side))
-            fill = {
-                c: e
-                for c, e in _gcols_m.items()
-                if c in fr.columns and (aset is None or c not in aset)
-            }
-            if fill:
-                fr = fr.select(
-                    *[
-                        (
-                            F.expr(fill[c]).cast(t_types[c]).alias(c)
-                            if c in fill and c in t_types
-                            else F.expr(fill[c]).alias(c)
-                            if c in fill
-                            else F.col(c)
-                        )
-                        for c in fr.columns
-                    ]
-                )
-            return fr
-
-        append_frames = [
-            _update_frame(aset, "s", fire)
-            for kind, fire, aset in m_fires
-            if kind == "update"
-        ] + [
-            _update_frame(aset, "t", fire)
-            for kind, fire, aset in b_fires
-            if kind == "update"
-        ]
-        insert_frames: list = []
-        if insert_clauses:
-            # project to plain SOURCE columns FIRST so insert
-            # conditions' and VALUES' unprefixed names resolve
-            # unambiguously; each clause then projects onto the
-            # TARGET's columns (unlisted VALUES columns fill typed
-            # NULL), first satisfied condition wins
-            unmatched = j.filter(~matched & ~only_t).select(
-                *[F.col(f"s.{c}").alias(c) for c in source.columns]
-            )
-            dflt = man.get("_column_defaults") or {}
-            gcols = man.get("_generated_columns") or {}
-            no_prior = F.lit(True)
-            for cond, vals in insert_clauses:
-                c = _cond(cond, False)
-                fire = no_prior & c
-                no_prior = no_prior & ~c
-                proj = []
-                for cname in data_cols:
-                    if vals is None:
-                        # INSERT *: an evolution column assigned only
-                        # by a SET clause has no source value — typed
-                        # NULL, not an unresolved-column crash
-                        e = (
-                            F.col(cname)
-                            if cname in source.columns
-                            else _typed_null(cname)
-                        )
-                    else:
-                        e = vals.get(cname)
-                        if e is None:
-                            # unlisted: recorded column DEFAULT, else
-                            # typed NULL (GENERATED columns fill in a
-                            # second pass below — they may reference
-                            # the row's other columns)
-                            e = (
-                                F.expr(dflt[cname])
-                                if cname in dflt
-                                and cname not in gcols
-                                and cname not in _idents
-                                else _typed_null(cname)
-                            )
-                        if isinstance(e, str):
-                            e = F.expr(e)
-                        if cname in t_types:
-                            e = e.cast(t_types[cname])
-                    proj.append(e.alias(cname))
-                frame = unmatched.filter(fire).select(*proj)
-                gen_fill = {
-                    gc: ge
-                    for gc, ge in gcols.items()
-                    if vals is not None
-                    and vals.get(gc) is None
-                    and gc in frame.columns
-                }
-                if gen_fill:
-                    frame = frame.select(
-                        *[
-                            (
-                                F.expr(gen_fill[cn])
-                                .cast(t_types[cn])
-                                .alias(cn)
-                                if cn in gen_fill and cn in t_types
-                                else F.expr(gen_fill[cn]).alias(cn)
-                                if cn in gen_fill
-                                else F.col(cn)
-                            )
-                            for cn in frame.columns
-                        ]
-                    )
-                insert_frames.append(frame)
-        meta_late = None
-        if insert_frames and _idents:
-            # IDENTITY values assign over the UNION of INSERT branches
-            # only (one mono-id space — per-branch assignment would
-            # collide; update rewrites KEEP their existing ids) and
-            # the watermark advances via the commit's own write pass;
-            # _commit_with_dv pins expected_base, so a racing
-            # allocator conflicts instead of double-assigning
-            from temp_data_pipeline_spark.operators.versioned import (
-                assign_identity,
-            )
-
-            ins_union = insert_frames[0]
-            for fr in insert_frames[1:]:
-                ins_union = ins_union.unionByName(fr)
-            ins_union, meta_late = assign_identity(ins_union, _idents)
-            insert_frames = [ins_union]
-        append_frames.extend(insert_frames)
-        appends = None
-        for fr in append_frames:
-            appends = fr if appends is None else appends.unionByName(fr)
-        return _commit_with_dv(
-            spark,
-            path,
-            base,
-            man,
-            dv_new,
-            appends,
-            meta,
-            meta_late=meta_late,
-            allow_evolution=bool(new_cols),
-        )
-    finally:
-        j.unpersist()
+    return _row_change(
+        spark, path, base, man, target, source=source, keys=keys,
+        matched=matched_clauses, inserts=insert_clauses,
+        by_source=by_source_clauses, new_cols=new_cols, meta=meta,
+    )

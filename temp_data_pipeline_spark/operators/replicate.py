@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from temp_data_pipeline_spark.operators.deletion_vectors import (
     _commit_with_dv,
     _observed_count,
+    _positions,
     _visible_tagged_for_keys,
     semi_on_keys,
 )
@@ -164,9 +165,7 @@ def _apply(
             ups.limit(0), path, carry_from=base, meta=meta,
             expected_base=base, allow_evolution=evolve,
         )
-    dv_new = semi_on_keys(tagged, affected, keys).select(
-        F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
-    )
+    dv_new = _positions(semi_on_keys(tagged, affected, keys))
     return _commit_with_dv(
         spark, path, base, man, dv_new, ups, meta, allow_evolution=evolve
     )

@@ -38,8 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.operators.deletion_vectors import (
+    _POSITIONS,
     _commit_with_dv,
     _observed_count,
+    _positions,
     _visible_tagged_for_keys,
     read_table,
     semi_on_keys,
@@ -151,12 +153,8 @@ def scd2_apply(
             affected,
             keys,
         )
-        dv_new = cur.select(
-            F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
-        )
-        dim_cols = [
-            c for c in cur.columns if c not in ("_dv_file", "_dv_pos")
-        ]
+        dv_new = _positions(cur)
+        dim_cols = [c for c in cur.columns if c not in _POSITIONS]
         # schema evolution: an ADDED source column widens the dim
         # (history rows read/close with NULL there — exactly the
         # add-column contract); a DROPPED source column would
@@ -376,12 +374,8 @@ def _scd2_apply_backlog(
             affected,
             keys,
         )
-        dv_new = cur.select(
-            F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
-        )
-        dim_cols = [
-            c for c in cur.columns if c not in ("_dv_file", "_dv_pos")
-        ]
+        dv_new = _positions(cur)
+        dim_cols = [c for c in cur.columns if c not in _POSITIONS]
         dim_data = [c for c in dim_cols if c not in _RESERVED]
         # the drop check runs against the SOURCE'S FINAL schema when
         # known — a column dropped mid-backlog still rides the union

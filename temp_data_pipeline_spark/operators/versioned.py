@@ -1236,6 +1236,11 @@ _LAYOUT_CONFLICTS = (
 )
 
 
+# the position tags ``_scan(positions=True)`` adds: the row's file
+# (``_rel_file`` form) and its row index in that file — a DV's keys
+_POSITIONS = ("_dv_file", "_dv_pos")
+
+
 def _scan(
     spark: SparkSession,
     path: str,
@@ -1284,7 +1289,7 @@ def _scan(
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(man["_schema"]) if "_schema" in man else None
-    tags = ("_dv_file", "_dv_pos") if positions else ()
+    tags = _POSITIONS if positions else ()
 
     def tagged(df: DataFrame, rel) -> DataFrame:
         if not positions:
@@ -1580,6 +1585,15 @@ def _touched_values(df: DataFrame, partition_col: str) -> set[str | None]:
     return {r["_v"] for r in rows}
 
 
+def _in_partitions(partition_col: str, touched: set[str | None]):
+    """The filter keeping rows whose partition value, in the
+    ``_touched_values`` string form, is in ``touched`` (None selects
+    the NULL partition)."""
+    col = F_sql.col(partition_col)
+    cond = col.cast("string").isin([t for t in touched if t is not None])
+    return cond | col.isNull() if None in touched else cond
+
+
 def _require_matching_layout(
     man: dict, partition_col: str, op: str
 ) -> list[str]:
@@ -1630,39 +1644,15 @@ def commit_merge_cow(
     standard partition-pruned-merge contract). Upserts only, no
     deletes. Driver holds one string per touched / carried partition.
     """
-    from pyspark.sql import functions as F
-
-    spark = updates.sparkSession
-    vs = versions(spark, path)
+    vs = versions(updates.sparkSession, path)
     if not vs:
         return commit_version(
             updates, path, partition_by=[partition_col], meta=meta
         )
-    latest = vs[-1]
-    base_man = read_manifest(spark, path, latest)
-    _require_no_dv(base_man, "commit_merge_cow")
-    layout = _require_matching_layout(
-        base_man, partition_col, "commit_merge_cow"
-    )
-    base_dirs = _manifest_dirs(base_man)
-    touched = _touched_values(updates, partition_col)
-    cond = F.col(partition_col).cast("string").isin(
-        [t for t in touched if t is not None]
-    )
-    if None in touched:
-        cond = cond | F.col(partition_col).isNull()
-    base = read_version(spark, path, latest).filter(cond)
-    merged = merge_upsert(base, updates, keys, ts_col, tiebreak)
-    carried = _cow_carried_dirs(
-        spark, path, base_dirs, partition_col, touched, base_man
-    )
-    return commit_version(
-        merged,
-        path,
-        partition_by=layout,
-        carry_dirs=carried,
-        meta=meta,
-        expected_base=latest,
+    return _cow_commit(
+        updates.sparkSession, path, vs[-1], lambda _: updates, partition_col,
+        lambda base: merge_upsert(base, updates, keys, ts_col, tiebreak),
+        op="commit_merge_cow", meta=meta,
     )
 
 
@@ -1693,47 +1683,64 @@ def commit_cdc_cow(
     keys never move partitions, delete rows must carry the partition
     value of the rows they delete.
     """
-    from pyspark.sql import functions as F
-
-    spark = changes.sparkSession
-    is_del = F.upper(F.col(op_col)) == "D"
+    is_del = F_sql.upper(F_sql.col(op_col)) == "D"
     upserts = changes.filter(~is_del).drop(op_col)
-    deletes = changes.filter(is_del).select(*keys, partition_col).distinct()
-    vs = versions(spark, path)
+    deletes = changes.filter(is_del).select(*keys).distinct()
+
+    def minus_deletes(rows: DataFrame) -> DataFrame:
+        return rows.join(deletes, keys, "left_anti")
+
+    vs = versions(changes.sparkSession, path)
     if not vs:
         # same within-batch resolution as the merge path: upserts
         # collapse last-writer-wins per key BEFORE deletes win —
         # the first commit honors the batch-as-a-set contract too
-        first = keep_latest(upserts, keys, ts_col, tiebreak).join(
-            deletes.select(*keys), keys, "left_anti"
-        )
+        first = minus_deletes(keep_latest(upserts, keys, ts_col, tiebreak))
         return commit_version(
             first, path, partition_by=[partition_col], meta=meta
         )
-    latest = vs[-1]
+    return _cow_commit(
+        changes.sparkSession, path, vs[-1], lambda _: changes, partition_col,
+        lambda base: minus_deletes(
+            merge_upsert(base, upserts, keys, ts_col, tiebreak)
+        ),
+        op="commit_cdc_cow", meta=meta,
+    )
+
+
+def _cow_commit(
+    spark: SparkSession,
+    path: str,
+    latest: int,
+    touching,
+    partition_col: str,
+    rewrite,
+    *,
+    op: str,
+    meta: dict | None,
+    skip_untouched: bool = False,
+) -> int:
+    """The partition carve every COW writer commits through: the
+    partitions of ``latest`` that ``touching(base)`` has rows in (base
+    = the snapshot's rows) are read, mapped to their new rows by
+    ``rewrite`` and re-committed under the base's layout; every other
+    partition is carried by reference (``_cow_carried_dirs``).
+    ``skip_untouched`` returns ``latest`` unchanged, committing
+    nothing, when no partition is touched."""
     base_man = read_manifest(spark, path, latest)
-    _require_no_dv(base_man, "commit_cdc_cow")
-    layout = _require_matching_layout(
-        base_man, partition_col, "commit_cdc_cow"
-    )
-    base_dirs = _manifest_dirs(base_man)
-    touched = _touched_values(changes, partition_col)
-    cond = F.col(partition_col).cast("string").isin(
-        [t for t in touched if t is not None]
-    )
-    if None in touched:
-        cond = cond | F.col(partition_col).isNull()
-    base = read_version(spark, path, latest).filter(cond)
-    merged = merge_upsert(base, upserts, keys, ts_col, tiebreak)
-    survivors = merged.join(deletes.select(*keys), keys, "left_anti")
-    carried = _cow_carried_dirs(
-        spark, path, base_dirs, partition_col, touched, base_man
-    )
+    _require_no_dv(base_man, op)
+    layout = _require_matching_layout(base_man, partition_col, op)
+    base = read_version(spark, path, latest)
+    touched = _touched_values(touching(base), partition_col)
+    if skip_untouched and not touched:
+        return latest
     return commit_version(
-        survivors,
+        rewrite(base.filter(_in_partitions(partition_col, touched))),
         path,
         partition_by=layout,
-        carry_dirs=carried,
+        carry_dirs=_cow_carried_dirs(
+            spark, path, base_man, partition_col, touched
+        ),
         meta=meta,
         expected_base=latest,
     )
@@ -1742,20 +1749,19 @@ def commit_cdc_cow(
 def _cow_carried_dirs(
     spark: SparkSession,
     path: str,
-    base_dirs: list[str],
+    base_man: dict,
     partition_col: str,
     touched: set[str | None],
-    base_man: dict | None = None,
 ) -> list[str]:
     """The manifest entries a COW commit carries forward: every
-    partition of ``base_dirs`` whose value is NOT in ``touched``,
+    partition of ``base_man``'s dirs whose value is NOT in ``touched``,
     expressed as nested ``v=<N>/col=x`` references. Raises when the
     base was not committed ``partition_by=[partition_col]``."""
     fs, jvm = _fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
     prefix = f"{partition_col}="
     carried: list[str] = []
-    for d in base_dirs:
+    for d in _manifest_dirs(base_man):
         if "/" in d:
             # already a single-partition reference from a prior COW
             # commit: carry unless this batch supersedes it
@@ -1773,7 +1779,7 @@ def _cow_carried_dirs(
         # (resolved under its root — a shallow-clone reference lists
         # in the SOURCE table, the carried entries stay relative)
         statuses = list(
-            fs.listStatus(Path(_dir_abs(path, base_man or {}, d)))
+            fs.listStatus(Path(_dir_abs(path, base_man, d)))
         )
         subdirs = [
             st.getPath().getName() for st in statuses if st.isDirectory()
@@ -1822,42 +1828,17 @@ def commit_delete_cow(
     physical erasure = this delete + ``compact_snapshot`` +
     ``vacuum`` of the old versions.
     """
-    from pyspark.sql import functions as F
-
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
     latest = _resolve_version(spark, path, None)
-    base_man = read_manifest(spark, path, latest)
-    _require_no_dv(base_man, "commit_delete_cow")
-    layout = _require_matching_layout(
-        base_man, partition_col, "commit_delete_cow"
-    )
-    base_dirs = _manifest_dirs(base_man)
-    cur = read_version(spark, path, latest)
-    touched = _touched_values(cur.filter(predicate), partition_col)
-    if not touched:
-        return latest
-    cond = F.col(partition_col).cast("string").isin(
-        [t for t in touched if t is not None]
-    )
-    if None in touched:
-        cond = cond | F.col(partition_col).isNull()
+    if isinstance(predicate, str):
+        predicate = F_sql.expr(predicate)
     # SQL DELETE semantics: remove rows where predicate is TRUE; rows
     # where it evaluates NULL are kept (a bare ~predicate would drop
     # them — NULL negates to NULL, and filter discards NULL)
-    survivors = cur.filter(cond).filter(
-        ~F.coalesce(predicate, F.lit(False))
-    )
-    carried = _cow_carried_dirs(
-        spark, path, base_dirs, partition_col, touched, base_man
-    )
-    return commit_version(
-        survivors,
-        path,
-        partition_by=layout,
-        carry_dirs=carried,
-        meta=meta,
-        expected_base=latest,
+    return _cow_commit(
+        spark, path, latest, lambda base: base.filter(predicate),
+        partition_col,
+        lambda base: base.filter(~F_sql.coalesce(predicate, F_sql.lit(False))),
+        op="commit_delete_cow", meta=meta, skip_untouched=True,
     )
 
 
@@ -2023,13 +2004,10 @@ def compact_partitions(
     man = read_manifest(spark, path, latest)
     _require_no_dv(man, "compact_partitions")
     layout = _require_matching_layout(man, partition_col, "compact_partitions")
-    base_dirs = _manifest_dirs(man)
     # every partition value the snapshot holds, from dir names —
     # _cow_carried_dirs with an empty touched set enumerates ALL
     # partitions as nested refs (and validates the layout)
-    all_refs = _cow_carried_dirs(
-        spark, path, base_dirs, partition_col, set(), man
-    )
+    all_refs = _cow_carried_dirs(spark, path, man, partition_col, set())
     all_vals = {_partition_dir_value(d.split("/", 1)[1]) for d in all_refs}
     if values is not None:
         # normalize user-supplied values through the SAME Spark
@@ -2086,12 +2064,9 @@ def compact_partitions(
         }
         if not touched:
             return latest  # predicate selects nothing: no-op
-    cond = F.col(partition_col).cast("string").isin(
-        [t for t in touched if t is not None]
+    rows = read_version(spark, path, latest).filter(
+        _in_partitions(partition_col, touched)
     )
-    if None in touched:
-        cond = cond | F.col(partition_col).isNull()
-    rows = read_version(spark, path, latest).filter(cond)
     n_out = max(len(touched), 1) * max(int(target_files), 1)
     if cluster_by:
         rows = rows.repartitionByRange(
@@ -2101,9 +2076,7 @@ def compact_partitions(
         # hash on the partition column: each hive partition's rows
         # land in target_files tasks -> that many files per dir
         rows = rows.repartition(n_out, F.col(partition_col))
-    carried = _cow_carried_dirs(
-        spark, path, base_dirs, partition_col, touched, man
-    )
+    carried = _cow_carried_dirs(spark, path, man, partition_col, touched)
     # untouched partitions ride verbatim, their clone roots and bucket
     # spec with them; rename tracking is recomputed for the new dir
     keep = _carried_meta(man, keep_layout=True)

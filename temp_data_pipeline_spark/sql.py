@@ -14,9 +14,10 @@ table root``), and delegate —
   UPDATE t SET a=e, .. WHERE p -> commit_update_mor      (returns int)
   INSERT INTO t [(cols)] <query>
   INSERT OVERWRITE [TABLE] t <query>
+                               -> carry-commit append / rewrite
+                                                         (returns int)
   INSERT INTO t [(cols)] REPLACE WHERE p <query>
-                               -> carry-commit append / rewrite /
-                                  commit_replace_where   (returns int)
+                               -> commit_replace_where   (returns int)
   MERGE [WITH SCHEMA EVOLUTION] INTO t [AS] a USING (src|name) [AS] b
     ON a.k = b.k [AND ..]
     WHEN MATCHED [AND c] THEN UPDATE SET x = e, .. | SET * | DELETE
@@ -28,6 +29,15 @@ table root``), and delegate —
   DROP TABLE / VIEW, ALTER TABLE (columns, defaults, CHECK constraints),
   DESCRIBE [EXTENDED], SHOW TABLES / CREATE TABLE / TBLPROPERTIES /
   PARTITIONS               -> the versioned.py metadata operations
+
+DELETE, UPDATE, REPLACE WHERE and MERGE all end in one merge-on-read
+row-change executor (``deletion_vectors._row_change``): the operator
+only builds its clause list — a WHERE is one target-only clause, a
+MERGE its three ordered clause families — and the executor classifies
+the target's rows once, writes one DV sidecar and appends the rows the
+clauses build. UPDATE SET and MERGE SET * / INSERT * values are cast
+to the target column's type where the cast widens (INT -> BIGINT);
+any other mismatch is refused at commit.
 
 Parsing is Spark's own: ``sessionState().sqlParser().parsePlan`` turns
 the statement into a logical plan, and the statement kind is the plan's
@@ -108,6 +118,7 @@ from temp_data_pipeline_spark.operators.bucketing import (
 from temp_data_pipeline_spark.operators.changes import changes_between
 from temp_data_pipeline_spark.operators.copy_into import copy_into
 from temp_data_pipeline_spark.operators.deletion_vectors import (
+    _fill_generated,
     commit_delete_mor,
     commit_replace_where,
     commit_update_mor,
@@ -660,23 +671,10 @@ class SqlEngine:
             )
             # unlisted GENERATED columns compute from the row's base
             # columns in a second pass (the frame above has every base
-            # column bound under its table name); listed ones keep the
-            # provided values — the commit's __generated_ check
-            # validates them against the expression
-            gen_fill = {c: e for c, e in gcols.items() if c not in pos}
-            if gen_fill:
-                rows = rows.select(
-                    *[
-                        (
-                            F.expr(gen_fill[f.name])
-                            .cast(f.dataType)
-                            .alias(f.name)
-                            if f.name in gen_fill
-                            else F.col(f.name)
-                        )
-                        for f in target.fields
-                    ]
-                )
+            # column bound under its table name)
+            rows = _fill_generated(
+                rows, gcols, pos, {f.name: f.dataType for f in target.fields}
+            )
         elif len(rows.columns) != len(target.fields):
             raise ValueError(
                 f"INSERT INTO {name}: query yields {len(rows.columns)} "

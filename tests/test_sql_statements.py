@@ -1174,3 +1174,139 @@ def test_merge_clause_family_order(spark, eng):
             "WHEN NOT MATCHED THEN INSERT * "
             "WHEN MATCHED THEN DELETE"
         )
+
+
+def test_update_and_merge_star_up_cast_values(spark, eng):
+    """UPDATE SET and MERGE SET * / INSERT * values are cast to the
+    target column's type when the cast is a widening one (INT literal
+    into BIGINT), and the rows read back typed."""
+    e, p = eng
+    e.sql("UPDATE t SET v = 7 WHERE k = 1")
+    e.sql(
+        "MERGE INTO t USING (SELECT 2 AS k, 99 AS v, 'm' AS status) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    e.sql(
+        "MERGE INTO t USING (SELECT 4 AS k, 40 AS v, 'n' AS status) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    snap = read_table(spark, p)
+    assert dict(snap.dtypes) == {"k": "bigint", "v": "bigint", "status": "string"}
+    assert _rows(spark, p) == {
+        1: (7, "live"),
+        2: (99, "m"),
+        3: (30, "expired"),
+        4: (40, "n"),
+    }
+
+
+def test_update_refuses_narrowing_and_incompatible_values(spark, tmp_path):
+    """Only a widening cast is applied: a BIGINT value into an INT
+    column and a string into a numeric column still fail the commit's
+    schema check instead of writing NULL."""
+    p = os.path.join(str(tmp_path), "ti")
+    commit_version(
+        spark.createDataFrame([(1, 10, 100)], "k long, i int, v long"), p
+    )
+    e = SqlEngine(spark, {"t": p})
+    with pytest.raises(ValueError, match="retypes"):
+        e.sql("UPDATE t SET i = 3000000000 WHERE k = 1")
+    with pytest.raises(ValueError, match="retypes"):
+        e.sql("UPDATE t SET v = 'abc' WHERE k = 1")
+    assert versions(spark, p) == [1]
+    assert [tuple(r) for r in read_table(spark, p).collect()] == [(1, 10, 100)]
+    # a value is checked only once the UPDATE matched a row
+    assert e.sql("UPDATE t SET v = 'abc' WHERE k = 999") == 1
+    assert versions(spark, p) == [1]
+
+
+def test_nondeterministic_conditions_are_refused(spark, eng):
+    """A WHERE or clause condition the DV write and the append would
+    each evaluate differently is refused before anything is written."""
+    e, p = eng
+    before = versions(spark, p)
+    with pytest.raises(ValueError, match="nondeterministic"):
+        e.sql("UPDATE t SET v = 0 WHERE rand() < 0.5")
+    with pytest.raises(ValueError, match="nondeterministic"):
+        e.sql(
+            "MERGE INTO t USING (SELECT 1 AS k) s ON t.k = s.k "
+            "WHEN MATCHED AND rand() < 0.5 THEN DELETE"
+        )
+    assert versions(spark, p) == before
+    assert e.sql(
+        "UPDATE t SET v = CAST(rand() * 100 AS BIGINT) WHERE k = 1"
+    ) == before[-1] + 1
+
+
+def test_update_set_values_read_the_old_row(spark, eng):
+    """Every SET value is computed from the row as it was before the
+    UPDATE (SQL semantics), so one statement can swap two columns."""
+    e, p = eng
+    e.sql("UPDATE t SET k = v, v = k WHERE k = 1")
+    assert _rows(spark, p) == {
+        10: (1, "live"),
+        2: (20, "live"),
+        3: (30, "expired"),
+    }
+
+
+# Spark jobs each DML statement below runs; pinned so a change to the
+# row-change path cannot add a job unnoticed. DELETE is the sidecar
+# write (a shuffle-map job and a write job). UPDATE first materializes
+# the persisted rows its WHERE matched (both the sidecar write and the
+# append read them) and then appends the rewritten rows; one that
+# matches nothing writes the sidecar, sees no new position in its
+# observed count and commits nothing.
+_DML_JOBS = {
+    "delete": 2,
+    "update": 4,
+    "update_nothing": 3,
+    "merge": 5,
+}
+
+
+def test_dml_statement_job_counts(spark, tmp_path):
+    """The perfbench DELETE and MERGE shapes plus a matching and a
+    non-matching UPDATE, each counted under its own job group."""
+    import datetime as dt
+
+    p = os.path.join(str(tmp_path), "daily")
+    schema = "station_id string, date_local date, tmax_c double"
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    rows = [(f"S{i}", d, float(i)) for i in range(4) for d in (d1, d2)]
+    commit_version(spark.createDataFrame(rows, schema), p)
+    e = SqlEngine(spark, {"daily": p})
+    spark.createDataFrame(
+        [("S1", d2, 50.0), ("S9", d2, 9.0)], schema
+    ).createOrReplaceTempView("corrections")
+    statements = {
+        "delete": "DELETE FROM daily WHERE station_id = 'S0' "
+        "AND date_local = DATE'2024-01-01'",
+        "update": "UPDATE daily SET tmax_c = tmax_c + 1 WHERE station_id = 'S2'",
+        "update_nothing": "UPDATE daily SET tmax_c = 0 WHERE station_id = 'none'",
+        "merge": "MERGE INTO daily t USING corrections s "
+        "ON t.station_id = s.station_id AND t.date_local = s.date_local "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    got = {}
+    for name, stmt in statements.items():
+        group = f"dmljobs-{name}-{os.getpid()}-{id(tmp_path)}"
+        sc.setJobGroup(group, name)
+        try:
+            e.sql(stmt)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got[name] = len(tracker.getJobIdsForGroup(group))
+    assert versions(spark, p) == [1, 2, 3, 4]
+    snap = {
+        (r["station_id"], r["date_local"]): r["tmax_c"]
+        for r in read_table(spark, p).collect()
+    }
+    assert ("S0", d1) not in snap and snap[("S2", d1)] == 3.0
+    assert snap[("S1", d2)] == 50.0 and snap[("S9", d2)] == 9.0
+    assert len(snap) == 8
+    assert got == _DML_JOBS
