@@ -11,7 +11,9 @@ runs four sequential pandas passes. Here the whole stage is a single
 logical plan: the only physical exchange is ONE shuffle on
 `station_id` that both the dedup window and the spike-lag window
 share (same partition key → Catalyst reuses the exchange). Ordering
-is carried by window `orderBy`, never a global sort.
+is carried by window `orderBy`, never a global sort. The output checks
+(`schemas/validate.py::assert_rules`) are part of the same plan: no
+validation query of their own, no second exchange.
 
 Scale: partitioned by station; each station-partition holds ≤ a few
 hundred k rows/decade, so no skew mitigation is needed. Works
@@ -38,7 +40,11 @@ from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.schemas import qc_flags as qc
 from temp_data_pipeline_spark.schemas.tables import HOURLY_OBS_FIELDS
-from temp_data_pipeline_spark.schemas.validate import validate_hourly_obs
+from temp_data_pipeline_spark.schemas.validate import (
+    assert_rules,
+    hourly_obs_rules,
+    validate_hourly_obs,
+)
 
 TEMP_MIN_C = -90.0
 TEMP_MAX_C = 60.0
@@ -112,8 +118,12 @@ def clean_hourly_obs(
 ) -> DataFrame:
     """Full clean stage as one lazy chain (reference clean_hourly.py:220-280).
 
-    Input validation skips uniqueness (dedup is this stage's job);
-    output validation enforces it.
+    Input validation is eager and skips uniqueness (dedup is this
+    stage's job): a bad input raises ``SchemaValidationError`` here,
+    at call time. Output validation, uniqueness included, is compiled
+    into the returned frame's plan (``assert_rules``): the job that
+    consumes it checks every row, and the uniqueness window rides the
+    station_id exchange the dedup and spike windows already share.
     """
     if validate_input:
         validate_hourly_obs(df, check_unique=False, check_temp_range=False)
@@ -123,5 +133,5 @@ def clean_hourly_obs(
     out = flag_spikes(out)
     out = out.select(*[c for c in HOURLY_OBS_FIELDS if c in out.columns])
     if validate_output:
-        validate_hourly_obs(out, check_unique=True)
+        out = assert_rules(out, hourly_obs_rules())
     return out

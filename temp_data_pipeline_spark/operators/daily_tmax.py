@@ -29,7 +29,10 @@ aggregation — the distinct-hour count is computed as
 the distinct set), where `countDistinct` would add Spark's second
 two-phase-distinct exchange; per-station timezones via
 `from_utc_timestamp(ts, tz_col)` keep multi-station frames in a
-single query (the reference handles one tz per call). Plan pinned by
+single query (the reference handles one tz per call). The output
+checks, uniqueness on (date_local, station_id) included, are compiled
+into the same plan (`schemas/validate.py::assert_rules`); the
+uniqueness window reuses the aggregate's exchange. Plan pinned by
 tests/test_multistation.py::test_one_shuffle_per_stage.
 """
 
@@ -42,7 +45,11 @@ from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.schemas import qc_flags as qc
 from temp_data_pipeline_spark.schemas.tables import DAILY_TMAX_FIELDS
-from temp_data_pipeline_spark.schemas.validate import validate_daily_tmax
+from temp_data_pipeline_spark.schemas.validate import (
+    assert_rules,
+    check_failure,
+    daily_tmax_rules,
+)
 
 MIN_COVERAGE_HOURS = 18
 
@@ -60,6 +67,9 @@ def build_daily_tmax(
     ``station_tz`` may be a literal tz string or a Column (e.g. from a
     broadcast-joined stations dim) — `from_utc_timestamp` accepts both,
     so one query serves stations in different time zones.
+
+    ``validate`` compiles the daily-Tmax rules into the returned
+    frame's plan: they run in the job that consumes it, not here.
     """
     tz = F.lit(station_tz) if isinstance(station_tz, str) else station_tz
     ts_local = F.from_utc_timestamp(F.col("ts_utc"), tz)
@@ -110,20 +120,46 @@ def build_daily_tmax(
         .select(*DAILY_TMAX_FIELDS)
     )
     if validate:
-        validate_daily_tmax(daily)
+        daily = assert_rules(daily, daily_tmax_rules())
     return daily
 
 
 def write_daily_tmax(daily_df: DataFrame, output_path: str, validate: bool = True) -> str:
-    """Validated partitioned write (reference writes tmp+rename per
-    file, `build_daily_tmax.py:147-150`; Spark's task-commit protocol
-    already gives atomic visibility)."""
-    if validate:
-        validate_daily_tmax(daily_df)
-    (
-        daily_df.withColumn("year", F.year("date_local"))
-        .write.mode("overwrite")
-        .partitionBy("station_id", "year")
-        .parquet(output_path)
-    )
+    """Validated partitioned write, visible all at once (the reference
+    writes tmp+rename per file, `build_daily_tmax.py:147-150`).
+
+    The frame is written into a sibling staging dir, and the daily-Tmax
+    rules run inside that write (``validate``; skipped when the frame
+    already carries them from ``build_daily_tmax``). Only a write that
+    passed replaces ``output_path``. A failed check deletes the staging
+    dir, leaves the previous output as it was and raises
+    ``SchemaValidationError``.
+    """
+    import uuid
+
+    from temp_data_pipeline_spark.operators.versioned import _fs
+
+    if validate and getattr(daily_df, "_sg_checked", None) != "daily_tmax":
+        daily_df = assert_rules(daily_df, daily_tmax_rules())
+    fs, jvm = _fs(daily_df.sparkSession, output_path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    out = Path(output_path)
+    staging = Path(f"{output_path.rstrip('/')}.tmp-{uuid.uuid4().hex[:12]}")
+    try:
+        (
+            daily_df.withColumn("year", F.year("date_local"))
+            .write.mode("errorifexists")
+            .partitionBy("station_id", "year")
+            .parquet(str(staging))
+        )
+    except Exception as exc:
+        fs.delete(staging, True)
+        report = check_failure(daily_df.sparkSession, exc)
+        if report is None:
+            raise
+        raise report from exc
+    if fs.exists(out):
+        fs.delete(out, True)
+    if not fs.rename(staging, out):
+        raise OSError(f"could not move {staging} to {output_path}")
     return output_path

@@ -23,9 +23,13 @@ Null semantics line up exactly without special cases:
   `stddev_samp` over <2 rows is null. (`:132`)
 
 Scale: the truth side is tiny (≤ a few k rows per station-decade) →
-`broadcast(truth)`; the window partition key (station_id, lead_hours)
-bounds each window partition to one station-lead series, so no skew.
-One shuffle for the window stage; zero for the join.
+`broadcast(truth)`; the rows are hash-partitioned on station_id once,
+which clusters both the rolling windows (station_id, lead_hours) and
+the output's uniqueness check (station_id, issue_time_utc,
+target_date_local, compiled into the plan by
+`schemas/validate.py::assert_rules`), so a task holds a few station
+series and neither window adds a shuffle. One shuffle for the window
+stage and its checks; zero for the join.
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.schemas.tables import TRAIN_DAILY_TMAX_FIELDS
-from temp_data_pipeline_spark.schemas.validate import validate_train_daily_tmax
+from temp_data_pipeline_spark.schemas.validate import assert_rules, train_daily_tmax_rules
 
 MIN_COVERAGE_HOURS = 18
 ROLLING_COLS = ["bias_7d", "bias_14d", "bias_30d", "rmse_14d", "rmse_30d", "sigma_lead"]
@@ -124,10 +128,15 @@ def build_train_daily_tmax(
 
     No explicit sort: ordering is carried by the window orderBy
     (the reference's `sort_values` at `:183` is a physical no-op here).
+    ``validate`` compiles the training-table rules into the returned
+    frame's plan: they run in the job that consumes it, not here.
     """
     df = join_forecast_to_truth(forecast_df, truth_df, min_coverage_hours)
     df = add_seasonal_features(df)
-    df = df.withColumn("forecast_source", F.col("source"))
+    # one exchange for every window below: hash(station_id) clusters
+    # the rolling windows' (station_id, lead_hours) and the uniqueness
+    # check's (station_id, issue_time_utc, target_date_local) alike
+    df = df.withColumn("forecast_source", F.col("source")).repartition("station_id")
     df = add_rolling_features(df)
     df = df.withColumn("lead_hours", F.col("lead_hours").cast("long")).select(
         *TRAIN_DAILY_TMAX_FIELDS
@@ -135,5 +144,5 @@ def build_train_daily_tmax(
     if drop_warmup_nulls:
         df = df.na.drop(subset=ROLLING_COLS)
     if validate:
-        validate_train_daily_tmax(df, allow_warmup_nulls=not drop_warmup_nulls)
+        df = assert_rules(df, train_daily_tmax_rules(allow_warmup_nulls=not drop_warmup_nulls))
     return df

@@ -1,29 +1,71 @@
-"""Column-expression validators executed as ONE aggregated pass.
+"""Each table's rules, declared once, and the two ways to check them.
 
 The reference validates eagerly per rule with pandas boolean masks
 (`src/tempdata/schemas/validate.py:39-482`, 10 generic validators) and
-reports the failing count + first-5 failing rows. Here every rule for
-a table is compiled into a single `agg(sum(when(violation,1)))` pass —
-one job over the data regardless of rule count — and only on failure
-do we run a second `limit(5)` job to sample offending rows.
+reports the failing count + first-5 failing rows. Here a table's rules
+are DATA: a ``TableRules`` names its required columns, its
+(rule_name, is_violation_column) checks and its unique keys
+(``hourly_obs_rules``, ``daily_tmax_rules``, ...). Two evaluators read
+the same declaration:
 
-At 100 TB this matters: validation cost is one scan (predicate
-columns only, pruned at the parquet reader), not one scan per rule.
+- ``check_rules`` runs them EAGERLY as one aggregate: every row rule
+  becomes a `sum(when(violation,1))` in a single `agg` (one scan,
+  predicate columns only, regardless of rule count), uniqueness a
+  `groupBy(keys).count() > 1`; only on failure does a `limit(5)` job
+  sample offending rows. The ``validate_*`` functions are this form.
+- ``assert_rules`` compiles them INTO THE PLAN of the frame a stage
+  returns: one row-preserving filter whose CASE raises
+  (`raise_error`) on the first violated rule of a row, with uniqueness
+  as a `count(*) over (partition by keys)` window. Every row is still
+  checked, but by whatever job consumes the frame; no query of its
+  own. The windows' keys contain the stage's shuffle key, so they
+  ride its exchange. A failing row aborts the consuming job with
+  "[dataset] rule '<name>' failed (stage check #N) on row {...}".
 
-Uniqueness (`require_unique`) is inherently an aggregation, so it is
-its own `groupBy(keys).count() > 1` check, also one shuffle.
+A sink that publishes atomically (``commit_version``,
+``write_daily_tmax``) catches that abort before its publish, drops its
+staging dir and turns it into the eager report via ``check_failure``:
+the aggregate runs over the unchecked frame, on the failure path only,
+and raises ``SchemaValidationError`` with counts and ≤5 sample rows.
+Any other consumer (``write.parquet``, ``collect``) fails with the
+Spark error, which names the dataset, the rule and the row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import re
+import uuid
+from collections import OrderedDict
+from dataclasses import dataclass
+
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.schemas import qc_flags as qc
+from temp_data_pipeline_spark.schemas.tables import (
+    DAILY_TMAX_FIELDS,
+    DAILY_TMAX_FORECAST_FIELDS,
+    HOURLY_OBS_FIELDS,
+    TRAIN_DAILY_TMAX_FIELDS,
+)
 
 
 class SchemaValidationError(ValueError):
-    """Raised with dataset name, rule, failing count and sample rows."""
+    """Raised with dataset name, rule, failing count and sample rows.
+
+    ``dataset``, ``rule`` (the first failing rule) and ``samples``
+    (≤5 offending rows as dicts, or the one row's JSON text when only
+    an in-plan check's message is known) carry the same facts as the
+    message.
+    """
+
+    def __init__(self, message: str, dataset=None, rule=None, samples=()):
+        super().__init__(message)
+        self.dataset = dataset
+        self.rule = rule
+        self.samples = list(samples)
 
 
 # ---------------------------------------------------------------------------
@@ -35,12 +77,13 @@ def require_columns(df: DataFrame, required: list[str], dataset: str) -> None:
     missing = [c for c in required if c not in df.columns]
     if missing:
         raise SchemaValidationError(
-            f"[{dataset}] missing required columns: {missing}; has {df.columns}"
+            f"[{dataset}] missing required columns: {missing}; has {df.columns}",
+            dataset=dataset,
         )
 
 
 # ---------------------------------------------------------------------------
-# Row-predicate checks, batched into one aggregation
+# Eager evaluator: row checks batched into one aggregation
 # ---------------------------------------------------------------------------
 
 
@@ -61,26 +104,38 @@ def violation_checks(df: DataFrame, checks: list[tuple[str, Column]], dataset: s
         return
     first_rule = failed[0][0]
     first_col = dict(checks)[first_rule]
-    sample = df.filter(first_col).limit(5).collect()
+    sample = [r.asDict() for r in df.filter(first_col).limit(5).collect()]
     raise SchemaValidationError(
         f"[{dataset}] {len(failed)} rule(s) failed: "
         + "; ".join(f"{n} ({c} rows)" for n, c in failed)
-        + f"; first offending rows for '{first_rule}': {[r.asDict() for r in sample]}"
+        + f"; first offending rows for '{first_rule}': {sample}",
+        dataset=dataset,
+        rule=first_rule,
+        samples=sample,
     )
+
+
+def unique_rule(keys) -> str:
+    return f"unique[{','.join(keys)}]"
 
 
 def require_unique(df: DataFrame, keys: list[str], dataset: str) -> None:
     """Key-uniqueness as an aggregation (reference validate.py:158-192)."""
-    dups = (
-        df.groupBy(*keys)
+    dups = [
+        r.asDict()
+        for r in df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") > 1)
         .limit(5)
         .collect()
-    )
+    ]
     if dups:
+        rule = unique_rule(keys)
         raise SchemaValidationError(
-            f"[{dataset}] duplicate keys on {keys}: {[r.asDict() for r in dups]}"
+            f"[{dataset}] rule '{rule}' failed: duplicate keys on {keys}: {dups}",
+            dataset=dataset,
+            rule=rule,
+            samples=dups,
         )
 
 
@@ -111,23 +166,29 @@ def close_check(col_f: str, col_c: str, tol: float = 0.2) -> tuple[str, Column]:
 
 
 # ---------------------------------------------------------------------------
-# Per-table composite validators
+# Per-table rule declarations
 # ---------------------------------------------------------------------------
 
 
-def validate_hourly_obs(
-    df: DataFrame, check_unique: bool = True, check_temp_range: bool = True
-) -> None:
+@dataclass(frozen=True)
+class TableRules:
+    """One table's rules: required columns, named violation columns
+    and unique keys. Built by a function, not at import: a Column
+    needs a live session."""
+
+    dataset: str
+    required: tuple[str, ...]
+    checks: tuple[tuple[str, Column], ...]
+    unique: tuple[str, ...] = ()
+
+
+def hourly_obs_rules(check_unique: bool = True, check_temp_range: bool = True) -> TableRules:
     """Reference hourly_obs.py:77-123.
 
     ``check_temp_range=False`` mirrors the clean stage's lighter input
     validation (`clean_hourly.py:145-177`): structure and types but not
     temp range — fixing out-of-range temps is the clean stage's job.
     """
-    from temp_data_pipeline_spark.schemas.tables import HOURLY_OBS_FIELDS
-
-    ds = "hourly_obs"
-    require_columns(df, HOURLY_OBS_FIELDS, ds)
     checks = [
         null_check("ts_utc"),
         null_check("station_id"),
@@ -139,66 +200,50 @@ def validate_hourly_obs(
     ]
     if check_temp_range:
         checks.insert(4, range_check("temp_c", -90, 60))
-    violation_checks(df, checks, ds)
-    if check_unique:
-        require_unique(df, ["ts_utc", "station_id"], ds)
+    keys = ("ts_utc", "station_id") if check_unique else ()
+    return TableRules("hourly_obs", tuple(HOURLY_OBS_FIELDS), tuple(checks), keys)
 
 
-def validate_daily_tmax(df: DataFrame) -> None:
+def daily_tmax_rules() -> TableRules:
     """Reference daily_tmax.py:77-134 (incl. C/F closeness ≤ 0.2)."""
-    from temp_data_pipeline_spark.schemas.tables import DAILY_TMAX_FIELDS
-
-    ds = "daily_tmax"
-    require_columns(df, DAILY_TMAX_FIELDS, ds)
-    violation_checks(
-        df,
-        [
-            null_check("date_local"),
-            null_check("station_id"),
-            null_check("tmax_c"),
-            null_check("tmax_f"),
-            null_check("updated_at_utc"),
-            range_check("tmax_c", -90, 60),
-            range_check("tmax_f", -130, 140),
-            range_check("coverage_hours", 0, 24, nullable=False),
-            nonneg_check("qc_flags"),
-            close_check("tmax_f", "tmax_c", 0.2),
-        ],
-        ds,
+    checks = (
+        null_check("date_local"),
+        null_check("station_id"),
+        null_check("tmax_c"),
+        null_check("tmax_f"),
+        null_check("updated_at_utc"),
+        range_check("tmax_c", -90, 60),
+        range_check("tmax_f", -130, 140),
+        range_check("coverage_hours", 0, 24, nullable=False),
+        nonneg_check("qc_flags"),
+        close_check("tmax_f", "tmax_c", 0.2),
     )
-    require_unique(df, ["date_local", "station_id"], ds)
+    return TableRules("daily_tmax", tuple(DAILY_TMAX_FIELDS), checks, ("date_local", "station_id"))
 
 
-def validate_daily_tmax_forecast(df: DataFrame) -> None:
+def daily_tmax_forecast_rules() -> TableRules:
     """Reference daily_tmax_forecast.py:77-134."""
-    from temp_data_pipeline_spark.schemas.tables import DAILY_TMAX_FORECAST_FIELDS
-
-    ds = "daily_tmax_forecast"
-    require_columns(df, DAILY_TMAX_FORECAST_FIELDS, ds)
-    violation_checks(
-        df,
-        [
-            null_check("station_id"),
-            null_check("issue_time_utc"),
-            null_check("target_date_local"),
-            range_check("tmax_pred_c", -90, 60),
-            range_check("tmax_pred_f", -130, 140),
-            range_check("lead_hours", -24, 720, nullable=False),
-            range_check("lat", -90, 90),
-            range_check("lon", -180, 180),
-            close_check("tmax_pred_f", "tmax_pred_c", 0.2),
-        ],
-        ds,
+    checks = (
+        null_check("station_id"),
+        null_check("issue_time_utc"),
+        null_check("target_date_local"),
+        range_check("tmax_pred_c", -90, 60),
+        range_check("tmax_pred_f", -130, 140),
+        range_check("lead_hours", -24, 720, nullable=False),
+        range_check("lat", -90, 90),
+        range_check("lon", -180, 180),
+        close_check("tmax_pred_f", "tmax_pred_c", 0.2),
     )
-    require_unique(df, ["station_id", "issue_time_utc", "target_date_local"], ds)
+    return TableRules(
+        "daily_tmax_forecast",
+        tuple(DAILY_TMAX_FORECAST_FIELDS),
+        checks,
+        ("station_id", "issue_time_utc", "target_date_local"),
+    )
 
 
-def validate_train_daily_tmax(df: DataFrame, allow_warmup_nulls: bool = True) -> None:
+def train_daily_tmax_rules(allow_warmup_nulls: bool = True) -> TableRules:
     """Reference train_daily_tmax.py:126-210."""
-    from temp_data_pipeline_spark.schemas.tables import TRAIN_DAILY_TMAX_FIELDS
-
-    ds = "train_daily_tmax"
-    require_columns(df, TRAIN_DAILY_TMAX_FIELDS, ds)
     checks = [
         null_check("station_id"),
         null_check("issue_time_utc"),
@@ -221,12 +266,139 @@ def validate_train_daily_tmax(df: DataFrame, allow_warmup_nulls: bool = True) ->
             null_check(c)
             for c in ["bias_7d", "bias_14d", "bias_30d", "rmse_14d", "rmse_30d", "sigma_lead"]
         ]
-    violation_checks(df, checks, ds)
-    require_unique(df, ["station_id", "issue_time_utc", "target_date_local"], ds)
+    return TableRules(
+        "train_daily_tmax",
+        tuple(TRAIN_DAILY_TMAX_FIELDS),
+        tuple(checks),
+        ("station_id", "issue_time_utc", "target_date_local"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# The two evaluators
+# ---------------------------------------------------------------------------
+
+
+def check_rules(df: DataFrame, rules: TableRules) -> None:
+    """Eager form: one aggregate over every row rule, one uniqueness
+    aggregate; raises ``SchemaValidationError`` at call time."""
+    require_columns(df, list(rules.required), rules.dataset)
+    violation_checks(df, list(rules.checks), rules.dataset)
+    if rules.unique:
+        require_unique(df, list(rules.unique), rules.dataset)
+
+
+_TAG = "stage check #"
+_FAILED = re.compile(
+    r"\[(?P<ds>[^\]]+)\] rule '(?P<rule>.*?)' failed \("
+    + re.escape(_TAG)
+    + r"(?P<id>[0-9a-f]+)\) on row (?P<row>\{.*\})"
+)
+_DUP = "__sg_key_rows"
+# a session's in-plan checks by id -> (rules, unchecked frame), for the
+# failure-path report; bounded: an older check reports the one row its
+# assertion saw instead of counts and samples
+_KEEP = 64
+
+
+def _checked(spark) -> OrderedDict:
+    reg = getattr(spark, "_sg_stage_checks", None)
+    if reg is None:
+        reg = spark._sg_stage_checks = OrderedDict()
+    return reg
+
+
+def assert_rules(df: DataFrame, rules: TableRules) -> DataFrame:
+    """In-plan form: ``df`` with every rule compiled into its plan.
+
+    Structural checks run now (no job). Row rules and uniqueness run
+    inside whatever job consumes the result: one filter that keeps
+    every row and raises on the first rule it violates.
+    """
+    require_columns(df, list(rules.required), rules.dataset)
+    cid = uuid.uuid4().hex[:12]
+    row = F.to_json(F.struct(*[F.col(f"`{c}`") for c in df.columns]))
+
+    def fail(rule: str) -> Column:
+        return F.raise_error(
+            F.concat(F.lit(f"[{rules.dataset}] rule '{rule}' failed ({_TAG}{cid}) on row "), row)
+        )
+
+    branches = list(rules.checks)
+    out = df
+    if rules.unique:
+        out = out.withColumn(_DUP, F.count(F.lit(1)).over(Window.partitionBy(*rules.unique)))
+        branches.append((unique_rule(rules.unique), F.col(_DUP) > 1))
+    guard = F.when(branches[0][1], fail(branches[0][0]))
+    for name, violation in branches[1:]:
+        guard = guard.when(violation, fail(name))
+    out = out.filter(guard.otherwise(F.lit(True)))
+    if rules.unique:
+        out = out.drop(_DUP)
+    reg = _checked(df.sparkSession)
+    reg[cid] = (rules, df)
+    while len(reg) > _KEEP:
+        reg.popitem(last=False)
+    out._sg_checked = rules.dataset  # a sink that would check again skips
+    return out
+
+
+def check_failure(spark, exc: BaseException) -> SchemaValidationError | None:
+    """The report for an in-plan assertion that aborted a job with
+    ``exc``, or None when ``exc`` is something else. Runs the eager
+    aggregate over the unchecked frame (failure path only); when that
+    finds nothing (the frame is no longer known, or its input changed)
+    the report holds the row the assertion saw."""
+    m = _FAILED.search(str(exc))
+    if m is None:
+        return None
+    entry = _checked(spark).get(m["id"])
+    if entry is not None:
+        rules, frame = entry
+        try:
+            check_rules(frame, rules)
+        except SchemaValidationError as report:
+            return report
+        except (PySparkException, Py4JJavaError) as inner:
+            # an upstream stage's in-plan check fired first
+            report = check_failure(spark, inner)
+            if report is None:
+                raise
+            return report
+    return SchemaValidationError(
+        f"[{m['ds']}] rule '{m['rule']}' failed; offending row: {m['row']}",
+        dataset=m["ds"],
+        rule=m["rule"],
+        samples=[m["row"]],
+    )
+
+
+# ---------------------------------------------------------------------------
+# Per-table eager validators
+# ---------------------------------------------------------------------------
+
+
+def validate_hourly_obs(
+    df: DataFrame, check_unique: bool = True, check_temp_range: bool = True
+) -> None:
+    check_rules(df, hourly_obs_rules(check_unique, check_temp_range))
+
+
+def validate_daily_tmax(df: DataFrame) -> None:
+    check_rules(df, daily_tmax_rules())
+
+
+def validate_daily_tmax_forecast(df: DataFrame) -> None:
+    check_rules(df, daily_tmax_forecast_rules())
+
+
+def validate_train_daily_tmax(df: DataFrame, allow_warmup_nulls: bool = True) -> None:
+    check_rules(df, train_daily_tmax_rules(allow_warmup_nulls))
 
 
 __all__ = [
     "SchemaValidationError",
+    "TableRules",
     "require_columns",
     "require_unique",
     "violation_checks",
@@ -234,6 +406,13 @@ __all__ = [
     "range_check",
     "nonneg_check",
     "close_check",
+    "hourly_obs_rules",
+    "daily_tmax_rules",
+    "daily_tmax_forecast_rules",
+    "train_daily_tmax_rules",
+    "check_rules",
+    "assert_rules",
+    "check_failure",
     "validate_hourly_obs",
     "validate_daily_tmax",
     "validate_daily_tmax_forecast",

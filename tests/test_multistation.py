@@ -167,31 +167,43 @@ def test_one_shuffle_per_stage(spark):
     """The plan contract at 1000×: clean = ONE exchange (dedup and
     spike windows share the station_id partitioning), daily = ONE
     group-agg exchange, features = ONE rolling-window exchange (the
-    truth join is broadcast, no data shuffle)."""
+    truth join is broadcast, no data shuffle). With validation on,
+    each stage's checks are in its plan and add no exchange: the
+    uniqueness windows' keys contain the stage's shuffle key. Chained
+    without a checkpoint, clean → daily is still one exchange."""
     sids = [f"S{i:03d}" for i in range(8)]
     hourly = _hourly(spark, sids)
     stations = spark.createDataFrame(
         [(s, _tz_of(int(s[1:]))) for s in sids], "station_id string, tz string"
     )
 
-    def shuffles(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.count("Exchange hashpartitioning")
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
-    clean = clean_hourly_obs(hourly, tie_breaker="ingest_seq",
-                             validate_input=False, validate_output=False)
-    assert shuffles(clean) == 1
-    clean_m = clean.localCheckpoint()
-    daily = build_daily_tmax(
-        clean_m.join(F.broadcast(stations), "station_id"),
-        station_tz=F.col("tz"),
-        updated_at_utc=STAMP, validate=False,
-    )
-    assert shuffles(daily) == 1
-    daily_m = daily.localCheckpoint()
-    train = build_train_daily_tmax(
-        _forecasts(spark, daily_m), daily_m, validate=False
-    )
-    assert shuffles(train) == 1
-    plan = train._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # truth join never shuffles data
+    def one_shuffle(df, checked):
+        p = plan(df)
+        assert p.count("Exchange hashpartitioning") == 1
+        assert ("raise_error" in p) == checked
+
+    for validate in (False, True):
+        clean = clean_hourly_obs(hourly, tie_breaker="ingest_seq",
+                                 validate_input=False, validate_output=validate)
+        one_shuffle(clean, validate)
+        chained = build_daily_tmax(
+            clean.join(F.broadcast(stations), "station_id"),
+            station_tz=F.col("tz"), updated_at_utc=STAMP, validate=validate,
+        )
+        one_shuffle(chained, validate)
+        clean_m = clean.localCheckpoint()
+        daily = build_daily_tmax(
+            clean_m.join(F.broadcast(stations), "station_id"),
+            station_tz=F.col("tz"),
+            updated_at_utc=STAMP, validate=validate,
+        )
+        one_shuffle(daily, validate)
+        daily_m = daily.localCheckpoint()
+        train = build_train_daily_tmax(
+            _forecasts(spark, daily_m), daily_m, validate=validate
+        )
+        one_shuffle(train, validate)
+        assert "BroadcastHashJoin" in plan(train)  # truth join never shuffles data
