@@ -1,7 +1,9 @@
 """Eval data loading: join → filters → ensure-features → split.
 
 Reference `eval/data.py:51-237`. One lazy plan up to the split
-numbering; the truth side of the join is broadcast (tiny).
+numbering; the truth side of the join is broadcast (tiny). The
+numbered frame is cached once: the empty-input check is the job that
+fills that cache, and train, val and test are filters over it.
 
 NOTE the reference quirk preserved on purpose: the eval-side seasonal
 fallback uses 365 (`eval/data.py:212-213`) while the feature-build
@@ -12,29 +14,32 @@ the feature stage they are kept, otherwise the 365 variant is added.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.eval.config import EvalConfig
-from temp_data_pipeline_spark.eval.splits import create_split
+from temp_data_pipeline_spark.eval.splits import _numbered, _strip, create_split
 
 
-@dataclass
 class EvalDataset:
-    train: DataFrame
-    val: DataFrame
-    test: DataFrame
-    full: DataFrame
+    """The filtered eval frame, numbered once (``numbered``, cached by
+    ``load_eval_data``), and its splits as filters over it."""
+
+    def __init__(self, numbered: DataFrame, conditions: tuple[Column, Column, Column]):
+        self.numbered = numbered
+        self.conditions = conditions
+        self.train, self.val, self.test = (_strip(numbered.filter(c)) for c in conditions)
+        self.full = _strip(numbered)
 
     def counts(self) -> dict[str, int]:
-        return {
-            "n_train": self.train.count(),
-            "n_val": self.val.count(),
-            "n_test": self.test.count(),
-            "n_full": self.full.count(),
-        }
+        """Split sizes in one aggregate over the numbered frame."""
+        names = ("n_train", "n_val", "n_test")
+        row = self.numbered.agg(
+            *[F.count_if(c).alias(k) for k, c in zip(names, self.conditions)],
+            F.count(F.lit(1)).alias("n_full"),
+        ).first()
+        return {k: int(row[k]) for k in (*names, "n_full")}
 
 
 def join_forecast_truth(forecast_df: DataFrame, truth_df: DataFrame) -> DataFrame:
@@ -110,8 +115,8 @@ def load_eval_data(
     """Full eval-data pipeline (reference `eval/data.py:51-98`)."""
     df = feature_df if feature_df is not None else join_forecast_truth(forecast_df, truth_df)
     df = apply_filters(df, config)
-    df = ensure_features(df)
-    if df.limit(1).count() == 0:
+    numbered = _numbered(ensure_features(df)).cache()
+    if numbered.isEmpty():  # the one window pass, filling the cache
+        numbered.unpersist()
         raise ValueError("No data remaining after filters.")
-    train, val, test = create_split(config.split).split(df)
-    return EvalDataset(train=train, val=val, test=test, full=df)
+    return EvalDataset(numbered, create_split(config.split).conditions())

@@ -1,8 +1,12 @@
-"""Evaluation metrics as single-pass aggregations (reference eval/metrics.py).
+"""Evaluation metrics as grouped aggregates (reference eval/metrics.py).
 
-Each metric family is ONE `agg()` over the predictions frame — no
-driver-side arrays. ddof pins (SURVEY §4 item 2): std_error uses
-np.std semantics → `stddev_pop`.
+Every model's predictions are stacked into one frame keyed by its
+index in the run (`MODEL`, see `stack_models`), and a metric family is
+ONE aggregate grouped by model (`grouped_by_model`): the runner
+evaluates all models in one pass, and `compute_forecast_metrics` /
+`compute_calibration_metrics` are the one-model case of the same
+aggregate. No driver-side arrays. ddof pins (SURVEY §4 item 2):
+std_error uses np.std semantics → `stddev_pop`.
 
 scipy isn't available here; `norm_ppf` uses exact precomputed z for
 the standard levels and Acklam's rational approximation (public
@@ -14,10 +18,15 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+
+# a stacked frame's model column: the model's index in the run
+MODEL = "_model"
+DEFAULT_COVERAGE_LEVELS = (0.50, 0.80, 0.90)
 
 # z = norm.ppf(1 - (1-level)/2) for the reference's coverage levels
 _Z_TABLE = {
@@ -114,10 +123,18 @@ class EvalMetrics:
         return out
 
 
-def forecast_metric_aggs(e, y):
-    """The shared aggregate list for forecast metrics; reused by the
-    grouped slicing pass so slices and headline metrics are one code
-    path (reference computes them with the same function too)."""
+def stack_models(frames: list[DataFrame]) -> DataFrame:
+    """One frame of every model's rows, ``frames[i]`` tagged ``MODEL = i``."""
+    return reduce(
+        DataFrame.unionByName,
+        [f.withColumn(MODEL, F.lit(i)) for i, f in enumerate(frames)],
+    )
+
+
+def forecast_metric_aggs() -> list[Column]:
+    """MAE/RMSE/bias/std/R² inputs (see ``_metrics_from_row``)."""
+    e = (F.col("y_pred_f") - F.col("y_true_f")).cast("double")
+    y = F.col("y_true_f").cast("double")
     return [
         F.count(F.lit(1)).alias("n_samples"),
         F.avg(F.abs(e)).alias("mae"),
@@ -127,6 +144,45 @@ def forecast_metric_aggs(e, y):
         F.sum(e * e).alias("_ss_res"),
         F.var_pop(y).alias("_var_y"),
     ]
+
+
+def calibration_aggs(levels=DEFAULT_COVERAGE_LEVELS) -> list[Column]:
+    """Gaussian PI coverage + sharpness for ALL levels (reference
+    metrics.py:141-197 loops levels over numpy arrays)."""
+    y, mu, sig = F.col("y_true_f"), F.col("y_pred_f"), F.col("y_pred_sigma_f")
+    aggs = [F.avg(sig).alias("mean_sigma")]
+    for lv in levels:
+        z = z_for_level(lv)
+        lo, hi = mu - z * sig, mu + z * sig
+        tag = str(int(lv * 100))
+        aggs.append(F.avg(((y >= lo) & (y <= hi)).cast("double")).alias(f"cov_{tag}"))
+        aggs.append(F.avg(hi - lo).alias(f"sharp_{tag}"))
+    return aggs
+
+
+def grouped_by_model(stacked: DataFrame, keys=(), aggs: list[Column] = ()) -> list[Row]:
+    """``aggs`` over a stacked frame per model and per (model, k) for
+    each of ``keys``: the groups of GROUPING SETS ``(MODEL)``,
+    ``(MODEL, k)``, ... Each row carries ``MODEL``, ``_set`` (0 on a
+    model's own row, i + 1 for ``keys[i]``) and ``_key`` (that key's
+    value as a string; null on a model's own row).
+
+    The rows are fanned out to their groups by ``inline``, not by
+    GROUPING SETS: Expand's output has no known partitioning, so a
+    GROUPING SETS aggregate always shuffles (two jobs), while
+    ``inline`` keeps its input's. Over a one-partition stack (the
+    runner's) the aggregate then needs no exchange and runs as one
+    job."""
+    fan = ["named_struct('_set', 0, '_key', CAST(NULL AS STRING))"] + [
+        f"named_struct('_set', {i + 1}, '_key', CAST({k} AS STRING))"
+        for i, k in enumerate(keys)
+    ]
+    return (
+        stacked.selectExpr("*", f"inline(array({', '.join(fan)}))")
+        .groupBy(MODEL, "_set", "_key")
+        .agg(*aggs)
+        .collect()
+    )
 
 
 def _metrics_from_row(row) -> ForecastMetrics:
@@ -143,30 +199,7 @@ def _metrics_from_row(row) -> ForecastMetrics:
     )
 
 
-def compute_forecast_metrics(predictions_df: DataFrame) -> ForecastMetrics:
-    """MAE/RMSE/bias/std/R² in one pass (reference metrics.py:108-138)."""
-    e = (F.col("y_pred_f") - F.col("y_true_f")).cast("double")
-    y = F.col("y_true_f").cast("double")
-    return _metrics_from_row(predictions_df.agg(*forecast_metric_aggs(e, y)).first())
-
-
-def compute_calibration_metrics(
-    predictions_df: DataFrame, coverage_levels: list[float] | None = None
-) -> CalibrationMetrics:
-    """Gaussian PI coverage + sharpness, one pass for ALL levels
-    (reference metrics.py:141-197 loops levels over numpy arrays)."""
-    levels = coverage_levels or [0.50, 0.80, 0.90]
-    y, mu, sig = F.col("y_true_f"), F.col("y_pred_f"), F.col("y_pred_sigma_f")
-    aggs = [F.avg(sig).alias("mean_sigma")]
-    for lv in levels:
-        z = z_for_level(lv)
-        lo, hi = mu - z * sig, mu + z * sig
-        tag = str(int(lv * 100))
-        aggs.append(
-            F.avg(((y >= lo) & (y <= hi)).cast("double")).alias(f"cov_{tag}")
-        )
-        aggs.append(F.avg(hi - lo).alias(f"sharp_{tag}"))
-    row = predictions_df.agg(*aggs).first()
+def _calibration_from_row(row) -> CalibrationMetrics:
     get = lambda k: float(row[k]) if row[k] is not None else 0.0
     return CalibrationMetrics(
         coverage_50=get("cov_50"),
@@ -177,6 +210,21 @@ def compute_calibration_metrics(
         sharpness_80=get("sharp_80"),
         sharpness_90=get("sharp_90"),
     )
+
+
+def compute_forecast_metrics(predictions_df: DataFrame) -> ForecastMetrics:
+    """MAE/RMSE/bias/std/R² in one pass (reference metrics.py:108-138)."""
+    (row,) = grouped_by_model(stack_models([predictions_df]), aggs=forecast_metric_aggs())
+    return _metrics_from_row(row)
+
+
+def compute_calibration_metrics(
+    predictions_df: DataFrame, coverage_levels: list[float] | None = None
+) -> CalibrationMetrics:
+    """Gaussian PI coverage + sharpness, one pass for all levels."""
+    levels = coverage_levels or DEFAULT_COVERAGE_LEVELS
+    (row,) = grouped_by_model(stack_models([predictions_df]), aggs=calibration_aggs(levels))
+    return _calibration_from_row(row)
 
 
 def compute_pinball_loss(

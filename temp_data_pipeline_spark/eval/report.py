@@ -10,8 +10,13 @@ logic carries over):
         predictions.parquet, residuals.parquet
 
 Timestamps are injectable for reproducible diffs (SURVEY §7.4 item 7).
-Predictions/residuals are written via Spark parquet writers (the data
-may be large); JSON artifacts are driver-side (they are tiny).
+JSON artifacts are driver-side (they are tiny). Predictions and
+residuals are written by Spark (the data may be large): all models'
+predictions in ONE write partitioned by model index, all residuals in
+a second, each into a `.tmp-*` dir under the run dir; each partition
+dir is then renamed to `models/<model_name>/{predictions,residuals}
+.parquet`. The index, not the name, is the partition value, so no
+model name needs path escaping.
 """
 
 from __future__ import annotations
@@ -19,12 +24,16 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import platform
+import shutil
+import uuid
 from pathlib import Path
 from typing import Any
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from temp_data_pipeline_spark.eval.runner import EvalRunResult, ModelEvalResult
+from temp_data_pipeline_spark.eval.metrics import MODEL
+from temp_data_pipeline_spark.eval.runner import EvalRunResult
 
 PRED_COLS = [
     "station_id",
@@ -51,24 +60,20 @@ def _meta(run_id: str, now: _dt.datetime | None = None) -> dict[str, Any]:
     }
 
 
-def write_model_artifacts(
-    res: ModelEvalResult, model_dir: Path, write_parquet: bool = True
-) -> None:
-    _write_json(model_dir / "metrics.json", res.metrics.to_dict())
-    _write_json(model_dir / "slices.json", res.metrics.slices)
-    if write_parquet:
-        pred = res.predictions
-        cols = [c for c in PRED_COLS if c in pred.columns]
-        pred.select(*cols).write.mode("overwrite").parquet(
-            str(model_dir / "predictions.parquet")
-        )
-        resid = pred.select(
-            *[c for c in cols if c.startswith(("station", "target", "lead"))],
-            (F.col("y_pred_f") - F.col("y_true_f")).alias("residual_f"),
-            F.abs(F.col("y_pred_f") - F.col("y_true_f")).alias("abs_error_f"),
-            F.pow(F.col("y_pred_f") - F.col("y_true_f"), 2).alias("sq_error_f"),
-        )
-        resid.write.mode("overwrite").parquet(str(model_dir / "residuals.parquet"))
+def _write_by_model(frame: DataFrame, run_dir: Path, names: dict[int, str], kind: str) -> None:
+    """One write of ``frame`` (keyed by MODEL), partitioned by model
+    index; partition i becomes ``models/<names[i]>/<kind>.parquet``."""
+    tmp = run_dir / f".tmp-{kind}-{uuid.uuid4().hex[:8]}"
+    frame.withColumnRenamed(MODEL, "model").write.partitionBy("model").parquet(str(tmp))
+    try:
+        for i, name in names.items():
+            dest = run_dir / "models" / name / f"{kind}.parquet"
+            shutil.rmtree(dest, ignore_errors=True)
+            (tmp / f"model={i}").rename(dest)
+            for marker in tmp.glob("*_SUCCESS*"):  # the write's marker and its checksum
+                shutil.copy(marker, dest / marker.name)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def write_all_artifacts(
@@ -85,7 +90,22 @@ def write_all_artifacts(
     comparison["timestamp_utc"] = (now or _dt.datetime.now(_dt.timezone.utc)).isoformat()
     _write_json(run_dir / "comparison.json", comparison)
     for name, res in result.models.items():
-        write_model_artifacts(res, run_dir / "models" / name, write_parquet)
+        _write_json(run_dir / "models" / name / "metrics.json", res.metrics.to_dict())
+        _write_json(run_dir / "models" / name / "slices.json", res.metrics.slices)
+    if write_parquet:
+        pred = result.predictions
+        names = {res.index: name for name, res in result.models.items()}
+        cols = [c for c in PRED_COLS if c in pred.columns]
+        err = F.col("y_pred_f") - F.col("y_true_f")
+        _write_by_model(pred.select(MODEL, *cols), run_dir, names, "predictions")
+        resid = pred.select(
+            MODEL,
+            *[c for c in cols if c.startswith(("station", "target", "lead"))],
+            err.alias("residual_f"),
+            F.abs(err).alias("abs_error_f"),
+            F.pow(err, 2).alias("sq_error_f"),
+        )
+        _write_by_model(resid, run_dir, names, "residuals")
     return run_dir
 
 

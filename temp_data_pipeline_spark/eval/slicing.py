@@ -1,27 +1,45 @@
-"""Sliced metrics in ONE shuffle via GROUPING SETS (reference eval/slicing.py).
+"""Every model's metrics, calibration and slices in ONE aggregate
+(reference eval/slicing.py).
 
-The reference runs 4 sequential pandas passes (month, season, lead
-bucket, temp regime, `slicing.py:22-53`). Here the four slice keys are
-derived columns and a single GROUPING SETS aggregation computes every
-slice in one shuffle — the §4 physical-design win. Temperature-regime
-cut points (q25/q75 of y_true_f) are exact interpolated percentiles
-(`percentile`, matching np.percentile) computed in a prior cheap agg.
+The reference runs, per model, 4 sequential pandas passes (month,
+season, lead bucket, temp regime, `slicing.py:22-53`) beside its
+headline metrics. Here the slice keys are derived columns of the
+stacked predictions frame (`metrics.stack_models`) and one aggregate
+over the groups of GROUPING SETS ``(model)``, ``(model, month)``,
+``(model, season)``, ``(model, regime)``, ``(model, lead_bucket)``
+(`metrics.grouped_by_model`) computes every model's forecast and
+calibration metrics and every slice. The
+temperature-regime cut points (q25/q75 of y_true_f) are exact
+interpolated percentiles (`percentile`, matching np.percentile), taken
+by a window over the frame the models are scored on
+(`with_regime_cuts`): the eval's test split is one partition, so the
+window needs no exchange. The aggregate carries them through, and the
+labels are built on the driver from the values the rows were cut by.
 
 Slices with <10 rows are dropped (`slicing.py:72,100,129,152`), and
-output labels/dict shape match the reference byte-for-byte so run
-artifacts stay comparable.
+output labels/dict shape match the reference so run artifacts stay
+comparable. Slice keys come out in a fixed order: months ascending,
+seasons DJF→SON, lead buckets from short to long, regimes from cold
+to hot, not in the aggregate's hash order.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.eval.metrics import (
+    MODEL,
+    DEFAULT_COVERAGE_LEVELS,
+    EvalMetrics,
+    _calibration_from_row,
     _metrics_from_row,
+    calibration_aggs,
     forecast_metric_aggs,
+    grouped_by_model,
+    stack_models,
 )
 
 SEASON_OF_MONTH = {
@@ -30,41 +48,40 @@ SEASON_OF_MONTH = {
     6: "JJA", 7: "JJA", 8: "JJA",
     9: "SON", 10: "SON", 11: "SON",
 }
+SEASONS = ("DJF", "MAM", "JJA", "SON")
 LEAD_BUCKETS = [(0, 24), (24, 48), (48, 72), (72, 120)]
 MIN_SLICE_ROWS = 10
+COLD, NORMAL, HOT = 0, 1, 2
 
 
-def _season_expr():
-    expr = F.lit(None).cast("string")
-    for m, s in SEASON_OF_MONTH.items():
-        expr = F.when(F.col("month") == m, F.lit(s)).otherwise(expr)
-    return expr
-
-
-def _lead_bucket_expr():
-    expr = F.lit(None).cast("string")
-    for lo, hi in LEAD_BUCKETS:
-        expr = F.when(
-            (F.col("lead_hours") >= lo) & (F.col("lead_hours") < hi),
-            F.lit(f"{lo}-{hi}h"),
-        ).otherwise(expr)
-    return expr
-
-
-def _regime_exprs(q25: float, q75: float):
-    y = F.col("y_true_f")
-    label = (
-        F.when(y < q25, F.lit(f"cold (<{q25:.0f}°F)"))
-        .when(y > q75, F.lit(f"hot (>{q75:.0f}°F)"))
-        .otherwise(F.lit(f"normal ({q25:.0f}-{q75:.0f}°F)"))
+def _season_sql() -> str:
+    whens = " ".join(
+        f"WHEN month IN ({', '.join(str(m) for m, x in SEASON_OF_MONTH.items() if x == s)})"
+        f" THEN '{s}'"
+        for s in SEASONS
     )
-    return label
+    return f"CASE {whens} END"
 
 
-def compute_metrics_by_slice(
-    predictions_df: DataFrame, exact_percentile: bool = True
-) -> dict[str, dict[str, Any]]:
-    """All four slice families in one GROUPING SETS pass.
+def _lead_bucket_sql() -> str:
+    whens = " ".join(
+        f"WHEN lead_hours >= {lo} AND lead_hours < {hi} THEN '{lo}-{hi}h'"
+        for lo, hi in LEAD_BUCKETS
+    )
+    return f"CASE {whens} END"
+
+
+def _regime_labels(q25: float, q75: float) -> dict[int, str]:
+    return {
+        COLD: f"cold (<{q25:.0f}°F)",
+        NORMAL: f"normal ({q25:.0f}-{q75:.0f}°F)",
+        HOT: f"hot (>{q75:.0f}°F)",
+    }
+
+
+def with_regime_cuts(predictions_df: DataFrame, exact_percentile: bool = True) -> DataFrame:
+    """``predictions_df`` plus ``_q``: the q25/q75 of its y_true_f,
+    the temperature-regime cut points.
 
     exact_percentile=True (default) reproduces the reference's
     np.percentile cut points exactly; False switches the regime cuts
@@ -72,75 +89,81 @@ def compute_metrics_by_slice(
     100 TB-scale prediction frames — regime labels then shift by at
     most the sketch's ±0.01 % rank error.
     """
-    cols = set(predictions_df.columns)
+    fn = "percentile" if exact_percentile else "percentile_approx"
+    q = F.expr(f"{fn}(y_true_f, array(0.25D, 0.75D))").over(Window.partitionBy())
+    return predictions_df.withColumn("_q", q)
+
+
+def evaluate_models(
+    stacked: DataFrame, n_models: int, coverage_levels=DEFAULT_COVERAGE_LEVELS
+) -> list[EvalMetrics]:
+    """Forecast metrics, calibration (when the frame has
+    ``y_pred_sigma_f``) and all slice families of each of ``n_models``
+    models in ``stacked``, from one aggregate. Each model's rows carry
+    its regime cut points (``with_regime_cuts``)."""
+    cols = set(stacked.columns)
     has_month = "month" in cols
     has_lead = "lead_hours" in cols
+    has_sigma = "y_pred_sigma_f" in cols
 
-    # regime cut points: exact interpolating percentiles == np.percentile
-    fn = "percentile" if exact_percentile else "percentile_approx"
-    qrow = predictions_df.agg(
-        F.expr(f"{fn}(y_true_f, array(0.25D, 0.75D))").alias("q")
-    ).first()
-    q25, q75 = float(qrow["q"][0]), float(qrow["q"][1])
-
-    df = predictions_df.withColumn("_regime", _regime_exprs(q25, q75))
+    derived = [
+        f"CASE WHEN y_true_f < _q[0] THEN {COLD} WHEN y_true_f > _q[1] THEN {HOT}"
+        f" ELSE {NORMAL} END AS _regime"
+    ]
     keys = ["_regime"]
     if has_month:
-        df = df.withColumn("_month", F.col("month")).withColumn("_season", _season_expr())
+        derived += ["month AS _month", f"{_season_sql()} AS _season"]
         keys = ["_month", "_season"] + keys
     if has_lead:
-        df = df.withColumn("_lead_bucket", _lead_bucket_expr())
+        derived.append(f"{_lead_bucket_sql()} AS _lead_bucket")
         keys.append("_lead_bucket")
+    df = stacked.selectExpr("*", *derived)
 
-    e = (F.col("y_pred_f") - F.col("y_true_f")).cast("double")
-    y = F.col("y_true_f").cast("double")
-    df.createOrReplaceTempView("_slice_input")
-    sets = ", ".join(f"({k})" for k in keys)
-    agg_sql = ", ".join(
-        [
-            "COUNT(*) AS n_samples",
-            "AVG(ABS(y_pred_f - y_true_f)) AS mae",
-            "SQRT(AVG((y_pred_f - y_true_f) * (y_pred_f - y_true_f))) AS rmse",
-            "AVG(y_pred_f - y_true_f) AS bias",
-            "STDDEV_POP(y_pred_f - y_true_f) AS std_error",
-            "SUM((y_pred_f - y_true_f) * (y_pred_f - y_true_f)) AS _ss_res",
-            "VAR_POP(y_true_f) AS _var_y",
-        ]
-    )
-    rows = df.sparkSession.sql(
-        f"SELECT {', '.join(keys)}, {agg_sql} FROM _slice_input "
-        f"GROUP BY GROUPING SETS ({sets})"
-    ).collect()
+    aggs = [F.max(F.col("_q")[0]).alias("_q25"), F.max(F.col("_q")[1]).alias("_q75")]
+    if has_sigma:
+        aggs += calibration_aggs(coverage_levels)
+    rows = grouped_by_model(df, keys, forecast_metric_aggs() + aggs)
 
-    slices: dict[str, dict[str, Any]] = {}
-    if has_month:
-        slices["by_month"] = {}
-        slices["by_season"] = {}
-    if has_lead:
-        slices["by_lead_bucket"] = {}
-    slices["by_temp_regime"] = {}
-
+    heads = {row[MODEL]: row for row in rows if row["_set"] == 0}
+    cells: list[dict[str, dict]] = [{k: {} for k in keys} for _ in range(n_models)]
     for row in rows:
-        if row["n_samples"] < MIN_SLICE_ROWS:
-            continue
-        md = _metrics_from_row(row).to_dict()
-        if has_month and row["_month"] is not None:
-            slices["by_month"][str(row["_month"])] = md
-        elif has_month and row["_season"] is not None:
-            slices["by_season"][row["_season"]] = md
-        elif has_lead and row["_lead_bucket"] is not None:
-            slices["by_lead_bucket"][row["_lead_bucket"]] = md
-        elif row["_regime"] is not None:
-            slices["by_temp_regime"][row["_regime"]] = md
+        if row["_set"] and row["_key"] is not None and row["n_samples"] >= MIN_SLICE_ROWS:
+            key = keys[row["_set"] - 1]
+            cells[row[MODEL]][key][row["_key"]] = _metrics_from_row(row).to_dict()
 
-    # stable ordering to match the reference's sorted/fixed iteration
-    if has_month:
-        slices["by_month"] = dict(
-            sorted(slices["by_month"].items(), key=lambda kv: int(kv[0]))
-        )
-        slices["by_season"] = {
-            s: slices["by_season"][s]
-            for s in ["DJF", "MAM", "JJA", "SON"]
-            if s in slices["by_season"]
+    out = []
+    for i in range(n_models):
+        head, got = heads[i], cells[i]
+        slices: dict[str, dict[str, Any]] = {}
+        if has_month:
+            slices["by_month"] = {m: got["_month"][m] for m in sorted(got["_month"], key=int)}
+            slices["by_season"] = {s: got["_season"][s] for s in SEASONS if s in got["_season"]}
+        if has_lead:
+            slices["by_lead_bucket"] = {
+                b: got["_lead_bucket"][b]
+                for b in (f"{lo}-{hi}h" for lo, hi in LEAD_BUCKETS)
+                if b in got["_lead_bucket"]
+            }
+        labels = _regime_labels(float(head["_q25"]), float(head["_q75"]))
+        regimes = got["_regime"]
+        slices["by_temp_regime"] = {
+            labels[r]: regimes[str(r)] for r in (COLD, NORMAL, HOT) if str(r) in regimes
         }
-    return slices
+        out.append(
+            EvalMetrics(
+                forecast=_metrics_from_row(head),
+                calibration=_calibration_from_row(head) if has_sigma else None,
+                slices=slices,
+            )
+        )
+    return out
+
+
+def compute_metrics_by_slice(
+    predictions_df: DataFrame, exact_percentile: bool = True
+) -> dict[str, dict[str, Any]]:
+    """All four slice families of one model: the one-model case of
+    ``evaluate_models``."""
+    stacked = stack_models([with_regime_cuts(predictions_df, exact_percentile)])
+    (res,) = evaluate_models(stacked, 1)
+    return res.slices

@@ -4,8 +4,9 @@ Positional splits need a total order. The eval frame is the *joined*
 forecast⋈truth output — thousands of rows per station-decade, never
 the raw-data path — so a single-partition `row_number` window is the
 right tool (SURVEY §4 item 3). The numbering is computed once and each
-split is a parameterized filter over it; Catalyst collapses the
-filters into one pass per returned frame.
+split is a filter over it (`conditions`); `data.load_eval_data` caches
+the numbered frame once and filters train, val and test out of that
+cache.
 
 Semantics mirror pandas `iloc` cuts exactly:
 - static: train = rows [0, int(n·train_frac)), val = next
@@ -24,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.eval.config import SplitConfig
@@ -33,11 +34,13 @@ ORDER_COLS = ("station_id", "target_date_local")
 
 
 def _numbered(df: DataFrame, order_cols=ORDER_COLS) -> DataFrame:
-    """Attach 1-based global row_number `_rn` and total count `_n`."""
-    w = Window.partitionBy(F.lit(1)).orderBy(*[F.col(c) for c in order_cols])
-    w_all = Window.partitionBy(F.lit(1)).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    """Attach 1-based global row_number `_rn` and total count `_n`.
+
+    The windows have no partition key, so the result is ONE partition
+    and a global aggregate over it (a model fit, the split counts)
+    needs no exchange of its own."""
+    w = Window.orderBy(*[F.col(c) for c in order_cols])
+    w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return df.withColumn("_rn", F.row_number().over(w)).withColumn(
         "_n", F.count(F.lit(1)).over(w_all)
     )
@@ -47,41 +50,43 @@ def _strip(df: DataFrame) -> DataFrame:
     return df.drop("_rn", "_n")
 
 
+class _PositionalSplit:
+    def conditions(self) -> tuple[Column, Column, Column]:
+        """The (train, val, test) filters over a `_numbered` frame."""
+        raise NotImplementedError
+
+    def split(self, df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+        nd = _numbered(df)
+        train, val, test = (_strip(nd.filter(c)) for c in self.conditions())
+        return train, val, test
+
+
 @dataclass
-class StaticSplit:
+class StaticSplit(_PositionalSplit):
     train_frac: float = 0.70
     val_frac: float = 0.15
     test_frac: float = 0.15
 
-    def split(self, df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-        nd = _numbered(df)
+    def conditions(self) -> tuple[Column, Column, Column]:
+        rn = F.col("_rn")
         train_end = F.floor(F.col("_n") * self.train_frac)
         val_end = F.floor(F.col("_n") * (self.train_frac + self.val_frac))
-        train = _strip(nd.filter(F.col("_rn") <= train_end))
-        val = _strip(nd.filter((F.col("_rn") > train_end) & (F.col("_rn") <= val_end)))
-        test = _strip(nd.filter(F.col("_rn") > val_end))
-        return train, val, test
+        return rn <= train_end, (rn > train_end) & (rn <= val_end), rn > val_end
 
 
 @dataclass
-class WalkForwardSplit:
+class WalkForwardSplit(_PositionalSplit):
     window_size: int
     step_size: int
     expanding: bool = False
 
-    def split(self, df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-        nd = _numbered(df)
+    def conditions(self) -> tuple[Column, Column, Column]:
+        rn = F.col("_rn")
         test_start = F.col("_n") - self.step_size  # rows with _rn > test_start
-        if self.expanding:
-            train_cond = F.col("_rn") <= test_start
-        else:
-            train_cond = (F.col("_rn") > test_start - self.window_size) & (
-                F.col("_rn") <= test_start
-            )
-        train = _strip(nd.filter(train_cond))
-        val = _strip(nd.filter(F.lit(False)))  # walk-forward has no val set
-        test = _strip(nd.filter(F.col("_rn") > test_start))
-        return train, val, test
+        train = rn <= test_start
+        if not self.expanding:
+            train = (rn > test_start - self.window_size) & train
+        return train, F.lit(False), rn > test_start  # walk-forward has no val set
 
     def generate_folds(self, df: DataFrame) -> list[tuple[DataFrame, DataFrame]]:
         """All folds as filter pairs over one numbered frame.

@@ -4,17 +4,20 @@ The reference validates eagerly per rule with pandas boolean masks
 (`src/tempdata/schemas/validate.py:39-482`, 10 generic validators) and
 reports the failing count + first-5 failing rows. Here a table's rules
 are DATA: a ``TableRules`` names its required columns, its
-(rule_name, is_violation_column) checks and its unique keys
-(``hourly_obs_rules``, ``daily_tmax_rules``, ...). Two evaluators read
+(rule_name, is-violation SQL predicate) checks and its unique keys
+(``hourly_obs_rules``, ``daily_tmax_rules``, ...). The predicates are
+SQL text, so building a check is string work plus a few plan calls,
+not hundreds of Column round trips to the JVM. Two evaluators read
 the same declaration:
 
 - ``check_rules`` runs them EAGERLY as one aggregate: every row rule
-  becomes a `sum(when(violation,1))` in a single `agg` (one scan,
-  predicate columns only, regardless of rule count), uniqueness a
-  `groupBy(keys).count() > 1`; only on failure does a `limit(5)` job
-  sample offending rows. The ``validate_*`` functions are this form.
+  becomes a `sum(CASE WHEN violation THEN 1 ELSE 0 END)` in a single
+  `selectExpr` (one scan, predicate columns only, regardless of rule
+  count), uniqueness a `groupBy(keys).count() > 1`; only on failure
+  does a `limit(5)` job sample offending rows. The ``validate_*``
+  functions are this form.
 - ``assert_rules`` compiles them INTO THE PLAN of the frame a stage
-  returns: one row-preserving filter whose CASE raises
+  returns: one row-preserving `filter("CASE … END")` that raises
   (`raise_error`) on the first violated rule of a row, with uniqueness
   as a `count(*) over (partition by keys)` window. Every row is still
   checked, but by whatever job consumes the frame; no query of its
@@ -40,7 +43,7 @@ from dataclasses import dataclass
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.schemas import qc_flags as qc
@@ -87,8 +90,8 @@ def require_columns(df: DataFrame, required: list[str], dataset: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def violation_checks(df: DataFrame, checks: list[tuple[str, Column]], dataset: str) -> None:
-    """Run all (rule_name, is_violation_column) checks in one pass.
+def violation_checks(df: DataFrame, checks: list[tuple[str, str]], dataset: str) -> None:
+    """Run all (rule_name, is-violation SQL predicate) checks in one pass.
 
     Raises SchemaValidationError naming every failing rule, with ≤5
     sample rows for the first one (mirrors the reference's error
@@ -96,15 +99,15 @@ def violation_checks(df: DataFrame, checks: list[tuple[str, Column]], dataset: s
     """
     if not checks:
         return
-    counts = df.agg(
-        *[F.sum(F.when(c, 1).otherwise(0)).alias(name) for name, c in checks]
+    counts = df.selectExpr(
+        *[f"sum(CASE WHEN {pred} THEN 1 ELSE 0 END)" for _, pred in checks]
     ).first()
-    failed = [(name, counts[name]) for name, _ in checks if (counts[name] or 0) > 0]
+    failed = [(name, n) for (name, _), n in zip(checks, counts) if (n or 0) > 0]
     if not failed:
         return
     first_rule = failed[0][0]
-    first_col = dict(checks)[first_rule]
-    sample = [r.asDict() for r in df.filter(first_col).limit(5).collect()]
+    first_pred = dict(checks)[first_rule]
+    sample = [r.asDict() for r in df.filter(first_pred).limit(5).collect()]
     raise SchemaValidationError(
         f"[{dataset}] {len(failed)} rule(s) failed: "
         + "; ".join(f"{n} ({c} rows)" for n, c in failed)
@@ -139,29 +142,45 @@ def require_unique(df: DataFrame, keys: list[str], dataset: str) -> None:
         )
 
 
-# -- check-column builders (each returns an is-violation Column) --
+# -- check builders (each returns a rule name and an is-violation SQL predicate) --
 
 
-def null_check(col: str) -> tuple[str, Column]:
-    return (f"no_nulls[{col}]", F.col(col).isNull())
+def _ident(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
 
 
-def range_check(col: str, lo: float, hi: float, nullable: bool = True) -> tuple[str, Column]:
-    v = (F.col(col) < lo) | (F.col(col) > hi)
+def _num(v: float) -> str:
+    """A SQL literal of the same type a Column literal of ``v`` has:
+    INT for an int, DOUBLE (not DECIMAL) for a float."""
+    return repr(v) + ("D" if isinstance(v, float) else "")
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def null_check(col: str) -> tuple[str, str]:
+    return (f"no_nulls[{col}]", f"{_ident(col)} IS NULL")
+
+
+def range_check(col: str, lo: float, hi: float, nullable: bool = True) -> tuple[str, str]:
+    c = _ident(col)
+    v = f"({c} < {_num(lo)} OR {c} > {_num(hi)})"
     if nullable:
-        v = F.col(col).isNotNull() & v
+        v = f"{c} IS NOT NULL AND {v}"
     return (f"range[{col}∈[{lo},{hi}]]", v)
 
 
-def nonneg_check(col: str) -> tuple[str, Column]:
-    return (f"nonnegative[{col}]", F.col(col).isNotNull() & (F.col(col) < 0))
+def nonneg_check(col: str) -> tuple[str, str]:
+    c = _ident(col)
+    return (f"nonnegative[{col}]", f"{c} IS NOT NULL AND {c} < 0")
 
 
-def close_check(col_f: str, col_c: str, tol: float = 0.2) -> tuple[str, Column]:
+def close_check(col_f: str, col_c: str, tol: float = 0.2) -> tuple[str, str]:
     """C/F consistency: |f − (c·9/5+32)| ≤ tol (reference validate.py:373-425)."""
     return (
         f"close[{col_f}≈{col_c}*9/5+32±{tol}]",
-        F.abs(F.col(col_f) - (F.col(col_c) * 9 / 5 + 32)) > tol,
+        f"abs({_ident(col_f)} - ({_ident(col_c)} * 9 / 5 + 32)) > {_num(tol)}",
     )
 
 
@@ -172,13 +191,12 @@ def close_check(col_f: str, col_c: str, tol: float = 0.2) -> tuple[str, Column]:
 
 @dataclass(frozen=True)
 class TableRules:
-    """One table's rules: required columns, named violation columns
-    and unique keys. Built by a function, not at import: a Column
-    needs a live session."""
+    """One table's rules: required columns, named is-violation SQL
+    predicates and unique keys."""
 
     dataset: str
     required: tuple[str, ...]
-    checks: tuple[tuple[str, Column], ...]
+    checks: tuple[tuple[str, str], ...]
     unique: tuple[str, ...] = ()
 
 
@@ -317,22 +335,20 @@ def assert_rules(df: DataFrame, rules: TableRules) -> DataFrame:
     """
     require_columns(df, list(rules.required), rules.dataset)
     cid = uuid.uuid4().hex[:12]
-    row = F.to_json(F.struct(*[F.col(f"`{c}`") for c in df.columns]))
+    row = f"to_json(struct({', '.join(_ident(c) for c in df.columns)}))"
 
-    def fail(rule: str) -> Column:
-        return F.raise_error(
-            F.concat(F.lit(f"[{rules.dataset}] rule '{rule}' failed ({_TAG}{cid}) on row "), row)
-        )
+    def fail(rule: str) -> str:
+        msg = f"[{rules.dataset}] rule '{rule}' failed ({_TAG}{cid}) on row "
+        return f"raise_error(concat({_sql_str(msg)}, {row}))"
 
     branches = list(rules.checks)
     out = df
     if rules.unique:
-        out = out.withColumn(_DUP, F.count(F.lit(1)).over(Window.partitionBy(*rules.unique)))
-        branches.append((unique_rule(rules.unique), F.col(_DUP) > 1))
-    guard = F.when(branches[0][1], fail(branches[0][0]))
-    for name, violation in branches[1:]:
-        guard = guard.when(violation, fail(name))
-    out = out.filter(guard.otherwise(F.lit(True)))
+        keys = ", ".join(_ident(k) for k in rules.unique)
+        out = out.selectExpr("*", f"count(1) OVER (PARTITION BY {keys}) AS {_DUP}")
+        branches.append((unique_rule(rules.unique), f"{_DUP} > 1"))
+    whens = " ".join(f"WHEN {pred} THEN {fail(name)}" for name, pred in branches)
+    out = out.filter(f"CASE {whens} ELSE true END")
     if rules.unique:
         out = out.drop(_DUP)
     reg = _checked(df.sparkSession)
