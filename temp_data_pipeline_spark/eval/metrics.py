@@ -214,17 +214,20 @@ def _calibration_from_row(row) -> CalibrationMetrics:
 
 def compute_forecast_metrics(predictions_df: DataFrame) -> ForecastMetrics:
     """MAE/RMSE/bias/std/R² in one pass (reference metrics.py:108-138)."""
-    (row,) = grouped_by_model(stack_models([predictions_df]), aggs=forecast_metric_aggs())
-    return _metrics_from_row(row)
+    rows = grouped_by_model(stack_models([predictions_df]), aggs=forecast_metric_aggs())
+    if not rows:
+        raise ValueError("No rows to compute forecast metrics over.")
+    return _metrics_from_row(rows[0])
 
 
 def compute_calibration_metrics(
     predictions_df: DataFrame, coverage_levels: list[float] | None = None
 ) -> CalibrationMetrics:
-    """Gaussian PI coverage + sharpness, one pass for all levels."""
+    """Gaussian PI coverage + sharpness, one pass for all levels; all
+    zero over no rows."""
     levels = coverage_levels or DEFAULT_COVERAGE_LEVELS
-    (row,) = grouped_by_model(stack_models([predictions_df]), aggs=calibration_aggs(levels))
-    return _calibration_from_row(row)
+    rows = grouped_by_model(stack_models([predictions_df]), aggs=calibration_aggs(levels))
+    return _calibration_from_row(rows[0]) if rows else CalibrationMetrics(*[0.0] * 7)
 
 
 def compute_pinball_loss(

@@ -116,15 +116,17 @@ def _evaluate(
         dataset.test.withColumn("y_true_f", F.col("tmax_actual_f").cast("double"))
     )
     stacked = _stack([s.predict_sigma(m.predict_mu(test)) for m, s in zip(models, sigmas)])
-    metrics = evaluate_models(stacked, len(models))
+    metrics = evaluate_models(stacked)
 
     result = EvalRunResult(
         run_id=run_id or _make_run_id(), config=config, dataset=dataset, predictions=stacked
     )
-    for i, (mc, mm) in enumerate(zip(model_cfgs, metrics)):
+    for i, mc in enumerate(model_cfgs):
+        if i not in metrics:
+            raise ValueError(f"No test rows to evaluate {mc.display_name()} on.")
         result.models[mc.display_name()] = ModelEvalResult(
             model_name=mc.display_name(),
-            metrics=mm,
+            metrics=metrics[i],
             predictions=stacked.filter(F.col(MODEL) == i).drop(MODEL, "_q"),
             index=i,
         )

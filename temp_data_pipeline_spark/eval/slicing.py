@@ -10,10 +10,12 @@ over the groups of GROUPING SETS ``(model)``, ``(model, month)``,
 (`metrics.grouped_by_model`) computes every model's forecast and
 calibration metrics and every slice. The
 temperature-regime cut points (q25/q75 of y_true_f) are exact
-interpolated percentiles (`percentile`, matching np.percentile), taken
-by a window over the frame the models are scored on
-(`with_regime_cuts`): the eval's test split is one partition, so the
-window needs no exchange. The aggregate carries them through, and the
+interpolated percentiles (`percentile`, matching np.percentile) that
+every row carries in ``_q``. The runner takes them by a window over its
+test split (`with_regime_cuts`), which is one partition, so the window
+needs no exchange; `compute_metrics_by_slice`, whose input may be of
+any size, takes them by a global aggregate that aggregates each
+partition in parallel. `evaluate_models` carries them through, and the
 labels are built on the driver from the values the rows were cut by.
 
 Slices with <10 rows are dropped (`slicing.py:72,100,129,152`), and
@@ -27,12 +29,11 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.eval.metrics import (
     MODEL,
-    DEFAULT_COVERAGE_LEVELS,
     EvalMetrics,
     _calibration_from_row,
     _metrics_from_row,
@@ -79,28 +80,25 @@ def _regime_labels(q25: float, q75: float) -> dict[int, str]:
     }
 
 
-def with_regime_cuts(predictions_df: DataFrame, exact_percentile: bool = True) -> DataFrame:
-    """``predictions_df`` plus ``_q``: the q25/q75 of its y_true_f,
-    the temperature-regime cut points.
-
-    exact_percentile=True (default) reproduces the reference's
-    np.percentile cut points exactly; False switches the regime cuts
-    to the bounded-memory sketch (operators/quantiles.py) for
-    100 TB-scale prediction frames — regime labels then shift by at
-    most the sketch's ±0.01 % rank error.
-    """
+def _regime_cuts(exact_percentile: bool) -> Column:
     fn = "percentile" if exact_percentile else "percentile_approx"
-    q = F.expr(f"{fn}(y_true_f, array(0.25D, 0.75D))").over(Window.partitionBy())
-    return predictions_df.withColumn("_q", q)
+    return F.expr(f"{fn}(y_true_f, array(0.25D, 0.75D))")
 
 
-def evaluate_models(
-    stacked: DataFrame, n_models: int, coverage_levels=DEFAULT_COVERAGE_LEVELS
-) -> list[EvalMetrics]:
+def with_regime_cuts(predictions_df: DataFrame) -> DataFrame:
+    """``predictions_df`` plus ``_q``: the q25/q75 of its y_true_f,
+    the temperature-regime cut points, by a window with no partition
+    key. That window moves every row to one task, so use it only on a
+    frame that is one partition already (the runner's test split)."""
+    return predictions_df.withColumn("_q", _regime_cuts(True).over(Window.partitionBy()))
+
+
+def evaluate_models(stacked: DataFrame) -> dict[int, EvalMetrics]:
     """Forecast metrics, calibration (when the frame has
-    ``y_pred_sigma_f``) and all slice families of each of ``n_models``
-    models in ``stacked``, from one aggregate. Each model's rows carry
-    its regime cut points (``with_regime_cuts``)."""
+    ``y_pred_sigma_f``) and all slice families of each model in
+    ``stacked``, keyed by its ``MODEL`` value, from one aggregate. Each
+    row carries its model's regime cut points in ``_q``. A model with
+    no rows has no entry."""
     cols = set(stacked.columns)
     has_month = "month" in cols
     has_lead = "lead_hours" in cols
@@ -121,19 +119,19 @@ def evaluate_models(
 
     aggs = [F.max(F.col("_q")[0]).alias("_q25"), F.max(F.col("_q")[1]).alias("_q75")]
     if has_sigma:
-        aggs += calibration_aggs(coverage_levels)
+        aggs += calibration_aggs()
     rows = grouped_by_model(df, keys, forecast_metric_aggs() + aggs)
 
     heads = {row[MODEL]: row for row in rows if row["_set"] == 0}
-    cells: list[dict[str, dict]] = [{k: {} for k in keys} for _ in range(n_models)]
+    cells: dict[int, dict[str, dict]] = {i: {k: {} for k in keys} for i in heads}
     for row in rows:
         if row["_set"] and row["_key"] is not None and row["n_samples"] >= MIN_SLICE_ROWS:
             key = keys[row["_set"] - 1]
             cells[row[MODEL]][key][row["_key"]] = _metrics_from_row(row).to_dict()
 
-    out = []
-    for i in range(n_models):
-        head, got = heads[i], cells[i]
+    out = {}
+    for i, head in heads.items():
+        got = cells[i]
         slices: dict[str, dict[str, Any]] = {}
         if has_month:
             slices["by_month"] = {m: got["_month"][m] for m in sorted(got["_month"], key=int)}
@@ -149,12 +147,10 @@ def evaluate_models(
         slices["by_temp_regime"] = {
             labels[r]: regimes[str(r)] for r in (COLD, NORMAL, HOT) if str(r) in regimes
         }
-        out.append(
-            EvalMetrics(
-                forecast=_metrics_from_row(head),
-                calibration=_calibration_from_row(head) if has_sigma else None,
-                slices=slices,
-            )
+        out[i] = EvalMetrics(
+            forecast=_metrics_from_row(head),
+            calibration=_calibration_from_row(head) if has_sigma else None,
+            slices=slices,
         )
     return out
 
@@ -163,7 +159,17 @@ def compute_metrics_by_slice(
     predictions_df: DataFrame, exact_percentile: bool = True
 ) -> dict[str, dict[str, Any]]:
     """All four slice families of one model: the one-model case of
-    ``evaluate_models``."""
-    stacked = stack_models([with_regime_cuts(predictions_df, exact_percentile)])
-    (res,) = evaluate_models(stacked, 1)
-    return res.slices
+    ``evaluate_models``.
+
+    exact_percentile=True (default) reproduces the reference's
+    np.percentile cut points exactly; False switches the regime cuts
+    to the bounded-memory sketch (operators/quantiles.py) for
+    100 TB-scale prediction frames — regime labels then shift by at
+    most the sketch's ±0.01 % rank error. Either way the cut points
+    come from a global aggregate, partially aggregated per partition.
+    """
+    cuts = predictions_df.agg(_regime_cuts(exact_percentile).alias("_q"))
+    got = evaluate_models(stack_models([predictions_df.crossJoin(cuts)]))
+    if not got:
+        raise ValueError("No rows to slice.")
+    return got[0].slices

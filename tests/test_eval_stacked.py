@@ -12,7 +12,10 @@ Pinned here:
 - the job counts of the benchmark's eval shape (3 models, bucketed σ):
   at most 6 eval jobs and 2 report jobs; `EvalDataset.counts()` in one;
 - no temp view is registered or replaced, and an input with no rows
-  after the filters raises ``ValueError``.
+  after the filters raises ``ValueError``;
+- over no rows, the one-model metric functions raise ``ValueError``
+  (calibration reads all zero), and a model without rows has no entry
+  in ``evaluate_models``.
 """
 
 from __future__ import annotations
@@ -27,13 +30,20 @@ import pytest
 
 from temp_data_pipeline_spark.eval.config import EvalConfig, ModelConfig
 from temp_data_pipeline_spark.eval.data import load_eval_data
-from temp_data_pipeline_spark.eval.metrics import z_for_level
+from temp_data_pipeline_spark.eval.metrics import (
+    compute_calibration_metrics,
+    compute_forecast_metrics,
+    stack_models,
+    z_for_level,
+)
 from temp_data_pipeline_spark.eval.report import load_run, write_all_artifacts
 from temp_data_pipeline_spark.eval.runner import run_multi_model_evaluation
 from temp_data_pipeline_spark.eval.slicing import (
     LEAD_BUCKETS,
     SEASON_OF_MONTH,
     compute_metrics_by_slice,
+    evaluate_models,
+    with_regime_cuts,
 )
 from temp_data_pipeline_spark.eval.uncertainty import DEFAULT_BUCKETS
 
@@ -368,3 +378,24 @@ def test_no_rows_after_filters_raises(spark):
     cfg.station_ids = ["nowhere"]
     with pytest.raises(ValueError, match="No data remaining after filters"):
         load_eval_data(cfg, None, None, feature_df=_frame(spark, 29))
+
+
+def test_one_model_functions_over_no_rows(spark):
+    empty = spark.createDataFrame(
+        [], "y_pred_f double, y_true_f double, y_pred_sigma_f double"
+    )
+    with pytest.raises(ValueError, match="No rows"):
+        compute_forecast_metrics(empty)
+    assert set(compute_calibration_metrics(empty).to_dict().values()) == {0.0}
+    with pytest.raises(ValueError, match="No rows"):
+        compute_metrics_by_slice(empty)
+
+
+def test_model_without_rows_has_no_entry(spark):
+    df = spark.createDataFrame(
+        [(float(i), float(i) + 0.5) for i in range(20)], "y_true_f double, y_pred_f double"
+    ).coalesce(1)
+    cut = with_regime_cuts(df)
+    got = evaluate_models(stack_models([cut, cut.filter("y_true_f < 0")]))
+    assert list(got) == [0]
+    assert got[0].forecast.n_samples == 20
